@@ -143,42 +143,23 @@ trait DedupSimhash { self: DedupQueries.type =>
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     // force-build the fingerprint index on THIS session before the
     // stream starts (micro-batches run on a clone sharing the catalog)
     simhashIndexTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q129_src"),
-        streamScratch("graft_q129_ckpt")))
     val table = JvmScratch.tableName("stream_simhash_dedup")
-    try {
-      if (!resume) {
-        val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
-        stageDropsCached(s, dir, "q129", "documents.parquet", srcDir, 3)(
-          i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_simhash_dedup")
-        createBatchSink(s, table, Seq(
-          "delta_id" -> "bigint", "corpus_id" -> "bigint", "hamming" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s, DedupQueries.textStreamWidth(s, dir)) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            simhashMatches(batch.sparkSession, dir, batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(table)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(table)
+    drainDrops(s, "q129", chaos, scratch, resume, table,
+        width = DedupQueries.textStreamWidth(s, dir)) { srcDir =>
+      val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
+      stageDropsCached(s, dir, "q129", "documents.parquet", srcDir, 3)(
+        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_simhash_dedup")
+      createBatchSink(s, table, Seq(
+        "delta_id" -> "bigint", "corpus_id" -> "bigint", "hamming" -> "bigint"))
+    } { (batch, batchId) =>
+      writeBatch(simhashMatches(batch.sparkSession, dir, batch), batchId, table)
+    } {
       s.table(table).select("delta_id", "corpus_id", "hamming")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
 }

@@ -194,33 +194,48 @@ trait DedupStreaming { self: DedupQueries.type =>
     * processes, so no run's staging can pre-compute another run's
     * declared work (the cross-run `/dev/shm` cache was the
     * precomputation-across-runs pattern the round rules call gaming).
-    * The dir is pid-suffixed and removed on JVM exit; siblings left by
-    * dead JVMs (kill -9 skips shutdown hooks) are swept on first use. */
+    * The dir is named by (pid, JVM start instant) and removed on JVM
+    * exit; siblings left by dead JVMs (kill -9 skips shutdown hooks) are
+    * swept on first use. The start instant keeps a new JVM that the OS
+    * gave a dead JVM's pid from adopting that JVM's warm cache. */
   private[queries] lazy val dropCacheBase: java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
     val shm = Paths.get("/dev/shm")
     val parent = if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
       else Paths.get(System.getProperty("java.io.tmpdir"))
-    val base = parent.resolve(
-      s"graft_drop_cache_pid${ProcessHandle.current().pid()}")
-    try {
-      import scala.jdk.CollectionConverters._
-      val st = Files.list(parent)
-      try st.iterator().asScala.foreach { p =>
-        val nm = p.getFileName.toString
-        // matches this JVM's naming scheme AND the legacy shared dir
-        if (nm.startsWith("graft_drop_cache") && p != base) {
-          val ownerAlive = nm.stripPrefix("graft_drop_cache_pid").toLongOption
-            .exists(pid => ProcessHandle.of(pid).map[Boolean](_.isAlive)
-              .orElse(false))
-          if (!ownerAlive) rmQuietly(p.toString)
-        }
-      } finally st.close()
-    } catch { case _: java.io.IOException => () }
+    val base = parent.resolve(dropCacheName(ProcessHandle.current()))
+    sweepDeadDropCaches(parent, base)
     Runtime.getRuntime.addShutdownHook(
       new Thread(() => rmQuietly(base.toString), "graft-drop-cache-cleanup"))
     base
   }
+
+  /** `graft_drop_cache_pid<pid>_t<start epoch ms>`; -1 when the OS does
+    * not report a start instant. */
+  private[queries] def dropCacheName(p: ProcessHandle): String = {
+    val start = p.info().startInstant().map[Long](_.toEpochMilli).orElse(-1L)
+    s"graft_drop_cache_pid${p.pid()}_t$start"
+  }
+
+  /** Remove every drop-cache dir under `parent` except `keep` whose
+    * owner is not a live process with the SAME pid and start instant —
+    * dirs of dead JVMs, of an earlier JVM that held a now-reused pid,
+    * and the legacy unscoped names alike. */
+  private[queries] def sweepDeadDropCaches(parent: java.nio.file.Path,
+      keep: java.nio.file.Path): Unit =
+    try {
+      val Owned = """graft_drop_cache_pid(\d+)_t-?\d+""".r
+      cacheListDir(parent).foreach { p =>
+        val nm = p.getFileName.toString
+        val ownerAlive = nm match {
+          case Owned(pid) => ProcessHandle.of(pid.toLong)
+            .map[Boolean](h => h.isAlive && dropCacheName(h) == nm).orElse(false)
+          case _ => false
+        }
+        if (nm.startsWith("graft_drop_cache") && p != keep && !ownerAlive)
+          rmQuietly(p.toString)
+      }
+    } catch { case _: java.io.IOException => () }
 
   /** The shared cache core of [[stageDropsCached]]/[[stageInputCached]]:
     * build-once-per-fingerprint under `<cacheBase>/<family>_<tag>_<fp>`
@@ -305,12 +320,6 @@ trait DedupStreaming { self: DedupQueries.type =>
     sys.env.get("SPARK_GRAFT_DROP_CACHE_IDLE_MS").map(_.toLong)
       .getOrElse(6L * 3600 * 1000)
 
-  /** Pre-create an EMPTY batch_id-partitioned parquet sink so every
-    * micro-batch — and any at-least-once REPLAY of it — lands as a
-    * dynamic overwrite of exactly its own partition. foreachBatch's
-    * delivery contract is at-least-once: a plain append would
-    * double-write a batch replayed after a pre-commit crash; keying
-    * the write by the (replay-stable) batchId makes it idempotent. */
   /** Pre-create the EMPTY stream-grown band index: band schema,
     * batch_id partitioning (replay idempotency), 16-bucket band_key
     * layout — pure DDL, replacing the limit(0) bucketed write that
@@ -322,6 +331,13 @@ trait DedupStreaming { self: DedupQueries.type =>
              |CLUSTERED BY (band_key) SORTED BY (band_key) INTO 16 BUCKETS
              |""".stripMargin): Unit
 
+  /** Pre-create an EMPTY batch_id-partitioned parquet sink so every
+    * micro-batch — and any at-least-once REPLAY of it — lands as a
+    * dynamic overwrite of exactly its own partition ([[writeBatch]]).
+    * foreachBatch's delivery contract is at-least-once: a plain append
+    * would double-write a batch replayed after a pre-commit crash;
+    * keying the write by the (replay-stable) batchId makes it
+    * idempotent. */
   private[queries] def createBatchSink(s: SparkSession, table: String,
       dataCols: Seq[(String, String)]): Unit = {
     // pure DDL — the old empty-DataFrame saveAsTable paid a write job
@@ -332,22 +348,69 @@ trait DedupStreaming { self: DedupQueries.type =>
       : Unit
   }
 
-  /** q105's body: the incremental contract LIVE. The arriving batch
-    * lands as 3 parquet file drops consumed by a checkpointed
-    * AvailableNow drain (maxFilesPerTrigger=1 -> one micro-batch per
-    * drop); each micro-batch runs the identical delta-vs-index probe
-    * inside foreachBatch and dynamic-overwrites its own batch_id
-    * partition of the sink (idempotent under replay).
+  /** One micro-batch's write into a batch_id-partitioned sink: a
+    * dynamic overwrite of exactly partition `batchId`, so a replay
+    * rewrites what its first delivery wrote. */
+  private[queries] def writeBatch(df: DataFrame, batchId: Long,
+      table: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite").insertInto(table)
+
+  /** The staged-drop drain every file-drop query runs (q105 q107 q113
+    * q114 q116 q121 q123 q126 q129 q133 q134 q139 q141 q144 q151
+    * q160). The arriving rows land as parquet file drops in a source
+    * dir; a checkpointed AvailableNow query with maxFilesPerTrigger=1
+    * consumes one drop per micro-batch, in (mtime, path) order, under
+    * [[withStreamConfs]] at `width`. Each micro-batch runs `perBatch`,
+    * which writes its own batch_id partition of every sink
+    * ([[writeBatch]]). After the drain, `sink` is refreshed on this
+    * session (the writes ran on the stream's cloned session) and
+    * `fold` builds the result.
     *
-    * Test hooks (StreamReplaySpec): `chaos` runs after each batch's
-    * write but BEFORE the checkpoint commits — throwing from it
-    * simulates a crash that forces an at-least-once replay of that
+    * Replay contract (StreamReplaySpec): `chaos` runs after each
+    * batch's writes but BEFORE its checkpoint commits — throwing from
+    * it simulates a crash that forces an at-least-once replay of that
     * batch on the next drain. `scratch` pins the (source, checkpoint)
-    * dirs so the test can resume the same checkpoint; `resume = true`
-    * skips staging + sink reset and re-drains whatever the checkpoint
-    * left uncommitted. Production invocations (scratch = None) stage
-    * fresh temp dirs and delete them in the finally — repeated bench
-    * iterations accumulate nothing (round-9 advice). */
+    * dirs so a test can resume the same checkpoint; `resume = true`
+    * skips `stage` (drops, sink resets and DDL, pre-stream artifacts)
+    * and re-drains whatever the checkpoint left uncommitted.
+    * Production invocations (scratch = None) get fresh `tag`-named
+    * dirs, deleted in the finally — repeated bench iterations
+    * accumulate nothing. `schema` defaults to the staged drops' own
+    * (one inference read); a caller that holds the source relation
+    * passes its schema and skips that job. */
+  private[queries] def drainDrops(s: SparkSession, tag: String,
+      chaos: Long => Unit, scratch: Option[(String, String)],
+      resume: Boolean, sink: String,
+      width: => Option[String] = None,
+      schema: => Option[org.apache.spark.sql.types.StructType] = None)
+      (stage: String => Unit)
+      (perBatch: (DataFrame, Long) => Unit)
+      (fold: => DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    val (srcDir, ckpt) = scratch.getOrElse(
+      (streamScratch(s"graft_${tag}_src"), streamScratch(s"graft_${tag}_ckpt")))
+    try {
+      if (!resume) stage(srcDir)
+      val srcSchema = schema.getOrElse(s.read.parquet(srcDir).schema)
+      withStreamConfs(s, width) {
+        s.readStream.schema(srcSchema)
+          .option("maxFilesPerTrigger", 1).parquet(srcDir)
+          .writeStream.outputMode(OutputMode.Append())
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            perBatch(batch, batchId)
+            chaos(batchId)
+          }
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
+      s.catalog.refreshTable(sink)
+      fold
+    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+  }
+
   /** q151's body: the q143 retraction LIVE — a takedown FEED (DMCA
     * notices, licensing pulls) drained as 3 ordered drops of delete
     * ids. Each micro-batch lands only its delete-id shard into the
@@ -362,46 +425,26 @@ trait DedupStreaming { self: DedupQueries.type =>
     * retract(retract(S, D1), D2) == retract(S, D1 ∪ D2), both equal
     * the rebuild over corpus-minus-all (RetractionSpec proves the
     * sequential form). == batch q143, verbatim oracle. Test hooks as
-    * in [[streamIncrementalDedup]]. */
+    * in [[drainDrops]]. */
   private[graft] def streamRetraction(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val docs = Tables.documents(s, dir)
     // the standing artifacts exist before a takedown stream starts
     bandIndexTable(s, dir)
     pairIndexTable(s, dir)
     ccIndexTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q151_src"),
-        streamScratch("graft_q151_ckpt")))
     val logTable = JvmScratch.tableName("stream_delete_log")
-    try {
-      if (!resume) {
-        val dels = docs.filter(col("doc_id") % 10 === 3).select("doc_id")
-        stageDropsCached(s, dir, "q151", "documents.parquet", srcDir, 3)(
-          i => dels.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_delete_log")
-        createBatchSink(s, logTable, Seq("doc_id" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            batch.select("doc_id")
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(logTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(logTable)
+    drainDrops(s, "q151", chaos, scratch, resume, logTable) { srcDir =>
+      val dels = docs.filter(col("doc_id") % 10 === 3).select("doc_id")
+      stageDropsCached(s, dir, "q151", "documents.parquet", srcDir, 3)(
+        i => dels.filter(pmod(col("doc_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_delete_log")
+      createBatchSink(s, logTable, Seq("doc_id" -> "bigint"))
+    } { (batch, batchId) =>
+      writeBatch(batch.select("doc_id"), batchId, logTable)
+    } {
       graft.sources.DurableIndex.compactSink(s, logTable): Unit
       val (_, _, labels1) = retractMaintain(bandIndexTable(s, dir),
         pairIndexTable(s, dir), ccIndexTable(s, dir),
@@ -409,59 +452,44 @@ trait DedupStreaming { self: DedupQueries.type =>
       labelCorpus(
         docs.filter(col("doc_id") % 10 =!= 3 && col("doc_id") % 10 =!= 7),
         labels1)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
+  /** q105's body: the incremental contract LIVE. The arriving batch
+    * lands as 3 parquet file drops consumed by [[drainDrops]] (one
+    * micro-batch per drop); each micro-batch runs the identical
+    * delta-vs-index probe and dynamic-overwrites its own batch_id
+    * partition of the sink (idempotent under replay). */
   private[graft] def streamIncrementalDedup(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     // force-build the index on THIS session before the stream starts
     // (micro-batches run on a cloned session sharing the catalog)
     bandIndexTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q105_src"),
-        streamScratch("graft_q105_ckpt")))
     val table = JvmScratch.tableName("stream_inc_dedup")
-    try {
-      if (!resume) {
-        // the arriving batch staged as 3 file drops (split by doc_id)
-        val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
-        stageDropsCached(s, dir, "q105", "documents.parquet", srcDir, 3)(
-          i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_inc_dedup")
-        createBatchSink(s, table, Seq(
-          "delta_id" -> "bigint", "corpus_id" -> "bigint", "jaccard" -> "double"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s, textStreamWidth(s, dir)) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // batch.sparkSession is the stream's clone — shares the
-            // catalog, so the index resolves without a rebuild
-            incrementalMatches(batch.sparkSession, dir, batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(table)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(table) // writes ran on the cloned session
+    drainDrops(s, "q105", chaos, scratch, resume, table,
+        width = textStreamWidth(s, dir)) { srcDir =>
+      // the arriving batch staged as 3 file drops (split by doc_id)
+      val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
+      stageDropsCached(s, dir, "q105", "documents.parquet", srcDir, 3)(
+        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_inc_dedup")
+      createBatchSink(s, table, Seq(
+        "delta_id" -> "bigint", "corpus_id" -> "bigint", "jaccard" -> "double"))
+    } { (batch, batchId) =>
+      // batch.sparkSession is the stream's clone — shares the
+      // catalog, so the index resolves without a rebuild
+      writeBatch(incrementalMatches(batch.sparkSession, dir, batch),
+        batchId, table)
+    } {
       s.table(table).select("delta_id", "corpus_id", "jaccard")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q113's body: the semantic incremental contract LIVE — q105's
-    * drain shape (file drops, AvailableNow, maxFilesPerTrigger=1,
-    * batch_id-partitioned dynamic-overwrite sink, same chaos/scratch/
-    * resume test hooks) with the per-micro-batch work swapped for the
-    * semantic probe: assign the batch through the persisted codebook,
+    * drain with the per-micro-batch work swapped for the semantic
+    * probe: assign the batch through the persisted codebook,
     * broadcast-probe the persisted block index, keeper-reduce. The
     * keeper argmin is safe per-batch because the index is static
     * corpus-side and the drops partition the delta — each delta vector
@@ -470,48 +498,24 @@ trait DedupStreaming { self: DedupQueries.type =>
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     // force-build codebook + block index on THIS session before the
     // stream starts (micro-batches run on a clone sharing the catalog)
     SimilarityQueries.semBlockIndexTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q113_src"),
-        streamScratch("graft_q113_ckpt")))
     val table = JvmScratch.tableName("stream_sem_dedup")
-    try {
-      if (!resume) {
-        val delta = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 7)
-        stageDropsCached(s, dir, "q113", "embeddings.parquet", srcDir, 3)(
-          i => delta.filter(pmod(col("vec_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_sem_dedup")
-        createBatchSink(s, table, Seq(
-          "vec_id" -> "bigint", "keeper_id" -> "bigint", "cosine" -> "double"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            val hits = SimilarityQueries.semIndexProbeOf(ss, dir, batch)
-              .localCheckpoint()
-            val keep = hits.groupBy("d_id").agg(min(col("c_id")).as("keeper_id"))
-            hits.join(keep, Seq("d_id"))
-              .filter(col("c_id") === col("keeper_id"))
-              .select(col("d_id").as("vec_id"), col("keeper_id"), col("cosine"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(table)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(table)
+    drainDrops(s, "q113", chaos, scratch, resume, table) { srcDir =>
+      val delta = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 7)
+      stageDropsCached(s, dir, "q113", "embeddings.parquet", srcDir, 3)(
+        i => delta.filter(pmod(col("vec_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_sem_dedup")
+      createBatchSink(s, table, Seq(
+        "vec_id" -> "bigint", "keeper_id" -> "bigint", "cosine" -> "double"))
+    } { (batch, batchId) =>
+      val hits = SimilarityQueries.semIndexProbeOf(batch.sparkSession, dir, batch)
+        .localCheckpoint()
+      writeBatch(SimilarityQueries.keepLowest(hits), batchId, table)
+    } {
       s.table(table).select("vec_id", "keeper_id", "cosine")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q134's body: streaming COMPONENT maintenance — q107's drain shape
@@ -525,92 +529,70 @@ trait DedupStreaming { self: DedupQueries.type =>
     * drops is mined exactly once, by the later drop's batch. Shards
     * are a pure function of (batch, committed prior state), so the
     * batch_id dynamic overwrite makes replays idempotent. Test hooks
-    * as in [[streamIncrementalDedup]]. */
+    * as in [[drainDrops]]. */
   private[graft] def streamComponents(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false,
       compact: Boolean = true,
       forceLarge: Option[Boolean] = None): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val docs = Tables.documents(s, dir)
     // the standing artifacts exist before a maintenance stream starts
     bandIndexTable(s, dir)
     ccIndexTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q134_src"),
-        streamScratch("graft_q134_ckpt")))
     val idxTable = JvmScratch.tableName("stream_cc_bands")
     val outTable = JvmScratch.tableName("stream_cc_edges")
-    try {
-      if (!resume) {
-        val delta = docs.filter(col("doc_id") % 10 === 7)
-        stageDropsCached(s, dir, "q134", "documents.parquet", srcDir, 3)(
-          i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_cc_bands")
-        JvmScratch.resetTable(s, "stream_cc_edges")
-        createBandIndexSink(s, idxTable)
-        createBatchSink(s, outTable,
-          Seq("doc_a" -> "bigint", "doc_b" -> "bigint"))
+    drainDrops(s, "q134", chaos, scratch, resume, outTable,
+        width = textStreamWidth(s, dir), schema = Some(docs.schema)) { srcDir =>
+      val delta = docs.filter(col("doc_id") % 10 === 7)
+      stageDropsCached(s, dir, "q134", "documents.parquet", srcDir, 3)(
+        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_cc_bands")
+      JvmScratch.resetTable(s, "stream_cc_edges")
+      createBandIndexSink(s, idxTable)
+      createBatchSink(s, outTable,
+        Seq("doc_a" -> "bigint", "doc_b" -> "bigint"))
+    } { (batch, batchId) =>
+      val ss = batch.sparkSession
+      ss.catalog.refreshTable(idxTable)
+      val batchSh = shingle(batch).localCheckpoint()
+      // the batch's bands feed THREE consumers (cross probe,
+      // within-batch self-join, index append): staged once.
+      // LAZY (the q158 rule): the first consuming job
+      // materializes the blocks — consumers inside one job share
+      // the RDD (one stage), so laziness saves the dedicated
+      // staging job per micro-batch without recompute
+      val batchBands = sigBands(batchSh).localCheckpoint(eager = false)
+      val soFar = ss.table(idxTable)
+        .filter(col("batch_id") =!= batchId)
+        .select("doc_id", "band_idx", "band_key")
+      // standing index and stream-grown index probed as SEPARATE
+      // bucketed relations: their union has no partitioning, so
+      // EnsureRequirements re-Exchanged the corpus-sized standing
+      // bands every micro-batch — free on local[32] (no network),
+      // a corpus-sized network shuffle per batch on a real
+      // cluster (see matchesAgainstIndex.extraIndexes)
+      val cross = matchesAgainstIndex(ss, dir, batchSh,
+          bandIndexTable(ss, dir), forceLarge,
+          deltaBandsOpt = Some(batchBands),
+          extraIndexes = Seq(soFar))
+        .select(least(col("delta_id"), col("corpus_id")).as("doc_a"),
+          greatest(col("delta_id"), col("corpus_id")).as("doc_b"))
+      val within = minhashPairsOf(batchSh, Some(batchBands))
+        .select("doc_a", "doc_b")
+      // edge-shard write and index append overlapped (guide
+      // §2.6; see overlapWrites): independent sinks, both
+      // batch_id dynamic overwrites, replay-safe in either
+      // commit order. The append's repartition into the bucket
+      // hash lands 16 files (one per bucket), not one per
+      // (task x bucket) — the batch is drop-sized, the shuffle
+      // trivial, and the commit fans out 4x fewer files
+      overlapWrites {
+        writeBatch(within.unionByName(cross), batchId, outTable)
+      } {
+        writeBatch(batchBands.repartition(16, col("band_key")), batchId, idxTable)
       }
-      val schema = docs.schema
-      withStreamConfs(s, textStreamWidth(s, dir)) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            ss.catalog.refreshTable(idxTable)
-            val batchSh = shingle(batch).localCheckpoint()
-            // the batch's bands feed THREE consumers (cross probe,
-            // within-batch self-join, index append): staged once.
-            // LAZY (the q158 rule): the first consuming job
-            // materializes the blocks — consumers inside one job share
-            // the RDD (one stage), so laziness saves the dedicated
-            // staging job per micro-batch without recompute
-            val batchBands = sigBands(batchSh).localCheckpoint(eager = false)
-            val soFar = ss.table(idxTable)
-              .filter(col("batch_id") =!= batchId)
-              .select("doc_id", "band_idx", "band_key")
-            // standing index and stream-grown index probed as SEPARATE
-            // bucketed relations: their union has no partitioning, so
-            // EnsureRequirements re-Exchanged the corpus-sized standing
-            // bands every micro-batch — free on local[32] (no network),
-            // a corpus-sized network shuffle per batch on a real
-            // cluster (see matchesAgainstIndex.extraIndexes)
-            val cross = matchesAgainstIndex(ss, dir, batchSh,
-                bandIndexTable(ss, dir), forceLarge,
-                deltaBandsOpt = Some(batchBands),
-                extraIndexes = Seq(soFar))
-              .select(least(col("delta_id"), col("corpus_id")).as("doc_a"),
-                greatest(col("delta_id"), col("corpus_id")).as("doc_b"))
-            val within = minhashPairsOf(batchSh, Some(batchBands))
-              .select("doc_a", "doc_b")
-            // edge-shard write and index append overlapped (guide
-            // §2.6; see overlapWrites): independent sinks, both
-            // batch_id dynamic overwrites, replay-safe in either
-            // commit order. The append's repartition into the bucket
-            // hash lands 16 files (one per bucket), not one per
-            // (task x bucket) — the batch is drop-sized, the shuffle
-            // trivial, and the commit fans out 4x fewer files
-            overlapWrites {
-              within.unionByName(cross)
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").insertInto(outTable)
-            } {
-              batchBands.repartition(16, col("band_key"))
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").insertInto(idxTable)
-            }
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    } {
       if (compact) {
         // the checkpoint barrier has passed: fold both stream-grown
         // artifacts' per-batch fragments — the grown band index through
@@ -628,7 +610,7 @@ trait DedupStreaming { self: DedupQueries.type =>
       val (labels, _) = connectedComponents(
         starEdges.unionByName(s.table(outTable).select("doc_a", "doc_b")))
       labelCorpus(docs, labels)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q107's body: streaming INDEX MAINTENANCE — an initially empty
@@ -643,85 +625,63 @@ trait DedupStreaming { self: DedupQueries.type =>
     * the batch. Post-drain, [[compactBandIndex]] folds the per-batch
     * partition fragments into one compacted generation (disable via
     * `compact = false` to inspect the fragmented state). Test hooks as
-    * in [[streamIncrementalDedup]]. */
+    * in [[drainDrops]]. */
   private[graft] def streamIndexBootstrap(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false,
       compact: Boolean = true): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val docs = Tables.documents(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q107_src"),
-        streamScratch("graft_q107_ckpt")))
     val idxTable = JvmScratch.tableName("stream_band_index")
     val outTable = JvmScratch.tableName("stream_bootstrap_out")
-    try {
-      if (!resume) {
-        // the whole corpus as 3 drops with EXPLICIT strictly-increasing
-        // mtimes: FileStreamSource orders by (mtime, path), and q107's
-        // semantics — unlike q105's — depend on the processing order
-        stageDropsCached(s, dir, "q107", "documents.parquet", srcDir, 3)(
-          i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_band_index")
-        JvmScratch.resetTable(s, "stream_bootstrap_out")
-        // initially EMPTY index: band schema + batch_id partitioning
-        // (replay idempotency) + the 16-bucket band_key layout
-        createBandIndexSink(s, idxTable)
-        createBatchSink(s, outTable, Seq(
-          "doc_id" -> "bigint", "dup_of" -> "bigint", "jaccard" -> "double"))
+    drainDrops(s, "q107", chaos, scratch, resume, outTable,
+        width = textStreamWidth(s, dir), schema = Some(docs.schema)) { srcDir =>
+      // the whole corpus as 3 drops with EXPLICIT strictly-increasing
+      // mtimes: FileStreamSource orders by (mtime, path), and q107's
+      // semantics — unlike q105's — depend on the processing order
+      stageDropsCached(s, dir, "q107", "documents.parquet", srcDir, 3)(
+        i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_band_index")
+      JvmScratch.resetTable(s, "stream_bootstrap_out")
+      // initially EMPTY index: band schema + batch_id partitioning
+      // (replay idempotency) + the 16-bucket band_key layout
+      createBandIndexSink(s, idxTable)
+      createBatchSink(s, outTable, Seq(
+        "doc_id" -> "bigint", "dup_of" -> "bigint", "jaccard" -> "double"))
+    } { (batch, batchId) =>
+      val ss = batch.sparkSession
+      ss.catalog.refreshTable(idxTable)
+      val batchSh = shingle(batch).localCheckpoint()
+      // the batch's bands feed BOTH the probe and the index
+      // append: staged once per batch, not re-signed per
+      // consumer. LAZY (the q158 rule): the probe's broadcast
+      // materializes the blocks, the append reuses them — no
+      // dedicated staging job per micro-batch
+      val batchBands = sigBands(batchSh).localCheckpoint(eager = false)
+      // the match and the index append run CONCURRENTLY
+      // (overlapWrites, guide §2.6): the probe reads the index
+      // so far MINUS this batch's own partition (empty on first
+      // delivery; populated — and self-matching if probed — on a
+      // replay; pruned at planning either way, so the racing
+      // append is invisible to it), and both sinks are batch_id
+      // dynamic overwrites, replay-safe in either commit order.
+      // The append's repartition into the bucket hash lands 16
+      // files (one per bucket), not one per (task x bucket)
+      val soFar = ss.table(idxTable).filter(col("batch_id") =!= batchId)
+      overlapWrites {
+        writeBatch(matchesAgainstIndex(ss, dir, batchSh, soFar,
+            deltaBandsOpt = Some(batchBands))
+          .select(col("delta_id").as("doc_id"),
+            col("corpus_id").as("dup_of"), col("jaccard")), batchId, outTable)
+      } {
+        writeBatch(batchBands.repartition(16, col("band_key")), batchId, idxTable)
       }
-      val schema = docs.schema
-      withStreamConfs(s, textStreamWidth(s, dir)) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            ss.catalog.refreshTable(idxTable)
-            val batchSh = shingle(batch).localCheckpoint()
-            // the batch's bands feed BOTH the probe and the index
-            // append: staged once per batch, not re-signed per
-            // consumer. LAZY (the q158 rule): the probe's broadcast
-            // materializes the blocks, the append reuses them — no
-            // dedicated staging job per micro-batch
-            val batchBands = sigBands(batchSh).localCheckpoint(eager = false)
-            // the match and the index append run CONCURRENTLY
-            // (overlapWrites, guide §2.6): the probe reads the index
-            // so far MINUS this batch's own partition (empty on first
-            // delivery; populated — and self-matching if probed — on a
-            // replay; pruned at planning either way, so the racing
-            // append is invisible to it), and both sinks are batch_id
-            // dynamic overwrites, replay-safe in either commit order.
-            // The append's repartition into the bucket hash lands 16
-            // files (one per bucket), not one per (task x bucket)
-            val soFar = ss.table(idxTable).filter(col("batch_id") =!= batchId)
-            overlapWrites {
-              matchesAgainstIndex(ss, dir, batchSh, soFar,
-                  deltaBandsOpt = Some(batchBands))
-                .select(col("delta_id").as("doc_id"),
-                  col("corpus_id").as("dup_of"), col("jaccard"))
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").insertInto(outTable)
-            } {
-              batchBands.repartition(16, col("band_key"))
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").insertInto(idxTable)
-            }
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    } {
       // maintenance half: fold the per-batch file fragments back into
       // one generation per bucket (safe here — the drain is quiesced)
       if (compact) compactBandIndex(s, idxTable): Unit
       s.table(outTable).select("doc_id", "dup_of", "jaccard")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q114's body: streaming SEMANTIC index maintenance — q107's drain
@@ -733,101 +693,80 @@ trait DedupStreaming { self: DedupQueries.type =>
     * bucketed. Per batch: assign via the staged codebook, match
     * against the index MINUS this batch's partition (replay safety),
     * append via insertInto (bucketizes per the catalog spec). Test
-    * hooks as in [[streamIncrementalDedup]]. */
+    * hooks as in [[drainDrops]]. */
   private[graft] def streamSemIndexBootstrap(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false,
       compact: Boolean = true): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val emb = Tables.embeddings(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q114_src"),
-        streamScratch("graft_q114_ckpt")))
     val idxTable = JvmScratch.tableName("stream_block_index")
     val outTable = JvmScratch.tableName("stream_sem_boot_out")
     val cbTable = JvmScratch.tableName("stream_sem_codebook")
-    try {
-      if (!resume) {
-        // the corpus as 3 drops with EXPLICIT strictly-increasing
-        // mtimes (the FileStreamSource processing order, q107's shape)
-        stageDropsCached(s, dir, "q114", "embeddings.parquet", srcDir, 3)(
-          i => emb.filter(pmod(col("vec_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_block_index")
-        JvmScratch.resetTable(s, "stream_sem_boot_out")
-        JvmScratch.resetTable(s, "stream_sem_codebook")
-        // offline-train/online-serve: the codebook is learned once PER
-        // CORPUS (durable, fingerprint-keyed — round-10 verdict #6:
-        // repeated bootstraps re-read the sidecar instead of re-running
-        // the two-scan Lloyd train) and staged for the micro-batches
-        SimilarityQueries.semCodebookAllTable(s, dir).coalesce(1)
-          .write.format("parquet").saveAsTable(cbTable)
-        // initially EMPTY block index: batch_id partitioning (replay
-        // idempotency) + the 16-bucket block_key layout
-        SimilarityQueries.blocksOfRaw(emb.limit(0), s.table(cbTable))
-          .withColumn("batch_id", lit(-1L))
-          .write.format("parquet").partitionBy("batch_id")
-          .bucketBy(16, "block_key").sortBy("block_key")
-          .saveAsTable(idxTable)
-        createBatchSink(s, outTable, Seq(
-          "vec_id" -> "bigint", "dup_of" -> "bigint", "cosine" -> "double"))
+    drainDrops(s, "q114", chaos, scratch, resume, outTable) { srcDir =>
+      // the corpus as 3 drops with EXPLICIT strictly-increasing
+      // mtimes (the FileStreamSource processing order, q107's shape)
+      stageDropsCached(s, dir, "q114", "embeddings.parquet", srcDir, 3)(
+        i => emb.filter(pmod(col("vec_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_block_index")
+      JvmScratch.resetTable(s, "stream_sem_boot_out")
+      JvmScratch.resetTable(s, "stream_sem_codebook")
+      // offline-train/online-serve: the codebook is learned once PER
+      // CORPUS (durable, fingerprint-keyed — round-10 verdict #6:
+      // repeated bootstraps re-read the sidecar instead of re-running
+      // the two-scan Lloyd train) and staged for the micro-batches
+      SimilarityQueries.semCodebookAllTable(s, dir).coalesce(1)
+        .write.format("parquet").saveAsTable(cbTable)
+      // initially EMPTY block index: batch_id partitioning (replay
+      // idempotency) + the 16-bucket block_key layout
+      SimilarityQueries.blocksOfRaw(emb.limit(0), s.table(cbTable))
+        .withColumn("batch_id", lit(-1L))
+        .write.format("parquet").partitionBy("batch_id")
+        .bucketBy(16, "block_key").sortBy("block_key")
+        .saveAsTable(idxTable)
+      createBatchSink(s, outTable, Seq(
+        "vec_id" -> "bigint", "dup_of" -> "bigint", "cosine" -> "double"))
+    } { (batch, batchId) =>
+      val ss = batch.sparkSession
+      ss.catalog.refreshTable(idxTable)
+      val staged = SimilarityQueries
+        .blocksOfRaw(batch, ss.table(cbTable)).localCheckpoint()
+      // match FIRST, against the index so far minus this batch's
+      // own partition (populated only on a replay)...
+      val soFar = ss.table(idxTable).filter(col("batch_id") =!= batchId)
+      val d = staged.select(col("vec_id").as("d_id"),
+        col("v").as("dv"), col("block_key"))
+      // the q112/q115 size gate, live per micro-batch: drops are
+      // delta-sized so broadcast is the steady state, but an
+      // oversized arrival falls back to the bucket merge-join.
+      // The gate reads the staged blocks' byte size from
+      // driver-side storage metadata — zero jobs per micro-batch
+      // (round-12 verdict #6); the count runs only if the stage
+      // somehow left no block metadata
+      val large = stagedBytes(staged)
+        .map(_ > SimilarityQueries.SemDeltaBroadcastMaxBytes)
+        .getOrElse(staged.count() >
+          SimilarityQueries.SemDeltaBroadcastMaxVecs)
+      // probe-sink write and index append overlapped (guide
+      // §2.6; see overlapWrites): independent sinks, both
+      // batch_id dynamic overwrites, replay-safe in either
+      // commit order (the probe prunes its own partition at
+      // planning, so the racing append is invisible to it)
+      overlapWrites {
+        writeBatch((if (large) soFar.hint("merge").join(d, Seq("block_key"))
+            else soFar.join(broadcast(d), Seq("block_key")))
+          .select(col("d_id").as("vec_id"), col("vec_id").as("dup_of"),
+            graft.functions.CrossEngine.cosine(col("dv"), col("v")).as("cosine"))
+          .filter(col("cosine") >= SimilarityQueries.NearDupThreshold),
+          batchId, outTable)
+      } {
+        writeBatch(staged, batchId, idxTable)
       }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            ss.catalog.refreshTable(idxTable)
-            val staged = SimilarityQueries
-              .blocksOfRaw(batch, ss.table(cbTable)).localCheckpoint()
-            // match FIRST, against the index so far minus this batch's
-            // own partition (populated only on a replay)...
-            val soFar = ss.table(idxTable).filter(col("batch_id") =!= batchId)
-            val d = staged.select(col("vec_id").as("d_id"),
-              col("v").as("dv"), col("block_key"))
-            // the q112/q115 size gate, live per micro-batch: drops are
-            // delta-sized so broadcast is the steady state, but an
-            // oversized arrival falls back to the bucket merge-join.
-            // The gate reads the staged blocks' byte size from
-            // driver-side storage metadata — zero jobs per micro-batch
-            // (round-12 verdict #6); the count runs only if the stage
-            // somehow left no block metadata
-            val large = stagedBytes(staged)
-              .map(_ > SimilarityQueries.SemDeltaBroadcastMaxBytes)
-              .getOrElse(staged.count() >
-                SimilarityQueries.SemDeltaBroadcastMaxVecs)
-            // probe-sink write and index append overlapped (guide
-            // §2.6; see overlapWrites): independent sinks, both
-            // batch_id dynamic overwrites, replay-safe in either
-            // commit order (the probe prunes its own partition at
-            // planning, so the racing append is invisible to it)
-            overlapWrites {
-              (if (large) soFar.hint("merge").join(d, Seq("block_key"))
-               else soFar.join(broadcast(d), Seq("block_key")))
-                .select(col("d_id").as("vec_id"), col("vec_id").as("dup_of"),
-                  graft.functions.CrossEngine.cosine(col("dv"), col("v")).as("cosine"))
-                .filter(col("cosine") >= SimilarityQueries.NearDupThreshold)
-                .withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").insertInto(outTable)
-            } {
-              staged.withColumn("batch_id", lit(batchId))
-                .write.mode("overwrite").insertInto(idxTable)
-            }
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    } {
       if (compact) compactBucketedIndex(s, idxTable,
         Seq("vec_id", "v", "block_key"), "block_key"): Unit
       s.table(outTable).select("vec_id", "dup_of", "cosine")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q116's body: streaming decontamination — q105's drain shape with
@@ -840,59 +779,39 @@ trait DedupStreaming { self: DedupQueries.type =>
     * distinct shared hashes per (doc, bench doc) pair. Batch-local
     * aggregation is globally exact: the drops partition docs, so a
     * doc's span hashes never split across batches. Test hooks as in
-    * [[streamIncrementalDedup]]. */
+    * [[drainDrops]]. */
   private[graft] def streamDecontaminate(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val docs = Tables.documents(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q116_src"),
-        streamScratch("graft_q116_ckpt")))
     val benchTable = JvmScratch.tableName("stream_bench_hashes")
     val outTable = JvmScratch.tableName("stream_decon_out")
-    try {
-      if (!resume) {
-        // the whole corpus as 3 drops (batch independence makes the
-        // processing order irrelevant here — the probe side is static)
-        stageDropsCached(s, dir, "q116", "documents.parquet", srcDir, 3)(
-          i => docs.filter(pmod(col("doc_id"), lit(3)) === i)
-            .select("doc_id", "text"))
-        JvmScratch.resetTable(s, "stream_bench_hashes")
-        JvmScratch.resetTable(s, "stream_decon_out")
-        // the standing artifact: benchmark span hashes, staged once
-        spanHashes13Of(docs.filter(col("doc_id") % 5 === 0))
-          .withColumnRenamed("doc_id", "bench_id")
-          .withColumnRenamed("h", "bh")
-          .coalesce(1).write.format("parquet").saveAsTable(benchTable)
-        createBatchSink(s, outTable, Seq(
-          "doc_id" -> "bigint", "bench_id" -> "bigint", "n_shared" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s, textStreamWidth(s, dir)) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            spanHashes13Of(batch)
-              .join(broadcast(ss.table(benchTable)),
-                col("h") === col("bh") && col("doc_id") =!= col("bench_id"))
-              .groupBy(col("doc_id"), col("bench_id"))
-              .agg(count(lit(1)).as("n_shared"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q116", chaos, scratch, resume, outTable,
+        width = textStreamWidth(s, dir)) { srcDir =>
+      // the whole corpus as 3 drops (batch independence makes the
+      // processing order irrelevant here — the probe side is static)
+      stageDropsCached(s, dir, "q116", "documents.parquet", srcDir, 3)(
+        i => docs.filter(pmod(col("doc_id"), lit(3)) === i)
+          .select("doc_id", "text"))
+      JvmScratch.resetTable(s, "stream_bench_hashes")
+      JvmScratch.resetTable(s, "stream_decon_out")
+      // the standing artifact: benchmark span hashes, staged once
+      spanHashes13Of(docs.filter(col("doc_id") % 5 === 0))
+        .withColumnRenamed("doc_id", "bench_id")
+        .withColumnRenamed("h", "bh")
+        .coalesce(1).write.format("parquet").saveAsTable(benchTable)
+      createBatchSink(s, outTable, Seq(
+        "doc_id" -> "bigint", "bench_id" -> "bigint", "n_shared" -> "bigint"))
+    } { (batch, batchId) =>
+      writeBatch(spanHashes13Of(batch)
+        .join(broadcast(batch.sparkSession.table(benchTable)),
+          col("h") === col("bh") && col("doc_id") =!= col("bench_id"))
+        .groupBy(col("doc_id"), col("bench_id"))
+        .agg(count(lit(1)).as("n_shared")), batchId, outTable)
+    } {
       s.table(outTable).select("doc_id", "bench_id", "n_shared")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** Forwarders into the shared [[graft.sources.DurableIndex]]
@@ -951,12 +870,6 @@ trait DedupStreaming { self: DedupQueries.type =>
     sys.env.getOrElse("SPARK_GRAFT_CC_DRIVER_MAX_BYTES",
       (64L << 20).toString).toLong
 
-  /** Measurement escape hatch for [[overlapWrites]] (same-window A/B
-    * of the overlapped vs sequential per-batch commits); the default —
-    * on — is the production configuration at every scale. */
-  private[queries] lazy val OverlapWritesEnabled: Boolean =
-    sys.env.get("SPARK_GRAFT_OVERLAP_WRITES").forall(_ != "0")
-
   /** Run a micro-batch's two INDEPENDENT sink writes concurrently
     * (guide §2.6: actions are only sequential because the driver calls
     * them sequentially — the second job's tasks back-fill executors
@@ -971,9 +884,12 @@ trait DedupStreaming { self: DedupQueries.type =>
     * thread inherits the streaming job group (SparkContext local
     * properties are inheritable), so query cancellation still reaches
     * both jobs. Failures: both legs always complete or fail before
-    * returning; the first error wins, the other is suppressed. */
+    * returning; the first error wins, the other is suppressed. An
+    * interrupt of the caller (a stopped query interrupts its stream
+    * thread) interrupts leg b and waits up to [[OverlapStopWaitMs]]
+    * for it to stop before the InterruptedException propagates, with
+    * the caller's interrupt flag restored. */
   private[queries] def overlapWrites(a: => Unit)(b: => Unit): Unit = {
-    if (!OverlapWritesEnabled) { a; b; return }
     val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val t = new Thread(() => try b catch { case e: Throwable => bErr.set(e) },
       "graft-overlap-write")
@@ -981,7 +897,15 @@ trait DedupStreaming { self: DedupQueries.type =>
     t.start()
     var aErr: Throwable = null
     try a catch { case e: Throwable => aErr = e }
-    t.join()
+    try t.join()
+    catch {
+      case ie: InterruptedException =>
+        t.interrupt()
+        try t.join(OverlapStopWaitMs) catch { case _: InterruptedException => () }
+        Option(aErr).foreach(ie.addSuppressed)
+        Thread.currentThread().interrupt()
+        throw ie
+    }
     if (aErr != null) {
       Option(bErr.get()).filter(_ ne aErr).foreach(aErr.addSuppressed)
       throw aErr
@@ -989,6 +913,9 @@ trait DedupStreaming { self: DedupQueries.type =>
     val e = bErr.get()
     if (e != null) throw e
   }
+
+  /** How long an interrupted [[overlapWrites]] waits for its leg b. */
+  private final val OverlapStopWaitMs = 60000L
 
   /** Driver-side DESERIALIZED-EQUIVALENT storage size of an
     * already-staged (localCheckpoint'd) relation, read from

@@ -369,19 +369,15 @@ object SamplingQueries {
     })
 
   /** q160's body; test hooks (chaos/scratch/resume) as in
-    * [[DedupQueries.streamIncrementalDedup]]. */
+    * [[DedupQueries.drainDrops]]. */
   private[queries] def streamSample(s: org.apache.spark.sql.SparkSession,
       dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val docs = Tables.documents(s, dir).select("doc_id", "lang")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q160_src"),
-        DedupQueries.streamScratch("graft_q160_ckpt")))
     val outTable = JvmScratch.tableName("stream_sample_shards")
     def rank(h: DataFrame): DataFrame = {
       val uni = h.orderBy(col("hk"), col("doc_id")).limit(UniformK)
@@ -394,35 +390,21 @@ object SamplingQueries {
           col("doc_id"), col("lang"), col("hk"))
       uni.unionByName(strat)
     }
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q160", "documents.parquet", srcDir, 3)(
-          i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_sample_shards")
-        createBatchSink(s, outTable, Seq("sample_kind" -> "string",
-          "doc_id" -> "bigint", "lang" -> "string", "hk" -> "bigint"))
-      }
-      val schema = docs.schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // the batch's LOCAL sample shard — a pure function of the
-            // batch, so the dynamic overwrite is replay-idempotent
-            val h = batch.select(col("doc_id"), col("lang"),
-              md5Hash48(concat(lit(s"$Salt:"), col("doc_id").cast("string")))
-                .as("hk"))
-            rank(h).withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q160", chaos, scratch, resume, outTable,
+        schema = Some(docs.schema)) { srcDir =>
+      DedupQueries.stageDropsCached(s, dir, "q160", "documents.parquet", srcDir, 3)(
+        i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_sample_shards")
+      createBatchSink(s, outTable, Seq("sample_kind" -> "string",
+        "doc_id" -> "bigint", "lang" -> "string", "hk" -> "bigint"))
+    } { (batch, batchId) =>
+      // the batch's LOCAL sample shard — a pure function of the
+      // batch, so the dynamic overwrite is replay-idempotent
+      val h = batch.select(col("doc_id"), col("lang"),
+        md5Hash48(concat(lit(s"$Salt:"), col("doc_id").cast("string")))
+          .as("hk"))
+      writeBatch(rank(h), batchId, outTable)
+    } {
       // the fold: re-rank the combined shard pool (bounded — at most
       // 3 x (K + strata x k) rows) through the SAME rank tail; shards
       // carry their hash ranks, so no re-hash and no corpus touch.
@@ -432,85 +414,63 @@ object SamplingQueries {
       // for the uniform K and for every stratum
       rank(s.table(outTable).select("doc_id", "lang", "hk").distinct())
         .select("sample_kind", "doc_id", "lang")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q123's body; test hooks (chaos/scratch/resume) as in
-    * [[DedupQueries.streamIncrementalDedup]]. */
+    * [[DedupQueries.drainDrops]]. */
   private[queries] def streamContextPacking(s: org.apache.spark.sql.SparkSession,
       dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     import org.apache.spark.sql.types.LongType
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q123_src"),
-        DedupQueries.streamScratch("graft_q123_ckpt")))
     val outTable = JvmScratch.tableName("stream_pack_out")
     val totalsTable = JvmScratch.tableName("stream_pack_totals")
-    try {
-      if (!resume) {
-        // contiguous doc_id RANGES (not mod classes — order matters for
-        // a prefix), dropped with strictly-increasing mtimes so the
-        // stream processes them in doc_id order
-        val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-        val bounds = Seq(0L, maxId / 3 + 1, 2 * maxId / 3 + 1, maxId + 1)
-        DedupQueries.stageDropsCached(s, dir, "q123", "documents.parquet", srcDir, 3)(
-          i => docs.filter(col("doc_id") >= bounds(i) && col("doc_id") < bounds(i + 1)))
-        JvmScratch.resetTable(s, "stream_pack_out")
-        JvmScratch.resetTable(s, "stream_pack_totals")
-        createBatchSink(s, outTable, Seq(
-          "window_id" -> "bigint", "doc_id" -> "bigint", "tok_in_window" -> "bigint"))
-        createBatchSink(s, totalsTable, Seq("n_tokens" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s, DedupQueries.textStreamWidth(s, dir)) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            ss.catalog.refreshTable(outTable)
-            ss.catalog.refreshTable(totalsTable)
-            // offset = tokens committed BEFORE this batch, read from
-            // the one-row-per-batch totals sidecar (O(batches), never
-            // output-sized); the batch's own partition is excluded so
-            // a replay — even one that crashed between the two writes
-            // below — sees exactly the offset of its first delivery
-            val offset = ss.table(totalsTable).filter(col("batch_id") =!= batchId)
-              .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
-            val counts = batch.select(col("doc_id"),
-              size(tokens(col("text"))).cast(LongType).as("n_tokens"))
-              .localCheckpoint()
-            counts.agg(coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(totalsTable)
-            withTokenPrefixSumOf(ss, counts)
-              .select(col("doc_id"), col("n_tokens"),
-                (col("cumx") + offset).as("gx"))
-              .select(col("doc_id"), col("n_tokens"), col("gx"),
-                explode(sequence(expr(s"gx div $CtxWindow"),
-                  expr(s"(gx + n_tokens - 1) div $CtxWindow"))).as("window_id"))
-              .select(col("window_id"), col("doc_id"),
-                (least(col("gx") + col("n_tokens"), (col("window_id") + 1) * CtxWindow)
-                  - greatest(col("gx"), col("window_id") * CtxWindow))
-                  .as("tok_in_window"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q123", chaos, scratch, resume, outTable,
+        width = DedupQueries.textStreamWidth(s, dir)) { srcDir =>
+      // contiguous doc_id RANGES (not mod classes — order matters for
+      // a prefix), dropped with strictly-increasing mtimes so the
+      // stream processes them in doc_id order
+      val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
+      val bounds = Seq(0L, maxId / 3 + 1, 2 * maxId / 3 + 1, maxId + 1)
+      DedupQueries.stageDropsCached(s, dir, "q123", "documents.parquet", srcDir, 3)(
+        i => docs.filter(col("doc_id") >= bounds(i) && col("doc_id") < bounds(i + 1)))
+      JvmScratch.resetTable(s, "stream_pack_out")
+      JvmScratch.resetTable(s, "stream_pack_totals")
+      createBatchSink(s, outTable, Seq(
+        "window_id" -> "bigint", "doc_id" -> "bigint", "tok_in_window" -> "bigint"))
+      createBatchSink(s, totalsTable, Seq("n_tokens" -> "bigint"))
+    } { (batch, batchId) =>
+      val ss = batch.sparkSession
+      ss.catalog.refreshTable(outTable)
+      ss.catalog.refreshTable(totalsTable)
+      // offset = tokens committed BEFORE this batch, read from
+      // the one-row-per-batch totals sidecar (O(batches), never
+      // output-sized); the batch's own partition is excluded so
+      // a replay — even one that crashed between the two writes
+      // below — sees exactly the offset of its first delivery
+      val offset = ss.table(totalsTable).filter(col("batch_id") =!= batchId)
+        .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
+      val counts = batch.select(col("doc_id"),
+        size(tokens(col("text"))).cast(LongType).as("n_tokens"))
+        .localCheckpoint()
+      writeBatch(counts.agg(coalesce(sum(col("n_tokens")), lit(0L)).as("n_tokens")),
+        batchId, totalsTable)
+      writeBatch(withTokenPrefixSumOf(ss, counts)
+        .select(col("doc_id"), col("n_tokens"),
+          (col("cumx") + offset).as("gx"))
+        .select(col("doc_id"), col("n_tokens"), col("gx"),
+          explode(sequence(expr(s"gx div $CtxWindow"),
+            expr(s"(gx + n_tokens - 1) div $CtxWindow"))).as("window_id"))
+        .select(col("window_id"), col("doc_id"),
+          (least(col("gx") + col("n_tokens"), (col("window_id") + 1) * CtxWindow)
+            - greatest(col("gx"), col("window_id") * CtxWindow))
+            .as("tok_in_window")), batchId, outTable)
+    } {
       s.table(outTable).select("window_id", "doc_id", "tok_in_window")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 }

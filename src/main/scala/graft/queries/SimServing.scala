@@ -144,45 +144,24 @@ trait SimServing { self: SimilarityQueries.type =>
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val queries = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 7)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q126_src"),
-        DedupQueries.streamScratch("graft_q126_ckpt")))
+    // build/attach the index and codebook BEFORE the drain (the
+    // standing artifacts exist before a serving stream starts)
+    semBlockIndexTable(s, dir)
+    semCodebookTable(s, dir)
     val outTable = JvmScratch.tableName("stream_ann_out")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q126", "embeddings.parquet", srcDir, 3)(
-          i => queries.filter(pmod(col("vec_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_ann_out")
-        createBatchSink(s, outTable, Seq("q_id" -> "bigint",
-          "rank" -> "bigint", "c_id" -> "bigint", "cosine" -> "double"))
-      }
-      // build/attach the index and codebook BEFORE the drain (the
-      // standing artifacts exist before a serving stream starts)
-      semBlockIndexTable(s, dir)
-      semCodebookTable(s, dir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            semIndexTopKOf(ss, dir, batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q126", chaos, scratch, resume, outTable) { srcDir =>
+      DedupQueries.stageDropsCached(s, dir, "q126", "embeddings.parquet", srcDir, 3)(
+        i => queries.filter(pmod(col("vec_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_ann_out")
+      createBatchSink(s, outTable, Seq("q_id" -> "bigint",
+        "rank" -> "bigint", "c_id" -> "bigint", "cosine" -> "double"))
+    } { (batch, batchId) =>
+      writeBatch(semIndexTopKOf(batch.sparkSession, dir, batch), batchId, outTable)
+    } {
       s.table(outTable).select("q_id", "rank", "c_id", "cosine")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** The shared keeper tail of the durable-probe queries (q112/q115):

@@ -91,51 +91,27 @@ object SketchQueries {
     * per-batch work is just [[hllRegisters]] — sketching IS the only
     * state a streaming statistics job needs to write.
     *
-    * Test hooks as in DedupQueries.streamIncrementalDedup: `chaos` runs
-    * after a batch's write but before its checkpoint commit (throwing
-    * simulates a crash that forces an at-least-once replay); `scratch`
-    * pins the staging/checkpoint dirs; `resume` skips re-staging so a
-    * restart drains the SAME checkpoint. */
+    * Test hooks (`chaos`, `scratch`, `resume`) as in
+    * [[DedupQueries.drainDrops]]. */
   private[queries] def streamHllMaintain(s: org.apache.spark.sql.SparkSession,
       dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     // stage the NORMALIZED events (ts as a real timestamp): the staged
     // copy then round-trips through parquet without the nano-long shape
     val ev = Tables.events(s, dir).select("event_id", "event_type", "user_id", "ts")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q121_src"),
-        DedupQueries.streamScratch("graft_q121_ckpt")))
     val outTable = JvmScratch.tableName("stream_hll_regs")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q121", "events.parquet", srcDir, 3)(
-          i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_hll_regs")
-        createBatchSink(s, outTable, Seq(
-          "event_type" -> "string", "bucket" -> "bigint", "reg" -> "int"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            hllRegisters(batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q121", chaos, scratch, resume, outTable) { srcDir =>
+      DedupQueries.stageDropsCached(s, dir, "q121", "events.parquet", srcDir, 3)(
+        i => ev.filter(pmod(col("event_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_hll_regs")
+      createBatchSink(s, outTable, Seq(
+        "event_type" -> "string", "bucket" -> "bigint", "reg" -> "int"))
+    } { (batch, batchId) =>
+      writeBatch(hllRegisters(batch), batchId, outTable)
+    } {
       // post-drain compaction, BATCH-PRESERVING (round-12 advice): the
       // HLL retraction contract is shard-grained — drop a deleted
       // ingest batch's register shard and re-max — and max-merge is
@@ -147,7 +123,7 @@ object SketchQueries {
       val merged = s.table(outTable)
         .groupBy("event_type", "bucket").agg(max(col("reg")).as("reg"))
       hllEstimateOf(s, merged)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** The q51 estimate over a (possibly merged) register table: dense
@@ -504,44 +480,23 @@ object SketchQueries {
       scratch: Option[(String, String)] = None,
       resume: Boolean = false,
       compact: Boolean = true): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val docs = Tables.documents(s, dir)
     // the standing artifact exists before a maintenance stream starts
     hhStoreTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q144_src"),
-        DedupQueries.streamScratch("graft_q144_ckpt")))
     val outTable = JvmScratch.tableName("stream_hh_counts")
-    try {
-      if (!resume) {
-        val delta = docs.filter(col("doc_id") % 10 === 7)
-          .select("doc_id", "text")
-        DedupQueries.stageDropsCached(s, dir, "q144", "documents.parquet", srcDir, 3)(
-          i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_hh_counts")
-        createBatchSink(s, outTable, Seq(
-          "gram" -> "string", "dcnt" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            trigramOcc(batch).groupBy("gram")
-              .agg(count(lit(1)).as("dcnt"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q144", chaos, scratch, resume, outTable) { srcDir =>
+      val delta = docs.filter(col("doc_id") % 10 === 7)
+        .select("doc_id", "text")
+      DedupQueries.stageDropsCached(s, dir, "q144", "documents.parquet", srcDir, 3)(
+        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_hh_counts")
+      createBatchSink(s, outTable, Seq(
+        "gram" -> "string", "dcnt" -> "bigint"))
+    } { (batch, batchId) =>
+      writeBatch(trigramOcc(batch).groupBy("gram")
+        .agg(count(lit(1)).as("dcnt")), batchId, outTable)
+    } {
       // post-drain (checkpoint barrier passed): fold the per-batch
       // count-shard fragments; the sum-merge below is row-order-blind,
       // so the rewrite is invisible to it (DurableArtifactsSpec)
@@ -551,7 +506,7 @@ object SketchQueries {
         .groupBy("gram").agg(sum(col("dcnt")).as("dcnt"))
       hhMaintainFromCounts(s, docs.filter(col("doc_id") % 10 =!= 7),
         merged, hhStoreTable(s, dir))
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q56's oracle, shared verbatim by q140/q141: the maintained bin
@@ -617,43 +572,22 @@ object SketchQueries {
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q141_src"),
-        DedupQueries.streamScratch("graft_q141_ckpt")))
     val outTable = JvmScratch.tableName("stream_hist_bins")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q141", "orders.parquet", srcDir, 3)(
-          i => o.filter(pmod(col("o_orderkey"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_hist_bins")
-        createBatchSink(s, outTable, Seq("bin" -> "bigint", "c" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            histBins(batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q141", chaos, scratch, resume, outTable) { srcDir =>
+      DedupQueries.stageDropsCached(s, dir, "q141", "orders.parquet", srcDir, 3)(
+        i => o.filter(pmod(col("o_orderkey"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_hist_bins")
+      createBatchSink(s, outTable, Seq("bin" -> "bigint", "c" -> "bigint"))
+    } { (batch, batchId) =>
+      writeBatch(histBins(batch), batchId, outTable)
+    } {
       graft.sources.DurableIndex.compactSink(s, outTable): Unit
       val merged = s.table(outTable)
         .groupBy("bin").agg(sum(col("c")).as("c"))
       histQuantilesOf(s, merged)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   /** q46's oracle, shared verbatim by q132/q133: the maintained grids
@@ -692,44 +626,23 @@ object SketchQueries {
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val ev = Tables.events(s, dir).select("event_id", "user_id")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q133_src"),
-        DedupQueries.streamScratch("graft_q133_ckpt")))
     val outTable = JvmScratch.tableName("stream_cms_grid")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q133", "events.parquet", srcDir, 3)(
-          i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_cms_grid")
-        createBatchSink(s, outTable, Seq(
-          "d" -> "bigint", "cell" -> "bigint", "c" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            cmsCells(batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
+    drainDrops(s, "q133", chaos, scratch, resume, outTable) { srcDir =>
+      DedupQueries.stageDropsCached(s, dir, "q133", "events.parquet", srcDir, 3)(
+        i => ev.filter(pmod(col("event_id"), lit(3)) === i))
+      JvmScratch.resetTable(s, "stream_cms_grid")
+      createBatchSink(s, outTable, Seq(
+        "d" -> "bigint", "cell" -> "bigint", "c" -> "bigint"))
+    } { (batch, batchId) =>
+      writeBatch(cmsCells(batch), batchId, outTable)
+    } {
       graft.sources.DurableIndex.compactSink(s, outTable): Unit
       val merged = s.table(outTable)
         .groupBy("d", "cell").agg(sum(col("c")).as("c"))
       cmsEstimateOf(s, dir, merged)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    }
   }
 
   val all: Seq[QueryDef] = Seq(

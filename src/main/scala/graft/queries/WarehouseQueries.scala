@@ -465,7 +465,7 @@ object WarehouseQueries {
       // round-21 "fold the EXISTS/NOT-EXISTS pair into one per-order
       // aggregate" rewrite looked strictly better on plan shape (4
       // SortMergeJoins -> 2) but LOST on every measured scale — the
-      // same-window alternating A/B (tools/Q84Ab, min-of-k, one JVM)
+      // same-window alternating A/B (min-of-k, both shapes in one JVM)
       // measured old-vs-new 1.32/1.61 s at sf0.1, 3.27/4.13 s at sf1,
       // 14.2/21.9 s at sf10, every sample lower — because the
       // per-(order, supplier) pre-aggregate shuffles the full

@@ -262,19 +262,10 @@ object StreamingOps {
     * imposes precisely so this runs unbounded at scale. Drained with
     * AvailableNow the emitted matches equal the batch interval join
     * (the oracle). */
-  def attributionJoin(spark: SparkSession, dir: String): DataFrame = {
-    // Stateful-query partition sizing: shuffle partitions = state-store
-    // count, and a stream-stream interval join commits FOUR stores per
-    // partition per micro-batch — with small per-key state, 32
-    // partitions are pure commit overhead (measured 72s -> 31s at
-    // sf0.1 going 32 -> 4). Size to state volume: small here; at
-    // billions of events raise SPARK_GRAFT_STREAM_PARTITIONS instead.
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try attributionJoinInner(spark, dir)
-    finally spark.conf.set("spark.sql.shuffle.partitions", oldParts)
-  }
+  def attributionJoin(spark: SparkSession, dir: String): DataFrame =
+    // shuffle partitions = state-store count, and an interval join
+    // commits FOUR stores per partition per micro-batch
+    withStreamPartitions(spark) { attributionJoinInner(spark, dir) }
 
   private def attributionJoinInner(spark: SparkSession, dir: String): DataFrame = {
     val e = eventStream(spark, dir)

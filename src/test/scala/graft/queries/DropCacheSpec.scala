@@ -20,13 +20,39 @@ class DropCacheSpec extends SparkSpec {
   // memoized within a JVM only, never across processes)
   private def cacheBase = DedupQueries.dropCacheBase
 
+  private val me = ProcessHandle.current()
+  private val myStart = me.info().startInstant().get().toEpochMilli
+
   test("the cache base is scoped to this JVM (no cross-process reuse)") {
     // round-21 verdict #2: a cache surviving the JVM lets one run's
     // staging pre-compute another run's declared work. The base dir
-    // must be pid-keyed so a fresh process can never find a warm entry.
+    // must be keyed by pid AND JVM start instant, so a fresh process —
+    // even one the OS gave a dead JVM's pid — never finds a warm entry.
     assert(cacheBase.getFileName.toString ==
-      s"graft_drop_cache_pid${ProcessHandle.current().pid()}",
-      s"cache base ${cacheBase} is not scoped to this JVM")
+      s"graft_drop_cache_pid${me.pid()}_t$myStart",
+      s"cache base ${cacheBase} is not scoped to this JVM (pid + start)")
+  }
+
+  test("a dead JVM's cache under this JVM's pid is swept, not reused") {
+    // a recycled pid: same pid, different start instant — the earlier
+    // JVM's warm drops must not survive into this one
+    val parent = Files.createTempDirectory("graft_dropsweep")
+    try {
+      val mine = parent.resolve(DedupQueries.dropCacheName(me))
+      val stale = parent.resolve(
+        s"graft_drop_cache_pid${me.pid()}_t${myStart - 60000L}")
+      val legacy = parent.resolve(s"graft_drop_cache_pid${me.pid()}")
+      val unrelated = parent.resolve("not_a_drop_cache")
+      Seq(mine, stale, legacy, unrelated).foreach(Files.createDirectories(_))
+      Files.createFile(stale.resolve("drop_0.parquet"))
+      assert(mine != stale && cacheBase.getFileName != stale.getFileName,
+        "a different start instant mapped to this JVM's cache name")
+      DedupQueries.sweepDeadDropCaches(parent, mine)
+      assert(!Files.exists(stale), "a recycled-pid cache survived the sweep")
+      assert(!Files.exists(legacy), "a pid-only legacy cache survived the sweep")
+      assert(Files.isDirectory(mine), "the sweep removed the live cache")
+      assert(Files.isDirectory(unrelated), "the sweep removed a foreign dir")
+    } finally DedupQueries.rmQuietly(parent.toString)
   }
 
   test("a slice-logic change invalidates the cache instead of serving stale drops") {
