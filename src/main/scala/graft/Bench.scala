@@ -44,8 +44,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
     // session confs + rationale live in ONE place (round-16 advice):
-    // GraftSession — Bench/Verify/ScaleGen/ScaleGate all build there,
-    // and withStreamConfs pins GraftSession.InitialPartitionsKey.
+    // GraftSession — every entry point builds there, and
+    // withStreamConfs pins GraftSession.InitialPartitionsKey.
     val spark = GraftSession.build()
     // The driver parses the LAST ~2000 chars of stdout+stderr for the
     // bench line; chatty-but-intentional WARNs (global bounded-small

@@ -6,10 +6,13 @@ import org.apache.spark.sql.SparkSession
   * the AQE initial width + its env override were duplicated verbatim in
   * Bench and Verify, and withStreamConfs had to independently know to
   * pin the same key — three coupled sites, and the q123 regression that
-  * round came from one site not knowing about another). Every local
-  * entry point (Bench, Verify, ScaleGen, ScaleGate) builds through
-  * [[GraftSession.build]]; stream drains pin [[InitialPartitionsKey]]
-  * through this object's constants.
+  * round came from one site not knowing about another). Every entry
+  * point builds through [[GraftSession.builder]]: Bench, Verify,
+  * ScaleGen, ScaleGate, Explain and perfbench via [[build]];
+  * MedallionJob adds only its derby metastore and Hive support. The one
+  * exception is RaceProbe, whose minimal sessions run N at once as race
+  * children. Stream drains pin [[InitialPartitionsKey]] and
+  * [[StreamPartitions]] through this object's constants.
   */
 object GraftSession {
 
@@ -19,6 +22,12 @@ object GraftSession {
     * otherwise override their drop-sizing — the round-16 q123 leak). */
   val InitialPartitionsKey =
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+  /** Shuffle width of every stream drain's micro-batch plans (the
+    * text drains widen with the corpus, see
+    * `DedupQueries.textStreamWidth`): drop-sized batches want
+    * drop-sized widths. */
+  val StreamPartitions = "4"
 
   /** Shuffle WIDTH must scale with the data, not the core count
     * (round-16 sf10-skew finding): at 1.19M docs the q26 pair
@@ -40,8 +49,10 @@ object GraftSession {
   /** The shared local session every entry point runs on: graft
     * extensions, core-count base shuffle width + data-scaled AQE
     * initial width, UTC, nanos-as-long (the events.parquet encodings
-    * drift — see Tables.normalizeEventTs), no UI. */
-  def build(warehouseDir: Option[String] = None): SparkSession = {
+    * drift — see Tables.normalizeEventTs), no UI. The warehouse dir is
+    * a static conf, only settable at build time (ScaleGate scopes its
+    * artifact warehouse inside its work dir this way). */
+  def builder(warehouseDir: Option[String] = None): SparkSession.Builder = {
     val n = cpus
     val b = SparkSession.builder()
       .withExtensions(new graft.functions.expr.GraftExtensions)
@@ -63,10 +74,11 @@ object GraftSession {
       // contract heap beats the uniform-corpus speedup; revisit only
       // with a per-query scope and a skew-leg proof.
       .config("spark.ui.enabled", "false")
-    // static conf: only settable at build time (ScaleGate scopes its
-    // artifact warehouse inside its work dir this way)
-    val spark = warehouseDir
-      .fold(b)(w => b.config("spark.sql.warehouse.dir", w)).getOrCreate()
+    warehouseDir.fold(b)(w => b.config("spark.sql.warehouse.dir", w))
+  }
+
+  def build(warehouseDir: Option[String] = None): SparkSession = {
+    val spark = builder(warehouseDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   * LevenshteinPrefilter optimizer rule (implied length-difference
   * conjunct for edit-distance predicates).
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * (every session builder in this repo does), or
+  * Usage: `.withExtensions(new GraftExtensions)` on a session builder
+  * (`graft.GraftSession.builder` and the test session do), or
   * `spark.sql.extensions=graft.functions.expr.GraftExtensions` on any
   * cluster — the standard injection point, no fork of Spark needed.
   */

@@ -42,11 +42,11 @@ import graft.sinks.TableSink
   * Split-route gates (round-17 verdict #5 for CSV, round-18 verdict #1
   * for JSON): `multiLine=true` pins Spark's CSV and JSON sources to one
   * task per file, so at 100 TB ingest serializes on file count. Past
-  * [[csvSplitMinBytes]] / [[jsonSplitMinBytes]] total matched bytes the
-  * csv/json branches read through [[SplitCsv]] / [[SplitJson]] — the
-  * two-pass splittable readers, proven row-identical (corrupt
-  * classification included) to the multiLine readers by SplitCsvSpec /
-  * SplitJsonSpec — and synthesize the same `_metadata` lineage struct
+  * [[SplitMinBytes]] total matched bytes the csv/json branches read
+  * through [[SplitCsv]] / [[SplitJson]] — the two-pass splittable
+  * readers, proven row-identical (corrupt classification included) to
+  * the multiLine readers by SplitCsvSpec / SplitJsonSpec — and
+  * synthesize the same `_metadata` lineage struct
   * from the routes' own file/mtime columns. The reference's KB-scale
   * files stay on the multiLine readers.
   */
@@ -54,31 +54,10 @@ object SourceLoader {
 
   val CorruptCol = "_corrupt_record"
 
-  /** Byte-count knob with a VALIDATED parse (round-18 ADVICE: a
-    * malformed override used to throw a bare NumberFormatException deep
-    * inside readRaw with no hint which knob was bad). The sys.props
-    * form exists so specs can force either route in-process. */
-  private def bytesKnob(prop: String, env: String, default: Long): Long =
-    sys.props.get(prop).map((s"system property $prop", _))
-      .orElse(sys.env.get(env).map((s"env var $env", _)))
-      .fold(default) { case (src, v) =>
-        try v.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$src='$v' is not a byte count (whole number of bytes expected)")
-        }
-      }
-
-  /** Total matched CSV bytes past which readRaw switches to the
-    * splittable two-pass route. */
-  private[ingest] def csvSplitMinBytes: Long =
-    bytesKnob("graft.csv.split.min.bytes",
-      "SPARK_GRAFT_CSV_SPLIT_MIN_BYTES", 128L << 20)
-
-  /** Total matched JSON bytes past which readRaw switches to the
-    * splittable two-pass route (the FR shape; round-18 verdict #1). */
-  private[ingest] def jsonSplitMinBytes: Long =
-    bytesKnob("graft.json.split.min.bytes",
-      "SPARK_GRAFT_JSON_SPLIT_MIN_BYTES", 128L << 20)
+  /** Total matched CSV or JSON bytes past which readRaw switches to
+    * the splittable two-pass route. Specs force either route through
+    * readRaw's / loadCountry's `splitMinBytes` argument. */
+  final val SplitMinBytes = 128L << 20
 
   /** Result of one country's load: the appended row count and the number
     * of malformed rows skipped (the COPY report, ref: step_3:148-153). */
@@ -89,11 +68,12 @@ object SourceLoader {
 
   /** Read one country's staged files into the raw 16-field shape (still
     * stringly typed where the format is stringly typed). */
-  def readRaw(spark: SparkSession, dataDir: String, cc: CountryConfig): DataFrame = {
+  def readRaw(spark: SparkSession, dataDir: String, cc: CountryConfig,
+      splitMinBytes: Long = SplitMinBytes): DataFrame = {
     val path = salesPath(dataDir, cc)
     cc.format match {
       case "csv" =>
-        if (SplitFiles.globBytes(spark, path) >= csvSplitMinBytes)
+        if (SplitFiles.globBytes(spark, path) >= splitMinBytes)
           // the splittable route: task count scales with bytes, not
           // files; lineage synthesized to the multiLine reader's
           // `_metadata` shape (basename + modification time), plus the
@@ -116,7 +96,7 @@ object SourceLoader {
       case "parquet" =>
         spark.read.parquet(path).withColumn(CorruptCol, lit(null: String))
       case "json" =>
-        if (SplitFiles.globBytes(spark, path) >= jsonSplitMinBytes)
+        if (SplitFiles.globBytes(spark, path) >= splitMinBytes)
           // the splittable route (round-18 verdict #1): task count
           // scales with bytes, not files; the DECLARED stringly FR
           // element schema is passed through (round-19 verdict #4 —
@@ -156,8 +136,9 @@ object SourceLoader {
     * equivalent of the reference's per-format cast lists, step_3:28-46,
     * 58-76, 88-106), attach lineage + sequence, drop malformed rows. */
   def loadCountry(spark: SparkSession, dataDir: String, cc: CountryConfig,
-      keyOffset: Long = 0L): (DataFrame, LoadReport) = {
-    val raw0 = readRaw(spark, dataDir, cc)
+      keyOffset: Long = 0L,
+      splitMinBytes: Long = SplitMinBytes): (DataFrame, LoadReport) = {
+    val raw0 = readRaw(spark, dataDir, cc, splitMinBytes)
     // split-route frames carry the record's absolute byte offset — a
     // deterministic within-file total order under ANY task placement;
     // the single-split multiLine/parquet routes keep the mono-id order

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
 import graft.consume.{DateDimBuilder, DimBuilder, FactBuilder}
 import graft.curate.CurateJob
 import graft.ingest.SourceLoader
@@ -56,22 +57,16 @@ object MedallionJob {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/reference/amazon-sales-data")
     val warehouse = args.lift(1).getOrElse("/tmp/graft_warehouse")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
     // Hive-backed catalog with a derby metastore inside the warehouse
     // dir: table metadata survives across JVMs, so a re-run is a true
     // incremental load (append sources, delta dims) instead of a
-    // LOCATION_ALREADY_EXISTS failure against orphaned parquet.
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.expr.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", warehouse)
+    // LOCATION_ALREADY_EXISTS failure against orphaned parquet. AQE's
+    // initial width stays at the core count: the 512 scale-out default
+    // roughly doubles a pass over the reference's KB-scale drops.
+    val spark = GraftSession.builder(Some(warehouse))
+      .config(GraftSession.InitialPartitionsKey, GraftSession.cpus)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$warehouse/_metastore;create=true")
-      .config("spark.ui.enabled", "false")
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -128,7 +128,7 @@ trait DedupDecontam { self: DedupQueries.type =>
           if (graft.sources.DurableIndex.liveExists(s, dir, "contam_r", fp)) true
           else if (graft.sources.DurableIndex.liveExists(s, dir, "contam_del", fp)) false
           else graft.sources.DurableIndex.exceedsDebt(
-            full, del, "bench_id", RetractRebuildDebtFraction)
+            full, del, "bench_id")
         }
         if (folded) {
           // generation before marker (crash-ordered, the q147 shape);

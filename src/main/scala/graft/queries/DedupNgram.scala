@@ -288,12 +288,6 @@ trait DedupNgram { self: DedupQueries.type =>
       .select("doc_a", "doc_b", "n_common", "jaccard")
   }
 
-  /** Past this fraction of the standing postings rows, a delete is no
-    * longer a tombstone — it is a REBUILD (see
-    * [[ngramRetractPublishMode]]). */
-  private[queries] lazy val NgramRebuildDebtFraction =
-    sys.env.getOrElse("SPARK_GRAFT_NGRAM_REBUILD_DEBT_FRACTION", "0.2").toDouble
-
   /** Durable n-gram retraction with a TOMBSTONE-DEBT gate — the
     * "past-the-budget delete is a rebuild" path q150's contract
     * promised (round-12 verdict #1): a takedown-sized delete is a
@@ -303,9 +297,10 @@ trait DedupNgram { self: DedupQueries.type =>
     * broadcast delete-set derivatives stop being broadcastable. The
     * gate measures the debt as the DELETED FRACTION OF THE POSTINGS
     * ROWS (one doc_id-column scan of the artifact per takedown batch,
-    * never text); past [[NgramRebuildDebtFraction]] the whole family
-    * MAJOR-COMPACTS instead: the base artifacts rebuild over the net
-    * corpus — postings tombstoned and re-df'd in one window shuffle,
+    * never text); past
+    * [[graft.sources.DurableIndex.RebuildDebtFraction]] the whole
+    * family MAJOR-COMPACTS instead: the base artifacts rebuild over
+    * the net corpus — postings tombstoned and re-df'd in one window shuffle,
     * pairs fully re-scored — and publish as a fresh
     * (corpus fp x delete-set fp) generation under sibling families
     * (`ngram_post_r` bucketed on sg like its base, `ngram_pairs_r`).
@@ -331,7 +326,7 @@ trait DedupNgram { self: DedupQueries.type =>
       if (graft.sources.DurableIndex.liveExists(s, dir, "ngram_post_r", fp)) true
       else if (graft.sources.DurableIndex.liveExists(s, dir, "ngram_pairs_r", fp)) false
       else graft.sources.DurableIndex.exceedsDebt(
-        post, del, "doc_id", NgramRebuildDebtFraction)
+        post, del, "doc_id")
     }
     val pairs =
       if (rebuild) {

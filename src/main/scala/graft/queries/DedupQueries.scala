@@ -769,7 +769,7 @@ object DedupQueries
     // Same labeling contract and verbatim oracle as q143.
     QueryDef(
       "q154_retraction_publish",
-      s"retraction published durably as a PATCH: an O(|D|+affected-clusters) (corpus fp x delete-set fp)-keyed sidecar (delete ids, affected labels, relabeled rows) composed over the unchanged base band/pair/cc artifacts via broadcast anti-joins — full-generation fold only past the ${(RetractRebuildDebtFraction * 100).toInt}% debt gate — == q143 == batch CC labeling over corpus-minus-deleted exactly",
+      s"retraction published durably as a PATCH: an O(|D|+affected-clusters) (corpus fp x delete-set fp)-keyed sidecar (delete ids, affected labels, relabeled rows) composed over the unchanged base band/pair/cc artifacts via broadcast anti-joins — full-generation fold only past the ${(graft.sources.DurableIndex.RebuildDebtFraction * 100).toInt}% debt gate — == q143 == batch CC labeling over corpus-minus-deleted exactly",
       ccOracleSqlFor("doc_id % 10 NOT IN (3, 7)")) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val del = docs.filter(col("doc_id") % 10 === 3).select("doc_id")
@@ -795,7 +795,7 @@ object DedupQueries
     // ~44% delete below trips the gate naturally (no forcing).
     QueryDef(
       "q157_ngram_retraction_rebuild",
-      s"past-the-budget deletion is a REBUILD: a sweep-scale delete (~44% of standing postings) trips the ${(NgramRebuildDebtFraction * 100).toInt}% tombstone-debt gate and major-compacts the n-gram family — net postings re-df'd in one window shuffle, pairs fully re-scored, published as a fresh (corpus fp x delete-set fp) generation that truncates the delete log — == full n-gram Jaccard over corpus-minus-deleted exactly",
+      s"past-the-budget deletion is a REBUILD: a sweep-scale delete (~44% of standing postings) trips the ${(graft.sources.DurableIndex.RebuildDebtFraction * 100).toInt}% tombstone-debt gate and major-compacts the n-gram family — net postings re-df'd in one window shuffle, pairs fully re-scored, published as a fresh (corpus fp x delete-set fp) generation that truncates the delete log — == full n-gram Jaccard over corpus-minus-deleted exactly",
       sqlNgramOracleFor("doc_id % 2 = 0")) { (s, dir) =>
       val del = Tables.documents(s, dir)
         .filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 2 === 1)
@@ -878,7 +878,7 @@ object DedupQueries
     // labeling over corpus-minus-deleted, verbatim oracle.
     QueryDef(
       "q159_retraction_publish_rebuild",
-      s"past-the-budget retraction publish is a FOLD: a sweep-scale takedown (~44% of standing band rows) trips the ${(RetractRebuildDebtFraction * 100).toInt}% tombstone-debt gate and major-compacts band/pair/cc into full (corpus fp x delete-set fp) generations — the patch-log truncation; every later read a bare bucketed scan — == batch CC labeling over corpus-minus-deleted exactly",
+      s"past-the-budget retraction publish is a FOLD: a sweep-scale takedown (~44% of standing band rows) trips the ${(graft.sources.DurableIndex.RebuildDebtFraction * 100).toInt}% tombstone-debt gate and major-compacts band/pair/cc into full (corpus fp x delete-set fp) generations — the patch-log truncation; every later read a bare bucketed scan — == batch CC labeling over corpus-minus-deleted exactly",
       ccOracleSqlFor("doc_id % 10 NOT IN (1, 3, 5, 9, 7)")) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val del = docs.filter((col("doc_id") % 10).isin(1, 3, 5, 9))
@@ -907,7 +907,7 @@ object DedupQueries
     // benchmark, verbatim (RetractionSpec pins both).
     QueryDef(
       "q161_bench_retirement",
-      s"benchmark retirement over the decontamination artifacts: a rotated-out eval slice (bench_id % 50 == 0) published ONCE as a (corpus fp x retire-set fp) contam_del patch sidecar or, past the shared ${(RetractRebuildDebtFraction * 100).toInt}% debt gate, a contam_r fold; readers compose one broadcast anti-join over the durable full-benchmark contamination table (per-pair facts: no re-probing, no re-tokenization) — == decontamination vs the surviving benchmark exactly",
+      s"benchmark retirement over the decontamination artifacts: a rotated-out eval slice (bench_id % 50 == 0) published ONCE as a (corpus fp x retire-set fp) contam_del patch sidecar or, past the shared ${(graft.sources.DurableIndex.RebuildDebtFraction * 100).toInt}% debt gate, a contam_r fold; readers compose one broadcast anti-join over the durable full-benchmark contamination table (per-pair facts: no re-probing, no re-tokenization) — == decontamination vs the surviving benchmark exactly",
       decontaminateOracleFor("", "doc_id % 50 != 0")) { (s, dir) =>
       val retired = Tables.documents(s, dir)
         .filter(col("doc_id") % 50 === 0)

@@ -141,13 +141,6 @@ trait DedupRetraction { self: DedupQueries.type =>
         java.lang.Long.parseLong(deleteSetFp(del), 16)) & 0xFFFFFFFFFFFFL) | 0x1)
   }
 
-  /** Past this fraction of the standing band-index rows, a published
-    * delete stops being a patch and FOLDS into full generations (see
-    * [[retractPublishMode]]) — the band/pair/cc twin of
-    * [[NgramRebuildDebtFraction]]. */
-  private[queries] lazy val RetractRebuildDebtFraction =
-    sys.env.getOrElse("SPARK_GRAFT_RETRACT_REBUILD_DEBT_FRACTION", "0.2").toDouble
-
   /** Durable band/pair/cc retraction with the TOMBSTONE-DEBT gate —
     * q157's economics applied to the family that motivated it
     * (round-13 verdict #1): the old path rebuilt `band_index_r` (the
@@ -170,10 +163,10 @@ trait DedupRetraction { self: DedupQueries.type =>
     *     patched against the base — successive patch generations
     *     supersede each other under the standard retirement;
     *   - PAST the gate (a sweep-scale delete crossing
-    *     [[RetractRebuildDebtFraction]] of the standing band-index
-    *     rows, or an ABSOLUTE delete-id cap — ~4M ids, the point where
-    *     the patch-composed read's broadcast stops being cheap however
-    *     small the fraction), the family MAJOR-COMPACTS: the
+    *     [[graft.sources.DurableIndex.RebuildDebtFraction]] of the
+    *     standing band-index rows, or an ABSOLUTE delete-id cap — ~4M
+    *     ids, the point where the patch-composed read's broadcast stops
+    *     being cheap however small the fraction), the family MAJOR-COMPACTS: the
     *     post-delete artifacts publish as full (corpus fp x delete fp)
     *     generations (`band_index_r` bucketed like its base,
     *     `pair_index_r_b16`, `cc_index_r`) and every later read is a
@@ -206,7 +199,7 @@ trait DedupRetraction { self: DedupQueries.type =>
       if (graft.sources.DurableIndex.liveExists(s, dir, "cc_index_r", fp)) true
       else if (graft.sources.DurableIndex.liveExists(s, dir, "retract_patch", fp)) false
       else graft.sources.DurableIndex.exceedsDebt(
-        bands0, del, "doc_id", RetractRebuildDebtFraction)
+        bands0, del, "doc_id")
     }
     if (rebuild) {
       lazy val retracted = retractMaintain(bands0,

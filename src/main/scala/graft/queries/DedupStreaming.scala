@@ -25,15 +25,13 @@ trait DedupStreaming { self: DedupQueries.type =>
     * 14 at sf10 — measured on q107's bootstrap drain at sf10: 232s at
     * width 4 -> 162s at 16 (-30%), warm drop cache both runs. Vector /
     * event / sketch drains keep the flat default: their batches don't
-    * amplify (q126 measured NO gain from widening). Env override wins
-    * everywhere. */
-  private[queries] def textStreamWidth(s: SparkSession, dir: String): Option[String] =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").orElse {
-      val p = new org.apache.hadoop.fs.Path(dir, "documents.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      Some(math.max(4L, math.min(32L, bytes / (4L << 20))).toString)
-    }
+    * amplify (q126 measured NO gain from widening). */
+  private[queries] def textStreamWidth(s: SparkSession, dir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir, "documents.parquet")
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    math.max(4L, math.min(32L, bytes / (4L << 20))).toString
+  }
 
   /** Stream-drain session confs, saved/restored around a drain:
     * micro-batches are drop-sized, so full-width shuffles are pure
@@ -44,7 +42,7 @@ trait DedupStreaming { self: DedupQueries.type =>
     * exactly its own partition. The stream's cloned session inherits
     * both at start. */
   private[queries] def withStreamConfs[T](s: SparkSession,
-      width: Option[String] = None)(body: => T): T = {
+      width: String = graft.GraftSession.StreamPartitions)(body: => T): T = {
     // AQE's initial width must be pinned alongside shuffle.partitions:
     // foreachBatch bodies are BATCH plans (AQE on — only the streaming
     // source plan disables it), so the session's wide scale-out default
@@ -57,10 +55,8 @@ trait DedupStreaming { self: DedupQueries.type =>
     val oldParts = s.conf.get("spark.sql.shuffle.partitions")
     val oldInit = s.conf.getOption(initKey)
     val oldMode = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    val streamParts = width.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    s.conf.set(initKey, streamParts)
+    s.conf.set("spark.sql.shuffle.partitions", width)
+    s.conf.set(initKey, width)
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try body
     finally {
@@ -316,9 +312,7 @@ trait DedupStreaming { self: DedupQueries.type =>
   /** Idle grace before the global drop-cache sweep collects an entry —
     * long enough that every drain family of an active working dir reads
     * (and mtime-bumps) its entry well inside the window. */
-  private[queries] lazy val DropCacheIdleMs: Long =
-    sys.env.get("SPARK_GRAFT_DROP_CACHE_IDLE_MS").map(_.toLong)
-      .getOrElse(6L * 3600 * 1000)
+  private[queries] final val DropCacheIdleMs = 6L * 3600 * 1000
 
   /** Pre-create the EMPTY stream-grown band index: band schema,
     * batch_id partitioning (replay idempotency), 16-bucket band_key
@@ -382,7 +376,7 @@ trait DedupStreaming { self: DedupQueries.type =>
   private[queries] def drainDrops(s: SparkSession, tag: String,
       chaos: Long => Unit, scratch: Option[(String, String)],
       resume: Boolean, sink: String,
-      width: => Option[String] = None,
+      width: => String = graft.GraftSession.StreamPartitions,
       schema: => Option[org.apache.spark.sql.types.StructType] = None)
       (stage: String => Unit)
       (perBatch: (DataFrame, Long) => Unit)
@@ -744,7 +738,7 @@ trait DedupStreaming { self: DedupQueries.type =>
       // (round-12 verdict #6); the count runs only if the stage
       // somehow left no block metadata
       val large = stagedBytes(staged)
-        .map(_ > SimilarityQueries.SemDeltaBroadcastMaxBytes)
+        .map(_ > DeltaBroadcastMaxBytes)
         .getOrElse(staged.count() >
           SimilarityQueries.SemDeltaBroadcastMaxVecs)
       // probe-sink write and index append overlapped (guide
@@ -846,17 +840,16 @@ trait DedupStreaming { self: DedupQueries.type =>
     * 100-TB scale a day's-crawl delta is far beyond this and takes the
     * bucket-join path; the per-micro-batch streaming deltas sit far
     * below it and keep the broadcast plan. */
-  private[queries] lazy val DeltaBroadcastMaxDocs =
-    sys.env.getOrElse("SPARK_GRAFT_DELTA_BROADCAST_MAX_DOCS", "65536").toLong
+  private[queries] final val DeltaBroadcastMaxDocs = 65536L
 
   /** The byte form of the same gate, used when the delta is already
     * STAGED (localCheckpoint'd): ~32 MB of staged delta stops
     * broadcasting — the same order as the [[DeltaBroadcastMaxDocs]]
     * doc arithmetic (64k docs x 6 bands x ~60 B ≈ 25 MB), stated in
-    * the unit that actually matters for a broadcast. */
-  private[queries] lazy val DeltaBroadcastMaxBytes =
-    sys.env.getOrElse("SPARK_GRAFT_DELTA_BROADCAST_MAX_BYTES",
-      (32L << 20).toString).toLong
+    * the unit that actually matters for a broadcast. The staged
+    * embedding deltas (the q114 drain, the semantic serving tail)
+    * share it. */
+  private[queries] final val DeltaBroadcastMaxBytes = 32L << 20
 
   /** Below this many DOUBLED-edge-equivalent staged bytes, the
     * connected-components labeling runs as a driver union-find instead
@@ -866,9 +859,7 @@ trait DedupStreaming { self: DedupQueries.type =>
     * (The staging is the UNDOUBLED pair list since round 22, so the
     * gate compares staged bytes against HALF this constant — same
     * admission set, half the staged/collected volume.) */
-  private[queries] lazy val CcDriverMaxBytes =
-    sys.env.getOrElse("SPARK_GRAFT_CC_DRIVER_MAX_BYTES",
-      (64L << 20).toString).toLong
+  private[queries] final val CcDriverMaxBytes = 64L << 20
 
   /** Run a micro-batch's two INDEPENDENT sink writes concurrently
     * (guide §2.6: actions are only sequential because the driver calls

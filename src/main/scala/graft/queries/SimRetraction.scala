@@ -17,13 +17,6 @@ import graft.sources.Tables
   * members). */
 trait SimRetraction { self: SimilarityQueries.type =>
 
-  /** Past this fraction of the standing block-index rows, a published
-    * ANN delete stops being a sidecar and FOLDS into a full index
-    * generation — the similarity twin of
-    * [[DedupQueries.RetractRebuildDebtFraction]]. */
-  private[queries] val SemRebuildDebtFraction =
-    sys.env.getOrElse("SPARK_GRAFT_SEM_REBUILD_DEBT_FRACTION", "0.2").toDouble
-
   /** The (corpus fp x delete-set fp) version a published ANN delete log
     * is keyed on — [[DedupQueries.retractionFp]] over the embeddings
     * source. */
@@ -57,11 +50,12 @@ trait SimRetraction { self: SimilarityQueries.type =>
     *   - under the gate, serving COMPOSES the sidecar over the
     *     unchanged base index: one broadcast anti-join added to the
     *     bucketed Exchange-free scan;
-    *   - past [[SemRebuildDebtFraction]], the index MAJOR-COMPACTS
-    *     into a full `sem_blocks_r` generation (bucketed on block_key
-    *     like its base; codebook deliberately NOT retrained — the
-    *     serving contract is "the same index minus the deleted rows"),
-    *     and every later read is a bare bucketed scan again.
+    *   - past [[graft.sources.DurableIndex.RebuildDebtFraction]], the
+    *     index MAJOR-COMPACTS into a full `sem_blocks_r` generation
+    *     (bucketed on block_key like its base; codebook deliberately
+    *     NOT retrained — the serving contract is "the same index minus
+    *     the deleted rows"), and every later read is a bare bucketed
+    *     scan again.
     *
     * WITHOUT a delete batch (`delIds = None` — a fresh serving
     * session), the live sidecar is discovered from the warehouse
@@ -88,7 +82,7 @@ trait SimRetraction { self: SimilarityQueries.type =>
           if (graft.sources.DurableIndex.liveExists(s, dir, "sem_blocks_r", fp)) true
           else if (graft.sources.DurableIndex.liveExists(s, dir, "sem_del", fp)) false
           else graft.sources.DurableIndex.exceedsDebt(
-            idx0, del.select(col("vec_id")), "vec_id", SemRebuildDebtFraction)
+            idx0, del.select(col("vec_id")), "vec_id")
         }
         if (folded) {
           // the GENERATION publishes before the sidecar marker (a

@@ -89,7 +89,7 @@ trait SimServing { self: SimilarityQueries.type =>
     // #6); both broadcast sides (qkeys, qvecs) derive from it
     val large = forceLarge.getOrElse(
       DedupQueries.stagedBytes(queries)
-        .map(_ > SemDeltaBroadcastMaxBytes)
+        .map(_ > DedupQueries.DeltaBroadcastMaxBytes)
         .getOrElse(raw.select("vec_id").count() > SemDeltaBroadcastMaxVecs))
     val stats = codebook.agg(max(col("n_corpus")).as("n_corpus"))
     def keysOf(extra: Column*) = queries
@@ -296,12 +296,8 @@ trait SimServing { self: SimilarityQueries.type =>
 
   /** Threshold over which an arriving embedding delta stops
     * broadcasting and instead shuffles both sides on (cell, sub) —
-    * the same size-gate discipline as the q93/q108 MinHash probe. */
+    * the same size-gate discipline as the q93/q108 MinHash probe. A
+    * STAGED delta is gated by bytes instead, on
+    * [[DedupQueries.DeltaBroadcastMaxBytes]]. */
   private[graft] val SemDeltaBroadcastMaxVecs = 100000L
-
-  /** The byte form of the same gate, for call sites whose delta is
-    * already STAGED (the streaming drains): ~32 MB of staged blocks
-    * stops broadcasting — read from block-manager metadata, zero
-    * jobs per micro-batch (round-12 verdict #6). */
-  private[graft] val SemDeltaBroadcastMaxBytes = 32L << 20
 }

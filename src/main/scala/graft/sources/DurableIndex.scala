@@ -154,40 +154,8 @@ private[graft] object DurableIndex {
                  |LOCATION '$loc'""".stripMargin)
       }
     }
-    if (bucketSpec.isDefined) s.table(qualified) else memoParquet(s, loc.toString)
-  }
-
-  /** Per-(session, path, root mtime/len) memo of the resolved
-    * DataFrame for NON-catalog artifact reads (sidecars, codebooks,
-    * df/pair tables) — the Tables.load discipline applied to the
-    * attach fast path: generation dirs are fp-keyed and immutable
-    * once published, so re-resolving the listing + footer on every
-    * attach is repeated driver-side work (guide §5/§7.3). A parked or
-    * republished generation changes the path's root status and mints
-    * a new key; a vanished path resolves (and throws) exactly like the
-    * direct read did. Catalog tables stay on `s.table` — Spark's own
-    * relation cache already covers them. */
-  private val parquetMemo =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  private def memoParquet(s: SparkSession, path: String): DataFrame = {
-    val ver =
-      try {
-        val p = new Path(path)
-        val st = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getFileStatus(p)
-        s"${st.getLen}:${st.getModificationTime}"
-      } catch { case _: java.io.IOException => "absent" }
-    val per = parquetMemo.synchronized {
-      var m = parquetMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        parquetMemo.put(s, m)
-      }
-      m
-    }
-    per.computeIfAbsent(s"$path@$ver", _ => s.read.parquet(path))
+    if (bucketSpec.isDefined) s.table(qualified)
+    else Tables.resolvedParquet(s, loc.toString)
   }
 
   /** Park a superseded generation under a UNIQUE `.retired.<nonce>`
@@ -377,11 +345,17 @@ private[graft] object DurableIndex {
     }
   }
 
+  /** Past this fraction of an artifact's standing rows, a published
+    * delete stops being a patch/tombstone/sidecar and FOLDS into a full
+    * generation — one debt budget for every retraction family. */
+  final val RebuildDebtFraction = 0.2
+
   /** The TOMBSTONE-DEBT gate shared by every retraction family (the
     * band/pair/cc stack, the n-gram family, the ANN index): a delete
-    * folds into a full generation when it exceeds `fraction` of the
-    * standing index rows — one key-column scan of the artifact, NO
-    * broadcast hint (sweep scale is exactly where AQE must choose) —
+    * folds into a full generation when it exceeds
+    * [[RebuildDebtFraction]] of the standing index rows — one
+    * key-column scan of the artifact, NO broadcast hint (sweep scale
+    * is exactly where AQE must choose) —
     * OR `maxIds` distinct ids outright: the debt fraction alone is
     * relative, and a 19% takedown of a billion-document corpus would
     * otherwise pass the gate and saddle every later patch-composed
@@ -389,13 +363,13 @@ private[graft] object DurableIndex {
     * of longs) matches the library's delta-broadcast byte gate. `del`
     * must be the distinct, staged delete-id relation keyed `key`. */
   private[graft] def exceedsDebt(idx: DataFrame, del: DataFrame, key: String,
-      fraction: Double, maxIds: Long = 4L << 20): Boolean = {
+      maxIds: Long = 4L << 20): Boolean = {
     if (del.count() > maxIds) return true
     val r = idx.select(key)
       .join(del.withColumn("d", lit(1)), Seq(key), "left")
       .agg(count(lit(1)).as("tot"),
         coalesce(sum(col("d")), lit(0L)).as("deleted")).first()
-    r.getLong(1).toDouble > fraction * r.getLong(0).toDouble
+    r.getLong(1).toDouble > RebuildDebtFraction * r.getLong(0).toDouble
   }
 
   /** Attach the LIVE generation of a plain (non-bucketed) `family` for
@@ -432,7 +406,7 @@ private[graft] object DurableIndex {
       live.lastOption match {
         case None => return None
         case Some(st) =>
-          try return Some(memoParquet(s, st.getPath.toString))
+          try return Some(Tables.resolvedParquet(s, st.getPath.toString))
           catch {
             case _: org.apache.spark.sql.AnalysisException
               if attempt < 3 && !fs.exists(st.getPath) => // parked under us

@@ -19,7 +19,7 @@ object Tables {
   val dataOps: Seq[String] = Seq("events", "documents", "embeddings")
   val all: Seq[String] = starSchema ++ dataOps
 
-  /** Per-(session, path) memo of the RESOLVED base-table DataFrame —
+  /** Per-(session, path) memo of the RESOLVED parquet DataFrame —
     * driver-side plan-construction work only (file listing + footer
     * schema inference + relation resolution), never data: every action
     * on the returned frame still scans the parquet from disk. The
@@ -28,40 +28,56 @@ object Tables {
     * of the same static file), the largest uniform slice of the
     * 94-query small-query bucket (guide §5: the driver should do
     * almost no work; §7.3: resolution/listing is single-threaded
-    * driver time). Keyed WEAKLY on the session (foreachBatch clones
-    * sessions per micro-batch — strong keys would pin them) and on
-    * (path, root length+mtime): a REGENERATED corpus at the same path
-    * (the BandIndex/SemIndex/DurableArtifacts regen flows: overwrite
-    * rewrites the table dir, bumping its mtime) mints a new key
-    * instead of serving the stale file listing. The one root
-    * getFileStatus per call is the same driver-side metadata read
-    * DurableIndex.fingerprint makes, microseconds against the ~100 ms
-    * resolution it saves. Contract: corpora are flat single-file-or-
-    * flat-dir tables (a nested-partition in-place overwrite that
-    * leaves the root mtime untouched is not a supported flow). */
-  private val resolved =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+    * driver time). Both the base tables ([[load]]) and DurableIndex's
+    * non-catalog artifact attaches read through it.
+    *
+    * Keyed on `sessionUUID` (a String: a session-keyed weak map never
+    * collects, because its DataFrame values reference their session)
+    * and bounded to [[MaxMemoSessions]] least-recently-used sessions —
+    * foreachBatch streams run on cloned sessions. Each path holds ONE
+    * version: a regenerated table or a republished generation at the
+    * same path replaces its entry instead of accumulating. The version
+    * is the root's length + mtime plus its listing (child names,
+    * lengths, mtimes): a Spark-written dir's root length is constant,
+    * so a same-tick rewrite would collide on len+mtime alone, while its
+    * part-file names carry a fresh UUID on every write. One root
+    * getFileStatus + listStatus per call, microseconds against the
+    * ~100 ms resolution it saves. A vanished path resolves (and
+    * throws) exactly like the direct read. Contract: a rewrite below
+    * the root's children that leaves its listing untouched is not a
+    * supported flow. */
+  private[graft] def resolvedParquet(spark: SparkSession, path: String): DataFrame = {
     val ver =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
-        val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p)
-        s"${st.getLen}:${st.getModificationTime}"
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val st = fs.getFileStatus(p)
+        fs.listStatus(p)
+          .map(c => s"${c.getPath.getName}:${c.getLen}:${c.getModificationTime}")
+          .sorted.mkString(s"${st.getLen}:${st.getModificationTime}|", ",", "")
       } catch { case _: java.io.IOException => "absent" }
-    val per = resolved.synchronized {
-      var m = resolved.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        resolved.put(spark, m)
-      }
-      m
-    }
-    per.computeIfAbsent(s"$path@$ver", _ => spark.read.parquet(path))
+    val id = org.apache.spark.sql.GraftSessionId.of(spark)
+    val per = memo.synchronized(memo.computeIfAbsent(id, _ => new PathMemo))
+    per.compute(path, (_, old) =>
+      if (old != null && old._1 == ver) old else (ver, spark.read.parquet(path)))._2
   }
+
+  private[sources] val MaxMemoSessions = 16
+
+  /** path -> (version, resolved relation) for one session. */
+  private type PathMemo =
+    java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]
+
+  private val memo = new java.util.LinkedHashMap[String, PathMemo](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, PathMemo]): Boolean =
+      size > MaxMemoSessions
+  }
+
+  /** Sessions the memo currently holds. */
+  private[sources] def memoSessions: Int = memo.synchronized(memo.size)
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    resolvedParquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")

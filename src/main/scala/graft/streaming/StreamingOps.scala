@@ -126,12 +126,15 @@ object StreamingOps {
   /** Stateful-query partition sizing shared by every stateful stream
     * here: shuffle partitions beyond the state volume are pure
     * per-micro-batch state-store commit overhead (measured 72s -> 31s
-    * at sf0.1 going 32 -> 4 on the interval join). At real volumes
-    * raise SPARK_GRAFT_STREAM_PARTITIONS instead. */
+    * at sf0.1 going 32 -> 4 on the interval join). The width is the
+    * drains' shared [[graft.GraftSession.StreamPartitions]]; unlike
+    * `DedupQueries.withStreamConfs` this sets no AQE width and no
+    * overwrite mode: these drains append, they never rewrite a
+    * batch_id partition. */
   private def withStreamPartitions[T](spark: SparkSession)(f: => T): T = {
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
     val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamParts)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      graft.GraftSession.StreamPartitions)
     try f
     finally spark.conf.set("spark.sql.shuffle.partitions", oldParts)
   }

@@ -33,6 +33,8 @@ import org.apache.spark.sql.SparkSession
   */
 object RaceProbe {
 
+  /** A minimal `local[2]` session, deliberately not GraftSession's:
+    * N of these JVMs run at once as race children. */
   private def session(warehouse: String): SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")

@@ -26,9 +26,10 @@ import scala.util.control.NonFatal
   *                    leg over (both observed on the first full run)
   *
   * What it does, in order:
-  *   1. REFUSES to run with any engine force flag set (pinned gates
-  *      measure a route, not the engine) — the no-force-flags claim is
-  *      enforced, not asserted after the fact;
+  *   1. REFUSES to run with the one remaining route-pinning variable
+  *      (SPARK_GRAFT_INITIAL_PARTITIONS) set — a pinned width measures
+  *      a route, not the engine; every size gate is a constant — so the
+  *      no-force-flags claim is enforced, not asserted after the fact;
   *   2. generates-or-reuses three corpora under <workDir>: sf1
   *      (x10 of sf0.1), sf10 (x100), sf10skew (x100 + skew blocks) —
   *      reuse keys on ScaleGen's _scalegen_meta.json marker (params +
@@ -127,17 +128,11 @@ object ScaleGate {
     * scaled badly). */
   val SmallDenominatorS = 5.0
 
-  /** Gate-pinning env vars: a run with any of these set measures a
-    * pinned route, not the engine's own gates. */
-  val ForceFlags: Seq[String] = Seq(
-    "SPARK_GRAFT_CC_DRIVER_MAX_BYTES",
-    "SPARK_GRAFT_DELTA_BROADCAST_MAX_DOCS",
-    "SPARK_GRAFT_DELTA_BROADCAST_MAX_BYTES",
-    "SPARK_GRAFT_SEM_REBUILD_DEBT_FRACTION",
-    "SPARK_GRAFT_RETRACT_REBUILD_DEBT_FRACTION",
-    "SPARK_GRAFT_NGRAM_REBUILD_DEBT_FRACTION",
-    "SPARK_GRAFT_STREAM_PARTITIONS",
-    "SPARK_GRAFT_INITIAL_PARTITIONS")
+  /** Route-pinning env vars: a run with any of these set measures a
+    * pinned route, not the engine's own gates. The size gates
+    * themselves are constants; only the AQE initial width is still
+    * settable. */
+  val ForceFlags: Seq[String] = Seq("SPARK_GRAFT_INITIAL_PARTITIONS")
 
   private def f(d: Double): String =
     if (d.isNaN) "NaN" // --skip-sf1 ratios; BigDecimal(NaN) throws

@@ -123,18 +123,12 @@ class SplitCsvSpec extends SparkSpec {
     // lineage columns (file name, row number, modification time) and
     // surrogate keys included.
     val cc = CountryConfig("IN")
-    def withSplitMin[A](v: String)(body: => A): A = {
-      sys.props("graft.csv.split.min.bytes") = v
-      try body finally sys.props.remove("graft.csv.split.min.bytes")
-    }
-    val viaSplit = withSplitMin("0") {
-      assert(SourceLoader.readRaw(spark, refDataDir, cc)
-        .columns.contains("_rec_offset"), "gate did not pick the split route")
-      SourceLoader.loadCountry(spark, refDataDir, cc)
-    }
-    val viaMono = withSplitMin(Long.MaxValue.toString) {
-      SourceLoader.loadCountry(spark, refDataDir, cc)
-    }
+    assert(SourceLoader.readRaw(spark, refDataDir, cc, splitMinBytes = 0L)
+      .columns.contains("_rec_offset"), "gate did not pick the split route")
+    val viaSplit = SourceLoader.loadCountry(spark, refDataDir, cc,
+      splitMinBytes = 0L)
+    val viaMono = SourceLoader.loadCountry(spark, refDataDir, cc,
+      splitMinBytes = Long.MaxValue)
     assert(viaSplit._2.loaded == 1931L, "split-route golden count")
     assert(viaSplit._2.skipped == viaMono._2.skipped, "skip counts differ")
     val (a, b) = (viaSplit._1, viaMono._1)
