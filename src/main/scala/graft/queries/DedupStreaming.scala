@@ -70,20 +70,6 @@ trait DedupStreaming { self: DedupQueries.type =>
   }
 
 
-  /** Scratch dir for stream sources and checkpoints: prefers the
-    * RAM-backed /dev/shm when present — the drains' wall cost is
-    * checkpoint-commit fsync, which tmpfs makes free. Production
-    * checkpoints live on durable shared storage by contract; this
-    * helper only places LOCAL bench/test scratch. The replay specs
-    * pass their own disk-backed scratch dirs, so the chaos-kill
-    * contract still exercises real on-disk checkpoints. */
-  private[graft] def streamScratch(tag: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, tag).toString
-    else java.nio.file.Files.createTempDirectory(tag).toString
-  }
-
   private[graft] def rmQuietly(dirs: String*): Unit = dirs.foreach(d =>
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)): Unit)
 
@@ -93,15 +79,11 @@ trait DedupStreaming { self: DedupQueries.type =>
     * 12 bench iterations each for the drain families — was re-deriving
     * them through n Spark write jobs before the stream even started,
     * the dominant share of the q107/q134 fixed cost (round-13 verdict
-    * #7). The first invocation per corpus writes the slices into a
-    * local scratch cache (atomic-rename publish, same discipline as
-    * DurableIndex); every later one driver-side-copies n small files.
-    * The per-invocation mtimes stay EXPLICIT and strictly increasing —
-    * FileStreamSource orders by (mtime, path), and the
+    * #7). The first invocation per corpus writes the slices into
+    * [[JvmScratch.cached]]; every later one driver-side-copies n small
+    * files. The per-invocation mtimes stay EXPLICIT and strictly
+    * increasing — FileStreamSource orders by (mtime, path), and the
     * order-dependent drains (q107/q134) need it deterministic.
-    * Cache placement follows [[streamScratch]] (bench/test scratch
-    * only — a production drain reads a real feed, not staged drops);
-    * stale-fingerprint siblings are purged on build.
     *
     * The cache key is (family, dir tag, corpus fp, SLICE-PLAN fp):
     * the last component hashes the canonicalized analyzed plans of
@@ -110,12 +92,7 @@ trait DedupStreaming { self: DedupQueries.type =>
     * of silently serving the old slicing's cached drops (round-15
     * advice). Plan canonicalization normalizes expression ids, so the
     * hash is stable across sessions; a spurious mismatch merely costs
-    * one rebuild. Growth is bounded two ways: same-(family, tag)
-    * siblings purge on build (corpus regenerated), and a global
-    * age sweep drops ANY entry idle past [[DropCacheIdleMs]] —
-    * read hits bump the entry's mtime, so only truly idle tags decay.
-    * The post-sweep read race (a concurrent purge deleting the entry
-    * mid-copy) is tolerated: the reader rebuilds once and re-copies. */
+    * one rebuild. */
   private[queries] def stageDropsCached(s: SparkSession, dir: String,
       family: String, srcFile: String, srcDir: String, n: Int)
       (slice: Int => DataFrame): Unit = {
@@ -128,24 +105,22 @@ trait DedupStreaming { self: DedupQueries.type =>
         .digest(planText.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(8)
     }
-    cachedStage(s, family, dir, s"$fp$sliceFp") { tmp =>
+    val root = JvmScratch.cached(family, dir, s"$fp$sliceFp") { tmp =>
       (0 until n).foreach { i =>
-        val t2 = java.nio.file.Files.createTempDirectory(s"graft_${family}_drop$i")
-        try {
-          slice(i).coalesce(1).write.mode("overwrite").parquet(t2.toString)
-          val part = cacheListDir(t2)
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          java.nio.file.Files.copy(part, tmp.resolve(s"drop_$i.parquet"))
-        } finally rmQuietly(t2.toString)
+        val t2 = tmp.resolve(s"_slice$i")
+        slice(i).coalesce(1).write.mode("overwrite").parquet(t2.toString)
+        val part = JvmScratch.list(t2)
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        java.nio.file.Files.move(part, tmp.resolve(s"drop_$i.parquet"))
+        rmQuietly(t2.toString)
       }
-    } { root =>
-      (0 until n).foreach { i =>
-        val dst = java.nio.file.Paths.get(srcDir, s"drop_$i.parquet")
-        java.nio.file.Files.copy(root.resolve(s"drop_$i.parquet"), dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L + i * 60000L))
-      }
+    }
+    (0 until n).foreach { i =>
+      val dst = java.nio.file.Paths.get(srcDir, s"drop_$i.parquet")
+      java.nio.file.Files.copy(root.resolve(s"drop_$i.parquet"), dst,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1600000000000L + i * 60000L))
     }
   }
 
@@ -158,161 +133,14 @@ trait DedupStreaming { self: DedupQueries.type =>
     * jobs before the reader under test even started. `contentFp` must
     * hash everything the staged bytes depend on (the staging plan, any
     * injected corrupt payloads) so a slicing change mints a new key.
-    * Returns a FRESH scratch dir (never the cache entry itself — the
-    * global idle sweep may purge entries, so readers get a copy) holding
-    * every staged file, names preserved. */
+    * Returns the cache entry itself: readers only read it, and it lives
+    * until this JVM exits or the source is regenerated. */
   private[queries] def stageInputCached(s: SparkSession, dir: String,
       family: String, srcFile: String, contentFp: String)
       (buildInto: java.nio.file.Path => Unit): String = {
     val fp = graft.sources.DurableIndex.fingerprint(s, dir, srcFile)
-    val out = streamScratch(s"graft_${family}_in")
-    cachedStage(s, family, dir, s"$fp$contentFp")(buildInto) { root =>
-      cacheListDir(root).foreach { f =>
-        java.nio.file.Files.copy(f,
-          java.nio.file.Paths.get(out, f.getFileName.toString),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-      }
-    }
-    out
+    JvmScratch.cached(family, dir, s"$fp$contentFp")(buildInto).toString
   }
-
-  private[queries] def cacheListDir(
-      p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    val st = java.nio.file.Files.list(p)
-    try st.iterator().asScala.toList finally st.close()
-  }
-
-  /** Per-JVM fixture-cache base (round-21 verdict #2): staged fixtures
-    * are memoized only WITHIN one JVM — the first invocation (the
-    * bench's untimed warm-up pass, or a suite's first use) pays the
-    * build, later same-JVM invocations reuse it — never ACROSS
-    * processes, so no run's staging can pre-compute another run's
-    * declared work (the cross-run `/dev/shm` cache was the
-    * precomputation-across-runs pattern the round rules call gaming).
-    * The dir is named by (pid, JVM start instant) and removed on JVM
-    * exit; siblings left by dead JVMs (kill -9 skips shutdown hooks) are
-    * swept on first use. The start instant keeps a new JVM that the OS
-    * gave a dead JVM's pid from adopting that JVM's warm cache. */
-  private[queries] lazy val dropCacheBase: java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val shm = Paths.get("/dev/shm")
-    val parent = if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-      else Paths.get(System.getProperty("java.io.tmpdir"))
-    val base = parent.resolve(dropCacheName(ProcessHandle.current()))
-    sweepDeadDropCaches(parent, base)
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => rmQuietly(base.toString), "graft-drop-cache-cleanup"))
-    base
-  }
-
-  /** `graft_drop_cache_pid<pid>_t<start epoch ms>`; -1 when the OS does
-    * not report a start instant. */
-  private[queries] def dropCacheName(p: ProcessHandle): String = {
-    val start = p.info().startInstant().map[Long](_.toEpochMilli).orElse(-1L)
-    s"graft_drop_cache_pid${p.pid()}_t$start"
-  }
-
-  /** Remove every drop-cache dir under `parent` except `keep` whose
-    * owner is not a live process with the SAME pid and start instant —
-    * dirs of dead JVMs, of an earlier JVM that held a now-reused pid,
-    * and the legacy unscoped names alike. */
-  private[queries] def sweepDeadDropCaches(parent: java.nio.file.Path,
-      keep: java.nio.file.Path): Unit =
-    try {
-      val Owned = """graft_drop_cache_pid(\d+)_t-?\d+""".r
-      cacheListDir(parent).foreach { p =>
-        val nm = p.getFileName.toString
-        val ownerAlive = nm match {
-          case Owned(pid) => ProcessHandle.of(pid.toLong)
-            .map[Boolean](h => h.isAlive && dropCacheName(h) == nm).orElse(false)
-          case _ => false
-        }
-        if (nm.startsWith("graft_drop_cache") && p != keep && !ownerAlive)
-          rmQuietly(p.toString)
-      }
-    } catch { case _: java.io.IOException => () }
-
-  /** The shared cache core of [[stageDropsCached]]/[[stageInputCached]]:
-    * build-once-per-fingerprint under `<cacheBase>/<family>_<tag>_<fp>`
-    * with atomic-rename publish, same-(family, tag) stale-fingerprint
-    * purge, the global idle sweep, mtime-bump-on-read liveness, and the
-    * purged-mid-read rebuild-once retry. `fullFp` must be lowercase hex
-    * (the purge filter matches exactly that shape). */
-  private def cachedStage(s: SparkSession, family: String, dir: String,
-      fullFp: String)(buildInto: java.nio.file.Path => Unit)
-      (readOut: java.nio.file.Path => Unit): Unit = synchronized {
-    // synchronized: two same-JVM threads would otherwise share the
-    // pid-keyed build tmp dir; cross-JVM racers are handled by the
-    // atomic-move publish below
-    import java.nio.file.{Files, StandardCopyOption}
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val cacheBase = dropCacheBase
-    val root = cacheBase.resolve(s"${family}_${tag}_$fullFp")
-    def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = cacheListDir(p)
-    def build(): Unit = {
-      Files.createDirectories(cacheBase)
-      // purge stale FINGERPRINTS of this (family, dir) — a regenerated
-      // corpus (or a re-sliced family) must not leak old drop sets into
-      // the cache forever. The filter is the DurableIndex shape: the
-      // suffix must be exactly a hex fingerprint, which excludes
-      // concurrent builders' '.build' tmp dirs; the current key is
-      // excluded explicitly (a racer may publish it between the
-      // isDirectory check above and this purge)
-      listDir(cacheBase)
-        .filter { p =>
-          val nm = p.getFileName.toString
-          nm != root.getFileName.toString &&
-            nm.startsWith(s"${family}_${tag}_") &&
-            nm.substring(s"${family}_${tag}_".length).matches("[0-9a-f]+")
-        }
-        .foreach(p => rmQuietly(p.toString))
-      // global sweep: entries of OTHER (family, tag) pairs — dead
-      // working dirs above all — decay once idle past the grace window
-      // (read hits bump mtime below, so live tags never qualify)
-      val cutoff = System.currentTimeMillis() - DropCacheIdleMs
-      listDir(cacheBase)
-        .filter { p =>
-          p != root && !p.getFileName.toString.contains(".build") &&
-            (try Files.getLastModifiedTime(p).toMillis < cutoff
-             catch { case _: java.io.IOException => false })
-        }
-        .foreach(p => rmQuietly(p.toString))
-      val tmp = cacheBase.resolve(
-        s"${family}_${tag}_$fullFp.build${ProcessHandle.current().pid()}")
-      rmQuietly(tmp.toString)
-      Files.createDirectories(tmp)
-      buildInto(tmp)
-      try Files.move(tmp, root, StandardCopyOption.ATOMIC_MOVE)
-      catch { // a concurrent builder won the publish: read its copy
-        case _: java.nio.file.FileAlreadyExistsException => rmQuietly(tmp.toString)
-        case _: java.nio.file.DirectoryNotEmptyException => rmQuietly(tmp.toString)
-      }
-    }
-    def read(): Unit = {
-      readOut(root)
-      // a read IS liveness: bump the entry so the global sweep only
-      // ever collects idle tags
-      try Files.setLastModifiedTime(root,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      catch { case _: java.io.IOException => () }
-    }
-    if (!Files.isDirectory(root)) build()
-    try read()
-    catch {
-      // a concurrent sweep purged the entry between publish and copy:
-      // clear whatever half-deleted shell remains (the atomic republish
-      // cannot land on a surviving dir), rebuild once, re-read — a
-      // second consecutive race is a loud failure, not silent corruption
-      case _: java.nio.file.NoSuchFileException =>
-        rmQuietly(root.toString); build(); read()
-    }
-  }
-
-  /** Idle grace before the global drop-cache sweep collects an entry —
-    * long enough that every drain family of an active working dir reads
-    * (and mtime-bumps) its entry well inside the window. */
-  private[queries] final val DropCacheIdleMs = 6L * 3600 * 1000
 
   /** Pre-create the EMPTY stream-grown band index: band schema,
     * batch_id partitioning (replay idempotency), 16-bucket band_key
@@ -383,7 +211,7 @@ trait DedupStreaming { self: DedupQueries.type =>
       (fold: => DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch(s"graft_${tag}_src"), streamScratch(s"graft_${tag}_ckpt")))
+      (JvmScratch.dir(s"${tag}_src"), JvmScratch.dir(s"${tag}_ckpt")))
     try {
       if (!resume) stage(srcDir)
       val srcSchema = schema.getOrElse(s.read.parquet(srcDir).schema)

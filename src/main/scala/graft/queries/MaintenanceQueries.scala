@@ -17,21 +17,13 @@ import graft.sources.Tables
   */
 object MaintenanceQueries {
 
-  /** One temp workspace per JVM for q89, removed on exit: a fixed
-    * machine-global path would let two concurrent JVMs (Verify during a
-    * Bench run, say) overwrite each other's files mid-read, while a
-    * fresh directory per invocation leaks a table copy every bench
-    * iteration. Per-JVM + overwrite mode is the bounded middle. */
-  private lazy val compactionDir: String = {
-    // RAM-backed when present (the streamScratch placement rule): the
-    // fragment/compact rewrite is 68 file creates + renames per
-    // invocation, pure local scratch
-    val d = java.nio.file.Paths.get(
-      DedupQueries.streamScratch("graft_q89_compaction"))
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit))
-    d.toString
-  }
+  /** q89's workspace: a fixed subdir of the JVM's scratch root
+    * ([[JvmScratch]]). A fixed machine-global path would let two
+    * concurrent JVMs (Verify during a Bench run, say) overwrite each
+    * other's files mid-read, while a fresh directory per invocation leaks
+    * a table copy every bench iteration. Per-JVM + overwrite mode is the
+    * bounded middle; the root's cleanup removes it on exit. */
+  private def compactionDir: String = JvmScratch.sub("q89_compaction").toString
 
   /** Serializes q89's eager fragment/compact rewrite: two concurrent
     * in-JVM builds (a parallelized bench/verify harness) would race

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,8 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * session anyway — sharing it deliberately keeps warehouse/config
   * deterministic). */
 object TestSession {
-  lazy val warehouse: String =
-    Files.createTempDirectory("graft_test_wh").toString
+  /** A fresh `tag`-prefixed dir under this JVM's scratch root
+    * ([[graft.queries.JvmScratch]]), removed with the root when the JVM
+    * exits, so a test run leaves nothing behind. */
+  def tempDir(tag: String): Path = Paths.get(graft.queries.JvmScratch.dir(tag))
+
+  lazy val warehouse: String = tempDir("test_wh").toString
 
   lazy val spark: SparkSession = SparkSession.builder()
       .withExtensions(new graft.functions.expr.GraftExtensions)
@@ -33,4 +37,12 @@ trait SparkSpec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
   /** The reference repo's own sample files (read-only). */
   val refDataDir = "/root/reference/amazon-sales-data"
+
+  /** Cancels a reference-golden leg where the reference files are absent;
+    * the generated [[MedallionFixture]] legs cover the same contracts. */
+  def assumeReference(): Unit =
+    assume(new java.io.File(refDataDir).isDirectory, "reference data not present")
+
+  /** [[TestSession.tempDir]]. */
+  def tempDir(tag: String): Path = TestSession.tempDir(tag)
 }

@@ -6,12 +6,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{MedallionFixture, SparkSpec}
 import graft.model.{CountryConfig, Schemas}
 
 /** The splittable multiline-CSV route (round-16 verdict #7): SplitCsv
   * must be ROW-IDENTICAL to Spark's one-task-per-file multiLine reader
-  * — on the reference sales files (the golden-count contract) and on
+  * — on the generated reference-layout IN files ([[MedallionFixture]]),
+  * on the reference sales files themselves when present (their golden
+  * counts), and on
   * adversarial synthetic corpora where quoted newlines, escaped
   * quotes, CRLF endings and corrupt rows straddle chunk boundaries at
   * every alignment a tiny chunk size can produce. */
@@ -39,21 +41,30 @@ class SplitCsvSpec extends SparkSpec {
       s"$what: row sets differ")
   }
 
-  test("reference sales CSVs: split route == multiLine reader, rows identical") {
+  private def salesSplitEqualsMultiLine(dataDir: String, rows: Long): Unit = {
     val cc = CountryConfig("IN")
-    val mono = SourceLoader.readRaw(spark, refDataDir, cc)
+    val mono = SourceLoader.readRaw(spark, dataDir, cc)
     val split = SplitCsv.read(spark,
-      s"$refDataDir/sales/source=IN/format=csv/date=*/*.csv",
+      s"$dataDir/sales/source=IN/format=csv/date=*/*.csv",
       Schemas.inCsvSchema(SourceLoader.CorruptCol), SourceLoader.CorruptCol)
-    assert(split.count() == 1931L, "reference golden count")
+    assert(split.count() == rows, "golden count")
     val (ca, cb) = (canon(mono, SourceLoader.CorruptCol),
       canon(split, SourceLoader.CorruptCol))
     assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty,
-      "reference IN sales: row sets differ")
+      s"$dataDir IN sales: row sets differ")
+  }
+
+  test("IN sales CSVs: split route == multiLine reader, rows identical") {
+    salesSplitEqualsMultiLine(MedallionFixture.full, MedallionFixture.rawRows("full", "IN"))
+  }
+
+  test("reference sales CSVs: split route == multiLine reader, rows identical") {
+    assumeReference()
+    salesSplitEqualsMultiLine(refDataDir, 1931L)
   }
 
   test("adversarial corpus: boundaries inside quoted newlines at every tiny chunk size") {
-    val dir = Files.createTempDirectory("graft_splitcsv")
+    val dir = tempDir("splitcsv")
     // records exercising: embedded \n and \r\n in quotes, escaped ""
     // quotes, empty fields, a record far larger than the chunk size
     // (no valid boundary in several chunks), CRLF record endings, and
@@ -100,40 +111,59 @@ class SplitCsvSpec extends SparkSpec {
     graft.queries.DedupQueries.rmQuietly(dir.toString)
   }
 
-  test("split route parallelism scales with chunk count — past the old 512 cap") {
-    // the POINT of the two-pass design: a single multiline file yields
-    // as many pass-2 ranges as its record boundaries allow. At 256 B
-    // chunks the 168 KB reference file must fan out past the constant
-    // 512-partition cap round 17 flagged (a cap means ~200 GB scanned
-    // serially per task at 100 TB).
-    val f = s"$refDataDir/sales/source=IN/format=csv/date=2020-01-01/order-20200101.csv"
+  // the POINT of the two-pass design: a single multiline file yields
+  // as many pass-2 ranges as its record boundaries allow. At small
+  // chunks one day's IN file must fan out past the constant
+  // 512-partition cap round 17 flagged (a cap means ~200 GB scanned
+  // serially per task at 100 TB).
+  private def fansOutPast512(dataDir: String, chunkBytes: Long): Unit = {
+    val f = s"$dataDir/sales/source=IN/format=csv/date=2020-01-01/order-20200101.csv"
     val split = SplitCsv.read(spark, f,
       Schemas.inCsvSchema(SourceLoader.CorruptCol), SourceLoader.CorruptCol,
-      chunkBytes = 256L)
+      chunkBytes = chunkBytes)
     val parts = split.rdd.getNumPartitions
+    val kb = Files.size(Paths.get(f)) / 1024
     assert(parts > 512,
-      s"splittable route produced only $parts partitions for a 168 KB file at 256 B chunks")
+      s"splittable route produced only $parts partitions for a $kb KB file at $chunkBytes B chunks")
     assert(split.count() > 0)
   }
 
-  test("SourceLoader csv branch gated onto the split route == multiLine route, golden counts") {
-    // round-17 verdict #5: the route must be REACHABLE from the
-    // medallion ingest path, not only via q162. Force the gate both
-    // ways in-process and require identical loadCountry output —
-    // lineage columns (file name, row number, modification time) and
-    // surrogate keys included.
+  test("split route parallelism scales with chunk count — past the old 512 cap") {
+    fansOutPast512(MedallionFixture.full, 128L)
+  }
+
+  test("reference file: split route parallelism past the old 512 cap at 256 B chunks") {
+    assumeReference()
+    fansOutPast512(refDataDir, 256L) // the 168 KB reference file
+  }
+
+  // round-17 verdict #5: the route must be REACHABLE from the
+  // medallion ingest path, not only via q162. Force the gate both
+  // ways in-process and require identical loadCountry output —
+  // lineage columns (file name, row number, modification time) and
+  // surrogate keys included.
+  private def gatedRoutesAgree(dataDir: String, loaded: Long): Unit = {
     val cc = CountryConfig("IN")
-    assert(SourceLoader.readRaw(spark, refDataDir, cc, splitMinBytes = 0L)
+    assert(SourceLoader.readRaw(spark, dataDir, cc, splitMinBytes = 0L)
       .columns.contains("_rec_offset"), "gate did not pick the split route")
-    val viaSplit = SourceLoader.loadCountry(spark, refDataDir, cc,
+    val viaSplit = SourceLoader.loadCountry(spark, dataDir, cc,
       splitMinBytes = 0L)
-    val viaMono = SourceLoader.loadCountry(spark, refDataDir, cc,
+    val viaMono = SourceLoader.loadCountry(spark, dataDir, cc,
       splitMinBytes = Long.MaxValue)
-    assert(viaSplit._2.loaded == 1931L, "split-route golden count")
+    assert(viaSplit._2.loaded == loaded, "split-route golden count")
     assert(viaSplit._2.skipped == viaMono._2.skipped, "skip counts differ")
     val (a, b) = (viaSplit._1, viaMono._1)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "gated split route and multiLine route disagree on loadCountry output")
+  }
+
+  test("SourceLoader csv branch gated onto the split route == multiLine route, manifest counts") {
+    gatedRoutesAgree(MedallionFixture.full, MedallionFixture.count("/full/source/IN/loaded"))
+  }
+
+  test("SourceLoader csv branch gated onto the split route == multiLine route, golden counts") {
+    assumeReference()
+    gatedRoutesAgree(refDataDir, 1931L)
   }
 
   test("driver holds O(#files) not O(#chunks): many-chunk corpus, listing-only materialization") {
@@ -142,7 +172,7 @@ class SplitCsvSpec extends SparkSpec {
     // Two files at 16 B chunks fan out to hundreds of chunks; the
     // driver-held hook must report exactly the FILE count, and the
     // chunk-scaled parallelism must survive the distributed combine.
-    val dir = Files.createTempDirectory("graft_splitcsv_files")
+    val dir = tempDir("splitcsv_files")
     def body(tag: String) = "id,address,tag\n" + (0 until 120).map { i =>
       s"$tag$i,\"quoted\nline$i\",t$i"
     }.mkString("\n") + "\n"
@@ -171,7 +201,7 @@ class SplitCsvSpec extends SparkSpec {
     // so the classification holds even under this all-string schema,
     // which would happily parse any in-band marker text — while
     // neighbor files parse fully and a 100 TB load never aborts.
-    val dir = Files.createTempDirectory("graft_splitcsv_cr")
+    val dir = tempDir("splitcsv_cr")
     val schema = StructType(Seq(StructField("id", StringType),
       StructField("address", StringType), StructField("tag", StringType),
       StructField("_bad", StringType)))

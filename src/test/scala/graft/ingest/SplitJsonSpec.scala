@@ -6,12 +6,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{MedallionFixture, SparkSpec}
 import graft.model.CountryConfig
 
 /** The splittable outer-array-JSON route (round-18 verdict #1): SplitJson
   * must be ROW-IDENTICAL to Spark's one-task-per-file multiLine reader —
-  * on the reference FR sales files (the golden-count contract) and on
+  * on the generated reference-layout FR files ([[MedallionFixture]]), on
+  * the reference FR sales files themselves when present (their golden
+  * counts), and on
   * adversarial synthetic corpora where escapes, nested structures,
   * scalar/null elements and corrupt (type-mismatched) elements straddle
   * chunk boundaries at every alignment a tiny chunk size can produce. */
@@ -40,21 +42,30 @@ class SplitJsonSpec extends SparkSpec {
       s"$what: row sets differ")
   }
 
-  test("reference FR sales JSON: split route == multiLine reader, rows identical") {
+  private def salesSplitEqualsMultiLine(dataDir: String, rows: Long): Unit = {
     val cc = CountryConfig("FR")
-    val mono = SourceLoader.readRaw(spark, refDataDir, cc)
+    val mono = SourceLoader.readRaw(spark, dataDir, cc)
     val split = SplitJson.read(spark,
-      s"$refDataDir/sales/source=FR/format=json/date=*/*.json",
+      s"$dataDir/sales/source=FR/format=json/date=*/*.json",
       None, SourceLoader.CorruptCol)
-    assert(split.count() == 1517L, "reference golden count (882 + 635)")
+    assert(split.count() == rows, "golden count")
     val (ca, cb) = (canon(mono, SourceLoader.CorruptCol),
       canon(split, SourceLoader.CorruptCol))
     assert(ca.exceptAll(cb).isEmpty && cb.exceptAll(ca).isEmpty,
-      "reference FR sales: row sets differ")
+      s"$dataDir FR sales: row sets differ")
+  }
+
+  test("FR sales JSON: split route == multiLine reader, rows identical") {
+    salesSplitEqualsMultiLine(MedallionFixture.full, MedallionFixture.rawRows("full", "FR"))
+  }
+
+  test("reference FR sales JSON: split route == multiLine reader, rows identical") {
+    assumeReference()
+    salesSplitEqualsMultiLine(refDataDir, 1517L) // 882 + 635
   }
 
   test("adversarial corpus: boundaries inside strings/escapes at every tiny chunk size") {
-    val dir = Files.createTempDirectory("graft_splitjson")
+    val dir = tempDir("splitjson")
     // elements exercising: escaped quotes and newlines, backslash runs
     // (\\ then \" — a chunk split can land between the two bytes),
     // unicode escapes, nested objects and arrays whose strings contain
@@ -108,7 +119,7 @@ class SplitJsonSpec extends SparkSpec {
     // null elements are dropped, and every well-formed object still
     // parses. ON_ERROR=CONTINUE downstream (loadCountry) drops corrupt
     // rows either way — this leg pins the upstream divergence itself.
-    val dir = Files.createTempDirectory("graft_splitjson_corrupt")
+    val dir = tempDir("splitjson_corrupt")
     val schema = StructType(Seq(StructField("id", StringType),
       StructField("n", LongType), StructField("_bad", StringType)))
     def mono(name: String) = spark.read
@@ -147,14 +158,14 @@ class SplitJsonSpec extends SparkSpec {
     graft.queries.DedupQueries.rmQuietly(dir.toString)
   }
 
-  test("inferred-schema path matches the multiLine reader's inference") {
-    // SourceLoader's json branch infers; the split route must land the
-    // same typed columns (string-typed numerics stay strings, real
-    // numerics land long/double) in the same field order.
+  // SourceLoader's json branch infers; the split route must land the
+  // same typed columns (string-typed numerics stay strings, real
+  // numerics land long/double) in the same field order.
+  private def inferenceAgrees(dataDir: String): Unit = {
     val cc = CountryConfig("FR")
-    val mono = SourceLoader.readRaw(spark, refDataDir, cc)
+    val mono = SourceLoader.readRaw(spark, dataDir, cc)
     val split = SplitJson.read(spark,
-      s"$refDataDir/sales/source=FR/format=json/date=*/*.json",
+      s"$dataDir/sales/source=FR/format=json/date=*/*.json",
       None, SourceLoader.CorruptCol, chunkBytes = 4096)
     val monoData = mono.schema.fields
       .filterNot(f => f.name == SourceLoader.CorruptCol || f.name.startsWith("_"))
@@ -166,27 +177,45 @@ class SplitJsonSpec extends SparkSpec {
         s"  split: ${splitData.mkString(", ")}")
   }
 
-  test("SourceLoader json branch gated onto the split route == multiLine route, golden counts") {
-    // the route must be REACHABLE from the medallion ingest path, not
-    // only via q163 (the SplitCsv precedent, round-17 verdict #5):
-    // force the gate both ways in-process and require identical
-    // loadCountry output — lineage columns and surrogate keys included.
+  test("inferred-schema path matches the multiLine reader's inference") {
+    inferenceAgrees(MedallionFixture.full)
+  }
+
+  test("reference FR files: inferred-schema path matches the multiLine reader's inference") {
+    assumeReference()
+    inferenceAgrees(refDataDir)
+  }
+
+  // the route must be REACHABLE from the medallion ingest path, not
+  // only via q163 (the SplitCsv precedent, round-17 verdict #5):
+  // force the gate both ways in-process and require identical
+  // loadCountry output — lineage columns and surrogate keys included.
+  private def gatedRoutesAgree(dataDir: String, loaded: Long): Unit = {
     val cc = CountryConfig("FR")
-    assert(SourceLoader.readRaw(spark, refDataDir, cc, splitMinBytes = 0L)
+    assert(SourceLoader.readRaw(spark, dataDir, cc, splitMinBytes = 0L)
       .columns.contains("_rec_offset"), "gate did not pick the split route")
-    val viaSplit = SourceLoader.loadCountry(spark, refDataDir, cc,
+    val viaSplit = SourceLoader.loadCountry(spark, dataDir, cc,
       splitMinBytes = 0L)
-    val viaMono = SourceLoader.loadCountry(spark, refDataDir, cc,
+    val viaMono = SourceLoader.loadCountry(spark, dataDir, cc,
       splitMinBytes = Long.MaxValue)
-    assert(viaSplit._2.loaded == 1517L, "split-route golden count")
+    assert(viaSplit._2.loaded == loaded, "split-route golden count")
     assert(viaSplit._2.skipped == viaMono._2.skipped, "skip counts differ")
     val (a, b) = (viaSplit._1, viaMono._1)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "gated split route and multiLine route disagree on loadCountry output")
   }
 
+  test("SourceLoader json branch gated onto the split route == multiLine route, manifest counts") {
+    gatedRoutesAgree(MedallionFixture.full, MedallionFixture.count("/full/source/FR/loaded"))
+  }
+
+  test("SourceLoader json branch gated onto the split route == multiLine route, golden counts") {
+    assumeReference()
+    gatedRoutesAgree(refDataDir, 1517L)
+  }
+
   test("driver holds O(#files) not O(#chunks); parallelism scales with chunk count") {
-    val dir = Files.createTempDirectory("graft_splitjson_files")
+    val dir = tempDir("splitjson_files")
     def body(tag: String) = (0 until 150).map { i =>
       s"""{"id": "$tag$i", "txt": "multi\\nline $i", "n": $i}"""
     }.mkString("[\n", ",\n", "\n]\n")
@@ -215,7 +244,7 @@ class SplitJsonSpec extends SparkSpec {
     // degrades the same file to one corrupt row carrying the whole
     // FILE text; the marker carries name + reason instead — a
     // documented divergence (a 100 TB route must not build huge rows).
-    val dir = Files.createTempDirectory("graft_splitjson_bad")
+    val dir = tempDir("splitjson_bad")
     val schema = StructType(Seq(StructField("id", StringType),
       StructField("_bad", StringType)))
     Files.writeString(dir.resolve("good1.json"), """[{"id": "g1"}, {"id": "g2"}]""")
@@ -237,7 +266,7 @@ class SplitJsonSpec extends SparkSpec {
   }
 
   test("structural validation: wrong shapes and trailing garbage each yield a reasoned marker") {
-    val dir = Files.createTempDirectory("graft_splitjson_shapes")
+    val dir = tempDir("splitjson_shapes")
     val schema = StructType(Seq(StructField("id", StringType),
       StructField("_bad", StringType)))
     def markerOf(name: String, body: String, chunk: Long): String = {
@@ -325,7 +354,7 @@ class SplitJsonSpec extends SparkSpec {
     // leg proves pass 2 slices correctly from ranges that START right
     // after an array element, across adversarial chunk alignments
     // (with `}]` decoys inside strings).
-    val dir = Files.createTempDirectory("graft_splitjson_arr")
+    val dir = tempDir("splitjson_arr")
     val elems = Seq("""[1, 2, 3]""", """["a}]", [4, {"k": "]"}]]""",
       """[5]""", """["x", null]""")
     Files.writeString(dir.resolve("arr.json"), elems.mkString("[", ", ", "]"))
@@ -352,7 +381,7 @@ class SplitJsonSpec extends SparkSpec {
     // state. 2.5M of '}' inside a string, 2 MiB chunks (> the 1M
     // cap): the leading chunk's WRONG StOut-start scan sees ~2M net
     // closes and overflows — but its true state keeps them in-string.
-    val dir = Files.createTempDirectory("graft_splitjson_ovf")
+    val dir = tempDir("splitjson_ovf")
     val braces = "}" * 2_500_000
     Files.writeString(dir.resolve("ovf.json"),
       s"""[{"id": "$braces"}, {"id": "tail"}]""")

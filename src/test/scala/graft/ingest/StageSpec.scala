@@ -1,16 +1,16 @@
 package graft.ingest
 
-import java.nio.file.Files
-
-import graft.SparkSpec
+import graft.{MedallionFixture, SparkSpec}
 import graft.model.CountryConfig
 
-/** S2 stage/landing copy: layout preservation + downstream readability. */
+/** S2 stage/landing copy: layout preservation + downstream readability,
+  * over the generated reference layout ([[MedallionFixture]]). */
 class StageSpec extends SparkSpec {
 
   test("landing copy preserves partition layout and stays readable") {
-    val landing = Files.createTempDirectory("graft_landing").toString
-    val copied = Stage.copyToLanding(spark, refDataDir, landing)
+    val drop = MedallionFixture.full
+    val landing = tempDir("landing").toString
+    val copied = Stage.copyToLanding(spark, drop, landing)
 
     // every sales partition path and the forex csv arrive, paths intact
     assert(copied.nonEmpty)
@@ -20,12 +20,13 @@ class StageSpec extends SparkSpec {
     assert(copied.contains("exchange-rate-data.csv"))
 
     // re-running overwrites idempotently (ref: overwrite=True)
-    assert(Stage.copyToLanding(spark, refDataDir, landing) == copied)
+    assert(Stage.copyToLanding(spark, drop, landing) == copied)
 
     // the landing copy is a drop-in replacement for the drop zone: the
     // multiline-CSV reader sees the same records through the same glob
     val fromLanding = SourceLoader.readRaw(spark, landing, CountryConfig("IN")).count()
-    val fromSource = SourceLoader.readRaw(spark, refDataDir, CountryConfig("IN")).count()
+    val fromSource = SourceLoader.readRaw(spark, drop, CountryConfig("IN")).count()
     assert(fromLanding == fromSource)
+    assert(fromSource == MedallionFixture.rawRows("full", "IN"))
   }
 }

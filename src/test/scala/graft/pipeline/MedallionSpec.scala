@@ -2,37 +2,47 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
-import graft.ingest.SourceLoader
+import graft.{MedallionFixture => Fx, SparkSpec}
 import graft.model.CountryConfig
+import graft.sinks.TableSink
 
-/** End-to-end golden test of the medallion pipeline over the reference's
-  * own sample files (SURVEY.md §5 item 2): layer row counts, lineage,
-  * key density, curation semantics, star-schema integrity, and
-  * incremental re-run behavior — one pipeline run shared by all
-  * assertions (suite is ordered).
+/** End-to-end test of the medallion pipeline (SURVEY.md §5 item 2):
+  * layer row counts, lineage, key density, curation semantics,
+  * star-schema integrity, and incremental re-run behavior — over the
+  * generated [[graft.MedallionFixture]] layout, whose manifest gives
+  * every expected count, with one pipeline run shared by the assertions
+  * (suite is ordered). The reference's own sample files, when present,
+  * run last against their golden numbers.
   */
 class MedallionSpec extends SparkSpec {
 
+  private def resetWarehouse(): Unit =
+    TableSink.Databases.foreach(db => spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE"))
+
   private lazy val report: MedallionJob.RunReport = {
-    assume(new java.io.File(refDataDir).isDirectory, "reference data not present")
-    MedallionJob.run(spark, refDataDir)
+    resetWarehouse()
+    MedallionJob.run(spark, Fx.full)
   }
 
-  test("source layer loads the SURVEY §5 golden row counts, zero skipped") {
+  private val codes = CountryConfig.all.map(_.code)
+
+  test("source layer loads the manifest's row counts and skips its planted bad rows") {
     val bySrc = report.source.map(r => r.country -> r).toMap
-    assert(bySrc("IN").loaded == 1931) // 847 + 1084 CSV records
-    assert(bySrc("US").loaded == 1864) // 905 + 959 parquet rows
-    assert(bySrc("FR").loaded == 1517) // 882 + 635 JSON objects
-    assert(report.source.forall(_.skipped == 0))
+    codes.foreach { cc =>
+      assert(bySrc(cc).loaded == Fx.count(s"/full/source/$cc/loaded"), cc)
+      assert(bySrc(cc).skipped == Fx.count(s"/full/source/$cc/skipped"), cc)
+    }
+    assert(report.source.forall(_.skipped > 0), "the fixture's bad rows were not skipped")
   }
 
   test("multiline CSV really parsed as records: an IN address keeps its embedded newline") {
+    report
     val in = spark.table("source.in_sales_order")
     assert(in.filter(col("shipping_address").contains("\n")).count() > 0)
   }
 
   test("lineage columns populated; sales_order_key dense from 1") {
+    report
     for (cc <- CountryConfig.all) {
       val t = spark.table(s"source.${cc.code.toLowerCase}_sales_order")
       assert(t.filter(col("_metadata_file_name").isNull
@@ -47,6 +57,7 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("FR JSON string-typed numerics land as typed columns") {
+    report
     val fr = spark.table("source.fr_sales_order")
     val schema = fr.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
     assert(schema("unit_price") == "decimal(10,2)")
@@ -54,12 +65,13 @@ class MedallionSpec extends SparkSpec {
     assert(fr.filter(col("unit_price").isNull).count() == 0)
   }
 
-  test("curated layer: Paid+Delivered counts match an independent computation") {
+  test("curated layer: Paid+Delivered newest revisions match the manifest") {
     val c = report.curated.toMap
-    assert(c("IN") == 320 && c("US") == 331 && c("FR") == 372)
+    codes.foreach(cc => assert(c(cc) == Fx.count(s"/full/curated/$cc"), cc))
   }
 
   test("curation attaches forex and converts to USD for every row") {
+    report
     val cur = MedallionJob.unionCurated(spark)
     assert(cur.filter(col("exchange_rate").isNull
       || col("us_total_order_amt").isNull || col("usd_tax_amt").isNull).count() == 0)
@@ -70,8 +82,9 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("star schema: every fact row resolves all six dimension FKs") {
+    assert(report.fact == Fx.count("/full/fact"))
     val fact = spark.table("consumption.sales_fact")
-    assert(fact.count() == 1023) // 320 + 331 + 372
+    assert(fact.count() == Fx.count("/full/fact"))
     def orphans(dim: String, pk: String, fk: String): Long =
       fact.join(spark.table(s"consumption.$dim"),
         fact(fk) === col(pk), "left_anti").count()
@@ -99,8 +112,9 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("dimension cardinalities: one row per natural key") {
-    assert(spark.table("consumption.region_dim").count() == 3)
-    assert(spark.table("consumption.date_dim").count() == 3) // 2020-01-01..03
+    report.dims.foreach { case (d, n) => assert(n == Fx.count(s"/full/dims/$d"), d) }
+    assert(spark.table("consumption.region_dim").count() == Fx.count("/full/dims/region_dim"))
+    assert(spark.table("consumption.date_dim").count() == Fx.count("/full/date_dim"))
     val prod = spark.table("consumption.product_dim")
     assert(prod.count() == prod.select("mobile_key").distinct().count())
     // product attributes derive from the composite key
@@ -109,6 +123,7 @@ class MedallionSpec extends SparkSpec {
   }
 
   test("date dim fields: pandas dayofweek semantics (Mon=0, weekend=5,6)") {
+    report
     val dd = spark.table("consumption.date_dim")
       .filter(col("order_dt") === "2020-01-01").first()
     // 2020-01-01 was a Wednesday
@@ -118,16 +133,49 @@ class MedallionSpec extends SparkSpec {
     assert(dd.getAs[Long]("day_counter") == 1L)
   }
 
-  test("incremental re-run: dims add zero rows, sources continue key sequence") {
-    val report2 = MedallionJob.run(spark, refDataDir)
-    assert(report2.dims.values.forall(_ == 0L), s"dims grew: ${report2.dims}")
-    assert(report2.dateDim == 0L)
+  test("incremental load: dims add only new keys, sources continue key sequence") {
+    report
+    val report2 = MedallionJob.run(spark, Fx.incr)
+    report2.dims.foreach { case (d, n) => assert(n == Fx.count(s"/incr/dims/$d"), d) }
+    assert(report2.dateDim == Fx.count("/incr/date_dim"))
+    assert(report2.fact == Fx.count("/incr/fact"))
     val in = spark.table("source.in_sales_order")
     val n = in.count()
-    assert(n == 2 * 1931)
+    assert(n == Fx.count("/full/source/IN/loaded") + Fx.count("/incr/source/IN/loaded"))
     val keys = in.agg(min("sales_order_key"), max("sales_order_key"),
       countDistinct("sales_order_key")).first()
     assert(keys.getLong(0) == 1L && keys.getLong(1) == n && keys.getLong(2) == n,
       "appended load must continue the dense sequence")
+  }
+
+  test("re-running a drop adds zero dim rows and appends its sources again") {
+    report
+    val before = spark.table("source.in_sales_order").count()
+    val again = MedallionJob.run(spark, Fx.incr)
+    assert(again.dims.values.forall(_ == 0L), s"dims grew: ${again.dims}")
+    assert(again.dateDim == 0L)
+    assert(spark.table("source.in_sales_order").count() ==
+      before + Fx.count("/incr/source/IN/loaded"))
+  }
+
+  test("reference sample files: golden counts, and a re-run adds no dim rows") {
+    assumeReference()
+    resetWarehouse()
+    val ref = MedallionJob.run(spark, refDataDir)
+    val bySrc = ref.source.map(r => r.country -> r).toMap
+    assert(bySrc("IN").loaded == 1931) // 847 + 1084 CSV records
+    assert(bySrc("US").loaded == 1864) // 905 + 959 parquet rows
+    assert(bySrc("FR").loaded == 1517) // 882 + 635 JSON objects
+    assert(ref.source.forall(_.skipped == 0))
+    val c = ref.curated.toMap
+    assert(c("IN") == 320 && c("US") == 331 && c("FR") == 372)
+    assert(spark.table("consumption.sales_fact").count() == 1023) // 320 + 331 + 372
+    assert(spark.table("consumption.region_dim").count() == 3)
+    assert(spark.table("consumption.date_dim").count() == 3) // 2020-01-01..03
+
+    val again = MedallionJob.run(spark, refDataDir)
+    assert(again.dims.values.forall(_ == 0L), s"dims grew: ${again.dims}")
+    assert(again.dateDim == 0L)
+    assert(spark.table("source.in_sales_order").count() == 2 * 1931)
   }
 }

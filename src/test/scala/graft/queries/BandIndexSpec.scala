@@ -96,7 +96,7 @@ class BandIndexSpec extends SparkSpec {
   }
 
   test("regenerated corpus content forces a rebuild and retires the stale version") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bandidx").toString
+    val dir = tempDir("bandidx").toString
     val docs = graft.sources.Tables.documents(spark, sfDir)
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val v1 = DedupQueries.bandIndexTable(spark, dir).count()

@@ -74,7 +74,7 @@ class DurableArtifactsSpec extends SparkSpec {
     // recoverable (the next attach rebuilds), and a parked generation
     // is purged by the NEXT build, not accreted.
     import org.apache.spark.sql.functions.{col, lit}
-    val dir = java.nio.file.Files.createTempDirectory("graft_gc_corpus").toString
+    val dir = tempDir("gc_corpus").toString
     val fsw = new Path(spark.conf.get("spark.sql.warehouse.dir"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")

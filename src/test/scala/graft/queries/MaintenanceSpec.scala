@@ -14,7 +14,7 @@ class MaintenanceSpec extends SparkSpec {
   test("compaction: 64 fragments become 4 range-partitioned files that prune") {
     // replicate q89's two layouts so the spec can inspect the files the
     // query-side temp dir hides
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_spec").toString
+    val base = tempDir("compact_spec").toString
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_linenumber", "l_quantity")
     li.repartition(64).write.mode("overwrite").parquet(s"$base/fragmented")

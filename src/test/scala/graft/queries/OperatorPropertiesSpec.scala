@@ -72,7 +72,7 @@ class OperatorPropertiesSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val n = e.count()
     val dup = e.union(e.select(col("vec_id") + lit(1000000L), col("embedding")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_neardup").toString
+    val tmp = tempDir("neardup").toString
     dup.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val found = graft.SparkEntry.queries("q37_embedding_neardup")(spark, tmp)
       .filter(col("b_id") === col("a_id") + 1000000L && col("cosine") > 0.999999)
@@ -235,7 +235,7 @@ class OperatorPropertiesSpec extends SparkSpec {
     // stream their scans. Proof: force fresh builds in a copy dir and
     // assert nothing the build chain persists is corpus-sized.
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_build_audit").toString
+    val dir = tempDir("build_audit").toString
     graft.sources.Tables.documents(spark, sfDir)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 

@@ -91,7 +91,7 @@ class PairIndexSpec extends SparkSpec {
     val slice0 = docs.filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 10 =!= 9)
     val delta1 = docs.filter(col("doc_id") % 10 === 9)
     val delta2 = docs.filter(col("doc_id") % 10 === 7)
-    val pairPath = java.nio.file.Files.createTempDirectory("graft_pairtab")
+    val pairPath = tempDir("pairtab")
       .resolve("pairs").toString
 
     // bootstrap: the standing artifact over the initial corpus

@@ -180,7 +180,7 @@ class SemIndexSpec extends SparkSpec {
   }
 
   test("regenerated embeddings force a coupled rebuild of codebook and blocks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_semidx").toString
+    val dir = tempDir("semidx").toString
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     emb.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val v1 = SimilarityQueries.semBlockIndexTable(spark, dir).count()

@@ -37,7 +37,7 @@ class SkewSpec extends SparkSpec {
     // flip must be natural, so the data must actually be that big),
     // spec-size mega block (the clique pipeline is quadratic by
     // design; the gate-flip half is proven above on its pair shape)
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = tempDir("skew").toString
     graft.tools.ScaleGen.generate(spark, sfDir, dir, 1, skew = true,
       megaDocs = 120, hotDocs = 65537, crossingDocs = 10)
     val docs = graft.sources.Tables.documents(spark, dir)
@@ -98,7 +98,7 @@ class SkewSpec extends SparkSpec {
     // small doc blocks (they are proven above); full-size embedding
     // blocks — the 32 MB staged-broadcast gate is a fixed contract, so
     // the serving surge must actually be that big
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_emb").toString
+    val dir = tempDir("skew_emb").toString
     graft.tools.ScaleGen.generate(spark, sfDir, dir, 1, skew = true,
       megaDocs = 60, hotDocs = 300, crossingDocs = 10,
       skewVecs = 70000, hotVecs = 1000)
@@ -137,7 +137,7 @@ class SkewSpec extends SparkSpec {
     // hhCommonDocs block plants scale-invariant common vocabulary; at
     // ANY copy count the planted gram must clear support 1/20000 with
     // its exact analytic count: (40 standing + 8 arriving) per copy.
-    val dir = java.nio.file.Files.createTempDirectory("graft_hh_uni").toString
+    val dir = tempDir("hh_uni").toString
     val copies = 2
     graft.tools.ScaleGen.generate(spark, "/root/testdata/sf0.001", dir, copies)
     val hh = graft.SparkEntry.queries("q117_heavy_hitters")(spark, dir)

@@ -24,7 +24,7 @@ class StagingLevelSpec extends SparkSpec {
 
   test("stageSer: DISK_ONLY past the corpus threshold, deserialized memory below it") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_stageser")
+    val dir = tempDir("stageser")
     val docs = Files.createDirectory(dir.resolve("documents.parquet"))
 
     // below threshold: the default localCheckpoint level (deserialized)

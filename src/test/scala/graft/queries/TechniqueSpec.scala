@@ -516,7 +516,7 @@ class TechniqueSpec extends SparkSpec {
     val p = Tables.part(spark, sf01).select("p_partkey", "p_size")
     val tbl = z.join(p, "p_partkey")
     val n = 16
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val base = tempDir("zorder").toString
     tbl.repartitionByRange(n, col("zbucket"), col("zval"))
       .sortWithinPartitions("zbucket", "zval")
       .write.mode("overwrite").parquet(s"$base/clustered")

@@ -26,7 +26,7 @@ import graft.SparkSpec
 class AttachRaceSpec extends SparkSpec {
 
   test("two JVMs race attachOrBuildFp 20 rounds: losers read the winner, no nested builds") {
-    val work = Files.createTempDirectory("graft_attachrace").toString
+    val work = tempDir("attachrace").toString
     val sync = Files.createDirectory(Paths.get(work, "sync")).toString
     val family = "race_attach"
     val dir = "/tmp/graft_attachrace_corpus"

@@ -26,7 +26,7 @@ import graft.SparkSpec
 class CrossProcessPublishSpec extends SparkSpec {
 
   test("two real JVMs race one publishAtomic destination; a third reads across it") {
-    val work = Files.createTempDirectory("graft_race2").toString
+    val work = tempDir("race2").toString
     val destName = "race2_t_deadbeef"
     val barrier = s"$work/barrier"
     val stopFile = s"$work/stop"

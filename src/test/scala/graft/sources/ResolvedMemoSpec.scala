@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
@@ -13,7 +11,7 @@ import graft.SparkSpec
 class ResolvedMemoSpec extends SparkSpec {
 
   test("a Spark-written dir rewritten in the same mtime tick is re-resolved") {
-    val dir = Files.createTempDirectory("graft_memo_rewrite").toString
+    val dir = tempDir("memo_rewrite").toString
     val path = new Path(s"$dir/t.parquet")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     spark.range(3).coalesce(1).write.parquet(path.toString)
@@ -31,7 +29,7 @@ class ResolvedMemoSpec extends SparkSpec {
   }
 
   test("the memo stays within its session bound across many sessions") {
-    val dir = Files.createTempDirectory("graft_memo_bound").toString
+    val dir = tempDir("memo_bound").toString
     spark.range(2).coalesce(1).write.parquet(s"$dir/t.parquet")
     (1 to Tables.MaxMemoSessions + 8).foreach { _ =>
       val s = spark.newSession()

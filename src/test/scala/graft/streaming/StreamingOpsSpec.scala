@@ -68,8 +68,8 @@ class StreamingOpsSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.streaming.Trigger
 
-    val src = java.nio.file.Files.createTempDirectory("graft_multi_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_multi_ckpt").toString
+    val src = tempDir("multi_src").toString
+    val ckpt = tempDir("multi_ckpt").toString
     val table = graft.queries.JvmScratch.resetTable(spark, "stream_multi_arrivals")
 
     // three arrival chunks in event-time order (files arrive roughly
@@ -135,23 +135,25 @@ class StreamingOpsSpec extends SparkSpec {
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
 
-  test("stage stamp detects same-size in-place source regeneration") {
-    // The shared staging dir reuses its copy across bench iterations,
-    // keyed on a per-file (name, size, mtime) stamp. A testdata
-    // regeneration that keeps byte counts identical must still flip the
-    // stamp (via mtime), or a stale stage would silently serve old data.
-    val dir = java.nio.file.Files.createTempDirectory("graft_stamp")
-    val f = dir.resolve("events_0.parquet")
+  test("events stage key detects same-size in-place source regeneration") {
+    // The event streams read a copy of events.parquet staged once per
+    // source version, keyed by DurableIndex.fingerprint (per-file name,
+    // length, mtime). A testdata regeneration that keeps byte counts
+    // identical must still change the key (via mtime), or a stale stage
+    // would silently serve old data.
+    val dir = tempDir("stagekey")
+    val f = java.nio.file.Files.createDirectories(dir.resolve("events.parquet"))
+      .resolve("part-0.parquet")
     java.nio.file.Files.write(f, Array.fill[Byte](64)(1))
-    val s1 = StreamingOps.sourceStamp(dir)
-    assert(StreamingOps.sourceStamp(dir) == s1, "stamp not stable on untouched source")
+    def key = graft.sources.DurableIndex.fingerprint(spark, dir.toString, "events.parquet")
+    val k1 = key
+    assert(key == k1, "key not stable on untouched source")
 
     // same name, same size, different mtime — the equal-size in-place rewrite
     java.nio.file.Files.write(f, Array.fill[Byte](64)(2))
     java.nio.file.Files.setLastModifiedTime(f,
       java.nio.file.attribute.FileTime.fromMillis(
         java.nio.file.Files.getLastModifiedTime(f).toMillis + 1234))
-    assert(StreamingOps.sourceStamp(dir) != s1,
-      "same-size regeneration did not invalidate the stage stamp")
+    assert(key != k1, "same-size regeneration did not change the stage key")
   }
 }
