@@ -59,14 +59,15 @@ object DateDimBuilder {
           .first().getLong(0)
       else 0L
 
-    val keyed = SurrogateKeys
-      .dense(delta, Seq(col("order_dt")), "date_id_pk", offset)
-      .select("date_id_pk", "order_dt", "order_year", "day_counter",
-        "order_month", "order_quarter", "order_day", "order_dayofweek",
-        "order_dayname", "order_dayofmonth", "order_weekday")
+    val (keyed, appended) = SurrogateKeys
+      .denseCounted(delta, Seq(col("order_dt")), "date_id_pk", offset)
 
-    if (TableSink.appendIfNonEmpty(keyed, table))
-      spark.table(table).count() - offset
-    else 0L
+    // DimBuilder's shape: the delta's size, counted by the key
+    // assignment, guards the append and is the report
+    if (appended > 0)
+      TableSink.append(keyed.select("date_id_pk", "order_dt", "order_year", "day_counter",
+        "order_month", "order_quarter", "order_day", "order_dayofweek",
+        "order_dayname", "order_dayofmonth", "order_weekday"), table)
+    appended
   }
 }

@@ -3,6 +3,7 @@ package graft.consume
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Concurrently
 import graft.keys.SurrogateKeys
 import graft.sinks.TableSink
 
@@ -19,12 +20,13 @@ import graft.sinks.TableSink
   *      reference's country-only defect, SURVEY §2.10);
   *   4. dense surrogate keys continuing from the current max pk
   *      (`<dim>_seq.nextval`, ref: step_5:88,178,239,304,363);
-  *   5. conditional append (ref guard: step_5:51-67).
+  *   5. conditional append (ref guard: step_5:51-67), guarded on the
+  *      delta size the key assignment counted.
   *
   * Scale: candidates are aggregated with map-side partial combine; the
   * existing-dim side of the anti-join is broadcast (dims are orders of
   * magnitude smaller than facts); key assignment is the distributed
-  * zipWithIndex (no single-partition window).
+  * count-and-offset of [[SurrogateKeys]] (no single-partition window).
   */
 object DimBuilder {
 
@@ -48,15 +50,13 @@ object DimBuilder {
           .first().getLong(0)
       else 0L
 
-    val keyed = SurrogateKeys.dense(delta, naturalKey.map(col), pkCol, offset)
-      .select(pkCol, (naturalKey :+ "is_active"): _*)
+    val (keyed, appended) =
+      SurrogateKeys.denseCounted(delta, naturalKey.map(col), pkCol, offset)
 
-    // count the delta BEFORE appending (keyed's plan anti-joins against
-    // the live table, so evaluating it after the append would see its
-    // own rows and report 0); the count also serves as the non-empty
-    // guard, replacing a separate isEmpty probe + whole-table re-count
-    val appended = keyed.count()
-    if (appended > 0) TableSink.append(keyed, table)
+    // the delta's size, counted by the key assignment, guards the append
+    // (ref: step_5:51-67) and is the report
+    if (appended > 0)
+      TableSink.append(keyed.select(pkCol, (naturalKey :+ "is_active"): _*), table)
     appended
   }
 
@@ -74,16 +74,19 @@ object DimBuilder {
     val promo = allSales
       .withColumn("promotion_code", coalesce(col("promotion_code"), lit("NA")))
 
-    Map(
-      "region_dim" -> build(spark, "consumption.region_dim", "region_id_pk",
-        allSales, Seq("country", "region")),
-      "product_dim" -> build(spark, "consumption.product_dim", "product_id_pk",
-        product, Seq("mobile_key", "brand", "model", "color", "memory")),
-      "promo_code_dim" -> build(spark, "consumption.promo_code_dim", "promo_code_id_pk",
-        promo, Seq("promotion_code", "country", "region")),
-      "customer_dim" -> build(spark, "consumption.customer_dim", "customer_id_pk",
-        allSales, Seq("customer_name", "contact_no", "shipping_address", "country", "region")),
-      "payment_dim" -> build(spark, "consumption.payment_dim", "payment_id_pk",
-        allSales, Seq("payment_method", "payment_provider", "country", "region")))
+    // the five dims share nothing but their input: built concurrently,
+    // each keyed on its own sequence, so keys stay deterministic
+    val dims: Seq[(String, () => Long)] = Seq(
+      "region_dim" -> (() => build(spark, "consumption.region_dim", "region_id_pk",
+        allSales, Seq("country", "region"))),
+      "product_dim" -> (() => build(spark, "consumption.product_dim", "product_id_pk",
+        product, Seq("mobile_key", "brand", "model", "color", "memory"))),
+      "promo_code_dim" -> (() => build(spark, "consumption.promo_code_dim", "promo_code_id_pk",
+        promo, Seq("promotion_code", "country", "region"))),
+      "customer_dim" -> (() => build(spark, "consumption.customer_dim", "customer_id_pk",
+        allSales, Seq("customer_name", "contact_no", "shipping_address", "country", "region"))),
+      "payment_dim" -> (() => build(spark, "consumption.payment_dim", "payment_id_pk",
+        allSales, Seq("payment_method", "payment_provider", "country", "region"))))
+    dims.map(_._1).zip(Concurrently.all(dims.map(_._2))).toMap
   }
 }

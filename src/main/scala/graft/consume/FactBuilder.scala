@@ -82,17 +82,16 @@ object FactBuilder {
           .first().getLong(0)
       else 0L
 
-    val keyed = SurrogateKeys
-      .dense(fact, Seq(col("order_code"), col("date_id_fk")), "order_id_pk", offset)
-      .select("order_id_pk", "order_code", "date_id_fk", "region_id_fk",
+    val (keyed, appended) = SurrogateKeys
+      .denseCounted(fact, Seq(col("order_code"), col("date_id_fk")), "order_id_pk", offset)
+
+    // same reporting shape as DimBuilder: the batch's own count, taken
+    // by the key assignment, not the whole table after the append
+    if (appended > 0)
+      TableSink.append(keyed.select("order_id_pk", "order_code", "date_id_fk", "region_id_fk",
         "customer_id_fk", "payment_id_fk", "product_id_fk",
         "promo_code_id_fk", "order_quantity", "local_total_order_amt",
-        "local_tax_amt", "exchange_rate", "us_total_order_amt", "usd_tax_amt")
-
-    // same reporting shape as DimBuilder: count the batch itself, not
-    // the whole table after the append
-    val appended = keyed.count()
-    if (appended > 0) TableSink.append(keyed, table)
+        "local_tax_amt", "exchange_rate", "us_total_order_amt", "usd_tax_amt"), table)
     appended
   }
 }

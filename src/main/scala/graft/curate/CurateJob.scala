@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Concurrently
 import graft.model.{CountryConfig, Schemas}
 import graft.sinks.TableSink
 
@@ -84,16 +85,17 @@ object CurateJob {
       col("_metadata_last_modified"))
   }
 
-  /** Curate all three countries into curated.<cc>_sales_order. */
+  /** Curate all three countries into curated.<cc>_sales_order,
+    * concurrently: each reads only its own source table. */
   def run(spark: SparkSession, forex: DataFrame): Seq[(String, Long)] = {
     TableSink.ensureDatabases(spark)
-    CountryConfig.all.map { cc =>
+    Concurrently.all(CountryConfig.all.map { cc => () =>
       val df = curateCountry(spark, cc, forex)
       val table = s"curated.${cc.code.toLowerCase}_sales_order"
       // curated is the layer incremental consumers read BY DATE — a
       // date-partitioned layout makes those reads partition-pruned scans
       TableSink.append(df, table, partitionCols = Seq("order_dt"))
       cc.code -> spark.table(table).count()
-    }
+    })
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Concurrently
 import graft.keys.SurrogateKeys
 import graft.model.{CountryConfig, Schemas}
 import graft.sinks.TableSink
@@ -111,19 +112,18 @@ object SourceLoader {
               element_at(split(col("_src_file"), "/"), -1).as("file_name"),
               col("_src_mtime").as("file_modification_time")))
             .drop("_src_file", "_src_mtime")
-        else {
+        else
           // Spark's JSON reader explodes a top-level array natively
           // (Snowflake needed strip_outer_array, ref: 4. Common Schema.sql:15-18).
-          // Schema inference only surfaces the corrupt-record column when
-          // malformed rows exist; add it explicitly otherwise.
-          val df = spark.read
+          // The same declared stringly schema as the split route: no
+          // inference job (a full parse of the largest input before the
+          // read itself), and the corrupt-record column always present
+          spark.read
             .option("multiLine", true)
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", CorruptCol)
+            .schema(Schemas.frJsonSchema(CorruptCol))
             .json(path)
-          if (df.columns.contains(CorruptCol)) df
-          else df.withColumn(CorruptCol, lit(null: String))
-        }
     }
   }
 
@@ -202,10 +202,11 @@ object SourceLoader {
       counts.getOrElse(false, 0L), counts.getOrElse(true, 0L)))
   }
 
-  /** Load all three countries into source.<cc>_sales_order tables. */
+  /** Load all three countries into source.<cc>_sales_order tables,
+    * concurrently: the countries share no file, table or key sequence. */
   def loadAll(spark: SparkSession, dataDir: String): Seq[LoadReport] = {
     TableSink.ensureDatabases(spark)
-    CountryConfig.all.map { cc =>
+    Concurrently.all(CountryConfig.all.map { cc => () =>
       val table = s"source.${cc.code.toLowerCase}_sales_order"
       val offset =
         if (TableSink.exists(spark, table))
@@ -215,7 +216,7 @@ object SourceLoader {
       val (df, report) = loadCountry(spark, dataDir, cc, offset)
       TableSink.append(df, table)
       report
-    }
+    })
   }
 
   /** Forex rates: all seven columns loaded from exchange-rate-data.csv

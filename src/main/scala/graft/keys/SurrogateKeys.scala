@@ -1,7 +1,6 @@
 package graft.keys
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Distributed, dense, append-safe surrogate keys (SURVEY.md §2.1 S12 —
@@ -17,14 +16,15 @@ import org.apache.spark.sql.types.{LongType, StructField}
   *      global key-range order) + sort within partitions: the only
   *      shuffle in the operator, and it is a balanced range shuffle, not
   *      a collapse to one partition;
-  *   2. `RDD.zipWithIndex` assigns the global dense index: one small
-  *      count-per-partition job, then per-partition offsets are applied
-  *      map-side. Both of its internal jobs run over the SAME shuffle
-  *      output (RDD lineage reuses shuffle files), so counts and
-  *      assignment can never disagree — unlike re-executing a DataFrame
-  *      plan twice, where adaptive re-planning of the range exchange can
-  *      shift partition boundaries between passes (observed: duplicate
-  *      keys at sf0.01).
+  *   2. one count-per-partition job gives every partition its first key
+  *      (prefix sums) and the total rows keyed — `RDD.zipWithIndex`'s
+  *      shape, whose count job skips the last partition and so cannot
+  *      return the total; the keys are then applied map-side. The count
+  *      and the assignment run over the SAME RDD, so the same shuffle
+  *      output (RDD lineage reuses shuffle files), so they can never
+  *      disagree — unlike re-executing a DataFrame plan twice, where
+  *      adaptive re-planning of the range exchange can shift partition
+  *      boundaries between passes (observed: duplicate keys at sf0.01).
   *
   * The result is dense (offset+1 .. offset+N, no gaps), deterministic for
   * a total order, and append-safe: pass `offset = current max(key)` to
@@ -37,19 +37,30 @@ object SurrogateKeys {
   /** Attach a dense surrogate key named `keyName` assigned in
     * `orderCols` order, starting at `offset + 1`. */
   def dense(df: DataFrame, orderCols: Seq[Column], keyName: String,
-      offset: Long = 0L): DataFrame = {
+      offset: Long = 0L): DataFrame =
+    denseCounted(df, orderCols, keyName, offset)._1
+
+  /** [[dense]] plus the number of rows it keyed — known once the key
+    * offsets are, so a caller that appends the keyed rows needs no
+    * second execution of their plan to report or guard on the count. */
+  def denseCounted(df: DataFrame, orderCols: Seq[Column], keyName: String,
+      offset: Long = 0L): (DataFrame, Long) = {
     val spark = df.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
 
-    val sorted = df
+    val rows = df
       .repartitionByRange(parts, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
+      .rdd
+    val counts = spark.sparkContext.runJob(rows,
+      (it: Iterator[Row]) => it.foldLeft(0L)((n, _) => n + 1))
+    val starts = counts.scanLeft(offset)(_ + _)
 
-    val outSchema = sorted.schema
-      .add(StructField(keyName, LongType, nullable = false))
-    val keyed = sorted.rdd.zipWithIndex().map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ (offset + idx + 1L))
+    val outSchema = df.schema.add(StructField(keyName, LongType, nullable = false))
+    val keyed = rows.mapPartitionsWithIndex { (i, it) =>
+      var key = starts(i)
+      it.map { row => key += 1; Row.fromSeq(row.toSeq :+ key) }
     }
-    spark.createDataFrame(keyed, outSchema)
+    (spark.createDataFrame(keyed, outSchema), counts.sum)
   }
 }

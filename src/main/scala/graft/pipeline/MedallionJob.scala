@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.GraftSession
+import graft.{Concurrently, GraftSession}
 import graft.consume.{DateDimBuilder, DimBuilder, FactBuilder}
 import graft.curate.CurateJob
 import graft.ingest.SourceLoader
@@ -17,6 +17,13 @@ import graft.sinks.TableSink
   * /root/reference/amazon-sales-data). Re-running is an incremental
   * load: sources append with continued key sequences, dims grow only by
   * anti-join deltas, the fact appends (reference behavior).
+  *
+  * The layers run in dependency order — the three country loads, then
+  * their three curations, then the date dim beside the five value dims,
+  * then the fact — and the tables within each step, which share
+  * nothing, run concurrently through [[Concurrently]]: every table
+  * finishes before the next step starts, and the first failure in table
+  * order fails the run once its siblings have finished.
   */
 object MedallionJob {
 
@@ -47,8 +54,10 @@ object MedallionJob {
 
     val allSales = unionCurated(spark)
     display(allSales)
-    val dateDim = DateDimBuilder.build(spark, allSales)
-    val dims = DimBuilder.buildAll(spark, allSales)
+    // the date dim and the five value dims read only the curated layer;
+    // the fact joins all six, so it waits for both
+    val (dateDim, dims) = Concurrently.both(DateDimBuilder.build(spark, allSales))(
+      DimBuilder.buildAll(spark, allSales))
     val fact = FactBuilder.build(spark, allSales)
     display(spark.table("consumption.sales_fact"))
     RunReport(source, curated, dims, dateDim, fact)

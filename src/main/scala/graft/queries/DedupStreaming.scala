@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Concurrently
 import graft.functions.CrossEngine._
 import graft.sources.Tables
 
@@ -403,13 +404,13 @@ trait DedupStreaming { self: DedupQueries.type =>
       val within = minhashPairsOf(batchSh, Some(batchBands))
         .select("doc_a", "doc_b")
       // edge-shard write and index append overlapped (guide
-      // §2.6; see overlapWrites): independent sinks, both
+      // §2.6; see graft.Concurrently): independent sinks, both
       // batch_id dynamic overwrites, replay-safe in either
       // commit order. The append's repartition into the bucket
       // hash lands 16 files (one per bucket), not one per
       // (task x bucket) — the batch is drop-sized, the shuffle
       // trivial, and the commit fans out 4x fewer files
-      overlapWrites {
+      Concurrently.both {
         writeBatch(within.unionByName(cross), batchId, outTable)
       } {
         writeBatch(batchBands.repartition(16, col("band_key")), batchId, idxTable)
@@ -420,9 +421,9 @@ trait DedupStreaming { self: DedupQueries.type =>
         // artifacts' per-batch fragments — the grown band index through
         // the bucket spec, the edge shards as a plain sink. The two
         // folds touch DIFFERENT tables and publish write-aside with a
-        // pointer flip each, so they run concurrently (overlapWrites,
+        // pointer flip each, so they run concurrently (graft.Concurrently,
         // guide §2.6) like the per-batch writes do
-        overlapWrites { compactBandIndex(s, idxTable): Unit } {
+        Concurrently.both { compactBandIndex(s, idxTable): Unit } {
           graft.sources.DurableIndex.compactSink(s, outTable): Unit
         }
       }
@@ -481,7 +482,7 @@ trait DedupStreaming { self: DedupQueries.type =>
       // dedicated staging job per micro-batch
       val batchBands = sigBands(batchSh).localCheckpoint(eager = false)
       // the match and the index append run CONCURRENTLY
-      // (overlapWrites, guide §2.6): the probe reads the index
+      // (graft.Concurrently, guide §2.6): the probe reads the index
       // so far MINUS this batch's own partition (empty on first
       // delivery; populated — and self-matching if probed — on a
       // replay; pruned at planning either way, so the racing
@@ -490,7 +491,7 @@ trait DedupStreaming { self: DedupQueries.type =>
       // The append's repartition into the bucket hash lands 16
       // files (one per bucket), not one per (task x bucket)
       val soFar = ss.table(idxTable).filter(col("batch_id") =!= batchId)
-      overlapWrites {
+      Concurrently.both {
         writeBatch(matchesAgainstIndex(ss, dir, batchSh, soFar,
             deltaBandsOpt = Some(batchBands))
           .select(col("delta_id").as("doc_id"),
@@ -570,11 +571,11 @@ trait DedupStreaming { self: DedupQueries.type =>
         .getOrElse(staged.count() >
           SimilarityQueries.SemDeltaBroadcastMaxVecs)
       // probe-sink write and index append overlapped (guide
-      // §2.6; see overlapWrites): independent sinks, both
+      // §2.6; see graft.Concurrently): independent sinks, both
       // batch_id dynamic overwrites, replay-safe in either
       // commit order (the probe prunes its own partition at
       // planning, so the racing append is invisible to it)
-      overlapWrites {
+      Concurrently.both {
         writeBatch((if (large) soFar.hint("merge").join(d, Seq("block_key"))
             else soFar.join(broadcast(d), Seq("block_key")))
           .select(col("d_id").as("vec_id"), col("vec_id").as("dup_of"),
@@ -688,53 +689,6 @@ trait DedupStreaming { self: DedupQueries.type =>
     * gate compares staged bytes against HALF this constant — same
     * admission set, half the staged/collected volume.) */
   private[queries] final val CcDriverMaxBytes = 64L << 20
-
-  /** Run a micro-batch's two INDEPENDENT sink writes concurrently
-    * (guide §2.6: actions are only sequential because the driver calls
-    * them sequentially — the second job's tasks back-fill executors
-    * freed by the first job's stage tails instead of waiting for its
-    * last task). Only legal because the two writes share no
-    * dependency in either direction: the probe-sink insert reads the
-    * index MINUS this batch's partition (partition-pruned at planning,
-    * so the concurrent append's files are never listed), and both
-    * sinks are batch_id dynamic overwrites — a replay rewrites
-    * whichever subset of the two partitions a crash left committed,
-    * in any order (StreamReplaySpec's partial-commit leg). The child
-    * thread inherits the streaming job group (SparkContext local
-    * properties are inheritable), so query cancellation still reaches
-    * both jobs. Failures: both legs always complete or fail before
-    * returning; the first error wins, the other is suppressed. An
-    * interrupt of the caller (a stopped query interrupts its stream
-    * thread) interrupts leg b and waits up to [[OverlapStopWaitMs]]
-    * for it to stop before the InterruptedException propagates, with
-    * the caller's interrupt flag restored. */
-  private[queries] def overlapWrites(a: => Unit)(b: => Unit): Unit = {
-    val bErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val t = new Thread(() => try b catch { case e: Throwable => bErr.set(e) },
-      "graft-overlap-write")
-    t.setDaemon(true)
-    t.start()
-    var aErr: Throwable = null
-    try a catch { case e: Throwable => aErr = e }
-    try t.join()
-    catch {
-      case ie: InterruptedException =>
-        t.interrupt()
-        try t.join(OverlapStopWaitMs) catch { case _: InterruptedException => () }
-        Option(aErr).foreach(ie.addSuppressed)
-        Thread.currentThread().interrupt()
-        throw ie
-    }
-    if (aErr != null) {
-      Option(bErr.get()).filter(_ ne aErr).foreach(aErr.addSuppressed)
-      throw aErr
-    }
-    val e = bErr.get()
-    if (e != null) throw e
-  }
-
-  /** How long an interrupted [[overlapWrites]] waits for its leg b. */
-  private final val OverlapStopWaitMs = 60000L
 
   /** Driver-side DESERIALIZED-EQUIVALENT storage size of an
     * already-staged (localCheckpoint'd) relation, read from

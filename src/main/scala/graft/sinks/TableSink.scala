@@ -8,10 +8,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * (`spark.sql.warehouse.dir`), namespaced by database exactly like the
   * reference's `source` / `curated` / `consumption` schemas (ref:
   * 2. Database and Schema.sql:8-12). Appends go through
-  * `saveAsTable(mode=append)` (ref: step_4:167-169, step_5:585-587); the
-  * conditional append replicates the count-guard (ref: step_5:51-67)
-  * with `isEmpty` — a limit-1 probe, not a full count, so the guard costs
-  * one task at any scale.
+  * `saveAsTable(mode=append)` (ref: step_4:167-169, step_5:585-587). The
+  * reference's count-guard before a consumption append (ref:
+  * step_5:51-67) lives in the builders, on the row count
+  * `SurrogateKeys.denseCounted` returns with the keys.
   */
 object TableSink {
 
@@ -34,22 +34,4 @@ object TableSink {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .saveAsTable(table)
   }
-
-  def overwrite(df: DataFrame, table: String): Unit =
-    df.write.format("parquet").mode(SaveMode.Overwrite).saveAsTable(table)
-
-  /** Append only when there is something to append (ref guard
-    * `if final_df.count() > 0` — step_5:62). Returns true if written. */
-  def appendIfNonEmpty(df: DataFrame, table: String): Boolean = {
-    if (df.isEmpty) false
-    else { append(df, table); true }
-  }
-
-  /** Read a table if it exists, else an empty frame with the given
-    * schema — so first-run delta loads see "nothing existing" without
-    * special-casing (the reference pre-creates tables via DDL). */
-  def tableOrEmpty(spark: SparkSession, table: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (exists(spark, table)) spark.table(table)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 }

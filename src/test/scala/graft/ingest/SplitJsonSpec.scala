@@ -158,12 +158,18 @@ class SplitJsonSpec extends SparkSpec {
     graft.queries.DedupQueries.rmQuietly(dir.toString)
   }
 
-  // SourceLoader's json branch infers; the split route must land the
-  // same typed columns (string-typed numerics stay strings, real
-  // numerics land long/double) in the same field order.
+  // The split route's inferred-schema path (SplitJson.read with no
+  // schema) must land the same typed columns as the multiLine reader's
+  // own inference (string-typed numerics stay strings, real numerics
+  // land long/double) in the same field order. SourceLoader reads both
+  // routes through the declared schema, so the multiLine side here is
+  // the plain inferring reader.
   private def inferenceAgrees(dataDir: String): Unit = {
-    val cc = CountryConfig("FR")
-    val mono = SourceLoader.readRaw(spark, dataDir, cc)
+    val mono = spark.read
+      .option("multiLine", true)
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", SourceLoader.CorruptCol)
+      .json(s"$dataDir/sales/source=FR/format=json/date=*")
     val split = SplitJson.read(spark,
       s"$dataDir/sales/source=FR/format=json/date=*/*.json",
       None, SourceLoader.CorruptCol, chunkBytes = 4096)

@@ -43,6 +43,31 @@ class SurrogateKeysSpec extends SparkSpec {
     }
   }
 
+  test("denseCounted returns the keyed row count, empty input and empty partitions included") {
+    import spark.implicits._
+    def check(df: org.apache.spark.sql.DataFrame, n: Long, offset: Long): Unit = {
+      val (out, count) = SurrogateKeys.denseCounted(df, Seq(col("k")), "sk", offset)
+      assert(count == n, s"returned count $count for $n rows")
+      assert(out.select("sk").collect().map(_.getLong(0)).sorted.toSeq ==
+        ((offset + 1) to (offset + n)), s"n=$n offset=$offset")
+    }
+    check(Seq.empty[Int].toDF("k"), 0L, 0L)
+    check(Seq.empty[Int].toDF("k"), 0L, 17L)
+    // without adaptive coalescing the range exchange keeps its empty
+    // partitions: many rows on one key, or 1..3 rows over 4 partitions
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val oneKey = Seq.fill(50)(7).toDF("k")
+      val parts = oneKey.repartitionByRange(4, col("k")).rdd
+        .mapPartitions(it => Iterator(it.size)).collect()
+      assert(parts.contains(0), s"no empty partition: ${parts.mkString(",")}")
+      check(oneKey, 50L, 0L)
+      for (n <- 1 to 3) check((1 to n).toDF("k"), n.toLong, 100L)
+      check((0 until 5000).map(i => (i * 7919) % 104729).toDF("k"), 5000L, 0L)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("deterministic across repeated evaluation") {
     val a = keyed(3000).collect().map(r => (r.getString(1), r.getAs[Long]("sk"))).sorted
     val b = keyed(3000).collect().map(r => (r.getString(1), r.getAs[Long]("sk"))).sorted

@@ -158,6 +158,23 @@ class MedallionSpec extends SparkSpec {
       before + Fx.count("/incr/source/IN/loaded"))
   }
 
+  test("concurrent table loads keep keys deterministic: two fresh full+incr runs land identical tables") {
+    def snapshot(): Map[String, Seq[String]] = {
+      resetWarehouse()
+      MedallionJob.run(spark, Fx.full)
+      MedallionJob.run(spark, Fx.incr)
+      TableSink.Databases
+        .flatMap(db => spark.catalog.listTables(db).collect().map(t => s"$db.${t.name}"))
+        .map(t => t -> spark.table(t).collect().map(_.toString).sorted.toSeq).toMap
+    }
+    val (a, b) = (snapshot(), snapshot())
+    assert(a.keySet.size == 13 && a.keySet == b.keySet, s"tables: ${a.keySet}")
+    a.foreach { case (t, rows) =>
+      assert(rows.nonEmpty, s"$t is empty")
+      assert(rows == b(t), s"$t differs between two fresh runs (surrogate keys included)")
+    }
+  }
+
   test("reference sample files: golden counts, and a re-run adds no dim rows") {
     assumeReference()
     resetWarehouse()
