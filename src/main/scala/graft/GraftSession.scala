@@ -9,9 +9,8 @@ import org.apache.spark.sql.SparkSession
   * round came from one site not knowing about another). Every entry
   * point builds through [[GraftSession.builder]]: Bench, Verify,
   * ScaleGen, ScaleGate, Explain and perfbench via [[build]];
-  * MedallionJob adds only its derby metastore and Hive support. The one
-  * exception is RaceProbe, whose minimal sessions run N at once as race
-  * children. Stream drains pin [[InitialPartitionsKey]] and
+  * MedallionJob adds only its derby metastore and Hive support. Stream
+  * drains pin [[InitialPartitionsKey]] and
   * [[StreamPartitions]] through this object's constants.
   */
 object GraftSession {

@@ -46,21 +46,19 @@ trait DedupMinhash { self: DedupQueries.type =>
     * proven on this table by PlanAuditSpec).
     *
     * Durability contract (the 100-TB shape, round-8 verdict #3): the
-    * data lives at `<warehouse>/graft_band_index/band_index_<tag>_<fp>`
-    * where fp fingerprints the corpus content — a FRESH SparkSession
-    * (empty catalog) re-attaches an external bucketed table over the
-    * existing files and never re-minhashes (BandIndexSpec asserts the
-    * part files are byte-for-byte untouched by a re-attach, and that
-    * the read is a bucketed scan). Build-and-publish is atomic (write
-    * to a pid-suffixed tmp dir, FileContext.rename(Rename.NONE) into
-    * place — a primitive that THROWS when the destination exists, since
-    * FileSystem.rename would nest the loser's build dir inside the
-    * winner's live table), so concurrent JVMs sharing a warehouse race
-    * benignly: one rename wins, the loser deletes its copy and reads
-    * the winner's. Stale fingerprints of the same corpus are retired
-    * with a one-regeneration grace window (parked as `.retired`,
-    * purged by the NEXT build) so a concurrent session mid-scan of the
-    * old version is not yanked mid-query. Built over
+    * data lives in a generation under `<warehouse>/graft_band_index/`
+    * named by the pointer `band_index_<tag>_<fp>`, where fp fingerprints
+    * the corpus content — a FRESH SparkSession (empty catalog)
+    * re-attaches an external bucketed table over the existing files and
+    * never re-minhashes (BandIndexSpec asserts the part files are
+    * byte-for-byte untouched by a re-attach, and that the read is a
+    * bucketed scan). Build-and-publish is one exclusive create of that
+    * pointer ([[graft.sources.DurableIndex.commit]]), so concurrent JVMs
+    * sharing a warehouse race benignly: one create wins, the loser
+    * deletes its generation and reads the winner's. Stale fingerprints
+    * of the same corpus are retired with a one-regeneration grace window
+    * (kept on disk, purged by the NEXT build) so a concurrent session
+    * mid-scan of the old version is not yanked mid-query. Built over
     * the already-indexed docs (doc_id % 10 != 7 — everything but the
     * q93 stand-in arriving batch); per-batch cost is the delta's
     * minhash plus the index probe, never a corpus re-minhash. The

@@ -447,7 +447,7 @@ object DedupQueries
     // exactly the cross-drop near-dup pairs; replay-idempotent the
     // same way q107 is (probe minus own partition, overwrite by
     // batch_id); post-drain the index recompacts to one file per
-    // bucket through the shared compactBucketedIndex.
+    // bucket through the shared DurableIndex.compactBucketed.
     QueryDef(
       "q114_stream_sem_index_bootstrap",
       s"STREAMING semantic index maintenance: codebook trained once up front, corpus streamed in 3 ordered drops into an initially EMPTY bucketed block index, each micro-batch assigned + matched against the index so far THEN appended (insertInto keeps the bucket layout) — emits every cross-drop cosine >= ${SimilarityQueries.NearDupThreshold} pair",

@@ -235,7 +235,7 @@ trait DedupRetraction { self: DedupQueries.type =>
       // a forced fold that crashed after publishing band/pair but short
       // of cc_index_r (the mode record) leaves corpus-scale orphan
       // generations under this fp that patch-mode reads never attach:
-      // patch resolution proves they're dead partials — park them under
+      // patch resolution proves they're dead partials — retire them under
       // the standard grace window (round-15 advice)
       graft.sources.DurableIndex.retireIfLive(s, dir, "band_index_r", fp)
       graft.sources.DurableIndex.retireIfLive(s, dir, "pair_index_r_b16", fp)

@@ -93,7 +93,7 @@ trait DedupSimhash { self: DedupQueries.type =>
     * standing artifact, through the same [[graft.sources.DurableIndex]]
     * contract as the MinHash band index and the semantic block index:
     * fingerprint-keyed external table bucketed 16 ways on block_key,
-    * atomic rename publish, grace-window retirement. One row per
+    * exclusive-create pointer publish, grace-window retirement. One row per
     * (doc, block) — 4 rows of 24 bytes per document, the smallest
     * standing index of the three families (no shingle sets, no
     * vectors), which is the point of SimHash at 100 TB: the whole

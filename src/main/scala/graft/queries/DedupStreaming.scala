@@ -586,7 +586,7 @@ trait DedupStreaming { self: DedupQueries.type =>
         writeBatch(staged, batchId, idxTable)
       }
     } {
-      if (compact) compactBucketedIndex(s, idxTable,
+      if (compact) graft.sources.DurableIndex.compactBucketed(s, idxTable,
         Seq("vec_id", "v", "block_key"), "block_key"): Unit
       s.table(outTable).select("vec_id", "dup_of", "cosine")
     }
@@ -637,29 +637,14 @@ trait DedupStreaming { self: DedupQueries.type =>
     }
   }
 
-  /** Forwarders into the shared [[graft.sources.DurableIndex]]
-    * compaction contract (round-11 verdict #5 moved the machinery
-    * there so every batch_id-fragmented artifact family shares it);
-    * kept here because the dedup module owns the band-index column
-    * spec and the existing specs address them through this object. */
-  private[graft] def bucketFileCounts(s: SparkSession,
-      qualified: String): Map[Int, Int] =
-    graft.sources.DurableIndex.bucketFileCounts(s, qualified)
-
   /** Compact a stream-grown band index once micro-batch appends have
     * fragmented any bucket past `maxFilesPerBucket` files — the band
     * column spec over [[graft.sources.DurableIndex.compactBucketed]]
     * (see there for the quiesced-checkpoint contract). */
   private[graft] def compactBandIndex(s: SparkSession, qualified: String,
       maxFilesPerBucket: Int = 2): Boolean =
-    compactBucketedIndex(s, qualified,
+    graft.sources.DurableIndex.compactBucketed(s, qualified,
       Seq("doc_id", "band_idx", "band_key"), "band_key", maxFilesPerBucket)
-
-  private[graft] def compactBucketedIndex(s: SparkSession, qualified: String,
-      cols: Seq[String], bucketCol: String,
-      maxFilesPerBucket: Int = 2): Boolean =
-    graft.sources.DurableIndex.compactBucketed(
-      s, qualified, cols, bucketCol, maxFilesPerBucket)
 
   /** Above this many distinct delta documents the incremental probe
     * stops broadcasting the delta's bands and shuffles them once into

@@ -464,7 +464,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(idx.count() > 0, "stream-grown index is empty after the drain")
     // the declared query's post-drain compaction held: no bucket is
     // left fragmented past the maintenance threshold
-    val counts = DedupQueries.bucketFileCounts(spark,
+    val counts = graft.sources.DurableIndex.bucketFileCounts(spark,
       graft.queries.JvmScratch.tableName("stream_band_index"))
     assert(counts.nonEmpty && counts.values.forall(_ <= 2),
       s"stream-grown index left fragmented after the declared drain: $counts")
@@ -652,7 +652,7 @@ class PlanAuditSpec extends SparkSpec {
     val idx = spark.table(
       graft.queries.JvmScratch.tableName("stream_block_index"))
     assert(idx.count() > 0, "stream-grown block index is empty after the drain")
-    val counts = DedupQueries.bucketFileCounts(spark,
+    val counts = graft.sources.DurableIndex.bucketFileCounts(spark,
       graft.queries.JvmScratch.tableName("stream_block_index"))
     assert(counts.nonEmpty && counts.values.forall(_ <= 2),
       s"stream-grown block index left fragmented after the declared drain: $counts")

@@ -31,31 +31,22 @@ class BandIndexSpec extends SparkSpec {
     case _ => p +: p.children.flatMap(flatten)
   }
 
-  private val fsConf = () =>
-    spark.sparkContext.hadoopConfiguration
-
-  /** Version dirs under the warehouse for `tag`: (live, retired) —
-    * live versions have an exact-hex fingerprint suffix; superseded
-    * ones are parked as `<name>.retired` for one grace cycle. */
-  private def versionDirs(tag: String): (Seq[Path], Seq[Path]) = {
-    val base = new Path(spark.conf.get("spark.sql.warehouse.dir"),
-      "graft_band_index")
-    val fs = base.getFileSystem(fsConf())
-    val prefix = s"band_index_${tag}_"
-    val all = fs.listStatus(base).map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).toSeq
-    (all.filter(_.getName.substring(prefix.length).matches("[0-9a-f]+")),
-      all.filter(_.getName.contains(".retired")))
+  /** Generation dirs of the band index over `dir`: (live, retired) —
+    * the live one its pointer names; superseded ones stay on disk as
+    * retired for one grace cycle. */
+  private def versionDirs(dir: String): (Seq[Path], Seq[Path]) = {
+    val g = graft.sources.DurableIndex.generations(spark, dir, "band_index")
+    (g.live.values.toSeq, g.retired)
   }
 
   /** (name -> (length, mtime)) of every parquet part under the single
-    * LIVE published index version for `tag`. */
-  private def partFiles(tag: String): Map[String, (Long, Long)] = {
-    val (live, _) = versionDirs(tag)
+    * LIVE published index version for `dir`. */
+  private def partFiles(dir: String): Map[String, (Long, Long)] = {
+    val (live, _) = versionDirs(dir)
     assert(live.length == 1,
-      s"expected exactly one live index version for $tag, " +
+      s"expected exactly one live index version for $dir, " +
         s"got ${live.map(_.getName).mkString(", ")}")
-    val fs = live.head.getFileSystem(fsConf())
+    val fs = live.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(live.head)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(f => f.getPath.getName -> (f.getLen, f.getModificationTime))
@@ -66,8 +57,7 @@ class BandIndexSpec extends SparkSpec {
     val first = DedupQueries.bandIndexTable(spark, sfDir)
     val rows = first.count()
     assert(rows > 0)
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val before = partFiles(tag)
+    val before = partFiles(sfDir)
     assert(before.nonEmpty, "published index has no parquet parts")
 
     // a new session starts with no trace of the table in its catalog
@@ -77,7 +67,7 @@ class BandIndexSpec extends SparkSpec {
     val again = DedupQueries.bandIndexTable(spark, sfDir)
     assert(again.count() == rows)
     // the part files are byte-for-byte untouched: re-attach, not rebuild
-    assert(partFiles(tag) == before,
+    assert(partFiles(sfDir) == before,
       "index part files changed — the fresh catalog re-minhashed the corpus")
     // and the read is a bare scan of the attached table: no Exchange, no
     // aggregate, no shingle machinery anywhere in the plan
@@ -109,25 +99,24 @@ class BandIndexSpec extends SparkSpec {
     assert(v2 < v1, s"rebuild did not pick up the smaller corpus ($v1 -> $v2)")
 
     // exactly one LIVE (the fresh) version for this corpus; the
-    // superseded one is PARKED as .retired — a grace window, so a
+    // superseded one is RETIRED, still on disk — a grace window, so a
     // concurrent session mid-scan of the old version is not yanked
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    assert(partFiles(tag).nonEmpty)
-    val (_, retired1) = versionDirs(tag)
+    assert(partFiles(dir).nonEmpty)
+    val (_, retired1) = versionDirs(dir)
     assert(retired1.length == 1,
-      s"superseded version not parked as .retired: ${retired1.map(_.getName)}")
+      s"superseded version not retired: ${retired1.map(_.getName)}")
 
-    // a SECOND regeneration's build purges the earlier .retired dir
-    // (its grace cycle elapsed) and parks the second version in turn
+    // a SECOND regeneration's build purges the earlier retired dir
+    // (its grace cycle elapsed) and retires the second version in turn
     docs.filter(col("doc_id") % 3 === 0)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val v3 = DedupQueries.bandIndexTable(spark, dir).count()
     assert(v3 < v2, s"second rebuild did not pick up the smaller corpus ($v2 -> $v3)")
-    val (live2, retired2) = versionDirs(tag)
+    val (live2, retired2) = versionDirs(dir)
     assert(live2.length == 1)
     assert(retired2.map(_.getName) != retired1.map(_.getName),
-      "first .retired dir survived the next build's purge sweep")
+      "first retired dir survived the next build's purge sweep")
     assert(retired2.length == 1,
-      s"expected exactly the second superseded version parked, got ${retired2.map(_.getName)}")
+      s"expected exactly the second superseded version retired, got ${retired2.map(_.getName)}")
   }
 }

@@ -19,16 +19,10 @@ class DurableArtifactsSpec extends SparkSpec {
   /** (name -> (length, mtime)) of parquet parts under the single live
     * published version for `family` over the test sf dir. */
   private def partFiles(family: String): Map[String, (Long, Long)] = {
-    val base = new Path(spark.conf.get("spark.sql.warehouse.dir"),
-      s"graft_$family")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val prefix = s"${family}_${tag}_"
-    val live = fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith(prefix)
-        && p.getName.substring(prefix.length).matches("[0-9a-f]+")).toSeq
+    val live = graft.sources.DurableIndex.generations(spark, sfDir, family).live.values.toSeq
     assert(live.length == 1,
       s"expected one live $family version, got ${live.map(_.getName)}")
+    val fs = live.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(live.head)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(f => f.getPath.getName -> (f.getLen, f.getModificationTime))
@@ -61,18 +55,18 @@ class DurableArtifactsSpec extends SparkSpec {
 
   test("generation GC economics: five append+retract+fold cycles keep the warehouse bounded") {
     // round-15 verdict #2: every patch, fold, and corpus regeneration
-    // publishes a NEW generation and parks the superseded one — nothing
+    // publishes a NEW generation and retires the superseded one — nothing
     // proved the warehouse PLATEAUS. Drive one family stack (band/pair/
     // cc + retraction) through five maintenance cycles — each cycle an
     // APPEND (corpus regeneration: every corpus-keyed artifact
     // re-publishes) plus a cumulative RETRACT publish, with FOLDS forced
     // on cycles 2 and 4 — and assert after every cycle, per family:
-    // exactly one live generation, at most one parked `.retired`
-    // generation (the one-build grace window), and total family bytes
-    // bounded by a small multiple of the live generation's bytes. Then
-    // exercise the purge/park guard: retiring a live generation is
-    // recoverable (the next attach rebuilds), and a parked generation
-    // is purged by the NEXT build, not accreted.
+    // exactly one live generation, at most one retired generation (the
+    // one-build grace window), and total family bytes bounded by a
+    // small multiple of the live generation's bytes. Then exercise the
+    // purge/retire guard: retiring a live generation is recoverable
+    // (the next attach rebuilds), and a retired generation is purged by
+    // the NEXT build, not accreted.
     import org.apache.spark.sql.functions.{col, lit}
     val dir = tempDir("gc_corpus").toString
     val fsw = new Path(spark.conf.get("spark.sql.warehouse.dir"))
@@ -84,16 +78,16 @@ class DurableArtifactsSpec extends SparkSpec {
       "cc_index", "retract_patch", "band_index_r", "pair_index_r_b16",
       "cc_index_r")
 
+    // total bytes count every entry of this corpus, named or not
     def familyState(family: String): (Seq[String], Seq[String], Long, Long) = {
       val base = new Path(spark.conf.get("spark.sql.warehouse.dir"), s"graft_$family")
       if (!fsw.exists(base)) return (Nil, Nil, 0L, 0L)
-      val prefix = s"${family}_${tag}_"
       def bytes(p: Path): Long = fsw.getContentSummary(p).getLength
       val mine = fsw.listStatus(base).map(_.getPath)
-        .filter(_.getName.startsWith(prefix)).toSeq
-      val live = mine.filter(_.getName.substring(prefix.length).matches("[0-9a-f]+"))
-      val retired = mine.filter(_.getName.contains(".retired"))
-      (live.map(_.getName), retired.map(_.getName),
+        .filter(_.getName.startsWith(s"${family}_${tag}_")).toSeq
+      val g = graft.sources.DurableIndex.generations(spark, dir, family)
+      val live = g.live.values.toSeq
+      (live.map(_.getName), g.retired.map(_.getName),
         live.map(bytes).sum, mine.map(bytes).sum)
     }
 
@@ -141,25 +135,25 @@ class DurableArtifactsSpec extends SparkSpec {
       }
     }
 
-    // park/purge guard: retiring the live band index parks it (grace),
-    // and the next attach rebuilds a fresh live generation while the
-    // build that follows purges the parked one — bytes stay bounded,
-    // recovery is automatic, nothing errors
+    // retire/purge guard: retiring the live band index keeps its data
+    // (grace), and the next attach rebuilds a fresh live generation
+    // while the build that follows purges the retired one — bytes stay
+    // bounded, recovery is automatic, nothing errors
     val fp = graft.sources.DurableIndex.fingerprint(spark, dir, "documents.parquet")
     graft.sources.DurableIndex.retireIfLive(spark, dir, "band_index", fp)
-    val (liveAfterPark, retiredAfterPark, _, _) = familyState("band_index")
-    // the park sits NEXT TO the `.retired` the last cycle's build left
-    // (its grace window has not elapsed yet) — bounded at two, both
-    // purged by the rebuild below
-    assert(liveAfterPark.isEmpty && retiredAfterPark.nonEmpty
-        && retiredAfterPark.size <= 2,
-      s"retireIfLive did not park the live generation: $retiredAfterPark")
+    val (liveAfterRetire, retiredAfterRetire, _, _) = familyState("band_index")
+    // the retired generation sits NEXT TO the one the last cycle's build
+    // retired (its grace window has not elapsed yet) — bounded at two,
+    // both purged by the rebuild below
+    assert(liveAfterRetire.isEmpty && retiredAfterRetire.nonEmpty
+        && retiredAfterRetire.size <= 2,
+      s"retireIfLive did not retire the live generation: $retiredAfterRetire")
     val n = DedupQueries.bandIndexTable(spark, dir).count()
-    assert(n > 0, "rebuild after parking served an empty index")
+    assert(n > 0, "rebuild after retiring served an empty index")
     val (liveRebuilt, retiredRebuilt, liveB, totalB) = familyState("band_index")
-    assert(liveRebuilt.size == 1, "attach did not rebuild the parked family")
+    assert(liveRebuilt.size == 1, "attach did not rebuild the retired family")
     assert(retiredRebuilt.isEmpty,
-      s"the rebuild did not purge the parked generation: $retiredRebuilt")
+      s"the rebuild did not purge the retired generation: $retiredRebuilt")
     assert(totalB <= 3 * liveB, "post-recovery warehouse bytes unbounded")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)): Unit
   }
@@ -289,7 +283,7 @@ class DurableArtifactsSpec extends SparkSpec {
     // and the grown band index came out of the same drain fragmented —
     // the bucketed half of the contract, folded by the same machinery
     val bands = JvmScratch.tableName("stream_cc_bands")
-    val counts = DedupQueries.bucketFileCounts(spark, bands)
+    val counts = graft.sources.DurableIndex.bucketFileCounts(spark, bands)
     assert(counts.values.exists(_ > 2),
       s"expected some fragmented bucket in the grown cc band index, got $counts")
     val bandContent = spark.table(bands)
@@ -297,7 +291,7 @@ class DurableArtifactsSpec extends SparkSpec {
       .orderBy("doc_id", "band_idx", "band_key").collect().toSeq
     assert(DedupQueries.compactBandIndex(spark, bands),
       "cc band-index compaction did not run")
-    assert(DedupQueries.bucketFileCounts(spark, bands).values.forall(_ <= 1),
+    assert(graft.sources.DurableIndex.bucketFileCounts(spark, bands).values.forall(_ <= 1),
       "cc band-index compaction left a fragmented bucket")
     val bandRe = spark.table(bands)
       .select("doc_id", "band_idx", "band_key")
@@ -318,7 +312,7 @@ class DurableArtifactsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     DedupQueries.streamComponents(spark, sfDir, compact = false).collect()
     val bands = JvmScratch.tableName("stream_cc_bands")
-    assert(DedupQueries.bucketFileCounts(spark, bands).values.exists(_ > 2),
+    assert(graft.sources.DurableIndex.bucketFileCounts(spark, bands).values.exists(_ > 2),
       "expected a fragmented grown band index — test is vacuous")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.execution.SparkPlan]()
@@ -349,7 +343,7 @@ class DurableArtifactsSpec extends SparkSpec {
       assert(txt.contains("Scan parquet") || txt.contains("FileScan"),
         s"compaction rewrite input is not a raw parquet scan:\n$txt")
     }
-    assert(DedupQueries.bucketFileCounts(spark, bands).values.forall(_ <= 1),
+    assert(graft.sources.DurableIndex.bucketFileCounts(spark, bands).values.forall(_ <= 1),
       "raw-scan compaction left a fragmented bucket")
   }
 

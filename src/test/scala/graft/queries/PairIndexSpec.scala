@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -34,18 +33,14 @@ class PairIndexSpec extends SparkSpec {
   }
 
   /** (name -> (length, mtime)) of every parquet part under the single
-    * live published pair-table version for `tag`. */
-  private def partFiles(tag: String): Map[String, (Long, Long)] = {
-    val base = new Path(spark.conf.get("spark.sql.warehouse.dir"),
-      "graft_pair_index_b16")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = s"pair_index_b16_${tag}_"
-    val live = fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith(prefix)
-        && p.getName.substring(prefix.length).matches("[0-9a-f]+")).toSeq
+    * live published pair-table version for `dir`. */
+  private def partFiles(dir: String): Map[String, (Long, Long)] = {
+    val live = graft.sources.DurableIndex.generations(spark, dir, "pair_index_b16")
+      .live.values.toSeq
     assert(live.length == 1,
-      s"expected exactly one live pair-table version for $tag, " +
+      s"expected exactly one live pair-table version for $dir, " +
         s"got ${live.map(_.getName).mkString(", ")}")
+    val fs = live.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(live.head)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(f => f.getPath.getName -> (f.getLen, f.getModificationTime))
@@ -63,13 +58,12 @@ class PairIndexSpec extends SparkSpec {
     val recompute = DedupQueries.pairsOfDocs(
       docs.filter(col("doc_id") % 10 =!= 7))
     assertSameSet(first, recompute, "initial build")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val before = partFiles(tag)
+    val before = partFiles(sfDir)
     assert(before.nonEmpty, "published pair table has no parquet parts")
 
     // second attach: byte-for-byte untouched — a read, not a rebuild
     val again = DedupQueries.pairIndexTable(spark, sfDir)
-    assert(partFiles(tag) == before,
+    assert(partFiles(sfDir) == before,
       "pair-table part files changed — the re-attach recomputed pairs")
 
     // and the standing side q130 unions in is a BARE parquet scan: no

@@ -187,16 +187,11 @@ class RetractionSpec extends SparkSpec {
     assertSameSet(c1, cw, "published labels")
 
     def partFiles(family: String): Map[String, (Long, Long)] = {
-      val base = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), s"graft_$family")
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-      val prefix = s"${family}_${tag}_"
-      val live = fs.listStatus(base).map(_.getPath)
-        .filter(p => p.getName.startsWith(prefix)
-          && p.getName.substring(prefix.length).matches("[0-9a-f]+")).toSeq
+      val live = graft.sources.DurableIndex.generations(spark, sfDir, family)
+        .live.values.toSeq
       assert(live.length == 1,
         s"expected one live $family generation, got ${live.map(_.getName)}")
+      val fs = live.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.listStatus(live.head)
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map(f => f.getPath.getName -> (f.getLen, f.getModificationTime))
@@ -272,10 +267,8 @@ class RetractionSpec extends SparkSpec {
     // docs| rows — the O(corpus) write is gone
     val fp = DedupQueries.retractionFp(spark, sfDir,
       del2.select("doc_id").distinct())
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val patch = spark.read.parquet(
-      s"$warehouse/graft_retract_patch/retract_patch_${tag}_$fp")
+    val patch = spark.read.parquet(graft.sources.DurableIndex
+      .generations(spark, sfDir, "retract_patch").live(fp).toString)
     val nDel = del2.distinct().count()
     val nAff = patch.filter(col("kind") === "aff").count()
     val nCc = patch.filter(col("kind") === "cc").count()
@@ -402,12 +395,9 @@ class RetractionSpec extends SparkSpec {
     // delete set re-attaches byte-untouched (no retraction work, no
     // tombstone joins — the artifact identity contains the delete set)
     def partFiles(family: String): Map[String, (Long, Long)] = {
-      val base = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), s"graft_$family")
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val live = fs.listStatus(base).map(_.getPath)
-        .filter(_.getName.matches(s"${family}_.*_[0-9a-f]+")).toSeq
-      live.flatMap(d => fs.listStatus(d)
+      val live = graft.sources.DurableIndex.generations(spark, sfDir, family)
+        .live.values.toSeq
+      live.flatMap(d => d.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(d)
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map(f => s"${d.getName}/${f.getPath.getName}" ->
           (f.getLen, f.getModificationTime))).toMap
@@ -477,7 +467,7 @@ class RetractionSpec extends SparkSpec {
     // cc_index_r (the mode record) — a crash between the second and
     // third leaves corpus-scale partials under that fp which a later
     // unforced run (resolving to patch mode) never attaches. Round-15
-    // advice: patch resolution PROVES those siblings are dead — park
+    // advice: patch resolution PROVES those siblings are dead — retire
     // them under the standard one-build grace window.
     val docs = graft.sources.Tables.documents(spark, sfDir)
     // a delete-set fp no other test publishes under (recorded modes are
@@ -502,30 +492,24 @@ class RetractionSpec extends SparkSpec {
       "crash-state plant failed")
 
     // the next unforced publish resolves to patch mode (a ~2.5% delete
-    // is far under the gate) and parks the dead partials
+    // is far under the gate) and retires the dead partials
     val (b, _, c, rebuilt) = DedupQueries.retractPublishMode(spark, sfDir, del)
     assert(!rebuilt, "a takedown-sized delete tripped the debt gate")
     assert(!graft.sources.DurableIndex.liveExists(spark, sfDir, "band_index_r", fp)
       && !graft.sources.DurableIndex.liveExists(spark, sfDir, "pair_index_r_b16", fp),
       "orphan fold partials still live after a patch-mode publish")
-    // parked (grace window), not deleted out from under a reader
-    // warehouse.dir is a file: URI — strip the scheme for NIO paths
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    assert({
-      val d = java.nio.file.Paths.get(s"$warehouse/graft_band_index_r")
-      val st = java.nio.file.Files.list(d)
-      try st.anyMatch(p => java.nio.file.Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith(s"band_index_r_${tag}_$fp.retired"))
-      finally st.close()
-    }, "orphan band partial was deleted instead of parked")
+    // retired (grace window), not deleted out from under a reader
+    assert(graft.sources.DurableIndex.generations(spark, sfDir, "band_index_r")
+        .retired.exists(g => g.getName.contains(s"_$fp.g")
+          && new java.io.File(g.toUri.getPath).isDirectory),
+      "orphan band partial was deleted instead of retired")
 
     // and the patch-composed read is still exact
     val corpus = docs.filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 40 =!= 23)
-    assertSameSet(b, DedupQueries.bandsOfDocs(corpus), "post-park bands vs fresh")
+    assertSameSet(b, DedupQueries.bandsOfDocs(corpus), "post-retire bands vs fresh")
     val (labelsWant, _) = DedupQueries.connectedComponents(
       DedupQueries.pairsOfDocs(corpus).select("doc_a", "doc_b"))
-    assertSameSet(c, labelsWant, "post-park labels vs fresh")
+    assertSameSet(c, labelsWant, "post-retire labels vs fresh")
   }
 
   test("benchmark retirement: patch mode, fresh-session discovery, then the fold supersedes") {

@@ -25,22 +25,17 @@ class SemIndexSpec extends SparkSpec {
     case _ => p +: p.children.flatMap(flatten)
   }
 
-  private def liveDir(family: String, tag: String): Path = {
-    val base = new Path(spark.conf.get("spark.sql.warehouse.dir"), s"graft_$family")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = s"${family}_${tag}_"
-    val live = fs.listStatus(base).map(_.getPath)
-      .filter(p => p.getName.startsWith(prefix) &&
-        p.getName.substring(prefix.length).matches("[0-9a-f]+")).toSeq
+  private def liveDir(family: String, dir: String): Path = {
+    val live = graft.sources.DurableIndex.generations(spark, dir, family).live.values.toSeq
     assert(live.length == 1,
       s"expected one live $family version, got ${live.map(_.getName)}")
     live.head
   }
 
-  private def partFiles(family: String, tag: String): Map[String, (Long, Long)] = {
-    val dir = liveDir(family, tag)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir)
+  private def partFiles(family: String, dir: String): Map[String, (Long, Long)] = {
+    val gen = liveDir(family, dir)
+    val fs = gen.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(gen)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(f => f.getPath.getName -> (f.getLen, f.getModificationTime))
       .toMap
@@ -49,9 +44,8 @@ class SemIndexSpec extends SparkSpec {
   test("fresh catalog re-attaches codebook and block index without retraining") {
     val rows = SimilarityQueries.semBlockIndexTable(spark, sfDir).count()
     assert(rows > 0)
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val blocksBefore = partFiles("sem_blocks", tag)
-    val cbBefore = partFiles("sem_codebook", tag)
+    val blocksBefore = partFiles("sem_blocks", sfDir)
+    val cbBefore = partFiles("sem_codebook", sfDir)
     assert(blocksBefore.nonEmpty && cbBefore.nonEmpty)
 
     spark.sql("DROP DATABASE graft_index CASCADE")
@@ -60,9 +54,9 @@ class SemIndexSpec extends SparkSpec {
     val again = SimilarityQueries.semBlockIndexTable(spark, sfDir)
     assert(again.count() == rows)
     // byte-for-byte untouched: re-attach, not re-train/re-assign
-    assert(partFiles("sem_blocks", tag) == blocksBefore,
+    assert(partFiles("sem_blocks", sfDir) == blocksBefore,
       "block-index parts changed — the fresh catalog re-assigned the corpus")
-    assert(partFiles("sem_codebook", tag) == cbBefore,
+    assert(partFiles("sem_codebook", sfDir) == cbBefore,
       "codebook parts changed — the fresh catalog re-trained the quantizer")
     // the re-attached read is a bare bucketed scan on the folded key
     again.collect()

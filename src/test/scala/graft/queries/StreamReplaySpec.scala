@@ -436,7 +436,7 @@ class StreamReplaySpec extends SparkSpec {
     // several files per bucket — the unbounded-small-files failure mode
     DedupQueries.streamIndexBootstrap(spark, sfDir, compact = false).collect()
     val idx = JvmScratch.tableName("stream_band_index")
-    val before = DedupQueries.bucketFileCounts(spark, idx)
+    val before = graft.sources.DurableIndex.bucketFileCounts(spark, idx)
     assert(before.nonEmpty, "no bucketed data files under the stream-grown index")
     assert(before.values.exists(_ > 2),
       s"expected some bucket fragmented past 2 files after 3 drops, got $before")
@@ -445,7 +445,7 @@ class StreamReplaySpec extends SparkSpec {
 
     assert(DedupQueries.compactBandIndex(spark, idx), "compaction did not run")
 
-    val after = DedupQueries.bucketFileCounts(spark, idx)
+    val after = graft.sources.DurableIndex.bucketFileCounts(spark, idx)
     assert(after.values.sum < before.values.sum,
       s"file count did not drop: ${before.values.sum} -> ${after.values.sum}")
     assert(after.values.forall(_ <= 1),

@@ -6,22 +6,24 @@ import java.util.concurrent.TimeUnit
 import graft.SparkSpec
 
 /** The attachOrBuildFp-LAYER race (round-19 verdict #2): the primitive
-  * race specs prove the one-winner election at [[DurableIndex
-  * .publishAtomic]]; this spec proves there is no false-winner fallout
-  * ABOVE it. Two real child JVMs (graft.tools.RaceProbe attachLoop —
-  * the layer is JVM-`synchronized`, so the race is only reachable
-  * cross-process) attach-or-build the SAME fresh fingerprint 20 rounds
-  * in lockstep, each trying to publish a build of a DISTINCT row
-  * count. Invariants, per round and at the end:
+  * race specs prove the one-winner election at [[DurableIndex.commit]];
+  * this spec proves there is no fallout ABOVE it. Two real child JVMs
+  * ([[RaceProbe]] attachLoop — the layer is JVM-`synchronized`, so the
+  * race is only reachable cross-process) attach-or-build the SAME fresh
+  * fingerprint 20 rounds in lockstep, each trying to publish a build of
+  * a DISTINCT row count; every round's build supersedes (retires) the
+  * previous round's fingerprint. Invariants, per round and at the end:
   *
   *   1. both racers agree on ONE row count — a loser reads the
-  *      winner's build, never its own discarded copy, and never a
-  *      nested-polluted union (which would read as 100+1000 rows);
+  *      winner's generation, never its own discarded copy, and never a
+  *      union of both (which would read as 100+1000 rows);
   *   2. at least one round saw BOTH racers run their build closure —
   *      the race actually fired, the 20 rounds are not vacuous;
-  *   3. the family's warehouse subtree holds no `.build` directory
-  *      anywhere afterwards — no leaked tmp, nothing nested inside a
-  *      live or retired generation.
+  *   3. afterwards every generation dir in the family is named by a
+  *      live pointer or by a retired record (a loser's discarded
+  *      generation is gone), every pointer names an existing
+  *      generation, nothing is nested inside a generation, and no temp
+  *      pointer is left.
   */
 class AttachRaceSpec extends SparkSpec {
 
@@ -84,17 +86,24 @@ class AttachRaceSpec extends SparkSpec {
     assert(racedRounds > 0,
       "no round had both racers build — the layer race never fired (vacuous)")
 
-    // the family subtree holds no .build dir anywhere: no leaked tmp,
-    // nothing nested inside a live or retired generation
+    // every entry of the family dir is a pointer, a generation or a
+    // retired record; every generation is named by one of the others
     val base = Paths.get(work, s"graft_$family")
     assert(Files.exists(base), "family base dir missing")
-    val buildDirs = Files.walk(base).iterator()
-    val leaked = new scala.collection.mutable.ArrayBuffer[String]
-    while (buildDirs.hasNext) {
-      val p = buildDirs.next()
-      if (p.getFileName.toString.contains(".build")) leaked += p.toString
-    }
-    assert(leaked.isEmpty, s"build dirs leaked or nested: $leaked")
+    val prefix = s"${family}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_"
+    val names = base.toFile.list().toSeq
+    val (pointers, rest) = names.partition(_.matches(s"\\Q$prefix\\E[0-9a-f]+"))
+    val (records, gens) = rest.partition(_.endsWith(".retired"))
+    val stray = gens.filterNot(_.matches(s"\\Q$prefix\\E[0-9a-f]+\\.g[0-9a-f]+"))
+    assert(stray.isEmpty, s"temp pointers or stray entries left: $stray")
+    val pointed = pointers.map(p => Files.readString(base.resolve(p)))
+    assert(pointed.forall(gens.contains), s"a pointer names a missing generation: $pointed")
+    val named = (pointed ++ records.map(_.stripSuffix(".retired"))).toSet
+    assert(gens.forall(named.contains),
+      s"generations neither live nor retired: ${gens.filterNot(named.contains)}")
+    assert(pointers.size == 1, s"expected only the last round live: $pointers")
+    assert(gens.forall(g => base.resolve(g).toFile.listFiles().forall(_.isFile)),
+      "a directory nested inside a generation")
 
     graft.queries.DedupQueries.rmQuietly(work)
   }

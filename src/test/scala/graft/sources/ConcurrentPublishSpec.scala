@@ -11,18 +11,21 @@ import graft.SparkSpec
 /** Concurrent-publisher safety of the durable-artifact machinery
   * (round-15 verdict #3). The claims under test, until now comments:
   *
-  *   1. the atomic publish — `FileContext.rename(Rename.NONE)` onto the
-  *      live path — admits exactly ONE winner of N concurrent
+  *   1. the commit — an exclusive create of the pointer naming a
+  *      generation — admits exactly ONE winner of N concurrent
   *      publishers, and every loser LEARNS it lost (so it can discard
-  *      its copy and read the winner's). `attachOrBuildFp` is
+  *      its generation and read the winner's). `attachOrBuildFp` is
   *      JVM-serialized by `synchronized`, so the cross-session race is
-  *      only reachable at the [[DurableIndex.publishAtomic]] primitive;
+  *      only reachable at the [[DurableIndex.commit]] primitive;
   *      racing it from threads exercises the same FS-level interleaving
-  *      two JVMs would produce (the lock they don't share is above it);
-  *   2. a reader NEVER observes a torn generation: at any instant the
-  *      live path is either absent or a COMPLETE build (the rename's
-  *      atomicity) — a concurrent attach-and-count loop must only ever
-  *      see a full publisher's row count;
+  *      two JVMs would produce (the lock they don't share is above it).
+  *      The race runs on the local FS and on [[ObjectStoreFs]], whose
+  *      rename is a copy: the commit must not depend on rename;
+  *   2. a reader NEVER observes a torn generation: resolved through the
+  *      pointer, the live generation is either absent or a COMPLETE
+  *      build (it is fully written before its name is) — a concurrent
+  *      resolve-and-count loop must only ever see a full publisher's
+  *      row count;
   *   3. the cumulative-sidecar protocol (the `sem_del` shape): a later
   *      maintenance generation DERIVES from the live one, so the
   *      superseded generation's rows are a SUBSET of its successor's —
@@ -36,7 +39,18 @@ class ConcurrentPublishSpec extends SparkSpec {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("N racing publishers, 20 rounds: one winner, losers told, destination never torn") {
-    val base = new Path(spark.conf.get("spark.sql.warehouse.dir"), "graft_race_probe")
+    raceRounds(new Path(spark.conf.get("spark.sql.warehouse.dir"), "graft_race_probe"))
+  }
+
+  test("the same race on an object store whose rename copies") {
+    ObjectStoreFs.register(spark.sparkContext.hadoopConfiguration)
+    raceRounds(new Path(ObjectStoreFs.path(tempDir("objstore_race").toString)))
+  }
+
+  /** 8 publishers race one fresh pointer under `base`, 20 rounds. */
+  private def raceRounds(base: Path): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = base.getFileSystem(hconf)
     fs.delete(base, true)
     fs.mkdirs(base)
 
@@ -57,64 +71,50 @@ class ConcurrentPublishSpec extends SparkSpec {
       spark.range(counts(i)).coalesce(1).write.mode("overwrite").parquet(t.toString)
       t
     }
-    val hconf = spark.sparkContext.hadoopConfiguration
     for (round <- 0 until 20) {
-      val loc = new Path(base, s"race_probe_t_deadbeef$round")
-      val tmps = (0 until nPub).map { i =>
-        val t = new Path(base, s"race_probe_t_deadbeef$round.build_race$i")
-        org.apache.hadoop.fs.FileUtil.copy(fs, templates(i), fs, t, false, hconf)
-        t
+      val pointer = new Path(base, s"race_probe_t_deadbeef$round")
+      val gens = (0 until nPub).map { i =>
+        val g = new Path(base, s"race_probe_t_deadbeef$round.g$i")
+        org.apache.hadoop.fs.FileUtil.copy(fs, templates(i), fs, g, false, hconf)
+        g
       }
-      raceOnce(loc, tmps, counts, withReader = round == 0)
+      raceOnce(fs, pointer, gens, counts, withReader = round == 0)
     }
     fs.delete(base, true): Unit
   }
 
-  /** One 8-publisher race against a fresh destination; asserts the
+  /** One 8-publisher race against a fresh pointer; asserts the
     * one-winner election, loser cleanup and destination integrity.
-    * `withReader` adds the concurrent attach-and-count loop (claim 2). */
-  private def raceOnce(loc: Path, tmps: Seq[Path], counts: Seq[Long],
-      withReader: Boolean): Unit = {
-    val nPub = tmps.length
+    * `withReader` adds the concurrent resolve-and-count loop (claim 2). */
+  private def raceOnce(fs: org.apache.hadoop.fs.FileSystem, pointer: Path,
+      gens: Seq[Path], counts: Seq[Long], withReader: Boolean): Unit = {
+    val nPub = gens.length
     val start = new CountDownLatch(1)
     val wins = new AtomicInteger(0)
     val winnerIdx = new AtomicInteger(-1)
     val pool = Executors.newFixedThreadPool(nPub + 1)
     val readerIllegal = new AtomicInteger(0)
     val readerSawRows = new AtomicInteger(0)
-    val readerMisses = new AtomicInteger(0) // swallowed FNF-shaped probes
+    val readerMisses = new AtomicInteger(0) // probes that found no pointer
     val stopReader = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-    // the attach-and-count reader loop (claim 2): every successful read
-    // must land on a complete publisher's count; a missing path is the
-    // legal pre-publish state, any other outcome is a torn generation
+    // the resolve-and-count reader loop (claim 2): every successful
+    // read must land on a complete publisher's count; an absent pointer
+    // is the legal pre-publish state, any other outcome is a torn
+    // generation
     if (withReader) pool.submit(new Runnable { def run(): Unit = {
       start.await()
       while (!stopReader.get()) {
-        try {
-          val n = spark.read.parquet(loc.toString).count()
-          if (counts.contains(n)) readerSawRows.incrementAndGet()
-          else readerIllegal.incrementAndGet()
-        } catch {
-          // absent path is the legal pre-publish state whatever shape it
-          // surfaces as: AnalysisException at analysis, or a raw
-          // FileNotFoundException from schema inference racing the
-          // publish — the reader must keep probing, not die on the
-          // first miss
-          case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND")
-              || e.getMessage.toLowerCase.contains("path does not exist") =>
-            readerMisses.incrementAndGet(): Unit
-          case e: Throwable
-            if Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(6)
-              .exists(c => c.isInstanceOf[java.io.FileNotFoundException]
-                || String.valueOf(c.getMessage).contains("does not exist")) =>
-            // counted, not ignored: a reader whose every probe lands
-            // here (e.g. a mid-scan torn read misclassified as the
-            // pre-publish state) can no longer pass vacuously — the
-            // readerSawRows > 0 assertion below requires at least one
-            // COMPLETED legal read (round-16 advice)
-            readerMisses.incrementAndGet(): Unit
+        DurableIndex.resolve(spark, pointer) match {
+          // counted, not ignored: a reader whose every probe lands here
+          // can no longer pass vacuously — the readerSawRows > 0
+          // assertion below requires at least one COMPLETED legal read
+          // (round-16 advice)
+          case None => readerMisses.incrementAndGet(): Unit
+          case Some(gen) =>
+            val n = spark.read.parquet(gen.toString).count()
+            if (counts.contains(n)) readerSawRows.incrementAndGet()
+            else readerIllegal.incrementAndGet()
         }
       }
     }})
@@ -122,10 +122,10 @@ class ConcurrentPublishSpec extends SparkSpec {
     val futures = (0 until nPub).map { i =>
       pool.submit(new Runnable { def run(): Unit = {
         start.await()
-        if (DurableIndex.publishAtomic(spark, tmps(i), loc)) {
+        if (DurableIndex.commit(spark, pointer, gens(i))) {
           wins.incrementAndGet()
           winnerIdx.set(i)
-        } else fs.delete(tmps(i), true) // the loser's contract
+        } else fs.delete(gens(i), true) // the loser's contract
       }})
     }
     start.countDown()
@@ -133,8 +133,8 @@ class ConcurrentPublishSpec extends SparkSpec {
     if (withReader) {
       // the race is over and the winner is live: keep the reader running
       // until it completes at least one LEGAL read of the published
-      // generation, so the reader leg cannot pass by swallowing every
-      // probe as an FNF-shaped miss (round-16 advice)
+      // generation, so the reader leg cannot pass by counting every
+      // probe as a miss (round-16 advice)
       val readDeadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
       while (readerSawRows.get() == 0 && readerIllegal.get() == 0
           && System.nanoTime() < readDeadline) Thread.sleep(10)
@@ -147,16 +147,37 @@ class ConcurrentPublishSpec extends SparkSpec {
     assert(readerIllegal.get() == 0,
       s"reader observed ${readerIllegal.get()} torn generations (row counts outside the legal set)")
     if (withReader) assert(readerSawRows.get() > 0,
-      s"reader never completed one legal read (${readerMisses.get()} probes swallowed as pre-publish misses) — the reader leg was vacuous")
-    // destination holds exactly the winner's complete build
-    assert(spark.read.parquet(loc.toString).count() == counts(winnerIdx.get()),
-      "live path does not hold the winner's build")
-    // every loser discarded its copy; nothing nested under the live dir
-    val leftovers = fs.listStatus(loc.getParent).map(_.getPath.getName)
-      .filter(_.startsWith(s"${loc.getName}.build_race")).toSeq
-    assert(leftovers.isEmpty, s"loser build dirs survived: $leftovers")
-    assert(!fs.listStatus(loc).exists(_.getPath.getName.contains(".build")),
-      "a loser's build dir nested inside the winner's live table")
+      s"reader never completed one legal read (${readerMisses.get()} probes found no pointer) — the reader leg was vacuous")
+    // the pointer names exactly the winner's complete build
+    val live = DurableIndex.resolve(spark, pointer)
+    assert(live.contains(gens(winnerIdx.get())), s"pointer names $live, not the winner")
+    assert(spark.read.parquet(live.get.toString).count() == counts(winnerIdx.get()),
+      "live generation does not hold the winner's build")
+    // every loser discarded its generation; no temp pointer is left and
+    // nothing is nested inside the live generation
+    val leftovers = fs.listStatus(pointer.getParent).map(_.getPath.getName)
+      .filter(_.startsWith(s"${pointer.getName}.")).toSeq
+    assert(leftovers == Seq(live.get.getName), s"loser generations or temp pointers survived: $leftovers")
+    assert(fs.listStatus(live.get).forall(_.isFile),
+      "a directory nested inside the winner's live generation")
+  }
+
+  test("a build that throws publishes nothing and leaves no generation behind") {
+    val (dir, family) = ("/tmp/graft_throw_corpus", "throw_build")
+    val base = new Path(spark.conf.get("spark.sql.warehouse.dir"), s"graft_$family")
+    fs.delete(base, true)
+    intercept[Exception] {
+      DurableIndex.attachOrBuildFp(spark, dir, family, "abc1", None) {
+        spark.range(10).select(when(col("id") === 5, raise_error(lit("boom")))
+          .otherwise(col("id")).as("id"))
+      }
+    }
+    assert(DurableIndex.generations(spark, dir, family).live.isEmpty)
+    assert(!fs.exists(base) || fs.listStatus(base).isEmpty,
+      s"the failed build left ${fs.listStatus(base).map(_.getPath.getName).toSeq}")
+    val df = DurableIndex.attachOrBuildFp(spark, dir, family, "abc1", None)(spark.range(10).toDF())
+    assert(df.count() == 10)
+    fs.delete(base, true): Unit
   }
 
   test("cumulative sidecar race: successor derives from live, newest wins, one live survives") {
@@ -173,6 +194,7 @@ class ConcurrentPublishSpec extends SparkSpec {
     val liveA = DurableIndex.attachLatest(spark, dirTag, family).get
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(liveA == Set(1L, 2L))
+    val genA = DurableIndex.generations(spark, dirTag, family).live(fpA)
 
     // publisher B follows the cumulative protocol: DERIVE from the live
     // generation, union the new takedowns, publish under the next fp —
@@ -193,10 +215,10 @@ class ConcurrentPublishSpec extends SparkSpec {
           }
         } catch {
           // the one benign failure: the generation the reader resolved
-          // was parked `.retired` between its read.parquet and its
-          // collect — the documented reader contract is to re-attach
-          // (the successor that parked it is live); anything else is a
-          // real safety violation and must fail the test
+          // was purged between its read.parquet and its collect — the
+          // documented reader contract is to re-attach (the successor
+          // is live); anything else is a real safety violation and must
+          // fail the test
           case e: Throwable
             if Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(6)
               .exists(c => c.isInstanceOf[java.io.FileNotFoundException]
@@ -225,14 +247,10 @@ class ConcurrentPublishSpec extends SparkSpec {
       "reader regressed from the successor to the superseded generation")
 
     // newest wins and the loser is retired: exactly one live version
-    val tag = dirTag.replaceAll("[^a-zA-Z0-9]", "_")
-    val prefix = s"${family}_${tag}_"
-    val names = fs.listStatus(base).map(_.getPath.getName).toSeq
-    val live = names.filter(n => n.startsWith(prefix)
-      && n.substring(prefix.length).matches("[0-9a-f]+"))
-    assert(live == Seq(s"$prefix$fpB"), s"expected only the successor live, got $names")
-    assert(names.exists(_.startsWith(s"$prefix$fpA.retired")),
-      "superseded generation was purged immediately — no reader grace window")
+    val gens = DurableIndex.generations(spark, dirTag, family)
+    assert(gens.live.keySet == Set(fpB), s"expected only the successor live, got $gens")
+    assert(gens.retired == Seq(genA),
+      s"superseded generation was purged immediately — no reader grace window: $gens")
     val resolved = DurableIndex.attachLatest(spark, dirTag, family).get
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(resolved == want, "attachLatest did not resolve to the successor")

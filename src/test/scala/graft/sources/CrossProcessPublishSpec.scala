@@ -7,24 +7,27 @@ import graft.SparkSpec
 
 /** The TRUE two-process publisher race (round-16 verdict #4):
   * ConcurrentPublishSpec races threads and argues FS-level equivalence
-  * — the JVM `synchronized` sits ABOVE the `publishAtomic` primitive,
-  * so thread interleavings exercise the same rename race two JVMs
-  * would produce. This spec closes the argument empirically: it forks
-  * REAL child JVMs (graft.tools.RaceProbe — separate SparkSessions,
-  * separate Hadoop FileContexts, separate process lifetimes) — two
-  * publishers staging complete builds of distinct row counts plus one
-  * attach-and-count reader — releases them against ONE destination via
-  * a file barrier, and asserts the same three invariants observed
-  * cross-process:
+  * — the JVM `synchronized` sits ABOVE the [[DurableIndex.commit]]
+  * primitive, so thread interleavings exercise the same exclusive-create
+  * race two JVMs would produce. This spec closes the argument
+  * empirically: it forks REAL child JVMs ([[RaceProbe]] — separate
+  * SparkSessions, separate Hadoop FileSystems, separate process
+  * lifetimes) — two publishers staging complete generations of
+  * distinct row counts plus one resolve-and-count reader — releases
+  * them against ONE pointer via a file barrier, and asserts the same
+  * three invariants observed cross-process:
   *
   *   1. exactly ONE publisher wins, and the loser LEARNS it lost;
-  *   2. the destination holds exactly the winner's complete build;
+  *   2. the pointer names exactly the winner's complete generation, and
+  *      the loser's generation is gone;
   *   3. the reader never observes a torn generation (every completed
-  *      read is a whole publisher's count), and completes at least one
-  *      legal read (the non-vacuity rule from the thread spec).
+  *      read is a whole publisher's count; an absent pointer is the
+  *      legal state before publish), and completes at least one legal
+  *      read (the non-vacuity rule from the thread spec).
   */
 class CrossProcessPublishSpec extends SparkSpec {
 
+  // the name predates the pointer commit; kept so test history stays continuous
   test("two real JVMs race one publishAtomic destination; a third reads across it") {
     val work = tempDir("race2").toString
     val destName = "race2_t_deadbeef"
@@ -67,14 +70,18 @@ class CrossProcessPublishSpec extends SparkSpec {
       s"expected exactly one cross-process winner, got: $results")
     val winnerIdx = winners.head.trim.split(" ").last.toInt
 
-    // destination holds exactly the winner's complete build
-    val dest = s"$work/graft_race2/$destName"
-    assert(spark.read.parquet(dest).count() == counts(winnerIdx),
-      "live path does not hold the cross-process winner's build")
-    // the loser's contract: its build dir is gone, nothing nested
+    // the pointer names exactly the winner's complete generation
+    val live = DurableIndex.resolve(spark,
+      new org.apache.hadoop.fs.Path(s"$work/graft_race2/$destName"))
+    assert(live.map(_.getName).contains(s"$destName.g$winnerIdx"),
+      s"pointer names $live, not the cross-process winner's generation")
+    assert(spark.read.parquet(live.get.toString).count() == counts(winnerIdx),
+      "live generation does not hold the cross-process winner's build")
+    // the loser's contract: its generation is gone, no temp pointer left
     val leftovers = new java.io.File(s"$work/graft_race2").listFiles()
-      .map(_.getName).filter(_.contains(".build_proc"))
-    assert(leftovers.isEmpty, s"loser build dirs survived: ${leftovers.toSeq}")
+      .map(_.getName).filter(_.startsWith(s"$destName.")).toSeq
+    assert(leftovers == Seq(live.get.getName),
+      s"loser generations or temp pointers survived: $leftovers")
 
     // reader: no torn generation, and at least one completed legal read
     val m = "RACE_READS ok=(\\d+) miss=(\\d+) illegal=(\\d+)".r

@@ -18,7 +18,7 @@ private[sources] object ForkedProbe {
       .flatten.toSeq
     (Seq(javaBin) ++ addOpens ++ Seq("-Xmx1500m",
       "-cp", System.getProperty("java.class.path"),
-      "graft.tools.RaceProbe") ++ args).asJava
+      "graft.sources.RaceProbe") ++ args).asJava
   }
 
   def start(args: Seq[String]): Process = {
