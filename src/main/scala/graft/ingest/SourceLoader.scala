@@ -36,20 +36,19 @@ import graft.sinks.TableSink
   * computed with `row_number() over (partition by file)` ordered by
   * `monotonically_increasing_id()`, stable for the multiLine routes
   * because each multiline CSV/JSON file is a single input split. The
-  * SPLITTABLE CSV route (below) instead orders by its `_rec_offset`
-  * column — the record's absolute byte offset, deterministic under any
-  * task placement.
+  * split route (below) instead orders by its `_rec_offset` column — the
+  * record's absolute byte offset, deterministic under any task
+  * placement.
   *
-  * Split-route gates (round-17 verdict #5 for CSV, round-18 verdict #1
-  * for JSON): `multiLine=true` pins Spark's CSV and JSON sources to one
-  * task per file, so at 100 TB ingest serializes on file count. Past
-  * [[SplitMinBytes]] total matched bytes the csv/json branches read
-  * through [[SplitCsv]] / [[SplitJson]] — the two-pass splittable
-  * readers, proven row-identical (corrupt classification included) to
-  * the multiLine readers by SplitCsvSpec / SplitJsonSpec — and
-  * synthesize the same `_metadata` lineage struct
-  * from the routes' own file/mtime columns. The reference's KB-scale
-  * files stay on the multiLine readers.
+  * Split route: `multiLine=true` pins Spark's CSV and JSON sources to
+  * one task per file, so at 100 TB ingest serializes on file count.
+  * readRaw lists a text format's files once; past [[SplitMinBytes]]
+  * total bytes it reads that listing through the two-pass splittable
+  * engine ([[SplitFiles]], with the [[SplitCsv]] or [[SplitJson]]
+  * lexer), which emits the same `_metadata` lineage struct as Spark's
+  * file sources and is proven row-identical (corrupt classification
+  * included) to the multiLine readers by SplitCsvSpec / SplitJsonSpec.
+  * The reference's KB-scale files stay on the multiLine readers.
   */
 object SourceLoader {
 
@@ -73,57 +72,34 @@ object SourceLoader {
       splitMinBytes: Long = SplitMinBytes): DataFrame = {
     val path = salesPath(dataDir, cc)
     cc.format match {
-      case "csv" =>
-        if (SplitFiles.globBytes(spark, path) >= splitMinBytes)
-          // the splittable route: task count scales with bytes, not
-          // files; lineage synthesized to the multiLine reader's
-          // `_metadata` shape (basename + modification time), plus the
-          // route's `_rec_offset` for deterministic row numbering
-          SplitCsv.read(spark, path, Schemas.inCsvSchema(CorruptCol), CorruptCol)
-            .withColumn("_metadata", struct(
-              element_at(split(col("_src_file"), "/"), -1).as("file_name"),
-              col("_src_mtime").as("file_modification_time")))
-            .drop("_src_file", "_src_mtime")
-        else
-          spark.read
-            .option("header", true)
-            .option("multiLine", true)
-            .option("quote", "\"")
-            .option("escape", "\"")
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CorruptCol)
-            .schema(Schemas.inCsvSchema(CorruptCol))
-            .csv(path)
       case "parquet" =>
         spark.read.parquet(path).withColumn(CorruptCol, lit(null: String))
-      case "json" =>
-        if (SplitFiles.globBytes(spark, path) >= splitMinBytes)
-          // the splittable route (round-18 verdict #1): task count
-          // scales with bytes, not files; the DECLARED stringly FR
-          // element schema is passed through (round-19 verdict #4 —
-          // schema inference would add a third full pass over the
-          // corpus bytes; with it the route reads each byte exactly
-          // twice), loadCountry casts from string regardless; lineage
-          // synthesized to the multiLine reader's `_metadata` shape,
-          // plus `_rec_offset` for deterministic row numbering
-          SplitJson.read(spark, path,
-            Some(Schemas.frJsonSchema(CorruptCol)), CorruptCol)
-            .withColumn("_metadata", struct(
-              element_at(split(col("_src_file"), "/"), -1).as("file_name"),
-              col("_src_mtime").as("file_modification_time")))
-            .drop("_src_file", "_src_mtime")
-        else
-          // Spark's JSON reader explodes a top-level array natively
-          // (Snowflake needed strip_outer_array, ref: 4. Common Schema.sql:15-18).
-          // The same declared stringly schema as the split route: no
-          // inference job (a full parse of the largest input before the
-          // read itself), and the corrupt-record column always present
-          spark.read
+      case format =>
+        val csv = format == "csv"
+        // both text formats read through their DECLARED stringly
+        // schema: FR inference would add a full pass over the corpus
+        // bytes, and the corrupt-record column is always present
+        val schema =
+          if (csv) Schemas.inCsvSchema(CorruptCol)
+          else Schemas.frJsonSchema(CorruptCol)
+        val files = SplitFiles.listing(spark, path)
+        if (files.map(_.len).sum >= splitMinBytes) {
+          if (csv) SplitCsv.readFiles(spark, files, schema, CorruptCol)
+          else SplitJson.readFiles(spark, files, Some(schema), CorruptCol)
+        } else {
+          val reader = spark.read
             .option("multiLine", true)
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", CorruptCol)
-            .schema(Schemas.frJsonSchema(CorruptCol))
-            .json(path)
+            .schema(schema)
+          // Spark's JSON reader explodes a top-level array natively
+          // (Snowflake needed strip_outer_array, ref: 4. Common
+          // Schema.sql:15-18)
+          if (csv)
+            reader.option("header", true).option("quote", "\"")
+              .option("escape", "\"").csv(path)
+          else reader.json(path)
+        }
     }
   }
 

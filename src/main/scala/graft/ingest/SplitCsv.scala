@@ -1,65 +1,33 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** SPLITTABLE reading of quoted multiline CSV — the last SURVEY §7.4
-  * hard-part (round-16 verdict #7): `multiLine=true` forces Spark's
-  * CSV source to one task per file (a record may span any line split,
-  * so no split is provably safe), which at 100 TB serializes ingest on
-  * file count. This reader makes the splits provably safe with a
-  * cheap distributed boundary scan first — the classic two-pass
-  * design:
+/** SPLITTABLE reading of quoted multiline CSV: the RFC4180 lexer over
+  * the two-pass engine in [[SplitFiles]] (which holds the shared
+  * contract — passes, driver bound, corrupt markers, lineage).
   *
-  *   PASS 1 (distributed, one task per ~chunk): each fixed-size byte
-  *   chunk is scanned once for (a) its RFC4180 quote-parity (an
-  *   escaped `""` flips twice, so a raw count mod 2 is exact), and
-  *   (b) the first newline offset under EACH starting-parity
-  *   assumption (outside/inside a quoted field). `"` and `\n` are
-  *   single bytes with the high bit clear, so a byte scan is correct
-  *   in UTF-8 without decoding.
+  *   scan: each chunk's quote parity (an escaped `""` flips twice, so
+  *   a raw count mod 2 is exact) and its first newline under EACH
+  *   starting parity (outside/inside a quoted field). `"`, `\n` and
+  *   `\r` are single bytes with the high bit clear, so a byte scan is
+  *   correct in UTF-8 without decoding.
   *
-  *   PER-FILE COMBINE (distributed, one task per file, metadata only —
-  *   round-18 verdict #2: the combine used to collect one ChunkScan
-  *   per chunk to the driver, ~3M driver-held tuples twice over at
-  *   100 TB / 32 MB): prefix-XOR of chunk parities resolves each
-  *   chunk's TRUE starting parity, which picks the true first record
-  *   boundary in the chunk; a chunk whose assumed-parity newline is
-  *   absent simply contributes no boundary (its range merges into the
-  *   previous one — the giant-record case). The driver holds O(#files)
-  *   state (the listing); scans and ranges stay in RDDs end to end.
+  *   bounds: a prefix-XOR of chunk parities resolves each chunk's TRUE
+  *   starting parity, which picks the true first record boundary in
+  *   the chunk.
   *
-  *   PASS 2 (distributed, ~one task per boundary-aligned range): each
-  *   range starts exactly after a record boundary, so a fresh quote
-  *   scan splits it into COMPLETE record strings; `from_csv` then
-  *   parses each record with the same quote/escape/PERMISSIVE options
-  *   as the multiLine reader (embedded newlines are fine — the parser
-  *   sees one whole record, no line-splitting involved). The file's
-  *   first range drops its leading header record.
-  *
-  * Every emitted row carries `_src_file`, `_rec_offset` (the record's
-  * absolute byte offset — a deterministic total order within a file,
-  * unlike monotonically_increasing_id) and `_src_mtime` (the file's
-  * modification time, so the SourceLoader lineage columns need no
-  * `_metadata` struct this route cannot supply). Cost: pass 1 reads
-  * the bytes once, pass 2 once more — 2x I/O for unbounded
-  * parallelism, the standard trade (a staged-conversion route pays the
-  * same 2x and a shuffle more).
+  *   slice: a fresh quote scan splits the range into complete records;
+  *   the file's first range drops its leading header record.
   *
   * Record separators: `\n` and `\r\n` (the multiLine reader's
-  * defaults). A LONE `\r` acting as a record separator — i.e. a CR
-  * outside quotes not followed by LF — must not silently glue records
-  * together (the round-17 ADVICE data-loss shape: from_csv would keep
-  * the first record of a glued run and drop the rest without corrupt
-  * capture); like unbalanced quotes, it marks the WHOLE FILE corrupt:
-  * the file degrades to ONE corrupt-marker row (file name + reason,
-  * flagged out-of-band so it is corrupt under ANY schema) that COPY
-  * accounting counts as skipped, while neighbor files parse fully —
-  * the SplitJson round-20 ON_ERROR=CONTINUE contract, because one
-  * damaged file among thousands must not abort a 100 TB load. Lone
-  * CRs INSIDE quotes are data and pass through untouched.
+  * defaults). A LONE `\r` acting as a record separator — a CR outside
+  * quotes not followed by LF — must not silently glue records together
+  * (from_csv would keep the first record of a glued run and drop the
+  * rest without corrupt capture); like unbalanced quotes, it marks the
+  * WHOLE FILE corrupt. Lone CRs INSIDE quotes are data and pass
+  * through untouched.
   *
   * Ref behavior matched: SourceLoader.readRaw's csv branch
   * (header=true, quote=escape='"', PERMISSIVE + corrupt column);
@@ -70,238 +38,117 @@ import org.apache.spark.sql.types.StructType
   */
 object SplitCsv {
 
-  /** Test hook: tuples the last read materialized on the driver — the
-    * file listing and nothing else (SplitCsvSpec pins O(#files), so a
-    * future edit that re-collects per-chunk state fails a spec instead
-    * of silently re-opening the 100 TB driver bound). */
-  private[ingest] val lastDriverHeld =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** One pass-1 result: chunk identity (+ its file's length and mtime,
-    * carried along so the per-file combine needs no driver-built maps),
-    * quote parity, the first in-chunk newline offset (absolute) under
-    * each start assumption (-1 = none in this chunk under that
-    * assumption), and the lone-CR evidence under each assumption
-    * (`loneCrOut`/`loneCrIn`; `endCr` is the RELATIVE parity at a
-    * chunk-final CR, -1 when the chunk does not end in CR — a CR at a
-    * chunk boundary is only lone if the NEXT chunk's first byte is not
-    * LF, resolved in the combine). */
-  private case class ChunkScan(file: String, fileLen: Long, mtime: Long,
-      idx: Int, parity: Int,
+  /** One chunk's pass-1 summary: quote parity, the first in-chunk
+    * newline offset (absolute) under each start assumption (-1 = none
+    * in this chunk under that assumption), and the lone-CR evidence
+    * under each assumption (`loneCrOut`/`loneCrIn`; `endCr` is the
+    * RELATIVE parity at a chunk-final CR, -1 when the chunk does not
+    * end in CR — a CR at a chunk boundary is only lone if the NEXT
+    * chunk's first byte is not LF, resolved in `bounds`). */
+  private final case class Chunk(parity: Int,
       firstNlOutside: Long, firstNlInside: Long,
       loneCrOut: Boolean, loneCrIn: Boolean, endCr: Int, startsNl: Boolean)
 
-  /** Boundary-aligned read range; `dropHeader` marks the file-leading
-    * range whose first record is the header line. A `corrupt` range is
-    * a whole structurally-broken file collapsed to its one marker row
-    * (no bytes are read for it). */
-  private case class RecRange(file: String, start: Long, end: Long,
-      dropHeader: Boolean, mtime: Long, corrupt: Option[String] = None)
+  private object Lexer extends SplitFiles.Lexer[Chunk] {
+
+    def scan(buf: Array[Byte], absStart: Long): Chunk = {
+      var parity = 0
+      var nlOut = -1L; var nlIn = -1L
+      var loneCrOut = false; var loneCrIn = false
+      var endCr = -1
+      var j = 0
+      while (j < buf.length) {
+        val b = buf(j)
+        if (b == '"') parity ^= 1
+        else if (b == '\n') {
+          if (parity == 0 && nlOut < 0) nlOut = absStart + j
+          if (parity == 1 && nlIn < 0) nlIn = absStart + j
+        } else if (b == '\r') {
+          if (j + 1 < buf.length) {
+            if (buf(j + 1) != '\n') {
+              if (parity == 0) loneCrOut = true else loneCrIn = true
+            }
+          } else endCr = parity // chunk-final CR: resolved in bounds
+        }
+        j += 1
+      }
+      Chunk(parity, nlOut, nlIn, loneCrOut, loneCrIn, endCr,
+        startsNl = buf(0) == '\n')
+    }
+
+    def bounds(chunks: IndexedSeq[Chunk]): Either[String, Seq[Long]] = {
+      var parity = 0
+      val starts = Seq.newBuilder[Long]
+      var k = 0
+      while (k < chunks.length) {
+        val c = chunks(k)
+        if (if (parity == 0) c.loneCrOut else c.loneCrIn)
+          return Left(s"lone \\r record separator (CR not followed by LF " +
+            s"outside quotes, chunk $k) — only \\n and \\r\\n are supported")
+        if (c.endCr >= 0 && (c.endCr ^ parity) == 0 &&
+            !(k + 1 < chunks.length && chunks(k + 1).startsNl))
+          return Left(s"lone \\r record separator (CR at chunk $k " +
+            "boundary or EOF outside quotes) — only \\n and \\r\\n are " +
+            "supported")
+        val nl = if (parity == 0) c.firstNlOutside else c.firstNlInside
+        if (nl >= 0) starts += nl + 1 // a record starts after the newline
+        parity ^= c.parity
+        k += 1
+      }
+      if (parity != 0)
+        Left(s"unbalanced quotes (parity $parity) — not RFC4180")
+      else Right(starts.result())
+    }
+
+    def slice(buf: Array[Byte], rangeStart: Long, isFirstRange: Boolean)
+        : Iterator[(String, Long, Boolean)] = {
+      val out = Seq.newBuilder[(String, Long, Boolean)]
+      var parity = 0
+      var recStart = 0
+      var j = 0
+      def emit(endIdx: Int): Unit = { // [recStart, endIdx) minus trailing \r
+        val e = if (endIdx > recStart && buf(endIdx - 1) == '\r') endIdx - 1
+                else endIdx
+        if (e > recStart) {
+          // univocity (the multiLine reader's parser) normalizes line
+          // separators WITHIN quoted values to '\n'; after record
+          // splitting the only surviving CRLFs are inside quotes, so
+          // a whole-record replace reproduces that normalization and
+          // keeps the two routes row-identical (SplitCsvSpec)
+          val rec = new String(buf, recStart, e - recStart, "UTF-8")
+            .replace("\r\n", "\n")
+          out += ((rec, rangeStart + recStart, false))
+        }
+      }
+      while (j < buf.length) {
+        val b = buf(j)
+        if (b == '"') parity ^= 1
+        else if (b == '\n' && parity == 0) { emit(j); recStart = j + 1 }
+        j += 1
+      }
+      emit(buf.length) // final record without trailing newline
+      val all = out.result()
+      (if (isFirstRange) all.drop(1) else all).iterator
+    }
+  }
 
   /** Read every file matching `pattern` (a Hadoop glob) as quoted
     * multiline CSV with header, schema-typed, PERMISSIVE with
     * `corruptCol` capture — the splittable equivalent of the
     * SourceLoader multiLine reader. */
   def read(spark: SparkSession, pattern: String, schema: StructType,
-      corruptCol: String, chunkBytes: Long = 32L << 20): DataFrame = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    // listing + chunk auto-scale shared with SplitJson (round-18
-    // ADVICE: the auto-scale bounds chunk count by growing chunk size
-    // with the corpus — 100 TB reads in ~400 MB chunks instead of
-    // 3.3M 32 MB ones; explicit smaller chunkBytes are honored)
-    val (files, eff) = SplitFiles.listing(spark, pattern, chunkBytes)
-    // the ONLY driver-side materialization is this listing (pinned by
-    // SplitCsvSpec via the hook): scans and ranges stay in RDDs
-    lastDriverHeld.set(files.length)
-    val numChunks = files.map { case (_, len, _) => (len + eff - 1) / eff }.sum
-    val nTasks = math.max(1L, math.min(numChunks, Int.MaxValue.toLong)).toInt
+      corruptCol: String, chunkBytes: Long = SplitFiles.DefaultChunkBytes)
+      : DataFrame =
+    readFiles(spark, SplitFiles.listing(spark, pattern), schema, corruptCol,
+      chunkBytes)
 
-    // ---- pass 1: distributed chunk scans ----
-    // one chunk per task — the chunk IS the parallelism unit, so the
-    // task count scales with the data instead of capping at a constant
-    // (round-17 verdict #5: a 512 cap meant ~200 GB scanned serially
-    // per task at 100 TB). Chunk descriptors are generated
-    // DISTRIBUTIVELY off the listing and spread by repartition — the
-    // driver never holds a per-chunk collection (round-18 verdict #2).
-    val sc = spark.sparkContext
-    val scans = sc
-      .parallelize(files.toSeq,
-        math.max(1, math.min(files.length, 4 * sc.defaultParallelism)))
-      .flatMap { case (f, len, mtime) =>
-        (0L until len by eff).iterator.zipWithIndex.map { case (off, i) =>
-          (f, len, mtime, i, off, math.min(off + eff, len))
-        }
-      }
-      .repartition(nTasks)
-      .map { case (f, len, mtime, i, start, end) =>
-        val in = new Path(f).getFileSystem(conf.value).open(new Path(f))
-        val buf = new Array[Byte]((end - start).toInt)
-        try { in.seek(start); in.readFully(buf) } finally in.close()
-        var parity = 0
-        var nlOut = -1L; var nlIn = -1L
-        var loneCrOut = false; var loneCrIn = false
-        var endCr = -1
-        var j = 0
-        while (j < buf.length) {
-          val b = buf(j)
-          if (b == '"') parity ^= 1
-          else if (b == '\n') {
-            if (parity == 0 && nlOut < 0) nlOut = start + j
-            if (parity == 1 && nlIn < 0) nlIn = start + j
-          } else if (b == '\r') {
-            if (j + 1 < buf.length) {
-              if (buf(j + 1) != '\n') {
-                if (parity == 0) loneCrOut = true else loneCrIn = true
-              }
-            } else endCr = parity // chunk-final CR: resolved in combine
-          }
-          j += 1
-        }
-        ChunkScan(f, len, mtime, i, parity, nlOut, nlIn,
-          loneCrOut, loneCrIn, endCr, startsNl = buf(0) == '\n')
-      }
-
-    // ---- per-file combine (distributed, metadata only): true
-    // parities -> record boundaries. One task per file; the task holds
-    // that file's ChunkScans — bounded by the auto-scale at ~262k
-    // ~100 B tuples even for a single-file 100 TB corpus.
-    val ranges = scans.groupBy(_.file).flatMap { case (f, csIt) =>
-      val cs = csIt.toSeq
-      val len = cs.head.fileLen
-      val fileMtime = cs.head.mtime
-      var parity = 0
-      var corrupt: Option[String] = None
-      val bounds = Seq.newBuilder[Long]
-      val ordered = cs.sortBy(_.idx)
-      ordered.zipWithIndex.foreach { case (c, k) =>
-        if (corrupt.isEmpty) {
-          // a lone-CR record separator (CR outside quotes with no
-          // following LF) would silently glue records and lose data;
-          // like every structural failure, it marks the WHOLE FILE
-          // corrupt — one marker row, counted as skipped — instead of
-          // aborting the load (the SplitJson round-20 contract: one
-          // damaged file among thousands must not kill a 100 TB
-          // ingest)
-          if (if (parity == 0) c.loneCrOut else c.loneCrIn)
-            corrupt = Some(s"lone \\r record separator (CR not followed " +
-              s"by LF outside quotes, chunk ${c.idx}) — only \\n and " +
-              "\\r\\n are supported")
-          else if (c.endCr >= 0 && (c.endCr ^ parity) == 0 &&
-              !(k + 1 < ordered.length && ordered(k + 1).startsNl))
-            corrupt = Some(s"lone \\r record separator (CR at chunk " +
-              s"${c.idx} boundary or EOF outside quotes) — only \\n " +
-              "and \\r\\n are supported")
-          else {
-            val nl = if (parity == 0) c.firstNlOutside else c.firstNlInside
-            if (nl >= 0) bounds += nl + 1 // a record starts after the newline
-            parity ^= c.parity
-          }
-        }
-      }
-      if (corrupt.isEmpty && parity != 0)
-        corrupt = Some(s"unbalanced quotes (parity $parity) — not RFC4180")
-      corrupt match {
-        case Some(reason) =>
-          Seq(RecRange(f, 0L, 0L, dropHeader = false, mtime = fileMtime,
-            corrupt = Some(reason)))
-        case None =>
-          val starts = (0L +: bounds.result()).distinct.filter(_ < len)
-          starts.zip(starts.drop(1) :+ len).map { case (a, b) =>
-            RecRange(f, a, b, dropHeader = a == 0L, mtime = fileMtime)
-          }
-      }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_2)
-    // metadata-sized (O(#chunks) descriptors): without this every
-    // caller ACTION re-runs pass 1, which reads every corpus byte.
-    // REPLICATED persist, not localCheckpoint: checkpoint blocks are
-    // executor-local and non-replicated, so one lost executor
-    // (routine at the 100 TB target under dynamic allocation) would
-    // fail every later pass-2 job permanently; persist keeps the
-    // lineage — a lost replica recomputes pass 1 instead of dying —
-    // and the second replica makes that recompute rare. On local[32]
-    // (one block manager) the replica degrades to 1 harmlessly.
-    // Blocks are cleaned with the RDD.
-
-    // ---- pass 2: boundary-aligned ranges -> complete record strings.
-    // A corrupt range contributes its ONE marker row, flagged
-    // OUT-OF-BAND (`_file_corrupt`) rather than through the parser:
-    // unlike JSON — where a non-JSON marker string is corrupt by
-    // construction — a CSV marker would PARSE under an all-string
-    // schema, so the corrupt classification cannot ride from_csv. ----
-    import spark.implicits._
-    val records = ranges
-      .repartition(nTasks) // ~one range per task (ranges <= chunks)
-      .flatMap { r =>
-        r.corrupt match {
-          case Some(reason) =>
-            Iterator.single((r.file,
-              s"${SplitJson.CorruptFilePrefix} ${r.file}: $reason",
-              0L, r.mtime, true))
-          case None => sliceRecords(r, conf)
-        }
-      }
-      .toDF("_src_file", "_rec", "_rec_offset", "_src_mtime", "_file_corrupt")
-
-    // ---- parse: one whole record per from_csv call; marker rows are
-    // all-null with the marker text in the corrupt column ----
+  /** [[read]] over an already listed set of files. */
+  private[ingest] def readFiles(spark: SparkSession,
+      files: Seq[SplitFiles.SrcFile], schema: StructType, corruptCol: String,
+      chunkBytes: Long = SplitFiles.DefaultChunkBytes): DataFrame = {
     val opts = Map("quote" -> "\"", "escape" -> "\"", "mode" -> "PERMISSIVE",
       "columnNameOfCorruptRecord" -> corruptCol)
-    val parsed = records.withColumn("_parsed", from_csv(col("_rec"), schema, opts))
-    val fields = schema.fields.map { f =>
-      if (f.name == corruptCol)
-        when(col("_file_corrupt"), col("_rec"))
-          .otherwise(col("_parsed").getField(f.name)).as(f.name)
-      else
-        when(col("_file_corrupt"), lit(null).cast(f.dataType))
-          .otherwise(col("_parsed").getField(f.name)).as(f.name)
-    }
-    parsed.select(fields.toIndexedSeq ++ Seq(col("_src_file"),
-      col("_rec_offset"),
-      timestamp_millis(col("_src_mtime")).as("_src_mtime")): _*)
-  }
-
-  /** Pass-2 slicing of one boundary-aligned range into complete record
-    * strings. The range starts exactly after a record boundary, so a
-    * fresh quote scan is exact. */
-  private def sliceRecords(r: RecRange,
-      conf: org.apache.spark.util.SerializableConfiguration)
-      : Iterator[(String, String, Long, Long, Boolean)] = {
-    // a merged range (record > chunk) can exceed the array bound —
-    // fail with the real cause, not a negative-size allocation
-    require(r.end - r.start <= Int.MaxValue - 8,
-      s"${r.file}: a single record spans ${r.end - r.start} bytes " +
-        s"(range ${r.start}..${r.end}) — larger than the 2 GiB " +
-        "single-record limit of the splittable route")
-    val in = new Path(r.file).getFileSystem(conf.value).open(new Path(r.file))
-    val buf = new Array[Byte]((r.end - r.start).toInt)
-    try { in.seek(r.start); in.readFully(buf) } finally in.close()
-    val out = Seq.newBuilder[(String, String, Long, Long, Boolean)]
-    var parity = 0
-    var recStart = 0
-    var j = 0
-    def emit(endIdx: Int): Unit = { // [recStart, endIdx) minus trailing \r
-      val e = if (endIdx > recStart && buf(endIdx - 1) == '\r') endIdx - 1
-              else endIdx
-      if (e > recStart) {
-        // univocity (the multiLine reader's parser) normalizes line
-        // separators WITHIN quoted values to '\n'; after record
-        // splitting the only surviving CRLFs are inside quotes, so
-        // a whole-record replace reproduces that normalization and
-        // keeps the two routes row-identical (SplitCsvSpec)
-        val rec = new String(buf, recStart, e - recStart, "UTF-8")
-          .replace("\r\n", "\n")
-        out += ((r.file, rec, r.start + recStart, r.mtime, false))
-      }
-    }
-    while (j < buf.length) {
-      val b = buf(j)
-      if (b == '"') parity ^= 1
-      else if (b == '\n' && parity == 0) { emit(j); recStart = j + 1 }
-      j += 1
-    }
-    emit(buf.length) // final record without trailing newline
-    val all = out.result()
-    (if (r.dropHeader) all.drop(1) else all).iterator
+    SplitFiles.project(SplitFiles.records(spark, files, chunkBytes, Lexer),
+      from_csv(col("_rec"), schema, opts), schema, corruptCol)
   }
 }

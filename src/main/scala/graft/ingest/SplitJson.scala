@@ -1,66 +1,54 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
-/** SPLITTABLE reading of outer-array JSON — the FR ingest shape
-  * (round-18 verdict #1, the symmetric gap to SplitCsv): an
-  * array-of-objects document (ref: step_3_load_from_stage_to_source
-  * .py:88-109, format DDL 4. Common Schema.sql:15-18) can only be read
-  * by Spark's JSON source with `multiLine=true`, which pins ONE task
-  * per file — at 100 TB the FR source serializes on file count. This
-  * reader makes byte splits provably element-safe with the same
-  * two-pass design as [[SplitCsv]], adapted to JSON's lexical rules:
+/** SPLITTABLE reading of outer-array JSON — the FR ingest shape (ref:
+  * step_3_load_from_stage_to_source.py:88-109, format DDL 4. Common
+  * Schema.sql:15-18): JSON's lexer over the two-pass engine in
+  * [[SplitFiles]] (which holds the shared contract — passes, driver
+  * bound, corrupt markers, lineage).
   *
-  *   PASS 1 (distributed, one task per ~chunk): each fixed-size byte
-  *   chunk is scanned under all THREE string start states a chunk
-  *   boundary can land in — outside a string, inside a string, and
-  *   inside a string immediately after a backslash (a split can fall
-  *   between `\` and `"`). JSON strings toggle on unescaped `"` and a
-  *   backslash escapes exactly one following byte (every JSON escape
-  *   is ASCII, and UTF-8 continuation bytes never collide with ASCII,
-  *   so a byte scan needs no decoding). Per start state the scan
-  *   records the net `{[`/`}]` depth delta outside strings, the end
-  *   state, and the NEW-MINIMUM closes: the first close reaching each
-  *   successively lower relative depth-after. Because depth moves by
-  *   ±1 and every downward integer crossing happens at a close, the
-  *   recorded values form a contiguous descending range — so the
-  *   combine can look up any target depth by index. A degenerate
-  *   chunk with more than [[MaxCloses]] new-minimum closes stops
-  *   recording and sets an overflow flag instead of failing — only
-  *   the TRUE start state's overflow matters (a long net-descending
-  *   `}]` run inside a string literal overflows the wrong-state scan
-  *   of a perfectly valid file; round-19 advice).
+  *   scan: each chunk is scanned under all THREE string start states a
+  *   chunk boundary can land in — outside a string, inside a string,
+  *   and inside a string immediately after a backslash (a split can
+  *   fall between `\` and `"`). JSON strings toggle on unescaped `"`
+  *   and a backslash escapes exactly one following byte (every JSON
+  *   escape is ASCII, and UTF-8 continuation bytes never collide with
+  *   ASCII, so a byte scan needs no decoding). Per start state the
+  *   scan records the net `{[`/`}]` depth delta outside strings, the
+  *   end state, and the NEW-MINIMUM closes: the first close reaching
+  *   each successively lower relative depth-after. Because depth moves
+  *   by ±1 and every downward integer crossing happens at a close, the
+  *   recorded values form a contiguous descending range — so `bounds`
+  *   can look up any target depth by index. A degenerate chunk with
+  *   more than [[MaxCloses]] new-minimum closes stops recording and
+  *   sets an overflow flag instead of failing — only the TRUE start
+  *   state's overflow matters (a long net-descending `}]` run inside a
+  *   string literal overflows the wrong-state scan of a valid file).
   *
-  *   PER-FILE COMBINE (distributed, one task per file, metadata only):
-  *   a prefix fold resolves each chunk's TRUE start state and absolute
-  *   depth. An element boundary is any close whose absolute
+  *   bounds: a prefix fold resolves each chunk's TRUE start state and
+  *   absolute depth. An element boundary is any close whose absolute
   *   depth-after is 1 — the close of a top-level array element: `}`
   *   for object elements and `]` for array-typed elements (the outer
-  *   array's own close lands at depth-after 0, a different level, so
-  *   accepting `]` closes is safe and keeps all-array-element files
-  *   parallel; round-19 advice). Boundaries are optional — ranges
-  *   merge — so only the chunk's recorded close at relative depth
-  *   `1 - startDepth` is used. The fold also validates structure:
-  *   unbalanced strings or brackets, a non-`[` first byte, bytes
-  *   dipping below the top level, trailing non-whitespace after the
-  *   outer `]` (same chunk via the per-level garbage flag, later
-  *   chunks via the first-non-whitespace byte), or a true-state
-  *   overflow each mark the WHOLE FILE corrupt — not fail-fast: the
-  *   file degrades to ONE corrupt-marker row (below) so a single
-  *   damaged file among thousands cannot abort a 100 TB load
-  *   (ON_ERROR=CONTINUE semantics; round-19 advice).
+  *   array's own close lands at depth-after 0, a different level). The
+  *   fold also validates structure: unbalanced strings or brackets, a
+  *   non-`[` first byte, bytes dipping below the top level, trailing
+  *   non-whitespace after the outer `]` (same chunk via the per-level
+  *   garbage flag, later chunks via the first-non-whitespace byte), a
+  *   top level closed by `}` (`[{...}}`), or a true-state overflow
+  *   each mark the WHOLE FILE corrupt.
   *
-  *   PASS 2 (distributed, ~one task per boundary-aligned range): each
-  *   range starts right after an element-closing `}`/`]` (or at byte
-  *   0, where it consumes the opening `[`), so a fresh scan slices
-  *   COMPLETE top-level elements — object, nested-array and scalar
-  *   elements alike; `from_json` then parses each element PERMISSIVE
-  *   with corrupt-column capture (embedded escaped newlines are fine —
-  *   the parser sees one whole element).
+  *   slice: each range starts right after an element-closing `}`/`]`
+  *   (or at byte 0, where it consumes the optional BOM and the opening
+  *   `[`), so a fresh scan cuts COMPLETE top-level elements — object,
+  *   nested-array and scalar elements alike. Every element but the
+  *   file's first must follow a `,`: a range after byte 0 begins right
+  *   after an element close, so the slice knows locally whether the
+  *   separator came. An element that starts without one (`[{..} {..}]`,
+  *   which Jackson rejects) is flagged corrupt as its own text, and
+  *   its neighbors parse.
   *
   * Corrupt semantics — the DOCUMENTED divergences (pinned by
   * SplitJsonSpec's corrupt-semantics legs): the multiLine reader's
@@ -72,59 +60,18 @@ import org.apache.spark.storage.StorageLevel
   * inside one range, and at 100 TB per-file blast radius is the wrong
   * behavior anyway; this route REFINES it — exactly the offending
   * element lands in the corrupt column, null elements (no data) are
-  * dropped, well-formed neighbors parse normally. A STRUCTURALLY
-  * broken file (which the multiLine reader degrades to one corrupt
-  * row carrying the whole file text) degrades here to one corrupt row
-  * carrying a [[CorruptFilePrefix]] marker with the file name and
-  * reason — carrying the file TEXT would recreate the very
-  * single-huge-row problem the splittable route exists to avoid. On
-  * clean array-of-objects corpora (the FR contract shape) the routes
-  * are row-identical, corrupt flags included.
-  *
-  * One documented LENIENCY (spec-pinned): elements juxtaposed without
-  * a separating comma (`[{..} {..}]`) parse as their individual
-  * elements — each complete and correctly valued — where Jackson
-  * rejects the file. Detecting the missing comma exactly would need
-  * per-level separator-discipline state in the chunk scan (the legal
-  * byte set between elements depends on the ABSOLUTE depth the chunk
-  * cannot know); the failure admits no data loss or corruption, only
-  * acceptance of a malformed separator, so the scan stays simple. The
-  * outer close's TYPE is checked (`[{...}}` is corrupt — a top level
-  * ending in `}` is not an array even when the depth balances).
-  *
-  * Every emitted row carries `_src_file`, `_rec_offset` (the element's
-  * absolute byte offset — a deterministic total order within a file)
-  * and `_src_mtime`, so SourceLoader can synthesize the `_metadata`
-  * lineage shape. Cost: pass 1 reads the bytes once (the boundary
-  * ranges are persisted REPLICATED, so no later action re-runs it and
-  * a lost executor recomputes instead of failing — localCheckpoint's
-  * non-replicated executor-local blocks would be unrecoverable under
-  * decommissioning at the 100 TB target; round-19 advice), pass 2
-  * once per consuming job — 2x I/O for unbounded parallelism, the
-  * same trade SplitCsv makes; the no-schema path pays one extra
-  * pass-2 job for inference (pass an explicit schema at scale —
-  * SourceLoader's FR gate does).
+  * dropped, well-formed neighbors parse normally. On clean
+  * array-of-objects corpora (the FR contract shape) the routes are
+  * row-identical, corrupt flags included.
   *
   * Ref behavior matched: SourceLoader.readRaw's json branch
-  * (multiLine, PERMISSIVE, corrupt capture, inferred schema);
-  * SplitJsonSpec proves row-identical output — corrupt-element
-  * classification included — on the reference FR files and on
-  * synthetic corpora with escapes, nesting and corrupt elements
-  * straddling chunk boundaries at adversarial chunk sizes.
+  * (multiLine, PERMISSIVE, corrupt capture); SplitJsonSpec proves
+  * row-identical output — corrupt-element classification included —
+  * on the reference FR files and on synthetic corpora with escapes,
+  * nesting and corrupt elements straddling chunk boundaries at
+  * adversarial chunk sizes.
   */
 object SplitJson {
-
-  /** Test hook: tuples the last read materialized on the driver — the
-    * file listing and nothing else (SplitJsonSpec pins O(#files), like
-    * SplitCsv's hook). */
-  private[ingest] val lastDriverHeld =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Marker prefix of the ONE corrupt row a structurally broken file
-    * degrades to: never valid JSON, so `from_json` routes the whole
-    * marker text — file name and reason — into the corrupt column and
-    * ON_ERROR=CONTINUE accounting counts the file as skipped. */
-  private[graft] val CorruptFilePrefix = "__graft_corrupt_file__"
 
   // string start/end states a chunk boundary can land in
   private final val StOut = 0    // outside any string
@@ -134,7 +81,7 @@ object SplitJson {
   /** Cap on recorded new-minimum closes per chunk: a 32 MB chunk of
     * pure `}` bytes would otherwise build a 33M-entry list. Past the
     * cap the scan keeps its depth math exact but stops recording and
-    * flags overflow; the combine treats a TRUE-state overflow as a
+    * flags overflow; `bounds` treats a TRUE-state overflow as a
     * corrupt (degenerate, not record-shaped) file and ignores
     * wrong-state overflows. */
   private final val MaxCloses = 1 << 20
@@ -147,29 +94,17 @@ object SplitJson {
     * seen while the depth sat at `minVals(i)` — legal at interior
     * levels (commas and scalars between elements), garbage when that
     * level is absolute depth 0 after the outer array closed; the
-    * combine only ever consults the absolute-0 level. `minBrace(i)`
+    * fold only ever consults the absolute-0 level. `minBrace(i)`
     * records whether the close was a `}` — consulted only at the
     * absolute-0 level, where the outer close must be `]` (a top level
     * ending in `}`, e.g. `[{...}}`, is malformed even when the depth
     * balances; element-level closes accept both brace kinds).
     * `firstNonWs` is the first non-whitespace byte seen outside a
-    * string (post-BOM), for the combine's before-open / after-close
+    * string (post-BOM), for the fold's before-open / after-close
     * top-level checks. */
   private case class StateScan(endState: Int, depthDelta: Int,
       minVals: Array[Int], minOffs: Array[Long], minGarbage: Array[Boolean],
       minBrace: Array[Boolean], overflow: Boolean, firstNonWs: Int)
-
-  /** One pass-1 result: chunk identity (+ its file's length and mtime,
-    * carried so the per-file combine needs no driver-built maps) and
-    * the three per-start-state scans, indexed by state. */
-  private case class ChunkScan(file: String, fileLen: Long, mtime: Long,
-      idx: Int, scans: Array[StateScan])
-
-  /** Boundary-aligned read range; the file-leading range consumes the
-    * outer `[`. A `corrupt` range is a whole structurally-broken file
-    * collapsed to its one marker row (no bytes are read for it). */
-  private case class ElemRange(file: String, start: Long, end: Long,
-      isFirst: Boolean, mtime: Long, corrupt: Option[String] = None)
 
   private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r'
@@ -200,7 +135,7 @@ object SplitJson {
           if (firstNonWs < 0) firstNonWs = b & 0xFF
           // a non-close byte sitting AT the current minimum depth:
           // legal at interior levels, garbage if that level is the
-          // absolute top after the outer close — the combine decides
+          // absolute top after the outer close — `bounds` decides
           // (a close byte itself acts from one level above, and with
           // an overflowed builder the flag may land on a stale level,
           // which is harmless: overflow corrupts the file first)
@@ -228,7 +163,7 @@ object SplitJson {
       }           // continuation bytes never equal '"' or '\')
       j += 1
     }
-    // an overflowed scan is never index-consulted (the combine corrupts
+    // an overflowed scan is never index-consulted (`bounds` corrupts
     // the file if it is the true state, ignores it otherwise) — drop
     // the arrays so a degenerate chunk ships bytes, not megabytes,
     // through the per-file combine shuffle
@@ -240,247 +175,169 @@ object SplitJson {
         brace.result(), overflow = false, firstNonWs)
   }
 
+  private object Lexer extends SplitFiles.Lexer[Array[StateScan]] {
+
+    def scan(buf: Array[Byte], absStart: Long): Array[StateScan] =
+      Array(scanChunk(buf, absStart, StOut), scanChunk(buf, absStart, StIn),
+        scanChunk(buf, absStart, StInEsc))
+
+    def bounds(chunks: IndexedSeq[Array[StateScan]])
+        : Either[String, Seq[Long]] = {
+      var st = StOut
+      var depth = 0L
+      var opened = false // the outer `[` has been consumed
+      var closed = false // the outer `]` has been consumed
+      val starts = Seq.newBuilder[Long]
+      var k = 0
+      while (k < chunks.length) {
+        val s = chunks(k)(st)
+        val relMin: Long = if (s.minVals.nonEmpty) s.minVals.last else 0
+        if (s.overflow)
+          return Left(s"more than $MaxCloses top-level closes in one " +
+            "chunk — degenerate, not record-shaped JSON")
+        if (depth + relMin < 0)
+          return Left("brackets close below the top level")
+        if (depth == 0 && closed && s.firstNonWs >= 0)
+          return Left("non-whitespace bytes after the outer array closes")
+        if (depth == 0 && !opened && s.firstNonWs >= 0) {
+          if (s.firstNonWs != '[')
+            return Left("expected a top-level JSON array (the FR shape); " +
+              s"first byte is '${s.firstNonWs.toChar}'")
+          opened = true
+        }
+        // the element close we want is ANY close at absolute
+        // depth-after 1 — `}` object elements and `]` array elements
+        // alike (the outer close is depth-after 0, a different level);
+        // minVals descends contiguously from its head, so index
+        // arithmetic finds it
+        val target = 1L - depth
+        if (s.minVals.nonEmpty && target <= s.minVals(0) &&
+            target >= s.minVals.last)
+          starts += s.minOffs((s.minVals(0) - target).toInt) + 1
+        // the outer close at absolute depth-after 0: record it, and
+        // reject same-chunk top-level bytes after it
+        val target0 = 0L - depth
+        if (opened && !closed && s.minVals.nonEmpty &&
+            target0 <= s.minVals(0) && target0 >= s.minVals.last) {
+          closed = true
+          val k0 = (s.minVals(0) - target0).toInt
+          if (s.minBrace(k0))
+            // a `}` landing at the top level (e.g. `[{...}}`) is
+            // malformed even though the depth balances — the outer
+            // ARRAY must close with `]`
+            return Left("the top level closes with '}' — not a " +
+              "well-formed outer array")
+          if (s.minGarbage(k0))
+            return Left("non-whitespace bytes after the outer array closes")
+        }
+        depth += s.depthDelta
+        st = s.endState
+        k += 1
+      }
+      if (closed && st == StOut && depth == 0L) Right(starts.result())
+      else Left("not well-formed outer-array JSON (unbalanced strings or " +
+        "brackets)")
+    }
+
+    def slice(buf: Array[Byte], rangeStart: Long, isFirstRange: Boolean)
+        : Iterator[(String, Long, Boolean)] = {
+      val out = Seq.newBuilder[(String, Long, Boolean)]
+      var j = 0
+      if (isFirstRange) {
+        // optional UTF-8 BOM, whitespace, then the outer `[` (bounds
+        // already validated the first byte; this is defense)
+        if (buf.length >= 3 && (buf(0) & 0xFF) == 0xEF &&
+            (buf(1) & 0xFF) == 0xBB && (buf(2) & 0xFF) == 0xBF) j = 3
+        while (j < buf.length && isWs(buf(j))) j += 1
+        require(j < buf.length && buf(j) == '[',
+          "expected a top-level JSON array (the FR shape); first byte is " +
+            s"'${if (j < buf.length) buf(j).toChar else "EOF"}'")
+        j += 1
+      }
+      var st = StOut
+      var depth = 1 // inside the outer array
+      var recStart = -1
+      // a `,` is owed after every element; a range past byte 0 begins
+      // right after an element close, so it starts owing one
+      var owed = !isFirstRange
+      var unseparated = false // the pending element began while owed
+      def begin(at: Int): Unit = { recStart = at; unseparated = owed }
+      def emit(endIdx: Int): Unit = {
+        var a = recStart; var e = endIdx
+        while (a < e && isWs(buf(a))) a += 1
+        while (e > a && isWs(buf(e - 1))) e -= 1
+        if (e > a) {
+          val txt = new String(buf, a, e - a, "UTF-8")
+          // the multiLine reader SKIPS null array elements — so does
+          // this route (SplitJsonSpec pins the parity)
+          if (unseparated || txt != "null")
+            out += ((txt, rangeStart + a, unseparated))
+        }
+        recStart = -1
+      }
+      while (j < buf.length) {
+        val b = buf(j)
+        if (st == StOut) {
+          if (b == '"') { if (depth == 1 && recStart < 0) begin(j); st = StIn }
+          else if (b == '{' || b == '[') {
+            if (depth == 1 && recStart < 0) begin(j)
+            depth += 1
+          } else if (b == '}' || b == ']') {
+            depth -= 1
+            if (depth == 1) { emit(j + 1); owed = true } // element closed
+            else if (depth == 0) {            // the outer `]`
+              if (recStart >= 0) emit(j)      // trailing scalar element
+            }
+          } else if (depth == 1 && b == ',') {
+            if (recStart >= 0) emit(j)        // scalar element ended
+            owed = false
+          } else if (depth == 1 && !isWs(b) && recStart < 0) {
+            begin(j)                          // scalar element starts
+          }
+        } else if (st == StIn) {
+          if (b == '"') st = StOut
+          else if (b == '\\') st = StInEsc
+        } else st = StIn
+        j += 1
+      }
+      if (recStart >= 0) emit(buf.length) // defensive: bounds'
+      out.result().iterator                // validation catches imbalance
+    }
+  }
+
   /** Read every file matching `pattern` (a Hadoop glob) as outer-array
     * JSON, PERMISSIVE with `corruptCol` capture — the splittable
     * equivalent of the SourceLoader multiLine reader. `schema`, when
     * given, must already include `corruptCol` (same convention as
     * [[SplitCsv.read]]); when absent the element schema is inferred
-    * from the sliced elements themselves with Spark's own JSON
+    * from the sliced, unflagged elements with Spark's own JSON
     * inference — the same code path the multiLine reader infers with,
-    * at the price of one extra pass over the ranges. */
+    * at the price of one extra pass-2 job (pass an explicit schema at
+    * scale — SourceLoader's FR gate does). */
   def read(spark: SparkSession, pattern: String, schema: Option[StructType],
-      corruptCol: String, chunkBytes: Long = 32L << 20): DataFrame = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val (files, eff) = SplitFiles.listing(spark, pattern, chunkBytes)
-    // the ONLY driver-side materialization is this listing (pinned by
-    // SplitJsonSpec via the hook): scans and ranges stay in RDDs
-    lastDriverHeld.set(files.length)
-    val numChunks = files.map { case (_, len, _) => (len + eff - 1) / eff }.sum
-    val nTasks = math.max(1L, math.min(numChunks, Int.MaxValue.toLong)).toInt
+      corruptCol: String, chunkBytes: Long = SplitFiles.DefaultChunkBytes)
+      : DataFrame =
+    readFiles(spark, SplitFiles.listing(spark, pattern), schema, corruptCol,
+      chunkBytes)
 
-    // ---- pass 1: distributed chunk scans, one chunk per task ----
-    val sc = spark.sparkContext
-    val scans = sc
-      .parallelize(files.toSeq,
-        math.max(1, math.min(files.length, 4 * sc.defaultParallelism)))
-      .flatMap { case (f, len, mtime) =>
-        (0L until len by eff).iterator.zipWithIndex.map { case (off, i) =>
-          (f, len, mtime, i, off, math.min(off + eff, len))
-        }
-      }
-      .repartition(nTasks)
-      .map { case (f, len, mtime, i, start, end) =>
-        val in = new Path(f).getFileSystem(conf.value).open(new Path(f))
-        val buf = new Array[Byte]((end - start).toInt)
-        try { in.seek(start); in.readFully(buf) } finally in.close()
-        ChunkScan(f, len, mtime, i,
-          Array(scanChunk(buf, start, StOut), scanChunk(buf, start, StIn),
-            scanChunk(buf, start, StInEsc)))
-      }
-
-    // ---- per-file combine (distributed, metadata only): true start
-    // states -> element boundaries, plus whole-file structural
-    // validation. One task per file; bounded by the auto-scale at
-    // ~262k small tuples even for a single-file corpus. A file that
-    // fails validation yields ONE corrupt marker range instead of
-    // aborting the job (the multiLine reader degrades such files to
-    // one corrupt row; a 100 TB load must not die on one bad file).
-    val ranges = scans.groupBy(_.file).flatMap { case (f, csIt) =>
-      val cs = csIt.toSeq.sortBy(_.idx)
-      val len = cs.head.fileLen
-      val fileMtime = cs.head.mtime
-      var st = StOut
-      var depth = 0L
-      var opened = false // the outer `[` has been consumed
-      var closed = false // the outer `]` has been consumed
-      var corrupt: Option[String] = None
-      val bounds = Seq.newBuilder[Long]
-      cs.foreach { c =>
-        if (corrupt.isEmpty) {
-          val s = c.scans(st)
-          val relMin: Long = if (s.minVals.nonEmpty) s.minVals.last else 0
-          if (s.overflow)
-            corrupt = Some(s"more than $MaxCloses top-level closes in one " +
-              "chunk — degenerate, not record-shaped JSON")
-          else if (depth + relMin < 0)
-            corrupt = Some("brackets close below the top level")
-          else {
-            if (depth == 0 && closed && s.firstNonWs >= 0)
-              corrupt = Some("non-whitespace bytes after the outer array closes")
-            else if (depth == 0 && !opened && s.firstNonWs >= 0) {
-              if (s.firstNonWs != '[')
-                corrupt = Some("expected a top-level JSON array (the FR " +
-                  s"shape); first byte is '${s.firstNonWs.toChar}'")
-              else opened = true
-            }
-            if (corrupt.isEmpty) {
-              // the element close we want is ANY close at absolute
-              // depth-after 1 — `}` object elements and `]` array
-              // elements alike (the outer close is depth-after 0, a
-              // different level); minVals descends contiguously from
-              // its head, so index arithmetic finds it
-              val target = 1L - depth
-              if (s.minVals.nonEmpty && target <= s.minVals(0) &&
-                  target >= s.minVals(s.minVals.length - 1))
-                bounds += s.minOffs((s.minVals(0) - target).toInt) + 1
-              // the outer close at absolute depth-after 0: record it,
-              // and flag same-chunk top-level bytes after it
-              val target0 = 0L - depth
-              if (opened && !closed && s.minVals.nonEmpty &&
-                  target0 <= s.minVals(0) &&
-                  target0 >= s.minVals(s.minVals.length - 1)) {
-                closed = true
-                val k0 = (s.minVals(0) - target0).toInt
-                if (s.minBrace(k0))
-                  // a `}` landing at the top level (e.g. `[{...}}`) is
-                  // malformed even though the depth balances — the
-                  // outer ARRAY must close with `]`
-                  corrupt = Some("the top level closes with '}' — not " +
-                    "a well-formed outer array")
-                else if (s.minGarbage(k0))
-                  corrupt = Some("non-whitespace bytes after the outer " +
-                    "array closes")
-              }
-              depth += s.depthDelta
-              st = s.endState
-            }
-          }
-        }
-      }
-      if (corrupt.isEmpty && !(closed && st == StOut && depth == 0L))
-        corrupt = Some("not well-formed outer-array JSON (unbalanced " +
-          "strings or brackets)")
-      corrupt match {
-        case Some(reason) =>
-          Seq(ElemRange(f, 0L, 0L, isFirst = false, mtime = fileMtime,
-            corrupt = Some(reason)))
-        case None =>
-          val starts = (0L +: bounds.result()).distinct.filter(_ < len)
-          starts.zip(starts.drop(1) :+ len).map { case (a, b) =>
-            ElemRange(f, a, b, isFirst = a == 0L, mtime = fileMtime)
-          }
-      }
-    }.persist(StorageLevel.MEMORY_AND_DISK_2)
-    // metadata-sized (O(#chunks) descriptors): without this every
-    // caller ACTION — and the inference path's extra job — re-runs
-    // pass 1, which reads every corpus byte. REPLICATED persist, not
-    // localCheckpoint: checkpoint blocks are executor-local and
-    // non-replicated, so one lost executor (routine at the 100 TB
-    // target under dynamic allocation) would fail every later pass-2
-    // job permanently; persist keeps the lineage — a lost replica
-    // recomputes pass 1 instead of dying — and the second replica
-    // makes that recompute rare. On local[32] (one block manager) the
-    // replica degrades to 1 harmlessly. Blocks are cleaned with the
-    // RDD.
-
-    // ---- pass 2: boundary-aligned ranges -> complete element texts ----
-    import spark.implicits._
-    val records = ranges
-      .repartition(nTasks) // ~one range per task (ranges <= chunks)
-      .flatMap { r =>
-        r.corrupt match {
-          case Some(reason) =>
-            // the whole-file corrupt marker: ONE row whose text names
-            // the file and can never parse as JSON, so it lands in the
-            // corrupt column and COPY accounting counts the file as
-            // skipped (carrying the file TEXT, as the multiLine reader
-            // does, would recreate the single-huge-row problem)
-            Iterator.single(
-              (r.file, s"$CorruptFilePrefix ${r.file}: $reason", 0L, r.mtime))
-          case None => sliceElements(r, conf)
-        }
-      }
-      .toDF("_src_file", "_rec", "_rec_offset", "_src_mtime")
-
-    // ---- element schema: given, or inferred with Spark's own JSON
-    // inference over the sliced elements (the multiLine reader's
-    // inference logic, so field types/order match it) ----
+  /** [[read]] over an already listed set of files. */
+  private[ingest] def readFiles(spark: SparkSession,
+      files: Seq[SplitFiles.SrcFile], schema: Option[StructType],
+      corruptCol: String, chunkBytes: Long = SplitFiles.DefaultChunkBytes)
+      : DataFrame = {
+    val records = SplitFiles.records(spark, files, chunkBytes, Lexer)
     val full = schema.getOrElse {
+      import spark.implicits._
       val inferred = spark.read
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corruptCol)
-        .json(records.select(col("_rec")).as[String])
+        .json(records.filter(!col("_corrupt")).select(col("_rec")).as[String])
         .schema.fields.filterNot(_.name == corruptCol)
       StructType(inferred :+ StructField(corruptCol, StringType))
     }
-
-    // ---- parse: one whole element per from_json call ----
     val opts = Map("mode" -> "PERMISSIVE",
       "columnNameOfCorruptRecord" -> corruptCol)
-    records
-      .withColumn("_parsed", from_json(col("_rec"), full, opts))
-      .select(col("_parsed.*"), col("_src_file"), col("_rec_offset"),
-        timestamp_millis(col("_src_mtime")).as("_src_mtime"))
-  }
-
-  /** Pass-2 slicing of one boundary-aligned range into complete
-    * top-level element texts. The range starts right after an
-    * element close (or at byte 0, where it consumes the outer `[`),
-    * so a fresh depth scan is exact. */
-  private def sliceElements(r: ElemRange,
-      conf: org.apache.spark.util.SerializableConfiguration)
-      : Iterator[(String, String, Long, Long)] = {
-    require(r.end - r.start <= Int.MaxValue - 8,
-      s"${r.file}: a single element spans ${r.end - r.start} bytes " +
-        s"(range ${r.start}..${r.end}) — larger than the 2 GiB " +
-        "single-element limit of the splittable route")
-    val in = new Path(r.file).getFileSystem(conf.value).open(new Path(r.file))
-    val buf = new Array[Byte]((r.end - r.start).toInt)
-    try { in.seek(r.start); in.readFully(buf) } finally in.close()
-    val out = Seq.newBuilder[(String, String, Long, Long)]
-    var j = 0
-    if (r.isFirst) {
-      // optional UTF-8 BOM, whitespace, then the outer `[` (the
-      // combine already validated the first byte; this is defense)
-      if (buf.length >= 3 && (buf(0) & 0xFF) == 0xEF &&
-          (buf(1) & 0xFF) == 0xBB && (buf(2) & 0xFF) == 0xBF) j = 3
-      while (j < buf.length && isWs(buf(j))) j += 1
-      require(j < buf.length && buf(j) == '[',
-        s"${r.file}: expected a top-level JSON array (the FR shape); " +
-          s"first byte is '${if (j < buf.length) buf(j).toChar else "EOF"}'")
-      j += 1
-    }
-    var st = StOut
-    var depth = 1 // inside the outer array
-    var recStart = -1
-    def emit(endIdx: Int): Unit = {
-      var a = recStart; var e = endIdx
-      while (a < e && isWs(buf(a))) a += 1
-      while (e > a && isWs(buf(e - 1))) e -= 1
-      if (e > a) {
-        val txt = new String(buf, a, e - a, "UTF-8")
-        // the multiLine reader SKIPS null array elements — so does
-        // this route (SplitJsonSpec pins the parity)
-        if (txt != "null") out += ((r.file, txt, r.start + a, r.mtime))
-      }
-      recStart = -1
-    }
-    while (j < buf.length) {
-      val b = buf(j)
-      if (st == StOut) {
-        if (b == '"') { if (depth == 1 && recStart < 0) recStart = j; st = StIn }
-        else if (b == '{' || b == '[') {
-          if (depth == 1 && recStart < 0) recStart = j
-          depth += 1
-        } else if (b == '}' || b == ']') {
-          depth -= 1
-          if (depth == 1) emit(j + 1)       // object/array element closed
-          else if (depth == 0) {            // the outer `]`
-            if (recStart >= 0) emit(j)      // trailing scalar element
-          }
-        } else if (depth == 1 && b == ',') {
-          if (recStart >= 0) emit(j)        // scalar element ended
-        } else if (depth == 1 && !isWs(b) && recStart < 0) {
-          recStart = j                      // scalar element starts
-        }
-      } else if (st == StIn) {
-        if (b == '"') st = StOut
-        else if (b == '\\') st = StInEsc
-      } else st = StIn
-      j += 1
-    }
-    if (recStart >= 0) emit(buf.length) // defensive: the combine's
-    out.result().iterator                // validation catches imbalance
+    SplitFiles.project(records, from_json(col("_rec"), full, opts), full,
+      corruptCol)
   }
 }

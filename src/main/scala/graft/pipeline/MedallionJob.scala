@@ -39,27 +39,18 @@ object MedallionJob {
       .map(c => spark.table(s"curated.${c}_sales_order"))
       .reduce(_ union _) // ref step_5:469 — curated rows are already unique
 
-  /** show(n) progress displays (SURVEY §2.6 O2; the reference sprinkles
-    * `show(n)` through step_1/step_5) — opt-in via SPARK_GRAFT_VERBOSE
-    * so harness runs stay single-JSON-line parseable. */
-  private def display(df: => DataFrame, n: Int = 5): Unit =
-    if (sys.env.get("SPARK_GRAFT_VERBOSE").contains("1")) df.show(n, truncate = false)
-
   def run(spark: SparkSession, dataDir: String): RunReport = {
     TableSink.ensureDatabases(spark)
     val source = SourceLoader.loadAll(spark, dataDir)
     val forex = SourceLoader.loadForex(spark, dataDir)
-    display(forex)
     val curated = CurateJob.run(spark, forex)
 
     val allSales = unionCurated(spark)
-    display(allSales)
     // the date dim and the five value dims read only the curated layer;
     // the fact joins all six, so it waits for both
     val (dateDim, dims) = Concurrently.both(DateDimBuilder.build(spark, allSales))(
       DimBuilder.buildAll(spark, allSales))
     val fact = FactBuilder.build(spark, allSales)
-    display(spark.table("consumption.sales_fact"))
     RunReport(source, curated, dims, dateDim, fact)
   }
 

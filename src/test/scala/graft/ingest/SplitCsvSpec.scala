@@ -183,8 +183,8 @@ class SplitCsvSpec extends SparkSpec {
       StructField("_bad", StringType)))
     val split = SplitCsv.read(spark, s"$dir/*.csv", schema, "_bad", 16L)
     assert(split.count() == 240L)
-    assert(SplitCsv.lastDriverHeld.get() == 2L,
-      s"driver materialized ${SplitCsv.lastDriverHeld.get()} tuples for a " +
+    assert(SplitFiles.lastDriverHeld.get() == 2L,
+      s"driver materialized ${SplitFiles.lastDriverHeld.get()} tuples for a " +
         "2-file corpus — the per-chunk driver collection is back")
     assert(split.rdd.getNumPartitions > 100,
       s"only ${split.rdd.getNumPartitions} partitions — the distributed " +

@@ -232,8 +232,8 @@ class SplitJsonSpec extends SparkSpec {
       StructField("_bad", StringType)))
     val split = SplitJson.read(spark, s"$dir/*.json", Some(schema), "_bad", 16L)
     assert(split.count() == 300L)
-    assert(SplitJson.lastDriverHeld.get() == 2L,
-      s"driver materialized ${SplitJson.lastDriverHeld.get()} tuples for a " +
+    assert(SplitFiles.lastDriverHeld.get() == 2L,
+      s"driver materialized ${SplitFiles.lastDriverHeld.get()} tuples for a " +
         "2-file corpus — a per-chunk driver collection appeared")
     assert(split.rdd.getNumPartitions > 100,
       s"only ${split.rdd.getNumPartitions} partitions — the distributed " +
@@ -261,7 +261,7 @@ class SplitJsonSpec extends SparkSpec {
     val bad = df.filter(col("_bad").isNotNull).select("_bad").collect()
     assert(bad.length == 1, "exactly one corrupt marker for the broken file")
     val marker = bad.head.getString(0)
-    assert(marker.startsWith(SplitJson.CorruptFilePrefix)
+    assert(marker.startsWith(SplitFiles.CorruptFilePrefix)
         && marker.contains("broken.json")
         && marker.contains("outer-array JSON"),
       s"marker must name the file and the reason: $marker")
@@ -280,7 +280,7 @@ class SplitJsonSpec extends SparkSpec {
       val df = SplitJson.read(spark, dir.resolve(name).toString,
         Some(schema), "_bad", chunk)
       val bad = df.filter(col("_bad").isNotNull
-        && col("_bad").startsWith(SplitJson.CorruptFilePrefix))
+        && col("_bad").startsWith(SplitFiles.CorruptFilePrefix))
         .select("_bad").collect()
       assert(bad.length == 1,
         s"$name at chunk=$chunk: expected one whole-file marker, got " +
@@ -338,17 +338,24 @@ class SplitJsonSpec extends SparkSpec {
         degBad.head.getString(0).contains("top-level closes in one chunk"),
       s"degenerate bracket run must yield the overflow marker: " +
         s"${degBad.map(_.getString(0)).toSeq.take(1)}")
-    // PINNED LENIENCY: elements juxtaposed without a comma parse as
-    // their individual elements (Jackson rejects the file; detecting
-    // the missing separator needs absolute-depth knowledge the chunk
-    // scan cannot have — no data is lost or misvalued, see scaladoc)
+    // elements juxtaposed without a comma: Jackson rejects the file;
+    // pass 2 knows every range past byte 0 begins right after an
+    // element close, so the element missing its `,` lands in the
+    // corrupt column as its own text and its neighbor parses — with
+    // the boundary between the two elements (16 B) and inside one
+    // range (1 MiB)
     Files.writeString(dir.resolve("nocomma.json"),
       """[{"id": "a"} {"id": "b"}]""")
-    val lenient = SplitJson.read(spark, dir.resolve("nocomma.json").toString,
-      Some(schema), "_bad", 16L)
-    assert(lenient.filter(col("_bad").isNull).select("id").collect()
-      .map(_.getString(0)).toSet == Set("a", "b"),
-      "juxtaposed elements must parse individually (the pinned leniency)")
+    for (chunk <- Seq(16L, 1L << 20)) {
+      val strict = SplitJson.read(spark, dir.resolve("nocomma.json").toString,
+        Some(schema), "_bad", chunk).cache()
+      assert(strict.filter(col("_bad").isNull).select("id").collect()
+        .map(_.getString(0)).toSeq == Seq("a"),
+        s"chunk=$chunk: the separated element must parse")
+      assert(strict.filter(col("_bad").isNotNull).select("_bad").collect()
+        .map(_.getString(0)).toSeq == Seq("""{"id": "b"}"""),
+        s"chunk=$chunk: the unseparated element must be corrupt as its own text")
+    }
     graft.queries.DedupQueries.rmQuietly(dir.toString)
   }
 
