@@ -3,9 +3,6 @@ package graft.consume
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.keys.SurrogateKeys
-import graft.sinks.TableSink
-
 /** Date dimension (ref: step_5_curated_to_consumption.py:383-460).
   *
   * The reference collects min/max order dates to the Python driver,
@@ -41,33 +38,9 @@ object DateDimBuilder {
           .otherwise("Weekday").as("order_weekday")) // ref map: step_5:414-424
 
   /** Incremental build: anti-join on order_dt, keys continue from max pk
-    * (ref: step_5:427-443). Returns rows appended. */
-  def build(spark: SparkSession, allSales: DataFrame): Long = {
-    TableSink.ensureDatabases(spark)
-    val table = "consumption.date_dim"
-    val cal = calendar(allSales)
-
-    val delta =
-      if (TableSink.exists(spark, table))
-        cal.join(broadcast(spark.table(table).select("order_dt")),
-          Seq("order_dt"), "left_anti")
-      else cal
-
-    val offset =
-      if (TableSink.exists(spark, table))
-        spark.table(table).agg(coalesce(max(col("date_id_pk")), lit(0L)))
-          .first().getLong(0)
-      else 0L
-
-    val (keyed, appended) = SurrogateKeys
-      .denseCounted(delta, Seq(col("order_dt")), "date_id_pk", offset)
-
-    // DimBuilder's shape: the delta's size, counted by the key
-    // assignment, guards the append and is the report
-    if (appended > 0)
-      TableSink.append(keyed.select("date_id_pk", "order_dt", "order_year", "day_counter",
-        "order_month", "order_quarter", "order_day", "order_dayofweek",
-        "order_dayname", "order_dayofmonth", "order_weekday"), table)
-    appended
-  }
+    * (ref: step_5:427-443) — [[DimBuilder.build]] over the calendar.
+    * Precondition: the databases exist. Returns rows appended. */
+  def build(spark: SparkSession, allSales: DataFrame): Long =
+    DimBuilder.build(spark, "consumption.date_dim", "date_id_pk",
+      calendar(allSales), Seq("order_dt"))
 }

@@ -3,13 +3,12 @@ package graft.consume
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.keys.SurrogateKeys
 import graft.sinks.TableSink
 
 /** Sales fact assembly (ref: step_5_curated_to_consumption.py:480-587):
   * the unioned curated sales stream joined to all six dims on their
   * natural keys, projected to FK + measure columns, sequence-keyed,
-  * appended.
+  * appended (one [[TableSink.appendKeyed]]).
   *
   * Scale shape: every dim is broadcast (dims are bounded: calendar days,
   * product catalog, countries, payment methods — none grow with fact
@@ -70,28 +69,9 @@ object FactBuilder {
         col("usd_tax_amt"))
   }
 
-  /** Key + append; returns rows appended. */
-  def build(spark: SparkSession, allSales: DataFrame): Long = {
-    TableSink.ensureDatabases(spark)
-    val table = "consumption.sales_fact"
-    val fact = assemble(spark, allSales)
-
-    val offset =
-      if (TableSink.exists(spark, table))
-        spark.table(table).agg(coalesce(max(col("order_id_pk")), lit(0L)))
-          .first().getLong(0)
-      else 0L
-
-    val (keyed, appended) = SurrogateKeys
-      .denseCounted(fact, Seq(col("order_code"), col("date_id_fk")), "order_id_pk", offset)
-
-    // same reporting shape as DimBuilder: the batch's own count, taken
-    // by the key assignment, not the whole table after the append
-    if (appended > 0)
-      TableSink.append(keyed.select("order_id_pk", "order_code", "date_id_fk", "region_id_fk",
-        "customer_id_fk", "payment_id_fk", "product_id_fk",
-        "promo_code_id_fk", "order_quantity", "local_total_order_amt",
-        "local_tax_amt", "exchange_rate", "us_total_order_amt", "usd_tax_amt"), table)
-    appended
-  }
+  /** Key + append; returns rows appended. Precondition: the databases
+    * exist. */
+  def build(spark: SparkSession, allSales: DataFrame): Long =
+    TableSink.appendKeyed(spark, "consumption.sales_fact", "order_id_pk",
+      assemble(spark, allSales), Seq("order_code", "date_id_fk"))
 }

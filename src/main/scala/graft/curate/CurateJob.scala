@@ -86,9 +86,9 @@ object CurateJob {
   }
 
   /** Curate all three countries into curated.<cc>_sales_order,
-    * concurrently: each reads only its own source table. */
+    * concurrently: each reads only its own source table. Precondition:
+    * the databases exist. */
   def run(spark: SparkSession, forex: DataFrame): Seq[(String, Long)] = {
-    TableSink.ensureDatabases(spark)
     Concurrently.all(CountryConfig.all.map { cc => () =>
       val df = curateCountry(spark, cc, forex)
       val table = s"curated.${cc.code.toLowerCase}_sales_order"

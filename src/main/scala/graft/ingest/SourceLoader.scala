@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.io.FileNotFoundException
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +44,7 @@ import graft.sinks.TableSink
   *
   * Split route: `multiLine=true` pins Spark's CSV and JSON sources to
   * one task per file, so at 100 TB ingest serializes on file count.
-  * readRaw lists a text format's files once; past [[SplitMinBytes]]
+  * readRaw lists a country's files once; past [[SplitMinBytes]]
   * total bytes it reads that listing through the two-pass splittable
   * engine ([[SplitFiles]], with the [[SplitCsv]] or [[SplitJson]]
   * lexer), which emits the same `_metadata` lineage struct as Spark's
@@ -63,17 +65,19 @@ object SourceLoader {
     * of malformed rows skipped (the COPY report, ref: step_3:148-153). */
   final case class LoadReport(country: String, loaded: Long, skipped: Long)
 
-  private def salesPath(dataDir: String, cc: CountryConfig): String =
-    s"$dataDir/sales/source=${cc.code}/format=${cc.format}/date=*"
-
   /** Read one country's staged files into the raw 16-field shape (still
-    * stringly typed where the format is stringly typed). */
+    * stringly typed where the format is stringly typed), from ONE listing
+    * of the drop; an empty listing fails, as an unmatched glob does. */
   def readRaw(spark: SparkSession, dataDir: String, cc: CountryConfig,
       splitMinBytes: Long = SplitMinBytes): DataFrame = {
-    val path = salesPath(dataDir, cc)
+    val pattern = s"$dataDir/sales/source=${cc.code}/format=${cc.format}/date=*"
+    val files = SplitFiles.listing(spark, pattern)
+    if (files.isEmpty)
+      throw new FileNotFoundException(s"no data file matches $pattern")
+    val paths = files.map(_.path).toSeq
     cc.format match {
       case "parquet" =>
-        spark.read.parquet(path).withColumn(CorruptCol, lit(null: String))
+        spark.read.parquet(paths: _*).withColumn(CorruptCol, lit(null: String))
       case format =>
         val csv = format == "csv"
         // both text formats read through their DECLARED stringly
@@ -82,7 +86,6 @@ object SourceLoader {
         val schema =
           if (csv) Schemas.inCsvSchema(CorruptCol)
           else Schemas.frJsonSchema(CorruptCol)
-        val files = SplitFiles.listing(spark, path)
         if (files.map(_.len).sum >= splitMinBytes) {
           if (csv) SplitCsv.readFiles(spark, files, schema, CorruptCol)
           else SplitJson.readFiles(spark, files, Some(schema), CorruptCol)
@@ -97,8 +100,8 @@ object SourceLoader {
           // Schema.sql:15-18)
           if (csv)
             reader.option("header", true).option("quote", "\"")
-              .option("escape", "\"").csv(path)
-          else reader.json(path)
+              .option("escape", "\"").csv(paths: _*)
+          else reader.json(paths: _*)
         }
     }
   }
@@ -166,7 +169,6 @@ object SourceLoader {
       good,
       Seq(col("_metadata_file_name"), col("_metadata_row_number")),
       "sales_order_key", keyOffset)
-      .select("sales_order_key", Schemas.sourceSchema.fieldNames.filter(_ != "sales_order_key"): _*)
 
     // the COPY report's two counts in ONE job (separate good.count() +
     // bad.count() actions re-read and RE-PARSE the raw text twice at
@@ -179,21 +181,16 @@ object SourceLoader {
   }
 
   /** Load all three countries into source.<cc>_sales_order tables,
-    * concurrently: the countries share no file, table or key sequence. */
-  def loadAll(spark: SparkSession, dataDir: String): Seq[LoadReport] = {
-    TableSink.ensureDatabases(spark)
+    * concurrently: the countries share no file, table or key sequence.
+    * Precondition: the databases exist. */
+  def loadAll(spark: SparkSession, dataDir: String): Seq[LoadReport] =
     Concurrently.all(CountryConfig.all.map { cc => () =>
       val table = s"source.${cc.code.toLowerCase}_sales_order"
-      val offset =
-        if (TableSink.exists(spark, table))
-          spark.table(table).agg(coalesce(max("sales_order_key"), lit(0L)))
-            .first().getLong(0)
-        else 0L
-      val (df, report) = loadCountry(spark, dataDir, cc, offset)
+      val (df, report) = loadCountry(spark, dataDir, cc,
+        TableSink.maxKey(spark, table, "sales_order_key"))
       TableSink.append(df, table)
       report
     })
-  }
 
   /** Forex rates: all seven columns loaded from exchange-rate-data.csv
     * (fixing the reference's wrong-source-column defect, SURVEY §2.10;

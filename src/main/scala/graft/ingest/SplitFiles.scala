@@ -115,14 +115,19 @@ private[graft] object SplitFiles {
   private[ingest] val lastDriverHeld =
     new java.util.concurrent.atomic.AtomicLong(-1L)
 
-  /** Every non-empty file under the glob `pattern`, sorted by path. */
+  /** Every non-empty data file under the glob `pattern`, sorted by path;
+    * hidden names skipped as Spark's file index skips them (a Hadoop
+    * local copy leaves a `.x.crc` beside each file). */
   def listing(spark: SparkSession, pattern: String): Array[SrcFile] = {
     val p = new Path(pattern)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
     Option(fs.globStatus(p)).getOrElse(Array.empty)
       .flatMap(st =>
         if (st.isDirectory) fs.listStatus(st.getPath) else Array(st))
-      .filter(st => st.isFile && st.getLen > 0)
+      .filter(st => st.isFile && st.getLen > 0 && !hidden(st.getPath.getName))
       .map(st => SrcFile(st.getPath.toString, st.getLen, st.getModificationTime))
       .sortBy(_.path)
   }

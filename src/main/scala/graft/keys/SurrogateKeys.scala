@@ -1,7 +1,7 @@
 package graft.keys
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed, dense, append-safe surrogate keys (SURVEY.md §2.1 S12 —
   * the reference's `<seq>.nextval`, e.g. step_3_load_from_stage_to_source
@@ -29,13 +29,16 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * The result is dense (offset+1 .. offset+N, no gaps), deterministic for
   * a total order, and append-safe: pass `offset = current max(key)` to
   * continue a sequence, mirroring warehouse `nextval` semantics across
-  * incremental loads. This is the genuine per-partition imperative case
-  * where dropping to the RDD layer is the right Spark idiom.
+  * incremental loads ([[graft.sinks.TableSink.appendKeyed]] does). The
+  * key is the first column, ahead of the input's. This is the genuine
+  * per-partition imperative case where dropping to the RDD layer is the
+  * right Spark idiom.
   */
 object SurrogateKeys {
 
-  /** Attach a dense surrogate key named `keyName` assigned in
-    * `orderCols` order, starting at `offset + 1`. */
+  /** Attach a dense surrogate key named `keyName`, as the FIRST column
+    * (the reference's `selectExpr("seq.nextval AS pk", …)`, step_5
+    * :87-92), assigned in `orderCols` order, starting at `offset + 1`. */
   def dense(df: DataFrame, orderCols: Seq[Column], keyName: String,
       offset: Long = 0L): DataFrame =
     denseCounted(df, orderCols, keyName, offset)._1
@@ -56,10 +59,11 @@ object SurrogateKeys {
       (it: Iterator[Row]) => it.foldLeft(0L)((n, _) => n + 1))
     val starts = counts.scanLeft(offset)(_ + _)
 
-    val outSchema = df.schema.add(StructField(keyName, LongType, nullable = false))
+    val outSchema = StructType(
+      StructField(keyName, LongType, nullable = false) +: df.schema.fields)
     val keyed = rows.mapPartitionsWithIndex { (i, it) =>
       var key = starts(i)
-      it.map { row => key += 1; Row.fromSeq(row.toSeq :+ key) }
+      it.map { row => key += 1; Row.fromSeq(key +: row.toSeq) }
     }
     (spark.createDataFrame(keyed, outSchema), counts.sum)
   }

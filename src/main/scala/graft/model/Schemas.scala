@@ -2,8 +2,10 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Layer schemas for the medallion pipeline (SURVEY.md §1.3), re-expressed
-  * as Spark StructTypes. Decimal precisions follow the reference DDL
+/** Read schemas and column types of the medallion pipeline (SURVEY.md
+  * §1.3), re-expressed as Spark types; each layer's table schema is the
+  * projection that writes it (MedallionSpec pins all 13 tables'
+  * columns and types). Decimal precisions follow the reference DDL
   * (ref: 3. Source Tables.sql:29-98, 7. Source to Curated Layer.sql:27-102,
   * 8. Consumption Layer.sql:9-99); misspelled reference columns use the
   * corrected spellings per the SURVEY §1.3 decision (order_value,
@@ -58,56 +60,6 @@ object Schemas {
     * output (SplitJsonSpec's gate leg proves it). */
   def frJsonSchema(corruptCol: String): StructType =
     stringlySchema("Tax", "Phone", corruptCol)
-
-  /** Common source-layer table schema (ref: 3. Source Tables.sql:29-98):
-    * surrogate key + 16 business columns + 3 lineage columns. */
-  val sourceSchema: StructType = StructType(Seq(
-    StructField("sales_order_key", LongType, nullable = false),
-    StructField("order_id", StringType),
-    StructField("customer_name", StringType),
-    StructField("mobile_key", StringType),
-    StructField("order_quantity", LongType),
-    StructField("unit_price", Money),
-    StructField("order_value", Money),
-    StructField("promotion_code", StringType),
-    StructField("final_order_amount", Money),
-    StructField("tax_amount", Money),
-    StructField("order_dt", DateType),
-    StructField("payment_status", StringType),
-    StructField("shipping_status", StringType),
-    StructField("payment_method", StringType),
-    StructField("payment_provider", StringType),
-    StructField("contact_no", StringType),
-    StructField("shipping_address", StringType),
-    StructField("_metadata_file_name", StringType),
-    StructField("_metadata_row_number", LongType),
-    StructField("_metadata_last_modified", TimestampType)))
-
-  /** Curated-layer table schema (ref: 7. Source to Curated Layer.sql:27-102). */
-  val curatedSchema: StructType = StructType(Seq(
-    StructField("sales_order_key", LongType, nullable = false),
-    StructField("order_id", StringType),
-    StructField("order_dt", DateType),
-    StructField("customer_name", StringType),
-    StructField("mobile_key", StringType),
-    StructField("country", StringType),
-    StructField("region", StringType),
-    StructField("order_quantity", LongType),
-    StructField("local_currency", StringType),
-    StructField("local_unit_price", Money),
-    StructField("promotion_code", StringType),
-    StructField("local_total_order_amt", Money),
-    StructField("local_tax_amt", Money),
-    StructField("exchange_rate", Rate),
-    StructField("us_total_order_amt", Usd),
-    StructField("usd_tax_amt", Usd),
-    StructField("payment_status", StringType),
-    StructField("shipping_status", StringType),
-    StructField("payment_method", StringType),
-    StructField("payment_provider", StringType),
-    StructField("contact_no", StringType),
-    StructField("shipping_address", StringType),
-    StructField("_metadata_last_modified", TimestampType)))
 
   /** Forex table (ref: 5. Forex Exchange Rate.sql:1-12; loaded correctly
     * from all columns of exchange-rate-data.csv, fixing the reference's

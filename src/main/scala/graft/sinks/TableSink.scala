@@ -1,21 +1,24 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, max}
 
-/** Managed-table catalog + sinks (SURVEY.md §2.1 S8/S9/S10).
+import graft.keys.SurrogateKeys
+
+/** Managed-table catalog + sinks (SURVEY.md §2.1 S8/S9/S10/S12).
   *
   * Tables are parquet-backed managed tables in the session catalog
   * (`spark.sql.warehouse.dir`), namespaced by database exactly like the
   * reference's `source` / `curated` / `consumption` schemas (ref:
   * 2. Database and Schema.sql:8-12). Appends go through
-  * `saveAsTable(mode=append)` (ref: step_4:167-169, step_5:585-587). The
-  * reference's count-guard before a consumption append (ref:
-  * step_5:51-67) lives in the builders, on the row count
-  * `SurrogateKeys.denseCounted` returns with the keys.
+  * `saveAsTable(mode=append)` (ref: step_4:167-169, step_5:585-587);
+  * a keyed consumption table's through [[appendKeyed]], which continues
+  * its sequence (`<seq>.nextval`, ref: 8. Consumption Layer.sql:9-83)
+  * and keeps the reference's count guard (ref: step_5:51-67).
   */
 object TableSink {
 
-  val Databases: Seq[String] = Seq("source", "curated", "consumption", "common")
+  val Databases: Seq[String] = Seq("source", "curated", "consumption")
 
   def ensureDatabases(spark: SparkSession): Unit =
     Databases.foreach(db => spark.sql(s"CREATE DATABASE IF NOT EXISTS $db"))
@@ -33,5 +36,24 @@ object TableSink {
     val w = df.write.format("parquet").mode(SaveMode.Append)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .saveAsTable(table)
+  }
+
+  /** The largest `pkCol` in `table` — the offset its next keyed rows
+    * continue from; 0 before the table exists. */
+  def maxKey(spark: SparkSession, table: String, pkCol: String): Long =
+    if (exists(spark, table))
+      spark.table(table).agg(coalesce(max(col(pkCol)), lit(0L))).first().getLong(0)
+    else 0L
+
+  /** Key `rows` densely in `orderCols` order from [[maxKey]] on, as the
+    * first column `pkCol`, and append them if there are any. The count
+    * comes with the keys, so guard and report re-run no plan. Returns
+    * the rows appended. */
+  def appendKeyed(spark: SparkSession, table: String, pkCol: String,
+      rows: DataFrame, orderCols: Seq[String]): Long = {
+    val (keyed, n) = SurrogateKeys.denseCounted(rows, orderCols.map(col), pkCol,
+      maxKey(spark, table, pkCol))
+    if (n > 0) append(keyed, table)
+    n
   }
 }

@@ -23,10 +23,18 @@ class StageSpec extends SparkSpec {
     assert(Stage.copyToLanding(spark, drop, landing) == copied)
 
     // the landing copy is a drop-in replacement for the drop zone: the
-    // multiline-CSV reader sees the same records through the same glob
+    // multiline-CSV reader sees the same records through the same listing
     val fromLanding = SourceLoader.readRaw(spark, landing, CountryConfig("IN")).count()
     val fromSource = SourceLoader.readRaw(spark, drop, CountryConfig("IN")).count()
     assert(fromLanding == fromSource)
     assert(fromSource == MedallionFixture.rawRows("full", "IN"))
+  }
+
+  test("a country with no staged file fails its read instead of loading zero rows") {
+    val empty = tempDir("empty_drop").toString
+    CountryConfig.all.foreach { cc =>
+      val e = intercept[java.io.FileNotFoundException](SourceLoader.readRaw(spark, empty, cc))
+      assert(e.getMessage.contains(s"source=${cc.code}/format=${cc.format}"), e.getMessage)
+    }
   }
 }

@@ -69,8 +69,8 @@ class SurrogateKeysSpec extends SparkSpec {
   }
 
   test("deterministic across repeated evaluation") {
-    val a = keyed(3000).collect().map(r => (r.getString(1), r.getAs[Long]("sk"))).sorted
-    val b = keyed(3000).collect().map(r => (r.getString(1), r.getAs[Long]("sk"))).sorted
+    val a = keyed(3000).collect().map(r => (r.getAs[String]("v"), r.getAs[Long]("sk"))).sorted
+    val b = keyed(3000).collect().map(r => (r.getAs[String]("v"), r.getAs[Long]("sk"))).sorted
     assert(a.toSeq == b.toSeq)
   }
 }

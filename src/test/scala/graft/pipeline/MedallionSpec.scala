@@ -148,14 +148,86 @@ class MedallionSpec extends SparkSpec {
       "appended load must continue the dense sequence")
   }
 
+  test("layer contract: every table's ordered columns and types, the key first") {
+    report // the warehouse holds the full load, then the incremental one
+    def cols(spec: String): Seq[(String, String)] =
+      spec.trim.split("\\s+").toSeq.map { c =>
+        val Array(name, tpe) = c.split(":", 2); name -> tpe
+      }
+    val m2 = "decimal(10,2)"
+    val source = cols(s"""sales_order_key:long order_id:string customer_name:string
+      mobile_key:string order_quantity:long unit_price:$m2 order_value:$m2
+      promotion_code:string final_order_amount:$m2 tax_amount:$m2 order_dt:date
+      payment_status:string shipping_status:string payment_method:string
+      payment_provider:string contact_no:string shipping_address:string
+      _metadata_file_name:string _metadata_row_number:long
+      _metadata_last_modified:timestamp""")
+    // curated is partitioned by order_dt, which the catalog lists last
+    val curated = cols(s"""sales_order_key:long order_id:string customer_name:string
+      mobile_key:string country:string region:string order_quantity:long
+      local_currency:string local_unit_price:$m2 promotion_code:string
+      local_total_order_amt:$m2 local_tax_amt:$m2 exchange_rate:decimal(15,7)
+      us_total_order_amt:decimal(23,8) usd_tax_amt:decimal(23,8)
+      payment_status:string shipping_status:string payment_method:string
+      payment_provider:string contact_no:string shipping_address:string
+      _metadata_last_modified:timestamp order_dt:date""")
+    def dim(pk: String, naturalKey: String): Seq[(String, String)] =
+      cols(s"$pk:long " + naturalKey.split(" ").map(_ + ":string").mkString(" ") +
+        " is_active:string")
+    val expected: Map[String, Seq[(String, String)]] =
+      codes.flatMap { cc =>
+        val c = cc.toLowerCase
+        Seq(s"source.${c}_sales_order" -> source, s"curated.${c}_sales_order" -> curated)
+      }.toMap ++ Map(
+        "consumption.date_dim" -> cols("""date_id_pk:long order_dt:date
+          order_year:integer day_counter:long order_month:integer
+          order_quarter:integer order_day:integer order_dayofweek:integer
+          order_dayname:string order_dayofmonth:integer order_weekday:string"""),
+        "consumption.region_dim" -> dim("region_id_pk", "country region"),
+        "consumption.product_dim" ->
+          dim("product_id_pk", "mobile_key brand model color memory"),
+        "consumption.promo_code_dim" ->
+          dim("promo_code_id_pk", "promotion_code country region"),
+        "consumption.customer_dim" -> dim("customer_id_pk",
+          "customer_name contact_no shipping_address country region"),
+        "consumption.payment_dim" ->
+          dim("payment_id_pk", "payment_method payment_provider country region"),
+        "consumption.sales_fact" -> cols(s"""order_id_pk:long order_code:string
+          date_id_fk:long region_id_fk:long customer_id_fk:long payment_id_fk:long
+          product_id_fk:long promo_code_id_fk:long order_quantity:long
+          local_total_order_amt:$m2 local_tax_amt:$m2 exchange_rate:decimal(15,7)
+          us_total_order_amt:decimal(23,8) usd_tax_amt:decimal(23,8)"""))
+    val tables = TableSink.Databases
+      .flatMap(db => spark.catalog.listTables(db).collect().map(t => s"$db.${t.name}"))
+    assert(tables.toSet == expected.keySet, s"tables: $tables")
+    expected.foreach { case (t, want) =>
+      val got = spark.table(t).schema.fields.toSeq.map(f => f.name -> f.dataType.typeName)
+      assert(got == want, s"$t columns or types changed")
+    }
+    // each of the 10 keyed tables carries its key first
+    val keyOf = codes.map(c => s"source.${c.toLowerCase}_sales_order" -> "sales_order_key") ++
+      Seq("date", "region", "product", "promo_code", "customer", "payment")
+        .map(d => s"consumption.${d}_dim" -> s"${d}_id_pk") :+
+      ("consumption.sales_fact" -> "order_id_pk")
+    assert(keyOf.size == 10)
+    keyOf.foreach { case (t, k) => assert(spark.table(t).columns.head == k, t) }
+  }
+
   test("re-running a drop adds zero dim rows and appends its sources again") {
     report
     val before = spark.table("source.in_sales_order").count()
+    // the count guard: an empty delta appends nothing, not an empty file
+    val dims = Seq("date", "region", "product", "promo_code", "customer", "payment")
+      .map(d => s"consumption.${d}_dim")
+    def files(t: String): Set[String] = spark.table(t).inputFiles.toSet
+    val filesBefore = dims.map(t => t -> files(t)).toMap
     val again = MedallionJob.run(spark, Fx.incr)
     assert(again.dims.values.forall(_ == 0L), s"dims grew: ${again.dims}")
     assert(again.dateDim == 0L)
     assert(spark.table("source.in_sales_order").count() ==
       before + Fx.count("/incr/source/IN/loaded"))
+    val written = dims.filter(t => files(t) != filesBefore(t))
+    assert(written.isEmpty, s"a zero-row delta wrote a data file into $written")
   }
 
   test("concurrent table loads keep keys deterministic: two fresh full+incr runs land identical tables") {
