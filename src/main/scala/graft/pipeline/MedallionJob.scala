@@ -70,6 +70,14 @@ object MedallionJob {
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the derby metastore's routine chatter (an unknown-key WARN per Hive
+    // client call, a "Failed to get database" per CREATE DATABASE probe,
+    // schema-version set-up) was 49 of a full+incr drive's 59 WARN lines
+    Seq("org.apache.hadoop.hive.conf.HiveConf",
+        "org.apache.hadoop.hive.metastore.ObjectStore",
+        "org.apache.hadoop.hive.ql.session.SessionState")
+      .foreach(org.apache.logging.log4j.core.config.Configurator.setLevel(
+        _, org.apache.logging.log4j.Level.ERROR))
 
     val r = run(spark, dataDir)
     val srcJson = r.source

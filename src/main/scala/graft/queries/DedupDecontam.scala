@@ -93,82 +93,19 @@ trait DedupDecontam { self: DedupQueries.type =>
     * composes tombstones in-flight each run; a production rotation (an
     * eval set dropped from the suite) must PUBLISH the retirement once
     * so every later session serves the surviving benchmark without the
-    * retirement batch in hand. The q147/q154 economics verbatim, on the
-    * contam family:
-    *
-    *   - UNDER the shared debt gate, the publish is a `contam_del`
-    *     sidecar keyed (corpus fp x retire-set fp) holding the retired
-    *     bench ids; readers compose ONE broadcast anti-join on bench_id
-    *     over the unchanged [[contamFullTable]] — contamination rows
-    *     are per-pair facts, so removal IS the maintenance (no
-    *     re-probing, no re-tokenization, cost O(|B|));
-    *   - PAST the gate, the family folds into a full `contam_r`
-    *     generation (published BEFORE its marker — the q147
-    *     crash-ordering) and later reads are a bare scan;
-    *   - a FRESH session (`retired = None`) discovers the live sidecar
-    *     via attachLatest, validates it against the CURRENT corpus
-    *     fingerprint (a regenerated corpus moots a stale retirement),
-    *     and serves accordingly — no sidecar or stale -> the base.
-    *
-    * Docs un-flag for free: a doc whose only contamination was vs a
-    * retired benchmark simply has no surviving rows. */
+    * retirement batch in hand. [[graft.sources.DurableIndex.retracted]]
+    * over [[contamFullTable]] on `bench_id`: a `contam_del` log
+    * composed as one broadcast anti-join, or a `contam_r` fold; a fresh
+    * session passes `retired = None`. Contamination rows are per-pair
+    * facts, so removal IS the maintenance (no re-probing, no
+    * re-tokenization, cost O(|B|)), and a doc whose only contamination
+    * was vs a retired benchmark un-flags for free. */
   private[graft] def contamRetracted(s: SparkSession, dir: String,
       retired: Option[DataFrame],
-      forceRebuild: Option[Boolean] = None): DataFrame = {
-    val full = contamFullTable(s, dir)
-    val srcFp = graft.sources.DurableIndex.fingerprint(s, dir, "documents.parquet")
-    def composed(benchIds: DataFrame): DataFrame =
-      full.join(broadcast(benchIds), Seq("bench_id"), "left_anti")
-        .select(full.columns.map(col).toIndexedSeq: _*)
-    retired match {
-      case Some(r) =>
-        val del = r.select("bench_id").distinct().localCheckpoint()
-        val fp = retractionFp(s, dir, del.select(col("bench_id").as("doc_id")))
-        val folded = forceRebuild.getOrElse {
-          if (graft.sources.DurableIndex.liveExists(s, dir, "contam_r", fp)) true
-          else if (graft.sources.DurableIndex.liveExists(s, dir, "contam_del", fp)) false
-          else graft.sources.DurableIndex.exceedsDebt(
-            full, del, "bench_id")
-        }
-        if (folded) {
-          // generation before marker (crash-ordered, the q147 shape);
-          // the folded sidecar is META-ONLY — nothing composes it
-          val gen = graft.sources.DurableIndex.attachOrBuildFp(
-            s, dir, "contam_r", fp, None)(composed(del))
-          graft.sources.DurableIndex.attachOrBuildFp(s, dir, "contam_del", fp, None) {
-            del.limit(0).select(col("bench_id"))
-              .unionByName(s.range(1).select(lit(-1L).as("bench_id")))
-              .select(col("bench_id"), lit(srcFp).as("corpus_fp"),
-                lit(fp).as("del_fp"), lit(true).as("folded")).coalesce(1)
-          }
-          gen
-        } else {
-          val sc = graft.sources.DurableIndex.attachOrBuildFp(
-            s, dir, "contam_del", fp, None) {
-            del.select(col("bench_id"), lit(srcFp).as("corpus_fp"),
-              lit(fp).as("del_fp"), lit(false).as("folded")).coalesce(1)
-          }
-          composed(sc.select("bench_id"))
-        }
-      case None =>
-        // fresh-session path: discover the live retirement; absent,
-        // empty, or stale-corpus -> the base full-benchmark table
-        graft.sources.DurableIndex.attachLatest(s, dir, "contam_del")
-          .flatMap(sc => sc.select("corpus_fp", "del_fp", "folded")
-            .limit(1).collect().headOption.map(h => (sc, h)))
-          .filter { case (_, h) => h.getString(0) == srcFp } match {
-          case None => full
-          case Some((sc, head)) =>
-            if (head.getBoolean(2))
-              graft.sources.DurableIndex.attachOrBuildFp(
-                s, dir, "contam_r", head.getString(1), None) {
-                sys.error(s"contam_del marker ${head.getString(1)} has no " +
-                  "contam_r generation — warehouse corrupted")
-              }
-            else composed(sc.select("bench_id"))
-        }
-    }
-  }
+      forceRebuild: Option[Boolean] = None): DataFrame =
+    graft.sources.DurableIndex.retracted(s, dir, "documents.parquet",
+      contamFullTable(s, dir), "bench_id", "contam_r", "contam_del", None,
+      retired, forceRebuild)
 
   /** Oracle CTEs `toks13`/`sh13(doc_id, h)` — the SQL twin of
     * [[spanHashes13]], restricted to `docWhere` (empty = all docs) so

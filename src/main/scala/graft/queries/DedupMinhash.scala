@@ -110,7 +110,6 @@ trait DedupMinhash { self: DedupQueries.type =>
       minhashPairsOf(
         ngramPostingsTable(s, dir).select("doc_id", "sg"),
         Some(bandIndexTable(s, dir)))
-        .repartition(16, col("doc_a"))
     }
 
   /** The persisted COMPONENT LABELS of the standing corpus — the q131

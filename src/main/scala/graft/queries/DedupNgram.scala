@@ -316,18 +316,12 @@ trait DedupNgram { self: DedupQueries.type =>
       : (DataFrame, Boolean) = {
     val del = delIds.select("doc_id").distinct().localCheckpoint()
     val post = ngramPostingsTable(s, dir)
-    val fp = retractionFp(s, dir, del)
-    // explicit override, else the recorded mode (ngram_post_r is only
-    // ever written by the rebuild branch, so its existence IS the fold
-    // record; ngram_pairs_r alone means a published tombstone-mode
-    // generation), else one shared debt-gate scan: deleted fraction of
-    // the postings rows, or the absolute delete-id cap
-    val rebuild = forceRebuild.getOrElse {
-      if (graft.sources.DurableIndex.liveExists(s, dir, "ngram_post_r", fp)) true
-      else if (graft.sources.DurableIndex.liveExists(s, dir, "ngram_pairs_r", fp)) false
-      else graft.sources.DurableIndex.exceedsDebt(
-        post, del, "doc_id")
-    }
+    val fp = graft.sources.DurableIndex.retractionFp(s, dir, "documents.parquet", del)
+    // ngram_post_r is only ever written by the rebuild branch, so its
+    // existence IS the fold record; ngram_pairs_r alone means a
+    // published tombstone-mode generation
+    val rebuild = graft.sources.DurableIndex.foldMode(s, dir, fp, "ngram_post_r",
+      "ngram_pairs_r", post, del, "doc_id", forceRebuild)
     val pairs =
       if (rebuild) {
         // major compaction: net postings re-df'd in ONE window shuffle

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossEngine._
-import graft.sources.Tables
+import graft.sources.DurableIndex
 
-/** Band/pair/cc retraction: tombstone maintenance, delete-set fingerprints, the shared debt gate, and the patch-or-fold durable publish (q143/q146/q150/q151/q154/q159).
+/** Band/pair/cc retraction: tombstone maintenance and the patch-or-fold durable publish (q143/q146/q150/q151/q154/q159); the version and the mode decision are [[graft.sources.DurableIndex]]'s.
   *
   * Pure round-16 refactor: split out of the 3,300-line DedupQueries.scala
   * verbatim (self-typed to the object so cross-family references keep
@@ -91,56 +91,6 @@ trait DedupRetraction { self: DedupQueries.type =>
     (affected, relabeled)
   }
 
-  /** Order-free 48-bit fingerprint of a delete-id set, computed in ONE
-    * one-row aggregate (no driver-side id collection however large the
-    * takedown batch), masked to the lowercase-hex shape
-    * [[graft.sources.DurableIndex]] versions carry.
-    *
-    * Each id passes through a NON-LINEAR 64-bit finalizer (xxhash64,
-    * codegen'd) before the sum-fold — a round-12 advice fix: the
-    * previous `pmod(id * K, P)` term was linear in the id, so two
-    * distinct delete sets with equal size and equal id-sum (e.g. {1,4}
-    * vs {2,3}) collided, and a stale published generation could be
-    * silently re-attached for a DIFFERENT delete set. Two
-    * independently-seeded hash sums must now both collide, which the
-    * avalanche property reduces to chance. Per-term `pmod` bounds keep
-    * the ANSI-mode sums overflow-free to ~2^31 ids (terms < 2^32,
-    * sum < n * 2^32 < 2^63). */
-  private[queries] def deleteSetFp(del: DataFrame): String = {
-    val r = del.agg(
-      coalesce(sum(pmod(xxhash64(col("doc_id")), lit(4294967291L))), lit(0L)).as("s1"),
-      coalesce(sum(pmod(xxhash64(lit("graft_del_2"), col("doc_id")),
-        lit(4294967279L))), lit(0L)).as("s2"),
-      count(lit(1)).as("n")).first()
-    java.lang.Long.toHexString(
-      (((r.getLong(0) * 1000003L + r.getLong(1)) * 31 + r.getLong(2))
-        & 0xFFFFFFFFFFFFL) | 0x1)
-  }
-
-  /** PERSIST the post-delete band/pair/cc artifacts as a durable
-    * generation — the half of retraction q143 computes in-flight but a
-    * real takedown pipeline must also WRITE: the standing artifacts on
-    * disk have to track the corpus, or every later consumer re-pays
-    * the tombstone joins. The generation's identity is (corpus
-    * fingerprint x delete-set fingerprint), folded into the same
-    * lowercase-hex version shape the DurableIndex machinery retires
-    * on, and published under sibling family names (`band_index_r`
-    * etc.) so delete-generations supersede EACH OTHER without
-    * retiring the pre-delete base artifacts other queries attach. A
-    * re-attach with the same corpus + delete set touches no bytes and
-    * re-reads bare scans (RetractionSpec); a grown delete set (the
-    * takedown log advanced) changes the fp and builds the next
-    * generation, retiring the old one on the standard grace
-    * contract. */
-  /** The (corpus fingerprint x delete-set fingerprint) version every
-    * published retraction generation is keyed on. */
-  private[queries] def retractionFp(s: SparkSession, dir: String, del: DataFrame): String = {
-    val srcFp = graft.sources.DurableIndex.fingerprint(s, dir, "documents.parquet")
-    java.lang.Long.toHexString(
-      ((java.lang.Long.parseLong(srcFp, 16) * 31 +
-        java.lang.Long.parseLong(deleteSetFp(del), 16)) & 0xFFFFFFFFFFFFL) | 0x1)
-  }
-
   /** Durable band/pair/cc retraction with the TOMBSTONE-DEBT gate —
     * q157's economics applied to the family that motivated it
     * (round-13 verdict #1): the old path rebuilt `band_index_r` (the
@@ -184,33 +134,21 @@ trait DedupRetraction { self: DedupQueries.type =>
       delIds: DataFrame, forceRebuild: Option[Boolean] = None)
       : (DataFrame, DataFrame, DataFrame, Boolean) = {
     val del = delIds.select("doc_id").distinct().localCheckpoint()
-    val fp = retractionFp(s, dir, del)
+    val fp = DurableIndex.retractionFp(s, dir, "documents.parquet", del)
     val bands0 = bandIndexTable(s, dir)
-    // Mode resolution (cheapest first): an explicit override; else the
-    // RECORDED mode — a published generation under this (corpus fp x
-    // delete fp) IS the record, so re-runs never re-pay the gate scan
-    // (cc_index_r is the LAST artifact a fold builds, so its existence
-    // implies the whole fold; a crash mid-fold self-heals because the
-    // attachOrBuild calls below rebuild whatever is missing); else the
-    // debt gate decides once: deleted fraction of the band-index rows
-    // OR an absolute id cap past which the patch-composed read's
-    // broadcast stops being cheap regardless of fraction.
-    val rebuild = forceRebuild.getOrElse {
-      if (graft.sources.DurableIndex.liveExists(s, dir, "cc_index_r", fp)) true
-      else if (graft.sources.DurableIndex.liveExists(s, dir, "retract_patch", fp)) false
-      else graft.sources.DurableIndex.exceedsDebt(
-        bands0, del, "doc_id")
-    }
+    // cc_index_r is the LAST artifact a fold builds, so its existence
+    // records the whole fold; a crash mid-fold self-heals because the
+    // attachOrBuild calls below rebuild whatever is missing
+    val rebuild = DurableIndex.foldMode(s, dir, fp, "cc_index_r", "retract_patch",
+      bands0, del, "doc_id", forceRebuild)
     if (rebuild) {
       lazy val retracted = retractMaintain(bands0,
         pairIndexTable(s, dir), ccIndexTable(s, dir), del)
-      val b = graft.sources.DurableIndex.attachOrBuildFp(
+      val b = DurableIndex.attachOrBuildFp(
         s, dir, "band_index_r", fp, Some(("band_key", 16)))(retracted._1)
-      val p = graft.sources.DurableIndex.attachOrBuildFp(
-        s, dir, "pair_index_r_b16", fp, Some(("doc_a", 16)))(
-        retracted._2.repartition(16, col("doc_a")))
-      val c = graft.sources.DurableIndex.attachOrBuildFp(
-        s, dir, "cc_index_r", fp, None)(retracted._3)
+      val p = DurableIndex.attachOrBuildFp(
+        s, dir, "pair_index_r_b16", fp, Some(("doc_a", 16)))(retracted._2)
+      val c = DurableIndex.attachOrBuildFp(s, dir, "cc_index_r", fp, None)(retracted._3)
       (b, p, c, true)
     } else {
       val pairs0 = pairIndexTable(s, dir)
@@ -218,8 +156,7 @@ trait DedupRetraction { self: DedupQueries.type =>
       // the O(|D| + affected-clusters) patch: three row kinds in one
       // tiny sidecar — ("del", doc_id), ("aff", label), ("cc", doc_id,
       // label) — built once per (corpus fp x delete fp)
-      val patch = graft.sources.DurableIndex.attachOrBuildFp(
-        s, dir, "retract_patch", fp, None) {
+      val patch = DurableIndex.attachOrBuildFp(s, dir, "retract_patch", fp, None) {
         val pairs1 = pairs0
           .join(broadcast(del.select(col("doc_id").as("doc_a"))), Seq("doc_a"), "left_anti")
           .join(broadcast(del.select(col("doc_id").as("doc_b"))), Seq("doc_b"), "left_anti")
@@ -237,8 +174,8 @@ trait DedupRetraction { self: DedupQueries.type =>
       // generations under this fp that patch-mode reads never attach:
       // patch resolution proves they're dead partials — retire them under
       // the standard grace window (round-15 advice)
-      graft.sources.DurableIndex.retireIfLive(s, dir, "band_index_r", fp)
-      graft.sources.DurableIndex.retireIfLive(s, dir, "pair_index_r_b16", fp)
+      DurableIndex.retireIfLive(s, dir, "band_index_r", fp)
+      DurableIndex.retireIfLive(s, dir, "pair_index_r_b16", fp)
       val delR = patch.filter(col("kind") === "del").select(col("a").as("doc_id"))
       val affR = patch.filter(col("kind") === "aff").select(col("a").as("label"))
       val ccR = patch.filter(col("kind") === "cc")

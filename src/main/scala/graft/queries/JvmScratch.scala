@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one owner of this JVM's local scratch: stream sources and
   * checkpoints ([[dir]]), the scratch database, the staged-input cache
@@ -131,6 +131,19 @@ object JvmScratch {
     val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
     s"$dbName.$table"
+  }
+
+  /** The per-JVM STANDING table `<name>_<fp>` (a sketch grid, a packing
+    * prefix), written from `build` once if absent and returned. `fp` is
+    * the content fingerprint of the source the table summarises, so a
+    * corpus regenerated in place within one JVM gets a new table instead
+    * of a stale one. */
+  def standing(s: SparkSession, name: String, fp: String)
+      (build: => DataFrame): DataFrame = synchronized {
+    ensure(s)
+    val table = tableName(s"${name}_$fp")
+    if (!s.catalog.tableExists(table)) build.write.format("parquet").saveAsTable(table)
+    s.table(table)
   }
 
   /** Fully qualified name of an existing scratch table. */

@@ -303,24 +303,17 @@ object SamplingQueries {
         size(tokens(col("text"))).cast(LongType).as("n_tokens"))
       val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
       val watermark = maxId * 9 / 10
-      val tag = Integer.toHexString(dir.hashCode)
-      JvmScratch.ensure(s)
-      val standingTable = JvmScratch.tableName(s"pack_standing_$tag")
-      val totalTable = JvmScratch.tableName(s"pack_standing_total_$tag")
-      if (!s.catalog.tableExists(standingTable)) {
-        val standing = withTokenPrefixSumOf(s,
-          docs.filter(col("doc_id") <= watermark)).localCheckpoint()
-        standing.select(col("doc_id"), col("n_tokens"),
-          expr(s"cumx div $TokenBudget").as("shard"))
-          .write.format("parquet").saveAsTable(standingTable)
-        standing.agg(sum(col("n_tokens")).as("total_tokens"))
-          .write.format("parquet").saveAsTable(totalTable)
-      }
-      val offset = s.table(totalTable).head.getLong(0)
+      val fp = graft.sources.DurableIndex.fingerprint(s, dir, "documents.parquet")
+      val standing = JvmScratch.standing(s, "pack_standing", fp)(
+        withTokenPrefixSumOf(s, docs.filter(col("doc_id") <= watermark))
+          .select(col("doc_id"), col("n_tokens"),
+            expr(s"cumx div $TokenBudget").as("shard")))
+      val offset = JvmScratch.standing(s, "pack_standing_total", fp)(
+        standing.agg(sum(col("n_tokens")).as("total_tokens"))).head.getLong(0)
       val delta = withTokenPrefixSumOf(s, docs.filter(col("doc_id") > watermark))
         .select(col("doc_id"), col("n_tokens"),
           expr(s"(cumx + $offset) div $TokenBudget").as("shard"))
-      s.table(standingTable).unionByName(delta)
+      standing.unionByName(delta)
     },
 
     // ------------------------------------------------------------------

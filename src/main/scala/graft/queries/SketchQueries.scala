@@ -723,16 +723,9 @@ object SketchQueries {
       val ev = Tables.events(s, dir)
       val standing = ev.filter(pmod(col("event_id"), lit(10)) =!= 7)
       val delta = ev.filter(pmod(col("event_id"), lit(10)) === 7)
-      // content-fingerprinted (not dir.hashCode): an in-place testdata
-      // regeneration within one JVM must invalidate the standing grid,
-      // the same drift contract as the DurableIndex artifacts
-      val short = s"hll_standing_${
-        graft.sources.DurableIndex.fingerprint(s, dir, "events.parquet")}"
-      JvmScratch.ensure(s)
-      val standingTable = JvmScratch.tableName(short)
-      if (!s.catalog.tableExists(standingTable))
-        hllRegisters(standing).write.format("parquet").saveAsTable(standingTable)
-      val merged = s.table(standingTable).unionByName(hllRegisters(delta))
+      val merged = JvmScratch.standing(s, "hll_standing",
+          graft.sources.DurableIndex.fingerprint(s, dir, "events.parquet"))(
+          hllRegisters(standing)).unionByName(hllRegisters(delta))
         .groupBy("event_type", "bucket").agg(max(col("reg")).as("reg"))
       hllEstimateOf(s, merged)
     },
@@ -772,13 +765,9 @@ object SketchQueries {
       val ev = Tables.events(s, dir)
       val standing = ev.filter(pmod(col("event_id"), lit(10)) =!= 7)
       val delta = ev.filter(pmod(col("event_id"), lit(10)) === 7)
-      val short = s"cms_standing_${
-        graft.sources.DurableIndex.fingerprint(s, dir, "events.parquet")}"
-      JvmScratch.ensure(s)
-      val standingTable = JvmScratch.tableName(short)
-      if (!s.catalog.tableExists(standingTable))
-        cmsCells(standing).write.format("parquet").saveAsTable(standingTable)
-      val merged = s.table(standingTable).unionByName(cmsCells(delta))
+      val merged = JvmScratch.standing(s, "cms_standing",
+          graft.sources.DurableIndex.fingerprint(s, dir, "events.parquet"))(
+          cmsCells(standing)).unionByName(cmsCells(delta))
         .groupBy("d", "cell").agg(sum(col("c")).as("c"))
       cmsEstimateOf(s, dir, merged)
     },
@@ -820,13 +809,9 @@ object SketchQueries {
       val standing = ev.filter(pmod(col("event_id"), lit(10)) =!= 7)
       val deleted = ev.filter(pmod(col("event_id"), lit(10)) === 3)
       val delta = ev.filter(pmod(col("event_id"), lit(10)) === 7)
-      val short = s"cms_standing_${
-        graft.sources.DurableIndex.fingerprint(s, dir, "events.parquet")}"
-      JvmScratch.ensure(s)
-      val standingTable = JvmScratch.tableName(short)
-      if (!s.catalog.tableExists(standingTable))
-        cmsCells(standing).write.format("parquet").saveAsTable(standingTable)
-      val merged = s.table(standingTable)
+      val merged = JvmScratch.standing(s, "cms_standing",
+          graft.sources.DurableIndex.fingerprint(s, dir, "events.parquet"))(
+          cmsCells(standing))
         .unionByName(cmsCells(deleted)
           .select(col("d"), col("cell"), (-col("c")).as("c")))
         .unionByName(cmsCells(delta))
@@ -871,13 +856,9 @@ object SketchQueries {
       val o = Tables.orders(s, dir)
       val standing = o.filter(pmod(col("o_orderkey"), lit(10)) =!= 7)
       val delta = o.filter(pmod(col("o_orderkey"), lit(10)) === 7)
-      val short = s"hist_standing_${
-        graft.sources.DurableIndex.fingerprint(s, dir, "orders.parquet")}"
-      JvmScratch.ensure(s)
-      val standingTable = JvmScratch.tableName(short)
-      if (!s.catalog.tableExists(standingTable))
-        histBins(standing).write.format("parquet").saveAsTable(standingTable)
-      val merged = s.table(standingTable).unionByName(histBins(delta))
+      val merged = JvmScratch.standing(s, "hist_standing",
+          graft.sources.DurableIndex.fingerprint(s, dir, "orders.parquet"))(
+          histBins(standing)).unionByName(histBins(delta))
         .groupBy("bin").agg(sum(col("c")).as("c"))
       histQuantilesOf(s, merged)
     },
@@ -909,13 +890,9 @@ object SketchQueries {
       val standing = o.filter(pmod(col("o_orderkey"), lit(10)) =!= 7)
       val deleted = o.filter(pmod(col("o_orderkey"), lit(10)) === 3)
       val delta = o.filter(pmod(col("o_orderkey"), lit(10)) === 7)
-      val short = s"hist_standing_${
-        graft.sources.DurableIndex.fingerprint(s, dir, "orders.parquet")}"
-      JvmScratch.ensure(s)
-      val standingTable = JvmScratch.tableName(short)
-      if (!s.catalog.tableExists(standingTable))
-        histBins(standing).write.format("parquet").saveAsTable(standingTable)
-      val merged = s.table(standingTable)
+      val merged = JvmScratch.standing(s, "hist_standing",
+          graft.sources.DurableIndex.fingerprint(s, dir, "orders.parquet"))(
+          histBins(standing))
         .unionByName(histBins(deleted)
           .select(col("bin"), (-col("c")).as("c")))
         .unionByName(histBins(delta))

@@ -265,7 +265,7 @@ class RetractionSpec extends SparkSpec {
 
     // the patch sidecar is exactly |D| + |affected labels| + |relabeled
     // docs| rows — the O(corpus) write is gone
-    val fp = DedupQueries.retractionFp(spark, sfDir,
+    val fp = graft.sources.DurableIndex.retractionFp(spark, sfDir, "documents.parquet",
       del2.select("doc_id").distinct())
     val patch = spark.read.parquet(graft.sources.DurableIndex
       .generations(spark, sfDir, "retract_patch").live(fp).toString)
@@ -420,7 +420,7 @@ class RetractionSpec extends SparkSpec {
     // so a reordered takedown log must re-attach, not rebuild)
     import spark.implicits._
     def fp(ids: Long*): String =
-      DedupQueries.deleteSetFp(ids.toDF("doc_id"))
+      graft.sources.DurableIndex.deleteSetFp(ids.toDF("doc_id"))
     assert(fp(1L, 4L) == fp(4L, 1L), "fingerprint is order-sensitive")
     assert(fp(1L, 4L) != fp(2L, 3L),
       "equal-sum delete sets collide — the fingerprint is linear in the ids")
@@ -474,7 +474,7 @@ class RetractionSpec extends SparkSpec {
     // per (corpus fp x delete fp) and the warehouse is suite-shared)
     val del = docs.filter(col("doc_id") % 40 === 23)
       .select("doc_id").distinct().localCheckpoint()
-    val fp = DedupQueries.retractionFp(spark, sfDir, del)
+    val fp = graft.sources.DurableIndex.retractionFp(spark, sfDir, "documents.parquet", del)
 
     // plant the crash state: band + pair generations live, NO cc record
     val retracted = DedupQueries.retractMaintain(
@@ -550,7 +550,7 @@ class RetractionSpec extends SparkSpec {
     // 1. takedown-sized retirement resolves to PATCH under the natural
     // gate: contam_del sidecar live, no contam_r fold, result == fresh
     val r1 = DedupQueries.contamRetracted(spark, sfDir, Some(retiredSmall))
-    val fpSmall = DedupQueries.retractionFp(spark, sfDir,
+    val fpSmall = graft.sources.DurableIndex.retractionFp(spark, sfDir, "documents.parquet",
       retiredSmall.select(col("bench_id").as("doc_id")))
     assert(graft.sources.DurableIndex.liveExists(spark, sfDir, "contam_del", fpSmall),
       "patch-mode retirement published no contam_del sidecar")
@@ -583,7 +583,7 @@ class RetractionSpec extends SparkSpec {
     val retiredBig = docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id").as("bench_id"))
     val r3 = DedupQueries.contamRetracted(spark, sfDir, Some(retiredBig))
-    val fpBig = DedupQueries.retractionFp(spark, sfDir,
+    val fpBig = graft.sources.DurableIndex.retractionFp(spark, sfDir, "documents.parquet",
       retiredBig.select(col("bench_id").as("doc_id")))
     assert(graft.sources.DurableIndex.liveExists(spark, sfDir, "contam_r", fpBig),
       "sweep-scale retirement did not fold")
@@ -591,5 +591,45 @@ class RetractionSpec extends SparkSpec {
     val r4 = DedupQueries.contamRetracted(spark, sfDir, None)
     assertSameSet(r4, freshVs(col("doc_id") % 10 =!= 0),
       "fresh session did not resolve to the superseding fold")
+  }
+
+  test("retirement log: a stale log serves the new base, a marker with no fold fails loudly") {
+    // the two fresh-session branches of DurableIndex.retracted the
+    // leg above never reaches, on a private corpus copy so the
+    // regeneration and the planted corruption touch no shared artifact
+    val dir = tempDir("contamlog").toString
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val full0 = DedupQueries.contamFullTable(spark, dir).localCheckpoint()
+    val small = full0.groupBy("bench_id").agg(count(lit(1)).as("n"))
+      .orderBy(col("n"), col("bench_id")).select("bench_id").first().getLong(0)
+    val retired = spark.range(1).select(lit(small).as("bench_id"))
+
+    // 1. a patch log published over the ORIGINAL corpus ...
+    DedupQueries.contamRetracted(spark, dir, Some(retired)).collect()
+    val fp0 = graft.sources.DurableIndex.retractionFp(spark, dir, "documents.parquet", retired)
+    assert(graft.sources.DurableIndex.liveExists(spark, dir, "contam_del", fp0)
+        && !graft.sources.DurableIndex.liveExists(spark, dir, "contam_r", fp0),
+      "the single-bench retirement did not publish a patch log")
+
+    // ... is stale once the corpus is regenerated in place: a fresh
+    // session serves the NEW base, the retired bench's rows included
+    docs.filter(col("doc_id") % 10 =!= 1)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val full1 = DedupQueries.contamFullTable(spark, dir)
+    assert(full1.filter(col("bench_id") === small).count() > 0,
+      "the regenerated corpus lost the retired bench's rows; the leg proves nothing")
+    assertSameSet(DedupQueries.contamRetracted(spark, dir, None), full1,
+      "stale retirement log")
+
+    // 2. a fold whose generation is gone while its marker is live is a
+    // corrupted warehouse: the fresh session must throw, not rebuild
+    // from the meta-only marker and serve the retired rows
+    DedupQueries.contamRetracted(spark, dir, Some(retired), Some(true)).collect()
+    val fp1 = graft.sources.DurableIndex.retractionFp(spark, dir, "documents.parquet", retired)
+    graft.sources.DurableIndex.retireIfLive(spark, dir, "contam_r", fp1)
+    val e = intercept[RuntimeException](DedupQueries.contamRetracted(spark, dir, None))
+    assert(e.getMessage.contains("warehouse corrupted") && e.getMessage.contains("contam_r")
+        && e.getMessage.contains(fp1), s"unexpected failure: ${e.getMessage}")
   }
 }

@@ -407,6 +407,22 @@ class TechniqueSpec extends SparkSpec {
       "offset-continued delta packing diverged from the full prefix sum")
   }
 
+  test("q122 standing packing follows a corpus regenerated in place") {
+    // the standing assignment is per-JVM state keyed on the corpus
+    // CONTENT fingerprint: the same dir with new documents must pack
+    // afresh, never union the old standing rows with the new delta
+    val dir = tempDir("packregen").toString
+    val docs = Tables.documents(spark, sfDir)
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    SparkEntry.queries("q122_incremental_packing")(spark, dir).collect()
+    docs.filter(col("doc_id") % 3 =!= 1)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val full = SparkEntry.queries("q98_shard_packing")(spark, dir)
+    val inc = SparkEntry.queries("q122_incremental_packing")(spark, dir)
+    assert(inc.exceptAll(full).isEmpty && full.exceptAll(inc).isEmpty,
+      "q122 served a standing assignment of the corpus it replaced")
+  }
+
   test("HLL distinct sketch estimates within epsilon, deterministically") {
     val hll = SparkEntry.queries("q51_hll_distinct")(spark, sfDir)
     val rows = hll.collect()
