@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Bench and Verify, and withStreamConfs had to independently know to
   * pin the same key — three coupled sites, and the q123 regression that
   * round came from one site not knowing about another). Every entry
-  * point builds through [[GraftSession.builder]]: Bench, Verify,
-  * ScaleGen, ScaleGate, Explain and perfbench via [[build]];
-  * MedallionJob adds only its derby metastore and Hive support. Stream
+  * point builds through [[build]]: Bench, Verify, ScaleGen, ScaleGate,
+  * Explain, MedallionJob and perfbench; MedallionJob then pins
+  * [[InitialPartitionsKey]] to the core count, a runtime conf. Stream
   * drains pin [[InitialPartitionsKey]] and
   * [[StreamPartitions]] through this object's constants.
   */
@@ -48,10 +48,10 @@ object GraftSession {
   /** The shared local session every entry point runs on: graft
     * extensions, core-count base shuffle width + data-scaled AQE
     * initial width, UTC, nanos-as-long (the events.parquet encodings
-    * drift — see Tables.normalizeEventTs), no UI. The warehouse dir is
-    * a static conf, only settable at build time (ScaleGate scopes its
-    * artifact warehouse inside its work dir this way). */
-  def builder(warehouseDir: Option[String] = None): SparkSession.Builder = {
+    * drift — see Tables.normalizeEventTs), no UI, in-memory catalog. The
+    * warehouse dir is a static conf, only settable at build time
+    * (ScaleGate scopes its artifact warehouse inside its work dir). */
+  def build(warehouseDir: Option[String] = None): SparkSession = {
     val n = cpus
     val b = SparkSession.builder()
       .withExtensions(new graft.functions.expr.GraftExtensions)
@@ -73,11 +73,7 @@ object GraftSession {
       // contract heap beats the uniform-corpus speedup; revisit only
       // with a per-query scope and a skew-leg proof.
       .config("spark.ui.enabled", "false")
-    warehouseDir.fold(b)(w => b.config("spark.sql.warehouse.dir", w))
-  }
-
-  def build(warehouseDir: Option[String] = None): SparkSession = {
-    val spark = builder(warehouseDir).getOrCreate()
+    val spark = warehouseDir.fold(b)(w => b.config("spark.sql.warehouse.dir", w)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

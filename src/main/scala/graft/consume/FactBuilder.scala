@@ -25,7 +25,7 @@ import graft.sinks.TableSink
   * (step_5:548-550). If two dim rows ever share a name within a
   * (country, region), every matching sale fans out into multiple fact
   * rows. True of the reference data today: names are unique per region,
-  * so fact count == curated count (1023), which MedallionSpec pins.
+  * so on a first load fact count == curated count (1023; MedallionSpec).
   * The safe fix, if the invariant ever breaks, is joining on the full
   * 5-column key; we keep the reference's semantics and guard them.
   */

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   * conjunct for edit-distance predicates).
   *
   * Usage: `.withExtensions(new GraftExtensions)` on a session builder
-  * (`graft.GraftSession.builder` and the test session do), or
+  * (`graft.GraftSession.build` and the test session do), or
   * `spark.sql.extensions=graft.functions.expr.GraftExtensions` on any
   * cluster — the standard injection point, no fork of Spark needed.
   */

@@ -15,8 +15,8 @@ import graft.sinks.TableSink
   * where `<dataDir>` holds `sales/source=*&#47;format=*&#47;date=*` plus
   * `exchange-rate-data.csv` (the layout of
   * /root/reference/amazon-sales-data). Re-running is an incremental
-  * load: sources append with continued key sequences, dims grow only by
-  * anti-join deltas, the fact appends (reference behavior).
+  * load in any JVM ([[TableSink.ensureDatabases]]), as the reference's:
+  * sources append, keys continue, only new dim keys land, the fact appends.
   *
   * The layers run in dependency order — the three country loads, then
   * their three curations, then the date dim beside the five value dims,
@@ -57,27 +57,10 @@ object MedallionJob {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/reference/amazon-sales-data")
     val warehouse = args.lift(1).getOrElse("/tmp/graft_warehouse")
-    // Hive-backed catalog with a derby metastore inside the warehouse
-    // dir: table metadata survives across JVMs, so a re-run is a true
-    // incremental load (append sources, delta dims) instead of a
-    // LOCATION_ALREADY_EXISTS failure against orphaned parquet. AQE's
-    // initial width stays at the core count: the 512 scale-out default
-    // roughly doubles a pass over the reference's KB-scale drops.
-    val spark = GraftSession.builder(Some(warehouse))
-      .config(GraftSession.InitialPartitionsKey, GraftSession.cpus)
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$warehouse/_metastore;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the derby metastore's routine chatter (an unknown-key WARN per Hive
-    // client call, a "Failed to get database" per CREATE DATABASE probe,
-    // schema-version set-up) was 49 of a full+incr drive's 59 WARN lines
-    Seq("org.apache.hadoop.hive.conf.HiveConf",
-        "org.apache.hadoop.hive.metastore.ObjectStore",
-        "org.apache.hadoop.hive.ql.session.SessionState")
-      .foreach(org.apache.logging.log4j.core.config.Configurator.setLevel(
-        _, org.apache.logging.log4j.Level.ERROR))
+    // AQE's initial width stays at the core count: the 512 scale-out
+    // default roughly doubles a pass over the reference's KB-scale drops
+    val spark = GraftSession.build(Some(warehouse))
+    spark.conf.set(GraftSession.InitialPartitionsKey, GraftSession.cpus)
 
     val r = run(spark, dataDir)
     val srcJson = r.source

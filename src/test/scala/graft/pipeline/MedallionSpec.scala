@@ -1,8 +1,16 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{MedallionFixture => Fx, SparkSpec}
+import graft.{ForkedProbe, MedallionFixture => Fx, SparkSpec}
+import graft.consume.{DateDimBuilder, DimBuilder, FactBuilder}
 import graft.model.CountryConfig
 import graft.sinks.TableSink
 
@@ -25,6 +33,63 @@ class MedallionSpec extends SparkSpec {
   }
 
   private val codes = CountryConfig.all.map(_.code)
+
+  /** Every table's ordered columns and types (`dataType.typeName`). */
+  private lazy val contract: Map[String, Seq[(String, String)]] = {
+    def cols(spec: String): Seq[(String, String)] =
+      spec.trim.split("\\s+").toSeq.map { c =>
+        val Array(name, tpe) = c.split(":", 2); name -> tpe
+      }
+    val m2 = "decimal(10,2)"
+    val source = cols(s"""sales_order_key:long order_id:string customer_name:string
+      mobile_key:string order_quantity:long unit_price:$m2 order_value:$m2
+      promotion_code:string final_order_amount:$m2 tax_amount:$m2 order_dt:date
+      payment_status:string shipping_status:string payment_method:string
+      payment_provider:string contact_no:string shipping_address:string
+      _metadata_file_name:string _metadata_row_number:long
+      _metadata_last_modified:timestamp""")
+    // curated is partitioned by order_dt, which the catalog lists last
+    val curated = cols(s"""sales_order_key:long order_id:string customer_name:string
+      mobile_key:string country:string region:string order_quantity:long
+      local_currency:string local_unit_price:$m2 promotion_code:string
+      local_total_order_amt:$m2 local_tax_amt:$m2 exchange_rate:decimal(15,7)
+      us_total_order_amt:decimal(23,8) usd_tax_amt:decimal(23,8)
+      payment_status:string shipping_status:string payment_method:string
+      payment_provider:string contact_no:string shipping_address:string
+      _metadata_last_modified:timestamp order_dt:date""")
+    def dim(pk: String, naturalKey: String): Seq[(String, String)] =
+      cols(s"$pk:long " + naturalKey.split(" ").map(_ + ":string").mkString(" ") +
+        " is_active:string")
+    codes.flatMap { cc =>
+      val c = cc.toLowerCase
+      Seq(s"source.${c}_sales_order" -> source, s"curated.${c}_sales_order" -> curated)
+    }.toMap ++ Map(
+      "consumption.date_dim" -> cols("""date_id_pk:long order_dt:date
+        order_year:integer day_counter:long order_month:integer
+        order_quarter:integer order_day:integer order_dayofweek:integer
+        order_dayname:string order_dayofmonth:integer order_weekday:string"""),
+      "consumption.region_dim" -> dim("region_id_pk", "country region"),
+      "consumption.product_dim" ->
+        dim("product_id_pk", "mobile_key brand model color memory"),
+      "consumption.promo_code_dim" ->
+        dim("promo_code_id_pk", "promotion_code country region"),
+      "consumption.customer_dim" -> dim("customer_id_pk",
+        "customer_name contact_no shipping_address country region"),
+      "consumption.payment_dim" ->
+        dim("payment_id_pk", "payment_method payment_provider country region"),
+      "consumption.sales_fact" -> cols(s"""order_id_pk:long order_code:string
+        date_id_fk:long region_id_fk:long customer_id_fk:long payment_id_fk:long
+        product_id_fk:long promo_code_id_fk:long order_quantity:long
+        local_total_order_amt:$m2 local_tax_amt:$m2 exchange_rate:decimal(15,7)
+        us_total_order_amt:decimal(23,8) usd_tax_amt:decimal(23,8)"""))
+  }
+
+  private def columns(df: DataFrame): Seq[(String, String)] =
+    df.schema.fields.toSeq.map(f => f.name -> f.dataType.typeName)
+
+  /** The tables the catalog lists in the three databases. */
+  private def tables(): Seq[String] = TableSink.Databases
+    .flatMap(db => spark.catalog.listTables(db).collect().map(t => s"$db.${t.name}"))
 
   test("source layer loads the manifest's row counts and skips its planted bad rows") {
     val bySrc = report.source.map(r => r.country -> r).toMap
@@ -150,59 +215,10 @@ class MedallionSpec extends SparkSpec {
 
   test("layer contract: every table's ordered columns and types, the key first") {
     report // the warehouse holds the full load, then the incremental one
-    def cols(spec: String): Seq[(String, String)] =
-      spec.trim.split("\\s+").toSeq.map { c =>
-        val Array(name, tpe) = c.split(":", 2); name -> tpe
-      }
-    val m2 = "decimal(10,2)"
-    val source = cols(s"""sales_order_key:long order_id:string customer_name:string
-      mobile_key:string order_quantity:long unit_price:$m2 order_value:$m2
-      promotion_code:string final_order_amount:$m2 tax_amount:$m2 order_dt:date
-      payment_status:string shipping_status:string payment_method:string
-      payment_provider:string contact_no:string shipping_address:string
-      _metadata_file_name:string _metadata_row_number:long
-      _metadata_last_modified:timestamp""")
-    // curated is partitioned by order_dt, which the catalog lists last
-    val curated = cols(s"""sales_order_key:long order_id:string customer_name:string
-      mobile_key:string country:string region:string order_quantity:long
-      local_currency:string local_unit_price:$m2 promotion_code:string
-      local_total_order_amt:$m2 local_tax_amt:$m2 exchange_rate:decimal(15,7)
-      us_total_order_amt:decimal(23,8) usd_tax_amt:decimal(23,8)
-      payment_status:string shipping_status:string payment_method:string
-      payment_provider:string contact_no:string shipping_address:string
-      _metadata_last_modified:timestamp order_dt:date""")
-    def dim(pk: String, naturalKey: String): Seq[(String, String)] =
-      cols(s"$pk:long " + naturalKey.split(" ").map(_ + ":string").mkString(" ") +
-        " is_active:string")
-    val expected: Map[String, Seq[(String, String)]] =
-      codes.flatMap { cc =>
-        val c = cc.toLowerCase
-        Seq(s"source.${c}_sales_order" -> source, s"curated.${c}_sales_order" -> curated)
-      }.toMap ++ Map(
-        "consumption.date_dim" -> cols("""date_id_pk:long order_dt:date
-          order_year:integer day_counter:long order_month:integer
-          order_quarter:integer order_day:integer order_dayofweek:integer
-          order_dayname:string order_dayofmonth:integer order_weekday:string"""),
-        "consumption.region_dim" -> dim("region_id_pk", "country region"),
-        "consumption.product_dim" ->
-          dim("product_id_pk", "mobile_key brand model color memory"),
-        "consumption.promo_code_dim" ->
-          dim("promo_code_id_pk", "promotion_code country region"),
-        "consumption.customer_dim" -> dim("customer_id_pk",
-          "customer_name contact_no shipping_address country region"),
-        "consumption.payment_dim" ->
-          dim("payment_id_pk", "payment_method payment_provider country region"),
-        "consumption.sales_fact" -> cols(s"""order_id_pk:long order_code:string
-          date_id_fk:long region_id_fk:long customer_id_fk:long payment_id_fk:long
-          product_id_fk:long promo_code_id_fk:long order_quantity:long
-          local_total_order_amt:$m2 local_tax_amt:$m2 exchange_rate:decimal(15,7)
-          us_total_order_amt:decimal(23,8) usd_tax_amt:decimal(23,8)"""))
-    val tables = TableSink.Databases
-      .flatMap(db => spark.catalog.listTables(db).collect().map(t => s"$db.${t.name}"))
-    assert(tables.toSet == expected.keySet, s"tables: $tables")
-    expected.foreach { case (t, want) =>
-      val got = spark.table(t).schema.fields.toSeq.map(f => f.name -> f.dataType.typeName)
-      assert(got == want, s"$t columns or types changed")
+    val all = tables()
+    assert(all.toSet == contract.keySet, s"tables: $all")
+    contract.foreach { case (t, want) =>
+      assert(columns(spark.table(t)) == want, s"$t columns or types changed")
     }
     // each of the 10 keyed tables carries its key first
     val keyOf = codes.map(c => s"source.${c.toLowerCase}_sales_order" -> "sales_order_key") ++
@@ -230,21 +246,125 @@ class MedallionSpec extends SparkSpec {
     assert(written.isEmpty, s"a zero-row delta wrote a data file into $written")
   }
 
+  private def contents(df: DataFrame): (Seq[(String, String)], Seq[String]) =
+    (columns(df), df.collect().map(_.toString).sorted.toSeq)
+
+  /** Every table's columns and sorted rows after a full then an
+    * incremental load into a reset warehouse. */
+  private def freshRun(): Map[String, (Seq[(String, String)], Seq[String])] = {
+    resetWarehouse()
+    MedallionJob.run(spark, Fx.full)
+    MedallionJob.run(spark, Fx.incr)
+    tables().map(t => t -> contents(spark.table(t))).toMap
+  }
+
+  private lazy val fresh = freshRun()
+
   test("concurrent table loads keep keys deterministic: two fresh full+incr runs land identical tables") {
-    def snapshot(): Map[String, Seq[String]] = {
-      resetWarehouse()
-      MedallionJob.run(spark, Fx.full)
-      MedallionJob.run(spark, Fx.incr)
-      TableSink.Databases
-        .flatMap(db => spark.catalog.listTables(db).collect().map(t => s"$db.${t.name}"))
-        .map(t => t -> spark.table(t).collect().map(_.toString).sorted.toSeq).toMap
-    }
-    val (a, b) = (snapshot(), snapshot())
+    val (a, b) = (fresh, freshRun())
     assert(a.keySet.size == 13 && a.keySet == b.keySet, s"tables: ${a.keySet}")
-    a.foreach { case (t, rows) =>
+    a.foreach { case (t, (cols, rows)) =>
       assert(rows.nonEmpty, s"$t is empty")
-      assert(rows == b(t), s"$t differs between two fresh runs (surrogate keys included)")
+      assert((cols, rows) == b(t), s"$t differs between two fresh runs (surrogate keys included)")
     }
+  }
+
+  /** `main`'s JSON report line against the manifest's counts for `drop`. */
+  private def assertReport(drop: String, line: String): Unit = {
+    val r = new ObjectMapper().readTree(line)
+    val want = codes.flatMap(cc => Seq(
+        s"/source/$cc/loaded" -> s"/$drop/source/$cc/loaded",
+        s"/source/$cc/skipped" -> s"/$drop/source/$cc/skipped",
+        s"/curated_total/$cc" -> s"/$drop/curated/$cc")) ++
+      Seq("region_dim", "product_dim", "promo_code_dim", "customer_dim", "payment_dim")
+        .map(d => s"/dim_rows_added/$d" -> s"/$drop/dims/$d") ++
+      Seq("/dim_rows_added/date_dim" -> s"/$drop/date_dim",
+        "/fact_rows_added" -> s"/$drop/fact")
+    want.foreach { case (got, exp) =>
+      assert(r.at(got).isNumber && r.at(got).asLong == Fx.count(exp), s"$drop $got in $line")
+    }
+  }
+
+  test("main in two JVMs continues one warehouse: the tables of full+incr in one JVM, no Hive") {
+    val work = tempDir("medallion_main")
+    val wh = work.resolve("wh").toString
+    Seq("full" -> Fx.full, "incr" -> Fx.incr).foreach { case (drop, dir) =>
+      val out = work.resolve(s"$drop.out").toFile
+      val classLog = work.resolve(s"$drop.classes")
+      val child = ForkedProbe.startToFile("graft.pipeline.MedallionJob", Seq(dir, wh), out,
+        Seq(s"-Xlog:class+load:file=$classLog"))
+      try assert(child.waitFor(600, TimeUnit.SECONDS), s"$drop JVM hung")
+      finally child.destroyForcibly()
+      val text = Files.readString(out.toPath)
+      assert(child.exitValue() == 0, s"$drop JVM failed:\n${text.takeRight(4000)}")
+      val lines = text.linesIterator.filter(_.startsWith("{")).toSeq
+      assert(lines.size == 1, s"$drop: report lines $lines")
+      assertReport(drop, lines.head)
+      val loaded = Files.readAllLines(classLog).asScala
+      assert(loaded.exists(_.contains("graft.pipeline.MedallionJob")), s"$drop: empty class log")
+      // any session on this classpath loads a few hive-exec classes (log4j
+      // plugins, Hadoop file systems, the `hive` file format); Hive support
+      // adds its catalog, HiveConf, the metastore client and derby
+      val hive = loaded.filter(l => Seq("org.apache.spark.sql.hive.Hive",
+        "org.apache.spark.sql.hive.client.", "org.apache.hadoop.hive.conf.",
+        "org.apache.hadoop.hive.metastore.", "org.apache.hadoop.hive.ql.session.",
+        "org.apache.derby.").exists(p => l.contains(s"] $p")))
+      assert(hive.isEmpty, s"$drop loaded ${hive.size} Hive catalog classes: ${hive.take(3)}")
+    }
+    assert(!Files.exists(Paths.get(wh, "_metastore")))
+    // the children's warehouse, read back from its files alone
+    val read = TableSink.Databases.flatMap { db =>
+      new java.io.File(wh, s"$db.db").listFiles().toSeq.map(dir =>
+        s"$db.${dir.getName}" -> contents(spark.read.parquet(dir.getPath)))
+    }.toMap
+    assert(read.keySet == fresh.keySet, s"tables: ${read.keySet}")
+    fresh.foreach { case (t, (cols, rows)) =>
+      assert(read(t)._1 == cols, s"$t columns or types differ across JVMs")
+      assert(read(t)._2 == rows, s"$t rows differ across JVMs (surrogate keys included)")
+    }
+  }
+
+  test("a first load with no curated rows creates the seven keyed consumption tables, empty") {
+    report // the curated tables exist
+    spark.sql("DROP DATABASE consumption CASCADE")
+    TableSink.ensureDatabases(spark)
+    val none = MedallionJob.unionCurated(spark).filter(lit(false))
+    assert(DateDimBuilder.build(spark, none) == 0L)
+    assert(DimBuilder.buildAll(spark, none).values.forall(_ == 0L))
+    assert(FactBuilder.build(spark, none) == 0L)
+    val keyed = contract.filter(_._1.startsWith("consumption."))
+    assert(keyed.size == 7)
+    keyed.foreach { case (t, want) =>
+      assert(TableSink.exists(spark, t), s"$t was not created")
+      assert(columns(spark.table(t)) == want, s"$t columns or types changed")
+      assert(spark.table(t).count() == 0L, s"$t is not empty")
+    }
+  }
+
+  test("ensureDatabases attaches the table dirs the catalog lacks; a dir with no data file goes") {
+    resetWarehouse()
+    TableSink.ensureDatabases(spark)
+    val db = new java.net.URI(spark.catalog.getDatabase("consumption").locationUri).getPath
+    // written straight to files, as a run in an earlier JVM leaves them
+    val rows = spark.range(6).select(col("id"),
+      date_add(lit(java.sql.Date.valueOf("2020-01-01")), (col("id") % 3).cast("int")).as("order_dt"))
+    rows.write.partitionBy("order_dt").parquet(s"$db/parted")
+    rows.write.parquet(s"$db/flat")
+    rows.filter(lit(false)).write.partitionBy("order_dt").parquet(s"$db/no_rows")
+    TableSink.ensureDatabases(spark)
+    assert(columns(spark.table("consumption.parted")) == Seq("id" -> "long", "order_dt" -> "date"))
+    assert(spark.catalog.listColumns("consumption.parted").collect()
+      .filter(_.isPartition).map(_.name).toSeq == Seq("order_dt"))
+    assert(spark.table("consumption.parted").count() == 6L)
+    assert(spark.table("consumption.flat").count() == 6L)
+    assert(!TableSink.exists(spark, "consumption.no_rows"))
+    assert(!Files.exists(Paths.get(db, "no_rows")), "the schema-less dir was kept")
+    // appends land on an attached table, and recreate the removed one
+    TableSink.append(rows, "consumption.parted", Seq("order_dt"))
+    TableSink.append(rows, "consumption.no_rows", Seq("order_dt"))
+    assert(spark.table("consumption.parted").count() == 12L)
+    assert(spark.table("consumption.no_rows").count() == 6L)
+    resetWarehouse()
   }
 
   test("reference sample files: golden counts, and a re-run adds no dim rows") {

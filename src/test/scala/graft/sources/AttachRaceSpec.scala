@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
 
-import graft.SparkSpec
+import graft.{ForkedProbe, SparkSpec}
 
 /** The attachOrBuildFp-LAYER race (round-19 verdict #2): the primitive
   * race specs prove the one-winner election at [[DurableIndex.commit]];
@@ -38,8 +38,8 @@ class AttachRaceSpec extends SparkSpec {
 
     val outFiles = counts.indices.map(i => new java.io.File(work, s"child_$i.out"))
     val children = counts.zipWithIndex.map { case (n, i) =>
-      ForkedProbe.startToFile(Seq("attachLoop", work, dir, family,
-        i.toString, n.toString, rounds.toString, sync), outFiles(i))
+      ForkedProbe.startToFile("graft.sources.RaceProbe", Seq("attachLoop", work, dir,
+        family, i.toString, n.toString, rounds.toString, sync), outFiles(i))
     }
     val outs =
       try {

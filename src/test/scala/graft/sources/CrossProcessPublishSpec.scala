@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
 
-import graft.SparkSpec
+import graft.{ForkedProbe, SparkSpec}
 
 /** The TRUE two-process publisher race (round-16 verdict #4):
   * ConcurrentPublishSpec races threads and argues FS-level equivalence
@@ -38,10 +38,10 @@ class CrossProcessPublishSpec extends SparkSpec {
     // either build doubled is illegal by membership, not divisibility
     val counts = Seq(100L, 1000L)
 
-    val readerP = ForkedProbe.start(Seq("read", work, destName, stopFile,
-      counts.mkString(",")))
+    val readerP = ForkedProbe.start("graft.sources.RaceProbe",
+      Seq("read", work, destName, stopFile, counts.mkString(",")))
     val pubs = counts.zipWithIndex.map { case (n, i) =>
-      ForkedProbe.start(
+      ForkedProbe.start("graft.sources.RaceProbe",
         Seq("publish", work, destName, i.toString, n.toString, barrier))
     }
 

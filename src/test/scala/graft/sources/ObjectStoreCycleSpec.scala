@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.TimeUnit
 
-import graft.SparkSpec
+import graft.{ForkedProbe, SparkSpec}
 
 /** The durable-artifact lifecycle on an object store with no atomic
   * rename: a child JVM ([[RaceProbe]] storeCycle) whose warehouse lives
@@ -16,7 +16,7 @@ class ObjectStoreCycleSpec extends SparkSpec {
   test("attach, supersede, attachLatest and retire on an object store whose rename copies") {
     val work = tempDir("objstore_cycle").toString
     val out = new java.io.File(work, "child.out")
-    val child = ForkedProbe.startToFile(
+    val child = ForkedProbe.startToFile("graft.sources.RaceProbe",
       Seq("storeCycle", ObjectStoreFs.path(s"$work/wh")), out)
     try assert(child.waitFor(600, TimeUnit.SECONDS), "storeCycle JVM hung")
     finally child.destroyForcibly()

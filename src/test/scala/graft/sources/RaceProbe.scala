@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Child-process halves of the CROSS-PROCESS durable-artifact specs,
-  * launched only through [[ForkedProbe]]: ConcurrentPublishSpec races
+  * launched only through [[graft.ForkedProbe]]: ConcurrentPublishSpec races
   * threads over [[DurableIndex.commit]] and argues the exclusive create
   * sits below the JVM lock, so the interleaving equals two JVMs'. This
   * main makes the argument empirical — each invocation is a REAL
