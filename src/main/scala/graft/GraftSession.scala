@@ -41,6 +41,19 @@ object GraftSession {
   def initialPartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "512")
 
+  /** Run `body` with each `key -> value` set on the session's runtime
+    * conf, then restore each key's old value, or unset a key that had
+    * none. Stream drains scope their widths with it. */
+  def withConfs[T](spark: SparkSession, pairs: (String, String)*)(body: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Core count for local[N]: env override, capped at 32. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     math.min(Runtime.getRuntime.availableProcessors, 32).toString)

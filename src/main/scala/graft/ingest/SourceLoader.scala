@@ -7,7 +7,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Concurrently
-import graft.keys.SurrogateKeys
 import graft.model.{CountryConfig, Schemas}
 import graft.sinks.TableSink
 
@@ -26,10 +25,12 @@ import graft.sinks.TableSink
   *     (`"Price per Unit": "1527"`), `multiLine=true` for the outer array.
   *
   * All three normalize to the common 17-column source schema + 3 lineage
-  * columns (ref: 3. Source Tables.sql:29-98) + a dense `sales_order_key`
-  * sequence. Bad rows are tolerated, counted, and dropped
-  * (ON_ERROR=CONTINUE, ref: step_3:51,81,111) via PERMISSIVE read +
-  * null-key post-filter.
+  * columns (ref: 3. Source Tables.sql:29-98). Bad rows are tolerated,
+  * counted, and dropped (ON_ERROR=CONTINUE, ref: step_3:51,81,111) via
+  * PERMISSIVE read + null-key post-filter. [[loadAll]] writes the good
+  * rows through [[TableSink.appendKeyed]], the keyed write of every
+  * keyed table, which continues the dense `sales_order_key` sequence
+  * (`<seq>.nextval`, ref: step_3:27) and counts the rows it keyed.
   *
   * Lineage (ref: step_3:44-46 metadata$filename / file_row_number /
   * file_last_modified): Spark's `_metadata` struct supplies file name and
@@ -61,8 +62,9 @@ object SourceLoader {
     * readRaw's / loadCountry's `splitMinBytes` argument. */
   final val SplitMinBytes = 128L << 20
 
-  /** Result of one country's load: the appended row count and the number
-    * of malformed rows skipped (the COPY report, ref: step_3:148-153). */
+  /** Result of one country's load: the rows the keyed write appended and
+    * the number of malformed rows skipped (the COPY report, ref:
+    * step_3:148-153). */
   final case class LoadReport(country: String, loaded: Long, skipped: Long)
 
   /** Read one country's staged files into the raw 16-field shape (still
@@ -113,10 +115,10 @@ object SourceLoader {
 
   /** Normalize a raw frame to the typed common source shape (the Spark
     * equivalent of the reference's per-format cast lists, step_3:28-46,
-    * 58-76, 88-106), attach lineage + sequence, drop malformed rows. */
+    * 58-76, 88-106), attach lineage, drop malformed rows. Returns the
+    * good rows, unkeyed, and the count of rows skipped. */
   def loadCountry(spark: SparkSession, dataDir: String, cc: CountryConfig,
-      keyOffset: Long = 0L,
-      splitMinBytes: Long = SplitMinBytes): (DataFrame, LoadReport) = {
+      splitMinBytes: Long = SplitMinBytes): (DataFrame, Long) = {
     val raw0 = readRaw(spark, dataDir, cc, splitMinBytes)
     // split-route frames carry the record's absolute byte offset — a
     // deterministic within-file total order under ANY task placement;
@@ -163,21 +165,10 @@ object SourceLoader {
     // lost its key/date in casting is skipped, not fatal.
     val isBad = col(CorruptCol).isNotNull ||
       col("order_id").isNull || col("order_dt").isNull
-    val good = typed.filter(!isBad).drop(CorruptCol)
-
-    val keyed = SurrogateKeys.dense(
-      good,
-      Seq(col("_metadata_file_name"), col("_metadata_row_number")),
-      "sales_order_key", keyOffset)
-
-    // the COPY report's two counts in ONE job (separate good.count() +
-    // bad.count() actions re-read and RE-PARSE the raw text twice at
-    // 100 TB): a grouped count referencing only the flag columns, so
-    // Catalyst prunes the lineage row_number Window out of this job
-    val counts = typed.groupBy(isBad.as("bad")).count().collect()
-      .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-    (keyed, LoadReport(cc.code,
-      counts.getOrElse(false, 0L), counts.getOrElse(true, 0L)))
+    // one count job referencing only the flag columns, so Catalyst
+    // prunes the lineage row_number Window out of it; the loaded count
+    // comes with the keys, out of the write's own job
+    (typed.filter(!isBad).drop(CorruptCol), typed.filter(isBad).count())
   }
 
   /** Load all three countries into source.<cc>_sales_order tables,
@@ -185,11 +176,11 @@ object SourceLoader {
     * Precondition: the databases exist. */
   def loadAll(spark: SparkSession, dataDir: String): Seq[LoadReport] =
     Concurrently.all(CountryConfig.all.map { cc => () =>
-      val table = s"source.${cc.code.toLowerCase}_sales_order"
-      val (df, report) = loadCountry(spark, dataDir, cc,
-        TableSink.maxKey(spark, table, "sales_order_key"))
-      TableSink.append(df, table)
-      report
+      val (good, skipped) = loadCountry(spark, dataDir, cc)
+      val loaded = TableSink.appendKeyed(spark,
+        s"source.${cc.code.toLowerCase}_sales_order", "sales_order_key", good,
+        Seq("_metadata_file_name", "_metadata_row_number"))
+      LoadReport(cc.code, loaded, skipped)
     })
 
   /** Forex rates: all seven columns loaded from exchange-rate-data.csv

@@ -29,8 +29,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * The result is dense (offset+1 .. offset+N, no gaps), deterministic for
   * a total order, and append-safe: pass `offset = current max(key)` to
   * continue a sequence, mirroring warehouse `nextval` semantics across
-  * incremental loads ([[graft.sinks.TableSink.appendKeyed]] does). The
-  * key is the first column, ahead of the input's. This is the genuine
+  * incremental loads. [[graft.sinks.TableSink.appendKeyed]] does, and it
+  * is the one caller that writes: all ten keyed medallion tables (three
+  * source, six dims, the fact) are keyed there. The key is the first
+  * column, ahead of the input's. This is the genuine
   * per-partition imperative case where dropping to the RDD layer is the
   * right Spark idiom.
   */

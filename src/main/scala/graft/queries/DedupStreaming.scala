@@ -27,12 +27,8 @@ trait DedupStreaming { self: DedupQueries.type =>
     * width 4 -> 162s at 16 (-30%), warm drop cache both runs. Vector /
     * event / sketch drains keep the flat default: their batches don't
     * amplify (q126 measured NO gain from widening). */
-  private[queries] def textStreamWidth(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, "documents.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    math.max(4L, math.min(32L, bytes / (4L << 20))).toString
-  }
+  private[queries] def textStreamWidth(s: SparkSession, dir: String): String =
+    math.max(4L, math.min(32L, corpusBytes(s, dir) / (4L << 20))).toString
 
   /** Stream-drain session confs, saved/restored around a drain:
     * micro-batches are drop-sized, so full-width shuffles are pure
@@ -43,7 +39,7 @@ trait DedupStreaming { self: DedupQueries.type =>
     * exactly its own partition. The stream's cloned session inherits
     * both at start. */
   private[queries] def withStreamConfs[T](s: SparkSession,
-      width: String = graft.GraftSession.StreamPartitions)(body: => T): T = {
+      width: String = graft.GraftSession.StreamPartitions)(body: => T): T =
     // AQE's initial width must be pinned alongside shuffle.partitions:
     // foreachBatch bodies are BATCH plans (AQE on — only the streaming
     // source plan disables it), so the session's wide scale-out default
@@ -52,24 +48,10 @@ trait DedupStreaming { self: DedupQueries.type =>
     // + AQE stats overhead in every micro-batch — measured 3.4x on
     // q123's drain. Drop-sized batches want drop-sized widths. The key
     // is GraftSession's constant so the three sites can't drift.
-    val initKey = graft.GraftSession.InitialPartitionsKey
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    val oldInit = s.conf.getOption(initKey)
-    val oldMode = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.shuffle.partitions", width)
-    s.conf.set(initKey, width)
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", oldParts)
-      oldInit match {
-        case Some(v) => s.conf.set(initKey, v)
-        case None => s.conf.unset(initKey)
-      }
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", oldMode)
-    }
-  }
-
+    graft.GraftSession.withConfs(s,
+      "spark.sql.shuffle.partitions" -> width,
+      graft.GraftSession.InitialPartitionsKey -> width,
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(body)
 
   private[graft] def rmQuietly(dirs: String*): Unit = dirs.foreach(d =>
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)): Unit)

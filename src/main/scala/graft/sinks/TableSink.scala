@@ -14,9 +14,10 @@ import graft.keys.SurrogateKeys
   * 2. Database and Schema.sql:8-12), and the only store of their
   * metadata: [[ensureDatabases]] re-attaches them. Appends go through
   * `saveAsTable(mode=append)` (ref: step_4:167-169, step_5:585-587);
-  * a keyed consumption table's through [[appendKeyed]], which continues
-  * its sequence (`<seq>.nextval`, ref: 8. Consumption Layer.sql:9-83)
-  * and keeps the reference's count guard (ref: step_5:51-67).
+  * all ten keyed tables' (the three source tables, the six dims and the
+  * fact) through [[appendKeyed]], which continues the table's sequence
+  * (`<seq>.nextval`, ref: step_3:27, 8. Consumption Layer.sql:9-83) and
+  * keeps the reference's count guard (ref: step_5:51-67).
   */
 object TableSink {
 
@@ -60,7 +61,7 @@ object TableSink {
 
   /** The largest `pkCol` in `table` — the offset its next keyed rows
     * continue from; 0 before the table exists. */
-  def maxKey(spark: SparkSession, table: String, pkCol: String): Long =
+  private def maxKey(spark: SparkSession, table: String, pkCol: String): Long =
     if (exists(spark, table))
       spark.table(table).agg(coalesce(max(col(pkCol)), lit(0L))).first().getLong(0)
     else 0L

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.GraftSession
+import graft.GraftSession.withConfs
 import graft.queries.{DedupQueries, JvmScratch}
 import graft.sources.Tables
 
@@ -24,6 +26,17 @@ case class SessionRow(user_id: Long, session_start: java.sql.Timestamp,
   * arriving-file or Kafka source; only the trigger changes.
   */
 object StreamingOps {
+
+  /** Stateful-query partition sizing shared by every stateful stream
+    * here: shuffle partitions beyond the state volume are pure
+    * per-micro-batch state-store commit overhead (measured 72s -> 31s
+    * at sf0.1 going 32 -> 4 on the interval join). The width is the
+    * drains' shared [[GraftSession.StreamPartitions]]; unlike
+    * `DedupQueries.withStreamConfs` this sets no AQE width and no
+    * overwrite mode: these drains append, they never rewrite a
+    * batch_id partition. */
+  private val StreamWidth =
+    "spark.sql.shuffle.partitions" -> GraftSession.StreamPartitions
 
   /** Bounded file stream over `events.parquet`, ts normalized to an
     * ms-truncated TimestampType exactly as the batch loader does.
@@ -76,42 +89,6 @@ object StreamingOps {
         java.nio.file.Files.copy(p, stageDir.resolve(f"events_$i%05d.parquet"),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
-
-  /** Hourly tumbling-window counts per event type via readStream +
-    * watermark + windowed groupBy, in the shape that survives CONTINUOUS
-    * operation (round-3 verdict: the old Complete-mode memory sink
-    * re-emits the whole result each trigger and lives on the driver —
-    * fine for a bounded drain, wrong at scale):
-    *
-    *   - Append output mode: each window row is emitted exactly once,
-    *     when the watermark closes it, and its state is evicted;
-    *   - foreachBatch -> managed-table append: the sink grows on disk,
-    *     not in driver memory, and restarts resume from the checkpoint.
-    *
-    * Append mode meets one bounded-drain reality: the watermark only
-    * advances on arriving data, so the trailing windows are still open
-    * when the source drains and would never emit. A live stream closes
-    * them when later events arrive — so the drain does exactly that:
-    * after the first run, a sentinel event 3h past max(ts) lands in the
-    * source directory and the SAME checkpointed query restarts, which
-    * pushes the watermark past every real window and flushes them. The
-    * sentinel's own window stays open forever and is never emitted, so
-    * the table equals the batch aggregate exactly. */
-  /** Stateful-query partition sizing shared by every stateful stream
-    * here: shuffle partitions beyond the state volume are pure
-    * per-micro-batch state-store commit overhead (measured 72s -> 31s
-    * at sf0.1 going 32 -> 4 on the interval join). The width is the
-    * drains' shared [[graft.GraftSession.StreamPartitions]]; unlike
-    * `DedupQueries.withStreamConfs` this sets no AQE width and no
-    * overwrite mode: these drains append, they never rewrite a
-    * batch_id partition. */
-  private def withStreamPartitions[T](spark: SparkSession)(f: => T): T = {
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.GraftSession.StreamPartitions)
-    try f
-    finally spark.conf.set("spark.sql.shuffle.partitions", oldParts)
-  }
 
   /** Fresh private staging dir holding a copy of events.parquet: q34
     * and q36 append a sentinel to it, which the shared cached stage of
@@ -183,31 +160,49 @@ object StreamingOps {
     try drainToTable(df, ckpt, table) finally DedupQueries.rmQuietly(ckpt)
   }
 
+  /** Hourly tumbling-window counts per event type via readStream +
+    * watermark + windowed groupBy, in the shape that survives CONTINUOUS
+    * operation (round-3 verdict: the old Complete-mode memory sink
+    * re-emits the whole result each trigger and lives on the driver —
+    * fine for a bounded drain, wrong at scale):
+    *
+    *   - Append output mode: each window row is emitted exactly once,
+    *     when the watermark closes it, and its state is evicted;
+    *   - foreachBatch -> managed-table append: the sink grows on disk,
+    *     not in driver memory, and restarts resume from the checkpoint.
+    *
+    * Append mode meets one bounded-drain reality: the watermark only
+    * advances on arriving data, so the trailing windows are still open
+    * when the source drains and would never emit. A live stream closes
+    * them when later events arrive — so the drain does exactly that:
+    * after the first run, a sentinel event 3h past max(ts) lands in the
+    * source directory and the SAME checkpointed query restarts, which
+    * pushes the watermark past every real window and flushes them. The
+    * sentinel's own window stays open forever and is never emitted, so
+    * the table equals the batch aggregate exactly. */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) { hourlyCountsInner(spark, dir) }
+    withConfs(spark, StreamWidth) {
+      val table = freshTable(spark, "stream_hourly")
+      val stageDir = stageEventsFresh(dir, "q34")
+      val ckpt = JvmScratch.dir("q34_ckpt")
+      try {
+        val rawSchema = spark.read.parquet(stageDir).schema
+        val agg = Tables.normalizeEventTs(
+            spark.readStream.schema(rawSchema).parquet(stageDir))
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
+          .select(col("window.start").as("window_start"), col("event_type"),
+            col("n"), col("total_value"))
 
-  private def hourlyCountsInner(spark: SparkSession, dir: String): DataFrame = {
-    val table = freshTable(spark, "stream_hourly")
-    val stageDir = stageEventsFresh(dir, "q34")
-    val ckpt = JvmScratch.dir("q34_ckpt")
-    try {
-      val rawSchema = spark.read.parquet(stageDir).schema
-      val agg = Tables.normalizeEventTs(
-          spark.readStream.schema(rawSchema).parquet(stageDir))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n"), col("total_value"))
+        drainToTable(agg, ckpt, table) // emits every window the data closed
+        writeSentinel(spark, stageDir, Map("event_type" -> lit("graft_sentinel")))
+        drainToTable(agg, ckpt, table) // watermark jumps -> trailing flush
+      } finally DedupQueries.rmQuietly(stageDir, ckpt)
 
-      drainToTable(agg, ckpt, table) // emits every window the data closed
-      writeSentinel(spark, stageDir, Map("event_type" -> lit("graft_sentinel")))
-      drainToTable(agg, ckpt, table) // watermark jumps -> trailing flush
-    } finally DedupQueries.rmQuietly(stageDir, ckpt)
-
-    spark.table(table).filter(col("event_type") =!= "graft_sentinel")
-  }
+      spark.table(table).filter(col("event_type") =!= "graft_sentinel")
+    }
 
   /** Stream-static enrichment join: each micro-batch of the event stream
     * joins a STATIC dimension table (nation, keyed by user_id % 25) —
@@ -220,7 +215,7 @@ object StreamingOps {
     * enriched table is aggregated in batch and equals the pure-batch
     * join oracle regardless of how the source was micro-batched. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) {
+    withConfs(spark, StreamWidth) {
       val table = freshTable(spark, "stream_dim")
       val dim = Tables.nation(spark, dir)
         .select(col("n_nationkey").cast("long").as("nk"), col("n_name"))
@@ -244,38 +239,36 @@ object StreamingOps {
   def attributionJoin(spark: SparkSession, dir: String): DataFrame =
     // shuffle partitions = state-store count, and an interval join
     // commits FOUR stores per partition per micro-batch
-    withStreamPartitions(spark) { attributionJoinInner(spark, dir) }
+    withConfs(spark, StreamWidth) {
+      val e = eventStream(spark, dir)
+        .select(col("event_id"), col("user_id"),
+          date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
+          col("event_id").as("click_id"))
+        .withWatermark("click_ts", "1 hour")
+      val buys = e.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("b_user"), col("ts").as("buy_ts"),
+          col("event_id").as("buy_id"))
+        .withWatermark("buy_ts", "1 hour")
 
-  private def attributionJoinInner(spark: SparkSession, dir: String): DataFrame = {
-    val e = eventStream(spark, dir)
-      .select(col("event_id"), col("user_id"),
-        date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val buys = e.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("b_user"), col("ts").as("buy_ts"),
-        col("event_id").as("buy_id"))
-      .withWatermark("buy_ts", "1 hour")
+      val joined = clicks.join(buys, expr(
+        """c_user = b_user AND
+          |buy_ts >= click_ts AND
+          |buy_ts <= click_ts + interval 30 minutes""".stripMargin))
+        .select(col("c_user").as("user_id"), col("click_id"), col("buy_id"),
+          col("click_ts"), col("buy_ts"))
 
-    val joined = clicks.join(buys, expr(
-      """c_user = b_user AND
-        |buy_ts >= click_ts AND
-        |buy_ts <= click_ts + interval 30 minutes""".stripMargin))
-      .select(col("c_user").as("user_id"), col("click_id"), col("buy_id"),
-        col("click_ts"), col("buy_ts"))
-
-    // Checkpointed foreachBatch append to a managed table (q34 shape):
-    // the sink grows on disk, not in driver memory, and a restart resumes
-    // from the checkpoint — the form that survives unbounded operation.
-    // No sentinel restart is needed: an inner stream-stream join emits
-    // each match as soon as both sides arrive (the watermark only gates
-    // STATE EVICTION), so the single AvailableNow drain emits every match.
-    val table = freshTable(spark, "stream_attr")
-    drainFresh(joined, "q47", table)
-    spark.table(table)
-  }
+      // Checkpointed foreachBatch append to a managed table (q34 shape):
+      // the sink grows on disk, not in driver memory, and a restart resumes
+      // from the checkpoint — the form that survives unbounded operation.
+      // No sentinel restart is needed: an inner stream-stream join emits
+      // each match as soon as both sides arrive (the watermark only gates
+      // STATE EVICTION), so the single AvailableNow drain emits every match.
+      val table = freshTable(spark, "stream_attr")
+      drainFresh(joined, "q47", table)
+      spark.table(table)
+    }
 
   /** Streaming deduplication: dropDuplicates on the (user_id,
     * event_type) key over the bounded drain — emits exactly the distinct
@@ -284,22 +277,20 @@ object StreamingOps {
     * batch DISTINCT). At scale the same call takes a watermark so the
     * key state is evictable. */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) { streamingDedupInner(spark, dir) }
+    withConfs(spark, StreamWidth) {
+      val dedup = eventStream(spark, dir)
+        .select(col("user_id"), col("event_type"))
+        .dropDuplicates("user_id", "event_type")
 
-  private def streamingDedupInner(spark: SparkSession, dir: String): DataFrame = {
-    val dedup = eventStream(spark, dir)
-      .select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-
-    // Checkpointed foreachBatch append to a managed table (q34 shape).
-    // dropDuplicates emits a key the first time it appears, so the single
-    // AvailableNow drain emits the complete distinct key set — no
-    // sentinel restart needed (the keep-all state, evictable only with a
-    // watermark, is the documented at-scale caveat above).
-    val table = freshTable(spark, "stream_dedup")
-    drainFresh(dedup, "q48", table)
-    spark.table(table)
-  }
+      // Checkpointed foreachBatch append to a managed table (q34 shape).
+      // dropDuplicates emits a key the first time it appears, so the single
+      // AvailableNow drain emits the complete distinct key set — no
+      // sentinel restart needed (the keep-all state, evictable only with a
+      // watermark, is the documented at-scale caveat above).
+      val table = freshTable(spark, "stream_dedup")
+      drainFresh(dedup, "q48", table)
+      spark.table(table)
+    }
 
   /** Streaming ELT through foreachBatch (SURVEY §2.9's named upgrade
     * path): each micro-batch runs the SAME batch transform and appends
@@ -349,59 +340,57 @@ object StreamingOps {
     *     bounded drain (a live stream's later data does this for free).
     */
   def sessionize(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) { sessionizeInner(spark, dir) }
-
-  private def sessionizeInner(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val table = freshTable(spark, "stream_sessions")
-    val stageDir = stageEventsFresh(dir, "q36")
-    val ckpt = JvmScratch.dir("q36_ckpt")
-    val gapMs = 30L * 60 * 1000
-    try {
-      val rawSchema = spark.read.parquet(stageDir).schema
-      // ms truncation: the parquet timestamps carry nanoseconds, which
-      // Spark truncates to microseconds while the DuckDB oracle keeps —
-      // session boundaries must come from a precision both engines share.
-      val sessions = Tables.normalizeEventTs(
-          spark.readStream.schema(rawSchema).parquet(stageDir))
-        .select(col("user_id"),
-          date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
-        .withWatermark("ts", "1 hour")
-        .as[Ev]
-        .groupByKey(_.user_id)
-        .flatMapGroupsWithState[SessionRow, SessionRow](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-          (uid: Long, evs: Iterator[Ev], state: GroupState[SessionRow]) =>
-            if (state.hasTimedOut) {
-              // watermark passed the open session's close boundary: flush
-              val out = state.getOption.iterator.toList
-              state.remove()
-              out.iterator
-            } else {
-              val sorted = evs.toList.sortBy(e => (e.ts.getTime, e.event_type))
-              val out = scala.collection.mutable.ListBuffer[SessionRow]()
-              var cur = state.getOption.orNull
-              sorted.foreach { e =>
-                if (cur == null) cur = SessionRow(uid, e.ts, e.ts, 1L)
-                else if (e.ts.getTime - cur.session_end.getTime <= gapMs)
-                  cur = cur.copy(
-                    session_end =
-                      if (e.ts.getTime > cur.session_end.getTime) e.ts
-                      else cur.session_end,
-                    n_events = cur.n_events + 1)
-                else { out += cur; cur = SessionRow(uid, e.ts, e.ts, 1L) }
+    withConfs(spark, StreamWidth) {
+      import spark.implicits._
+      val table = freshTable(spark, "stream_sessions")
+      val stageDir = stageEventsFresh(dir, "q36")
+      val ckpt = JvmScratch.dir("q36_ckpt")
+      val gapMs = 30L * 60 * 1000
+      try {
+        val rawSchema = spark.read.parquet(stageDir).schema
+        // ms truncation: the parquet timestamps carry nanoseconds, which
+        // Spark truncates to microseconds while the DuckDB oracle keeps —
+        // session boundaries must come from a precision both engines share.
+        val sessions = Tables.normalizeEventTs(
+            spark.readStream.schema(rawSchema).parquet(stageDir))
+          .select(col("user_id"),
+            date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
+          .withWatermark("ts", "1 hour")
+          .as[Ev]
+          .groupByKey(_.user_id)
+          .flatMapGroupsWithState[SessionRow, SessionRow](
+            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+            (uid: Long, evs: Iterator[Ev], state: GroupState[SessionRow]) =>
+              if (state.hasTimedOut) {
+                // watermark passed the open session's close boundary: flush
+                val out = state.getOption.iterator.toList
+                state.remove()
+                out.iterator
+              } else {
+                val sorted = evs.toList.sortBy(e => (e.ts.getTime, e.event_type))
+                val out = scala.collection.mutable.ListBuffer[SessionRow]()
+                var cur = state.getOption.orNull
+                sorted.foreach { e =>
+                  if (cur == null) cur = SessionRow(uid, e.ts, e.ts, 1L)
+                  else if (e.ts.getTime - cur.session_end.getTime <= gapMs)
+                    cur = cur.copy(
+                      session_end =
+                        if (e.ts.getTime > cur.session_end.getTime) e.ts
+                        else cur.session_end,
+                      n_events = cur.n_events + 1)
+                  else { out += cur; cur = SessionRow(uid, e.ts, e.ts, 1L) }
+                }
+                state.update(cur)
+                state.setTimeoutTimestamp(cur.session_end.getTime + gapMs + 1)
+                out.iterator
               }
-              state.update(cur)
-              state.setTimeoutTimestamp(cur.session_end.getTime + gapMs + 1)
-              out.iterator
-            }
-        }
+          }
 
-      drainToTable(sessions.toDF(), ckpt, table) // sessions closed by data
-      writeSentinel(spark, stageDir, Map("user_id" -> lit(-1L)))
-      drainToTable(sessions.toDF(), ckpt, table) // timeouts fire -> flush
-    } finally DedupQueries.rmQuietly(stageDir, ckpt)
+        drainToTable(sessions.toDF(), ckpt, table) // sessions closed by data
+        writeSentinel(spark, stageDir, Map("user_id" -> lit(-1L)))
+        drainToTable(sessions.toDF(), ckpt, table) // timeouts fire -> flush
+      } finally DedupQueries.rmQuietly(stageDir, ckpt)
 
-    spark.table(table).filter(col("user_id") =!= -1L)
-  }
+      spark.table(table).filter(col("user_id") =!= -1L)
+    }
 }

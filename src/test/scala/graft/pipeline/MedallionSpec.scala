@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 
 import graft.{ForkedProbe, MedallionFixture => Fx, SparkSpec}
 import graft.consume.{DateDimBuilder, DimBuilder, FactBuilder}
-import graft.model.CountryConfig
+import graft.ingest.SourceLoader
+import graft.model.{CountryConfig, Schemas}
 import graft.sinks.TableSink
 
 /** End-to-end test of the medallion pipeline (SURVEY.md §5 item 2):
@@ -246,6 +247,64 @@ class MedallionSpec extends SparkSpec {
     assert(written.isEmpty, s"a zero-row delta wrote a data file into $written")
   }
 
+  /** Rows per country in [[malformedDrop]]. */
+  private val MalformedRows = 6L
+
+  /** A drop in the reference layout whose every row is malformed: one
+    * file per country of [[MalformedRows]] rows, each with a date that
+    * does not exist, every other one with no order id as well. */
+  private def malformedDrop(): String = {
+    val root = tempDir("medallion_malformed")
+    CountryConfig.all.foreach { cc =>
+      val fields = Schemas.rawFieldNames.map {
+        case "Tax" => cc.taxField
+        case "Contact" => cc.contactField
+        case f => f
+      }
+      val rows = spark.range(MalformedRows).select(fields.map {
+        case f @ "Order ID" =>
+          when(col("id") % 2 === 0, lit(null: String)).otherwise(col("id").cast("string")).as(f)
+        case f @ "Order Date" => lit("2020-02-30").as(f)
+        case f => lit("1").as(f)
+      }: _*).coalesce(1)
+      val dir = root.resolve(s"sales/source=${cc.code}/format=${cc.format}/date=2020-02-30")
+      cc.format match {
+        case "csv" => rows.write.option("header", true).csv(dir.toString)
+        case "parquet" => rows.write.parquet(dir.toString)
+        case _ =>
+          Files.createDirectories(dir)
+          Files.writeString(dir.resolve("order-20200230.json"),
+            rows.toJSON.collect().mkString("[\n", ",\n", "\n]\n"))
+      }
+    }
+    root.toString
+  }
+
+  test("a drop of only malformed rows loads nothing, writes no source file, and the keys continue") {
+    report
+    val sources = codes.map(cc => s"source.${cc.toLowerCase}_sales_order")
+    def files(t: String): Set[String] = spark.table(t).inputFiles.toSet
+    val filesBefore = sources.map(t => t -> files(t)).toMap
+    val rowsBefore = sources.map(t => t -> spark.table(t).count()).toMap
+    SourceLoader.loadAll(spark, malformedDrop()).foreach { r =>
+      assert(r.loaded == 0L && r.skipped == MalformedRows, r)
+    }
+    // the count guard of the keyed write: zero rows append nothing
+    val written = sources.filter(t => files(t) != filesBefore(t))
+    assert(written.isEmpty, s"a zero-row load wrote a data file into $written")
+    // the next good drop continues each sequence densely
+    val next = SourceLoader.loadAll(spark, Fx.incr).map(r => r.country -> r.loaded).toMap
+    codes.zip(sources).foreach { case (cc, t) =>
+      assert(next(cc) == Fx.count(s"/incr/source/$cc/loaded"), cc)
+      val n = spark.table(t).count()
+      assert(n == rowsBefore(t) + next(cc), t)
+      val keys = spark.table(t).agg(min("sales_order_key"), max("sales_order_key"),
+        countDistinct("sales_order_key")).first()
+      assert(keys.getLong(0) == 1L && keys.getLong(1) == n && keys.getLong(2) == n,
+        s"$t: keys not dense 1..$n after a zero-row load: $keys")
+    }
+  }
+
   private def contents(df: DataFrame): (Seq[(String, String)], Seq[String]) =
     (columns(df), df.collect().map(_.toString).sorted.toSeq)
 
@@ -302,14 +361,12 @@ class MedallionSpec extends SparkSpec {
       assertReport(drop, lines.head)
       val loaded = Files.readAllLines(classLog).asScala
       assert(loaded.exists(_.contains("graft.pipeline.MedallionJob")), s"$drop: empty class log")
-      // any session on this classpath loads a few hive-exec classes (log4j
-      // plugins, Hadoop file systems, the `hive` file format); Hive support
-      // adds its catalog, HiveConf, the metastore client and derby
-      val hive = loaded.filter(l => Seq("org.apache.spark.sql.hive.Hive",
-        "org.apache.spark.sql.hive.client.", "org.apache.hadoop.hive.conf.",
-        "org.apache.hadoop.hive.metastore.", "org.apache.hadoop.hive.ql.session.",
-        "org.apache.derby.").exists(p => l.contains(s"] $p")))
-      assert(hive.isEmpty, s"$drop loaded ${hive.size} Hive catalog classes: ${hive.take(3)}")
+      // the build keeps Hive, derby and datanucleus off the classpath; the
+      // one Hive jar left is hive-storage-api, which Spark's ORC reader uses
+      val hive = loaded.filter(l => Seq("org.apache.hadoop.hive.", "org.apache.hive.",
+          "org.apache.spark.sql.hive.", "org.apache.derby.", "org.datanucleus.")
+        .exists(p => l.contains(s"] $p")) && !l.contains("hive-storage-api-"))
+      assert(hive.isEmpty, s"$drop loaded ${hive.size} Hive classes: ${hive.take(3)}")
     }
     assert(!Files.exists(Paths.get(wh, "_metastore")))
     // the children's warehouse, read back from its files alone
