@@ -134,27 +134,23 @@ trait DedupSimhash { self: DedupQueries.type =>
 
   /** q129's body: q105's drain shape (3 file drops, checkpointed
     * AvailableNow, maxFilesPerTrigger=1, batch_id-partitioned dynamic-
-    * overwrite sink, chaos/scratch/resume test hooks) with the per-
+    * overwrite sink, the `replay` hooks) with the per-
     * micro-batch work swapped for the SimHash probe. Per-batch matches
     * are globally exact because the index is static corpus-side and
     * the drops partition the delta — each arriving doc is fingerprinted
     * and scored in exactly one batch. */
   private[graft] def streamSimhashDedup(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): DataFrame = {
+      replay: Replay = Replay.Off): DataFrame = {
     // force-build the fingerprint index on THIS session before the
     // stream starts (micro-batches run on a clone sharing the catalog)
     simhashIndexTable(s, dir)
+    val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
     val table = JvmScratch.tableName("stream_simhash_dedup")
-    drainDrops(s, "q129", chaos, scratch, resume, table,
-        width = DedupQueries.textStreamWidth(s, dir)) { srcDir =>
-      val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
-      stageDropsCached(s, dir, "q129", "documents.parquet", srcDir, 3)(
-        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_simhash_dedup")
-      createBatchSink(s, table, Seq(
-        "delta_id" -> "bigint", "corpus_id" -> "bigint", "hamming" -> "bigint"))
+    drainDrops(s, dir, "q129", "documents.parquet", replay,
+        sinks = Seq(table -> Seq(
+          "delta_id" -> "bigint", "corpus_id" -> "bigint", "hamming" -> "bigint")),
+        width = textStreamWidth(s, dir)) {
+      i => delta.filter(pmod(col("doc_id"), lit(3)) === i)
     } { (batch, batchId) =>
       writeBatch(simhashMatches(batch.sparkSession, dir, batch), batchId, table)
     } {

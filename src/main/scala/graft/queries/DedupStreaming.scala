@@ -7,6 +7,29 @@ import graft.Concurrently
 import graft.functions.CrossEngine._
 import graft.sources.Tables
 
+/** The replay hooks of a [[DedupQueries.drainDrops]] drain
+  * (StreamReplaySpec). A crashing and a resuming run both pin the
+  * `(source, checkpoint)` dirs, so a resume continues the checkpoint a
+  * crash left; the default, [[Replay.Off]], does neither. */
+private[graft] sealed abstract class Replay(
+    val pinned: Option[(String, String)], val chaos: Long => Unit)
+
+private[graft] object Replay {
+  /** Fresh `tag`-named dirs, deleted after the drain. */
+  case object Off extends Replay(None, _ => ())
+
+  /** Stage into the pinned dirs and keep them. `hook` runs after each
+    * batch's writes but BEFORE its checkpoint commits: throwing from it
+    * simulates a crash that forces an at-least-once replay of that
+    * batch on the next drain. */
+  final case class Crash(dirs: (String, String), hook: Long => Unit)
+      extends Replay(Some(dirs), hook)
+
+  /** Re-drain whatever a crashed run's pinned dirs left uncommitted:
+    * no staging, no table resets, no pre-stream artifacts. */
+  final case class Resume(dirs: (String, String)) extends Replay(Some(dirs), _ => ())
+}
+
 /** Streaming drains + their fixed-cost toolkit (drop cache, stream confs, sinks, compaction) and the family's size gates (q105/q107/q113/q114/q116/q134...).
   *
   * Pure round-16 refactor: split out of the 3,300-line DedupQueries.scala
@@ -67,6 +90,8 @@ trait DedupStreaming { self: DedupQueries.type =>
     * files. The per-invocation mtimes stay EXPLICIT and strictly
     * increasing — FileStreamSource orders by (mtime, path), and the
     * order-dependent drains (q107/q134) need it deterministic.
+    * [[drainDrops]] is the one production caller: family = the drain's
+    * tag, n = [[DropCount]]; DropCacheSpec stages 1 and 2 drops.
     *
     * The cache key is (family, dir tag, corpus fp, SLICE-PLAN fp):
     * the last component hashes the canonicalized analyzed plans of
@@ -163,40 +188,46 @@ trait DedupStreaming { self: DedupQueries.type =>
 
   /** The staged-drop drain every file-drop query runs (q105 q107 q113
     * q114 q116 q121 q123 q126 q129 q133 q134 q139 q141 q144 q151
-    * q160). The arriving rows land as parquet file drops in a source
-    * dir; a checkpointed AvailableNow query with maxFilesPerTrigger=1
-    * consumes one drop per micro-batch, in (mtime, path) order, under
-    * [[withStreamConfs]] at `width`. Each micro-batch runs `perBatch`,
-    * which writes its own batch_id partition of every sink
-    * ([[writeBatch]]). After the drain, `sink` is refreshed on this
-    * session (the writes ran on the stream's cloned session) and
-    * `fold` builds the result.
+    * q160), declared whole: its source (`srcFile`, and `slice` i of it
+    * for drop i), its scratch `tables` and batch `sinks` (name, data
+    * columns), its `width` and `schema` source, its pre-stream
+    * `artifacts`, its `perBatch` body and its `fold`.
     *
-    * Replay contract (StreamReplaySpec): `chaos` runs after each
-    * batch's writes but BEFORE its checkpoint commits — throwing from
-    * it simulates a crash that forces an at-least-once replay of that
-    * batch on the next drain. `scratch` pins the (source, checkpoint)
-    * dirs so a test can resume the same checkpoint; `resume = true`
-    * skips `stage` (drops, sink resets and DDL, pre-stream artifacts)
-    * and re-drains whatever the checkpoint left uncommitted.
-    * Production invocations (scratch = None) get fresh `tag`-named
-    * dirs, deleted in the finally — repeated bench iterations
-    * accumulate nothing. `schema` defaults to the staged drops' own
-    * (one inference read); a caller that holds the source relation
-    * passes its schema and skips that job. */
-  private[queries] def drainDrops(s: SparkSession, tag: String,
-      chaos: Long => Unit, scratch: Option[(String, String)],
-      resume: Boolean, sink: String,
+    * Unless resuming, it stages [[DropCount]] drops through
+    * [[stageDropsCached]] (family = `tag`), resets every scratch table
+    * (sinks included), creates the sinks ([[createBatchSink]]) and then
+    * builds `artifacts`. A checkpointed AvailableNow query with
+    * maxFilesPerTrigger=1 consumes one drop per micro-batch, in (mtime,
+    * path) order, under [[withStreamConfs]] at `width`; `perBatch`
+    * writes its own batch_id partition of every sink ([[writeBatch]]).
+    * Then every scratch table is refreshed on this session (the writes
+    * ran on the stream's clone) and `fold` builds the result. With the
+    * default `replay` the (source, checkpoint) dirs are fresh and
+    * deleted in the finally, so bench iterations accumulate nothing.
+    * `schema` defaults to the staged drops' own (one inference read). */
+  private[queries] def drainDrops(s: SparkSession, dir: String, tag: String,
+      srcFile: String, replay: Replay,
+      sinks: Seq[(String, Seq[(String, String)])],
+      tables: Seq[String] = Nil,
       width: => String = graft.GraftSession.StreamPartitions,
-      schema: => Option[org.apache.spark.sql.types.StructType] = None)
-      (stage: String => Unit)
+      schema: => Option[org.apache.spark.sql.types.StructType] = None,
+      artifacts: => Unit = ())
+      (slice: Int => DataFrame)
       (perBatch: (DataFrame, Long) => Unit)
       (fold: => DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val (srcDir, ckpt) = scratch.getOrElse(
+    val (srcDir, ckpt) = replay.pinned.getOrElse(
       (JvmScratch.dir(s"${tag}_src"), JvmScratch.dir(s"${tag}_ckpt")))
+    val scratch = tables ++ sinks.map(_._1)
     try {
-      if (!resume) stage(srcDir)
+      replay match {
+        case _: Replay.Resume => ()
+        case _ =>
+          stageDropsCached(s, dir, tag, srcFile, srcDir, DropCount)(slice)
+          scratch.foreach(JvmScratch.resetTable(s, _))
+          sinks.foreach { case (t, cols) => createBatchSink(s, t, cols) }
+          artifacts
+      }
       val srcSchema = schema.getOrElse(s.read.parquet(srcDir).schema)
       withStreamConfs(s, width) {
         s.readStream.schema(srcSchema)
@@ -205,16 +236,19 @@ trait DedupStreaming { self: DedupQueries.type =>
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             perBatch(batch, batchId)
-            chaos(batchId)
+            replay.chaos(batchId)
           }
           .trigger(Trigger.AvailableNow())
           .start()
           .awaitTermination()
       }
-      s.catalog.refreshTable(sink)
+      scratch.foreach(s.catalog.refreshTable)
       fold
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    } finally if (replay.pinned.isEmpty) rmQuietly(srcDir, ckpt)
   }
+
+  /** Drops per staged-drop drain: one micro-batch each. */
+  private[queries] final val DropCount = 3
 
   /** q151's body: the q143 retraction LIVE — a takedown FEED (DMCA
     * notices, licensing pulls) drained as 3 ordered drops of delete
@@ -229,24 +263,20 @@ trait DedupStreaming { self: DedupQueries.type =>
     * union of shards — sound because deletions COMMUTE and FOLD:
     * retract(retract(S, D1), D2) == retract(S, D1 ∪ D2), both equal
     * the rebuild over corpus-minus-all (RetractionSpec proves the
-    * sequential form). == batch q143, verbatim oracle. Test hooks as
-    * in [[drainDrops]]. */
+    * sequential form). == batch q143, verbatim oracle. `replay` as in
+    * [[drainDrops]]. */
   private[graft] def streamRetraction(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): DataFrame = {
+      replay: Replay = Replay.Off): DataFrame = {
     val docs = Tables.documents(s, dir)
     // the standing artifacts exist before a takedown stream starts
     bandIndexTable(s, dir)
     pairIndexTable(s, dir)
     ccIndexTable(s, dir)
+    val dels = docs.filter(col("doc_id") % 10 === 3).select("doc_id")
     val logTable = JvmScratch.tableName("stream_delete_log")
-    drainDrops(s, "q151", chaos, scratch, resume, logTable) { srcDir =>
-      val dels = docs.filter(col("doc_id") % 10 === 3).select("doc_id")
-      stageDropsCached(s, dir, "q151", "documents.parquet", srcDir, 3)(
-        i => dels.filter(pmod(col("doc_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_delete_log")
-      createBatchSink(s, logTable, Seq("doc_id" -> "bigint"))
+    drainDrops(s, dir, "q151", "documents.parquet", replay,
+        sinks = Seq(logTable -> Seq("doc_id" -> "bigint"))) {
+      i => dels.filter(pmod(col("doc_id"), lit(3)) === i)
     } { (batch, batchId) =>
       writeBatch(batch.select("doc_id"), batchId, logTable)
     } {
@@ -266,22 +296,18 @@ trait DedupStreaming { self: DedupQueries.type =>
     * delta-vs-index probe and dynamic-overwrites its own batch_id
     * partition of the sink (idempotent under replay). */
   private[graft] def streamIncrementalDedup(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): DataFrame = {
+      replay: Replay = Replay.Off): DataFrame = {
     // force-build the index on THIS session before the stream starts
     // (micro-batches run on a cloned session sharing the catalog)
     bandIndexTable(s, dir)
+    // the arriving batch staged as 3 file drops (split by doc_id)
+    val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
     val table = JvmScratch.tableName("stream_inc_dedup")
-    drainDrops(s, "q105", chaos, scratch, resume, table,
-        width = textStreamWidth(s, dir)) { srcDir =>
-      // the arriving batch staged as 3 file drops (split by doc_id)
-      val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
-      stageDropsCached(s, dir, "q105", "documents.parquet", srcDir, 3)(
-        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_inc_dedup")
-      createBatchSink(s, table, Seq(
-        "delta_id" -> "bigint", "corpus_id" -> "bigint", "jaccard" -> "double"))
+    drainDrops(s, dir, "q105", "documents.parquet", replay,
+        sinks = Seq(table -> Seq(
+          "delta_id" -> "bigint", "corpus_id" -> "bigint", "jaccard" -> "double")),
+        width = textStreamWidth(s, dir)) {
+      i => delta.filter(pmod(col("doc_id"), lit(3)) === i)
     } { (batch, batchId) =>
       // batch.sparkSession is the stream's clone — shares the
       // catalog, so the index resolves without a rebuild
@@ -300,20 +326,16 @@ trait DedupStreaming { self: DedupQueries.type =>
     * corpus-side and the drops partition the delta — each delta vector
     * is scored against the FULL standing corpus in exactly one batch. */
   private[graft] def streamSemanticDedup(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): DataFrame = {
+      replay: Replay = Replay.Off): DataFrame = {
     // force-build codebook + block index on THIS session before the
     // stream starts (micro-batches run on a clone sharing the catalog)
     SimilarityQueries.semBlockIndexTable(s, dir)
+    val delta = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 7)
     val table = JvmScratch.tableName("stream_sem_dedup")
-    drainDrops(s, "q113", chaos, scratch, resume, table) { srcDir =>
-      val delta = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 7)
-      stageDropsCached(s, dir, "q113", "embeddings.parquet", srcDir, 3)(
-        i => delta.filter(pmod(col("vec_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_sem_dedup")
-      createBatchSink(s, table, Seq(
-        "vec_id" -> "bigint", "keeper_id" -> "bigint", "cosine" -> "double"))
+    drainDrops(s, dir, "q113", "embeddings.parquet", replay,
+        sinks = Seq(table -> Seq(
+          "vec_id" -> "bigint", "keeper_id" -> "bigint", "cosine" -> "double"))) {
+      i => delta.filter(pmod(col("vec_id"), lit(3)) === i)
     } { (batch, batchId) =>
       val hits = SimilarityQueries.semIndexProbeOf(batch.sparkSession, dir, batch)
         .localCheckpoint()
@@ -333,30 +355,24 @@ trait DedupStreaming { self: DedupQueries.type =>
     * so far (earlier drops' bands) — so a delta-delta pair across
     * drops is mined exactly once, by the later drop's batch. Shards
     * are a pure function of (batch, committed prior state), so the
-    * batch_id dynamic overwrite makes replays idempotent. Test hooks
-    * as in [[drainDrops]]. */
+    * batch_id dynamic overwrite makes replays idempotent. `replay` as
+    * in [[drainDrops]]. */
   private[graft] def streamComponents(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false,
+      replay: Replay = Replay.Off,
       compact: Boolean = true,
       forceLarge: Option[Boolean] = None): DataFrame = {
     val docs = Tables.documents(s, dir)
     // the standing artifacts exist before a maintenance stream starts
     bandIndexTable(s, dir)
     ccIndexTable(s, dir)
+    val delta = docs.filter(col("doc_id") % 10 === 7)
     val idxTable = JvmScratch.tableName("stream_cc_bands")
     val outTable = JvmScratch.tableName("stream_cc_edges")
-    drainDrops(s, "q134", chaos, scratch, resume, outTable,
-        width = textStreamWidth(s, dir), schema = Some(docs.schema)) { srcDir =>
-      val delta = docs.filter(col("doc_id") % 10 === 7)
-      stageDropsCached(s, dir, "q134", "documents.parquet", srcDir, 3)(
-        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_cc_bands")
-      JvmScratch.resetTable(s, "stream_cc_edges")
-      createBandIndexSink(s, idxTable)
-      createBatchSink(s, outTable,
-        Seq("doc_a" -> "bigint", "doc_b" -> "bigint"))
+    drainDrops(s, dir, "q134", "documents.parquet", replay,
+        sinks = Seq(outTable -> Seq("doc_a" -> "bigint", "doc_b" -> "bigint")),
+        tables = Seq(idxTable), width = textStreamWidth(s, dir),
+        schema = Some(docs.schema), artifacts = createBandIndexSink(s, idxTable)) {
+      i => delta.filter(pmod(col("doc_id"), lit(3)) === i)
     } { (batch, batchId) =>
       val ss = batch.sparkSession
       ss.catalog.refreshTable(idxTable)
@@ -429,30 +445,26 @@ trait DedupStreaming { self: DedupQueries.type =>
     * appended its bands once, and probing them back would self-match
     * the batch. Post-drain, [[compactBandIndex]] folds the per-batch
     * partition fragments into one compacted generation (disable via
-    * `compact = false` to inspect the fragmented state). Test hooks as
-    * in [[drainDrops]]. */
+    * `compact = false` to inspect the fragmented state). `replay` as in
+    * [[drainDrops]]. */
   private[graft] def streamIndexBootstrap(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false,
+      replay: Replay = Replay.Off,
       compact: Boolean = true): DataFrame = {
     val docs = Tables.documents(s, dir)
     val idxTable = JvmScratch.tableName("stream_band_index")
     val outTable = JvmScratch.tableName("stream_bootstrap_out")
-    drainDrops(s, "q107", chaos, scratch, resume, outTable,
-        width = textStreamWidth(s, dir), schema = Some(docs.schema)) { srcDir =>
+    drainDrops(s, dir, "q107", "documents.parquet", replay,
+        sinks = Seq(outTable -> Seq(
+          "doc_id" -> "bigint", "dup_of" -> "bigint", "jaccard" -> "double")),
+        tables = Seq(idxTable), width = textStreamWidth(s, dir),
+        schema = Some(docs.schema),
+        // initially EMPTY index: band schema + batch_id partitioning
+        // (replay idempotency) + the 16-bucket band_key layout
+        artifacts = createBandIndexSink(s, idxTable)) {
       // the whole corpus as 3 drops with EXPLICIT strictly-increasing
       // mtimes: FileStreamSource orders by (mtime, path), and q107's
       // semantics — unlike q105's — depend on the processing order
-      stageDropsCached(s, dir, "q107", "documents.parquet", srcDir, 3)(
-        i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_band_index")
-      JvmScratch.resetTable(s, "stream_bootstrap_out")
-      // initially EMPTY index: band schema + batch_id partitioning
-      // (replay idempotency) + the 16-bucket band_key layout
-      createBandIndexSink(s, idxTable)
-      createBatchSink(s, outTable, Seq(
-        "doc_id" -> "bigint", "dup_of" -> "bigint", "jaccard" -> "double"))
+      i => docs.filter(pmod(col("doc_id"), lit(3)) === i)
     } { (batch, batchId) =>
       val ss = batch.sparkSession
       ss.catalog.refreshTable(idxTable)
@@ -497,25 +509,19 @@ trait DedupStreaming { self: DedupQueries.type =>
     * block index is batch_id-partitioned + 16-bucket block_key
     * bucketed. Per batch: assign via the staged codebook, match
     * against the index MINUS this batch's partition (replay safety),
-    * append via insertInto (bucketizes per the catalog spec). Test
-    * hooks as in [[drainDrops]]. */
+    * append via insertInto (bucketizes per the catalog spec).
+    * `replay` as in [[drainDrops]]. */
   private[graft] def streamSemIndexBootstrap(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false,
+      replay: Replay = Replay.Off,
       compact: Boolean = true): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val idxTable = JvmScratch.tableName("stream_block_index")
     val outTable = JvmScratch.tableName("stream_sem_boot_out")
     val cbTable = JvmScratch.tableName("stream_sem_codebook")
-    drainDrops(s, "q114", chaos, scratch, resume, outTable) { srcDir =>
-      // the corpus as 3 drops with EXPLICIT strictly-increasing
-      // mtimes (the FileStreamSource processing order, q107's shape)
-      stageDropsCached(s, dir, "q114", "embeddings.parquet", srcDir, 3)(
-        i => emb.filter(pmod(col("vec_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_block_index")
-      JvmScratch.resetTable(s, "stream_sem_boot_out")
-      JvmScratch.resetTable(s, "stream_sem_codebook")
+    drainDrops(s, dir, "q114", "embeddings.parquet", replay,
+        sinks = Seq(outTable -> Seq(
+          "vec_id" -> "bigint", "dup_of" -> "bigint", "cosine" -> "double")),
+        tables = Seq(idxTable, cbTable), artifacts = {
       // offline-train/online-serve: the codebook is learned once PER
       // CORPUS (durable, fingerprint-keyed — round-10 verdict #6:
       // repeated bootstraps re-read the sidecar instead of re-running
@@ -529,8 +535,10 @@ trait DedupStreaming { self: DedupQueries.type =>
         .write.format("parquet").partitionBy("batch_id")
         .bucketBy(16, "block_key").sortBy("block_key")
         .saveAsTable(idxTable)
-      createBatchSink(s, outTable, Seq(
-        "vec_id" -> "bigint", "dup_of" -> "bigint", "cosine" -> "double"))
+    }) {
+      // the corpus as 3 drops with EXPLICIT strictly-increasing
+      // mtimes (the FileStreamSource processing order, q107's shape)
+      i => emb.filter(pmod(col("vec_id"), lit(3)) === i)
     } { (batch, batchId) =>
       val ss = batch.sparkSession
       ss.catalog.refreshTable(idxTable)
@@ -583,31 +591,25 @@ trait DedupStreaming { self: DedupQueries.type =>
     * as batch q86, broadcast-join the staged benchmark table, count
     * distinct shared hashes per (doc, bench doc) pair. Batch-local
     * aggregation is globally exact: the drops partition docs, so a
-    * doc's span hashes never split across batches. Test hooks as in
+    * doc's span hashes never split across batches. `replay` as in
     * [[drainDrops]]. */
   private[graft] def streamDecontaminate(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): DataFrame = {
+      replay: Replay = Replay.Off): DataFrame = {
     val docs = Tables.documents(s, dir)
     val benchTable = JvmScratch.tableName("stream_bench_hashes")
     val outTable = JvmScratch.tableName("stream_decon_out")
-    drainDrops(s, "q116", chaos, scratch, resume, outTable,
-        width = textStreamWidth(s, dir)) { srcDir =>
+    drainDrops(s, dir, "q116", "documents.parquet", replay,
+        sinks = Seq(outTable -> Seq(
+          "doc_id" -> "bigint", "bench_id" -> "bigint", "n_shared" -> "bigint")),
+        tables = Seq(benchTable), width = textStreamWidth(s, dir),
+        // the standing artifact: benchmark span hashes, staged once
+        artifacts = spanHashes13Of(docs.filter(col("doc_id") % 5 === 0))
+          .withColumnRenamed("doc_id", "bench_id")
+          .withColumnRenamed("h", "bh")
+          .coalesce(1).write.format("parquet").saveAsTable(benchTable)) {
       // the whole corpus as 3 drops (batch independence makes the
       // processing order irrelevant here — the probe side is static)
-      stageDropsCached(s, dir, "q116", "documents.parquet", srcDir, 3)(
-        i => docs.filter(pmod(col("doc_id"), lit(3)) === i)
-          .select("doc_id", "text"))
-      JvmScratch.resetTable(s, "stream_bench_hashes")
-      JvmScratch.resetTable(s, "stream_decon_out")
-      // the standing artifact: benchmark span hashes, staged once
-      spanHashes13Of(docs.filter(col("doc_id") % 5 === 0))
-        .withColumnRenamed("doc_id", "bench_id")
-        .withColumnRenamed("h", "bh")
-        .coalesce(1).write.format("parquet").saveAsTable(benchTable)
-      createBatchSink(s, outTable, Seq(
-        "doc_id" -> "bigint", "bench_id" -> "bigint", "n_shared" -> "bigint"))
+      i => docs.filter(pmod(col("doc_id"), lit(3)) === i).select("doc_id", "text")
     } { (batch, batchId) =>
       writeBatch(spanHashes13Of(batch)
         .join(broadcast(batch.sparkSession.table(benchTable)),

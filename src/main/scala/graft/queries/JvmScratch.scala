@@ -122,15 +122,17 @@ object JvmScratch {
     dbName
   }
 
-  /** Drop any prior catalog entry and on-disk copy of `table`, returning
-    * the fully qualified name ready for a fresh write. */
+  /** Drop any prior catalog entry and on-disk copy of `table` (bare or
+    * qualified by [[dbName]]), returning the fully qualified name ready
+    * for a fresh write. */
   def resetTable(s: SparkSession, table: String): String = synchronized {
+    val name = table.stripPrefix(s"$dbName.")
     ensure(s)
-    s.sql(s"DROP TABLE IF EXISTS $dbName.$table")
-    val loc = new org.apache.hadoop.fs.Path(s"$location/$table")
+    s.sql(s"DROP TABLE IF EXISTS $dbName.$name")
+    val loc = new org.apache.hadoop.fs.Path(s"$location/$name")
     val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    s"$dbName.$table"
+    s"$dbName.$name"
   }
 
   /** The per-JVM STANDING table `<name>_<fp>` (a sketch grid, a packing

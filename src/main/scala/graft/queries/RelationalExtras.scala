@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.keys.SurrogateKeys
+import graft.queries.DedupQueries.{drainDrops, writeBatch}
 import graft.sources.Tables
 
 /** Remaining SURVEY.md §2 relational operators not covered by CoreQueries:
@@ -131,8 +132,8 @@ object RelationalExtras {
     * of the sink. The output rows are a pure function of (static
     * standing state, the batch's keys' rows), so an at-least-once
     * replay rewrites identical rows. Union over batches == the
-    * one-shot q138 apply == batch q57, verbatim oracle. Test hooks as
-    * in the DedupQueries drains.
+    * one-shot q138 apply == batch q57, verbatim oracle. `replay` as in
+    * [[DedupQueries.drainDrops]].
     *
     * PRECONDITION (round-11 advice): the drops must carry a FULL
     * snapshot — every standing key appears in some micro-batch. History
@@ -143,26 +144,21 @@ object RelationalExtras {
     * in post-drain. */
   private[queries] def streamScd2Apply(s: org.apache.spark.sql.SparkSession,
       dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
+      replay: Replay = Replay.Off): org.apache.spark.sql.DataFrame = {
     scd2StateTable(s, dir) // the standing dimension exists pre-stream
+    val snap2 = Tables.customer(s, dir)
+      .select("c_custkey", "c_acctbal", "c_mktsegment")
+      .withColumn("c_acctbal",
+        when(col("c_custkey") % 10 === 0, col("c_acctbal") + 100.0)
+          .otherwise(col("c_acctbal")))
     val outTable = JvmScratch.tableName("stream_scd2_out")
-    drainDrops(s, "q139", chaos, scratch, resume, outTable) { srcDir =>
-      val snap2 = Tables.customer(s, dir)
-        .select("c_custkey", "c_acctbal", "c_mktsegment")
-        .withColumn("c_acctbal",
-          when(col("c_custkey") % 10 === 0, col("c_acctbal") + 100.0)
-            .otherwise(col("c_acctbal")))
-      DedupQueries.stageDropsCached(s, dir, "q139", "customer.parquet", srcDir, 3)(
-        i => snap2.filter(pmod(col("c_custkey"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_scd2_out")
-      createBatchSink(s, outTable, Seq(
-        "c_custkey" -> "bigint", "c_acctbal" -> "double",
-        "c_mktsegment" -> "string", "version" -> "bigint",
-        "effective_from_snap" -> "bigint", "effective_to_snap" -> "bigint",
-        "is_current" -> "bigint"))
+    drainDrops(s, dir, "q139", "customer.parquet", replay,
+        sinks = Seq(outTable -> Seq(
+          "c_custkey" -> "bigint", "c_acctbal" -> "double",
+          "c_mktsegment" -> "string", "version" -> "bigint",
+          "effective_from_snap" -> "bigint", "effective_to_snap" -> "bigint",
+          "is_current" -> "bigint"))) {
+      i => snap2.filter(pmod(col("c_custkey"), lit(3)) === i)
     } { (batch, batchId) =>
       val keys = batch.select("c_custkey")
       val standing = scd2StateTable(batch.sparkSession, dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossEngine._
+import graft.queries.DedupQueries.{drainDrops, writeBatch}
 import graft.sources.Tables
 
 /** Deterministic corpus sampling — the training-data curation ops a
@@ -361,15 +362,10 @@ object SamplingQueries {
       streamSample(s, dir)
     })
 
-  /** q160's body; test hooks (chaos/scratch/resume) as in
-    * [[DedupQueries.drainDrops]]. */
+  /** q160's body; `replay` as in [[DedupQueries.drainDrops]]. */
   private[queries] def streamSample(s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): org.apache.spark.sql.DataFrame = {
+      dir: String, replay: Replay = Replay.Off): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.DataFrame
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val docs = Tables.documents(s, dir).select("doc_id", "lang")
     val outTable = JvmScratch.tableName("stream_sample_shards")
     def rank(h: DataFrame): DataFrame = {
@@ -383,13 +379,11 @@ object SamplingQueries {
           col("doc_id"), col("lang"), col("hk"))
       uni.unionByName(strat)
     }
-    drainDrops(s, "q160", chaos, scratch, resume, outTable,
-        schema = Some(docs.schema)) { srcDir =>
-      DedupQueries.stageDropsCached(s, dir, "q160", "documents.parquet", srcDir, 3)(
-        i => docs.filter(pmod(col("doc_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_sample_shards")
-      createBatchSink(s, outTable, Seq("sample_kind" -> "string",
-        "doc_id" -> "bigint", "lang" -> "string", "hk" -> "bigint"))
+    drainDrops(s, dir, "q160", "documents.parquet", replay,
+        sinks = Seq(outTable -> Seq("sample_kind" -> "string",
+          "doc_id" -> "bigint", "lang" -> "string", "hk" -> "bigint")),
+        schema = Some(docs.schema)) {
+      i => docs.filter(pmod(col("doc_id"), lit(3)) === i)
     } { (batch, batchId) =>
       // the batch's LOCAL sample shard — a pure function of the
       // batch, so the dynamic overwrite is replay-idempotent
@@ -410,32 +404,28 @@ object SamplingQueries {
     }
   }
 
-  /** q123's body; test hooks (chaos/scratch/resume) as in
-    * [[DedupQueries.drainDrops]]. */
+  /** q123's body; `replay` as in [[DedupQueries.drainDrops]]. */
   private[queries] def streamContextPacking(s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): org.apache.spark.sql.DataFrame = {
+      dir: String, replay: Replay = Replay.Off): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types.LongType
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
+    // contiguous doc_id RANGES (not mod classes — order matters for
+    // a prefix), dropped with strictly-increasing mtimes so the
+    // stream processes them in doc_id order; lazy, so only a run that
+    // stages its drops reads the max id
+    lazy val bounds = {
+      val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
+      Seq(0L, maxId / 3 + 1, 2 * maxId / 3 + 1, maxId + 1)
+    }
     val outTable = JvmScratch.tableName("stream_pack_out")
     val totalsTable = JvmScratch.tableName("stream_pack_totals")
-    drainDrops(s, "q123", chaos, scratch, resume, outTable,
-        width = DedupQueries.textStreamWidth(s, dir)) { srcDir =>
-      // contiguous doc_id RANGES (not mod classes — order matters for
-      // a prefix), dropped with strictly-increasing mtimes so the
-      // stream processes them in doc_id order
-      val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-      val bounds = Seq(0L, maxId / 3 + 1, 2 * maxId / 3 + 1, maxId + 1)
-      DedupQueries.stageDropsCached(s, dir, "q123", "documents.parquet", srcDir, 3)(
-        i => docs.filter(col("doc_id") >= bounds(i) && col("doc_id") < bounds(i + 1)))
-      JvmScratch.resetTable(s, "stream_pack_out")
-      JvmScratch.resetTable(s, "stream_pack_totals")
-      createBatchSink(s, outTable, Seq(
-        "window_id" -> "bigint", "doc_id" -> "bigint", "tok_in_window" -> "bigint"))
-      createBatchSink(s, totalsTable, Seq("n_tokens" -> "bigint"))
+    drainDrops(s, dir, "q123", "documents.parquet", replay,
+        sinks = Seq(
+          outTable -> Seq("window_id" -> "bigint", "doc_id" -> "bigint",
+            "tok_in_window" -> "bigint"),
+          totalsTable -> Seq("n_tokens" -> "bigint")),
+        width = DedupQueries.textStreamWidth(s, dir)) {
+      i => docs.filter(col("doc_id") >= bounds(i) && col("doc_id") < bounds(i + 1))
     } { (batch, batchId) =>
       val ss = batch.sparkSession
       ss.catalog.refreshTable(outTable)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossEngine._
+import graft.queries.DedupQueries.{drainDrops, writeBatch}
 import graft.sources.Tables
 
 /** The durable ANN serving stack (q124/q125/q126): codebook + bucketed block-index artifacts, the size-gated top-K serving routes (broadcast join-back vs in-join cosine on the bulk route), the streaming serve drain, index probes, the serving oracle, and the delta-broadcast gates.
@@ -139,24 +140,19 @@ trait SimServing { self: SimilarityQueries.type =>
     * overwrites its own batch_id partition (replay-idempotent: the
     * answer to a query is a pure function of the query and the
     * standing index). Final table == batch q124 under the verbatim
-    * oracle. Test hooks as in [[graft.queries.DedupQueries]]. */
+    * oracle. `replay` as in [[DedupQueries.drainDrops]]. */
   private[graft] def streamAnnServe(s: SparkSession, dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): DataFrame = {
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
+      replay: Replay = Replay.Off): DataFrame = {
     val queries = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 7)
     // build/attach the index and codebook BEFORE the drain (the
     // standing artifacts exist before a serving stream starts)
     semBlockIndexTable(s, dir)
     semCodebookTable(s, dir)
     val outTable = JvmScratch.tableName("stream_ann_out")
-    drainDrops(s, "q126", chaos, scratch, resume, outTable) { srcDir =>
-      DedupQueries.stageDropsCached(s, dir, "q126", "embeddings.parquet", srcDir, 3)(
-        i => queries.filter(pmod(col("vec_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_ann_out")
-      createBatchSink(s, outTable, Seq("q_id" -> "bigint",
-        "rank" -> "bigint", "c_id" -> "bigint", "cosine" -> "double"))
+    drainDrops(s, dir, "q126", "embeddings.parquet", replay,
+        sinks = Seq(outTable -> Seq("q_id" -> "bigint",
+          "rank" -> "bigint", "c_id" -> "bigint", "cosine" -> "double"))) {
+      i => queries.filter(pmod(col("vec_id"), lit(3)) === i)
     } { (batch, batchId) =>
       writeBatch(semIndexTopKOf(batch.sparkSession, dir, batch), batchId, outTable)
     } {

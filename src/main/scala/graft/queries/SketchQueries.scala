@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrossEngine._
+import graft.queries.DedupQueries.{drainDrops, writeBatch}
 import graft.sources.Tables
 
 /** Mergeable-sketch aggregation (brief: "a novel sketch"). A count-min
@@ -91,24 +92,17 @@ object SketchQueries {
     * per-batch work is just [[hllRegisters]] — sketching IS the only
     * state a streaming statistics job needs to write.
     *
-    * Test hooks (`chaos`, `scratch`, `resume`) as in
-    * [[DedupQueries.drainDrops]]. */
+    * `replay` as in [[DedupQueries.drainDrops]]. */
   private[queries] def streamHllMaintain(s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
+      dir: String, replay: Replay = Replay.Off): org.apache.spark.sql.DataFrame = {
     // stage the NORMALIZED events (ts as a real timestamp): the staged
     // copy then round-trips through parquet without the nano-long shape
     val ev = Tables.events(s, dir).select("event_id", "event_type", "user_id", "ts")
     val outTable = JvmScratch.tableName("stream_hll_regs")
-    drainDrops(s, "q121", chaos, scratch, resume, outTable) { srcDir =>
-      DedupQueries.stageDropsCached(s, dir, "q121", "events.parquet", srcDir, 3)(
-        i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_hll_regs")
-      createBatchSink(s, outTable, Seq(
-        "event_type" -> "string", "bucket" -> "bigint", "reg" -> "int"))
+    drainDrops(s, dir, "q121", "events.parquet", replay,
+        sinks = Seq(outTable -> Seq(
+          "event_type" -> "string", "bucket" -> "bigint", "reg" -> "int"))) {
+      i => ev.filter(pmod(col("event_id"), lit(3)) === i)
     } { (batch, batchId) =>
       writeBatch(hllRegisters(batch), batchId, outTable)
     } {
@@ -473,26 +467,19 @@ object SketchQueries {
     * delta or double-run on a replay. Summed shards == the one-shot
     * delta counts exactly (the drops partition docs; trigram counts
     * add across docs), so the result == q135 == batch q117: verbatim
-    * oracle. Test hooks as in [[streamHllMaintain]]. */
+    * oracle. `replay` as in [[DedupQueries.drainDrops]]. */
   private[queries] def streamHeavyHitters(s: org.apache.spark.sql.SparkSession,
       dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false,
+      replay: Replay = Replay.Off,
       compact: Boolean = true): org.apache.spark.sql.DataFrame = {
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
     val docs = Tables.documents(s, dir)
     // the standing artifact exists before a maintenance stream starts
     hhStoreTable(s, dir)
+    val delta = docs.filter(col("doc_id") % 10 === 7).select("doc_id", "text")
     val outTable = JvmScratch.tableName("stream_hh_counts")
-    drainDrops(s, "q144", chaos, scratch, resume, outTable) { srcDir =>
-      val delta = docs.filter(col("doc_id") % 10 === 7)
-        .select("doc_id", "text")
-      DedupQueries.stageDropsCached(s, dir, "q144", "documents.parquet", srcDir, 3)(
-        i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_hh_counts")
-      createBatchSink(s, outTable, Seq(
-        "gram" -> "string", "dcnt" -> "bigint"))
+    drainDrops(s, dir, "q144", "documents.parquet", replay,
+        sinks = Seq(outTable -> Seq("gram" -> "string", "dcnt" -> "bigint"))) {
+      i => delta.filter(pmod(col("doc_id"), lit(3)) === i)
     } { (batch, batchId) =>
       writeBatch(trigramOcc(batch).groupBy("gram")
         .agg(count(lit(1)).as("dcnt")), batchId, outTable)
@@ -565,21 +552,15 @@ object SketchQueries {
   /** q141's body: [[streamHllMaintain]]'s drain shape with the
     * per-batch work swapped for [[histBins]] — bin shards are a pure
     * function of the batch, so the batch_id dynamic overwrite makes
-    * replays idempotent; merge on read = cellwise SUM. Test hooks as
-    * in the other drains. */
+    * replays idempotent; merge on read = cellwise SUM. `replay` as in
+    * [[DedupQueries.drainDrops]]. */
   private[queries] def streamHistMaintain(s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
+      dir: String, replay: Replay = Replay.Off): org.apache.spark.sql.DataFrame = {
     val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
     val outTable = JvmScratch.tableName("stream_hist_bins")
-    drainDrops(s, "q141", chaos, scratch, resume, outTable) { srcDir =>
-      DedupQueries.stageDropsCached(s, dir, "q141", "orders.parquet", srcDir, 3)(
-        i => o.filter(pmod(col("o_orderkey"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_hist_bins")
-      createBatchSink(s, outTable, Seq("bin" -> "bigint", "c" -> "bigint"))
+    drainDrops(s, dir, "q141", "orders.parquet", replay,
+        sinks = Seq(outTable -> Seq("bin" -> "bigint", "c" -> "bigint"))) {
+      i => o.filter(pmod(col("o_orderkey"), lit(3)) === i)
     } { (batch, batchId) =>
       writeBatch(histBins(batch), batchId, outTable)
     } {
@@ -619,22 +600,16 @@ object SketchQueries {
     * batch_id-partitioned idempotent sink) with the per-batch work
     * swapped for [[cmsCells]]. Grid shards are a pure function of the
     * batch, so an at-least-once replay dynamic-overwrites identical
-    * rows; merge on read = cellwise SUM over all partitions. Test hooks
-    * as in [[streamHllMaintain]]. */
+    * rows; merge on read = cellwise SUM over all partitions. `replay`
+    * as in [[DedupQueries.drainDrops]]. */
   private[queries] def streamCmsMaintain(s: org.apache.spark.sql.SparkSession,
-      dir: String,
-      chaos: Long => Unit = _ => (),
-      scratch: Option[(String, String)] = None,
-      resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import DedupQueries.{createBatchSink, drainDrops, writeBatch}
+      dir: String, replay: Replay = Replay.Off): org.apache.spark.sql.DataFrame = {
     val ev = Tables.events(s, dir).select("event_id", "user_id")
     val outTable = JvmScratch.tableName("stream_cms_grid")
-    drainDrops(s, "q133", chaos, scratch, resume, outTable) { srcDir =>
-      DedupQueries.stageDropsCached(s, dir, "q133", "events.parquet", srcDir, 3)(
-        i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-      JvmScratch.resetTable(s, "stream_cms_grid")
-      createBatchSink(s, outTable, Seq(
-        "d" -> "bigint", "cell" -> "bigint", "c" -> "bigint"))
+    drainDrops(s, dir, "q133", "events.parquet", replay,
+        sinks = Seq(outTable -> Seq(
+          "d" -> "bigint", "cell" -> "bigint", "c" -> "bigint"))) {
+      i => ev.filter(pmod(col("event_id"), lit(3)) === i)
     } { (batch, batchId) =>
       writeBatch(cmsCells(batch), batchId, outTable)
     } {

@@ -40,25 +40,26 @@ object StreamingOps {
 
   /** Bounded file stream over `events.parquet`, ts normalized to an
     * ms-truncated TimestampType exactly as the batch loader does.
-    *
-    * Two pieces of plumbing the flat-file test layout forces:
-    *  - FileStreamSource hard-sets `basePath` to the source path itself,
-    *    and requires it to be a directory — a bare `events.parquet` file
-    *    can never stream. Real streaming sources ARE directories of
-    *    arriving files, so the file is staged into this JVM's scratch
-    *    cache ([[JvmScratch.cached]]) once per source version and the
-    *    directory is streamed.
-    *  - The stream must declare the RAW parquet schema (ts arrives as a
-    *    nano-count long under `nanosAsLong`); declaring the normalized
-    *    schema would misread the file. So probe the raw schema with a
-    *    one-off batch read, then [[Tables.normalizeEventTs]] the stream. */
-  private def eventStream(spark: SparkSession, dir: String): DataFrame = {
+    * FileStreamSource hard-sets `basePath` to the source path itself,
+    * and requires it to be a directory — a bare `events.parquet` file
+    * can never stream. Real streaming sources ARE directories of
+    * arriving files, so the file is staged into this JVM's scratch
+    * cache ([[JvmScratch.cached]]) once per source version and the
+    * directory is streamed ([[openEvents]]). */
+  private def eventStream(spark: SparkSession, dir: String): DataFrame =
     // staged once per source version into this JVM's cache: the key is
     // the source's DurableIndex fingerprint (per-file name, length and
     // mtime), so a regeneration re-stages even at the same byte count
-    val stageDir = JvmScratch.cached("events_src", dir,
+    openEvents(spark, JvmScratch.cached("events_src", dir,
       graft.sources.DurableIndex.fingerprint(spark, dir, "events.parquet"))(
-      copyEventsInto(dir, _)).toString
+      copyEventsInto(dir, _)).toString)
+
+  /** The file stream over a staged events dir. It must declare the RAW
+    * parquet schema (ts arrives as a nano-count long under
+    * `nanosAsLong`); declaring the normalized schema would misread the
+    * files. So probe the raw schema with a one-off batch read, then
+    * [[Tables.normalizeEventTs]] the stream. */
+  private def openEvents(spark: SparkSession, stageDir: String): DataFrame = {
     val rawSchema = spark.read.parquet(stageDir).schema
     Tables.normalizeEventTs(spark.readStream.schema(rawSchema).parquet(stageDir))
   }
@@ -98,11 +99,6 @@ object StreamingOps {
     copyEventsInto(dir, java.nio.file.Paths.get(stageDir))
     stageDir
   }
-
-  /** Drop + location-clean a per-JVM scratch managed table; returns its
-    * qualified name (JvmScratch: concurrent JVMs never share a path). */
-  private def freshTable(spark: SparkSession, name: String): String =
-    JvmScratch.resetTable(spark, name)
 
   /** Append one sentinel row 3h past max(ts) to the staged source so a
     * same-checkpoint restart advances the watermark past all real data —
@@ -182,13 +178,11 @@ object StreamingOps {
     * the table equals the batch aggregate exactly. */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame =
     withConfs(spark, StreamWidth) {
-      val table = freshTable(spark, "stream_hourly")
+      val table = JvmScratch.resetTable(spark, "stream_hourly")
       val stageDir = stageEventsFresh(dir, "q34")
       val ckpt = JvmScratch.dir("q34_ckpt")
       try {
-        val rawSchema = spark.read.parquet(stageDir).schema
-        val agg = Tables.normalizeEventTs(
-            spark.readStream.schema(rawSchema).parquet(stageDir))
+        val agg = openEvents(spark, stageDir)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"),
@@ -216,7 +210,7 @@ object StreamingOps {
     * join oracle regardless of how the source was micro-batched. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame =
     withConfs(spark, StreamWidth) {
-      val table = freshTable(spark, "stream_dim")
+      val table = JvmScratch.resetTable(spark, "stream_dim")
       val dim = Tables.nation(spark, dir)
         .select(col("n_nationkey").cast("long").as("nk"), col("n_name"))
       val enriched = eventStream(spark, dir)
@@ -265,7 +259,7 @@ object StreamingOps {
       // No sentinel restart is needed: an inner stream-stream join emits
       // each match as soon as both sides arrive (the watermark only gates
       // STATE EVICTION), so the single AvailableNow drain emits every match.
-      val table = freshTable(spark, "stream_attr")
+      val table = JvmScratch.resetTable(spark, "stream_attr")
       drainFresh(joined, "q47", table)
       spark.table(table)
     }
@@ -287,7 +281,7 @@ object StreamingOps {
       // AvailableNow drain emits the complete distinct key set — no
       // sentinel restart needed (the keep-all state, evictable only with a
       // watermark, is the documented at-scale caveat above).
-      val table = freshTable(spark, "stream_dedup")
+      val table = JvmScratch.resetTable(spark, "stream_dedup")
       drainFresh(dedup, "q48", table)
       spark.table(table)
     }
@@ -300,19 +294,11 @@ object StreamingOps {
     * equals the batch result regardless of how the input was split into
     * batches (the declared, oracle-checked property). */
   def foreachBatchToTable(spark: SparkSession, dir: String): DataFrame = {
-    val table = freshTable(spark, "stream_events")
-
-    val q = eventStream(spark, dir).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch // the same enrichment a batch job would run
-          .withColumn("event_date", to_date(col("ts")))
-          .withColumn("value_d", col("value").cast("decimal(18,2)"))
-          .write.format("parquet").mode("append").saveAsTable(table)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
+    val table = JvmScratch.resetTable(spark, "stream_events")
+    // the same enrichment a batch job would run, on each micro-batch
+    drainFresh(eventStream(spark, dir)
+      .withColumn("event_date", to_date(col("ts")))
+      .withColumn("value_d", col("value").cast("decimal(18,2)")), "q45", table)
     spark.table(table)
       .groupBy(col("event_date"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -342,17 +328,15 @@ object StreamingOps {
   def sessionize(spark: SparkSession, dir: String): DataFrame =
     withConfs(spark, StreamWidth) {
       import spark.implicits._
-      val table = freshTable(spark, "stream_sessions")
+      val table = JvmScratch.resetTable(spark, "stream_sessions")
       val stageDir = stageEventsFresh(dir, "q36")
       val ckpt = JvmScratch.dir("q36_ckpt")
       val gapMs = 30L * 60 * 1000
       try {
-        val rawSchema = spark.read.parquet(stageDir).schema
         // ms truncation: the parquet timestamps carry nanoseconds, which
         // Spark truncates to microseconds while the DuckDB oracle keeps —
         // session boundaries must come from a precision both engines share.
-        val sessions = Tables.normalizeEventTs(
-            spark.readStream.schema(rawSchema).parquet(stageDir))
+        val sessions = openEvents(spark, stageDir)
           .select(col("user_id"),
             date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
           .withWatermark("ts", "1 hour")

@@ -46,7 +46,7 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamIncrementalDedup(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamIncrementalDedup(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
@@ -54,7 +54,7 @@ class StreamReplaySpec extends SparkSpec {
       // commit did not, so it replays — at-least-once, made idempotent
       // by the dynamic overwrite of its own batch_id partition
       val replayed = DedupQueries
-        .streamIncrementalDedup(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamIncrementalDedup(spark, sfDir, Replay.Resume(scratch))
         .orderBy("delta_id", "corpus_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -74,12 +74,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamComponents(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamComponents(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = DedupQueries
-        .streamComponents(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamComponents(spark, sfDir, Replay.Resume(scratch))
         .orderBy("doc_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -95,12 +95,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamSimhashDedup(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamSimhashDedup(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = DedupQueries
-        .streamSimhashDedup(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamSimhashDedup(spark, sfDir, Replay.Resume(scratch))
         .orderBy("delta_id", "corpus_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -116,12 +116,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        SketchQueries.streamHllMaintain(spark, sfDir, chaos.hook, Some(scratch))
+        SketchQueries.streamHllMaintain(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = SketchQueries
-        .streamHllMaintain(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamHllMaintain(spark, sfDir, Replay.Resume(scratch))
         .orderBy("event_type").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -137,12 +137,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        RelationalExtras.streamScd2Apply(spark, sfDir, chaos.hook, Some(scratch))
+        RelationalExtras.streamScd2Apply(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = RelationalExtras
-        .streamScd2Apply(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamScd2Apply(spark, sfDir, Replay.Resume(scratch))
         .orderBy("c_custkey", "version").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -158,12 +158,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        SketchQueries.streamHistMaintain(spark, sfDir, chaos.hook, Some(scratch))
+        SketchQueries.streamHistMaintain(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = SketchQueries
-        .streamHistMaintain(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamHistMaintain(spark, sfDir, Replay.Resume(scratch))
         .orderBy("p").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -183,12 +183,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        SketchQueries.streamCmsMaintain(spark, sfDir, chaos.hook, Some(scratch))
+        SketchQueries.streamCmsMaintain(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = SketchQueries
-        .streamCmsMaintain(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamCmsMaintain(spark, sfDir, Replay.Resume(scratch))
         .orderBy("user_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -209,12 +209,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        SketchQueries.streamHeavyHitters(spark, sfDir, chaos.hook, Some(scratch))
+        SketchQueries.streamHeavyHitters(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = SketchQueries
-        .streamHeavyHitters(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamHeavyHitters(spark, sfDir, Replay.Resume(scratch))
         .orderBy("gram").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -230,12 +230,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamRetraction(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamRetraction(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = DedupQueries
-        .streamRetraction(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamRetraction(spark, sfDir, Replay.Resume(scratch))
         .orderBy("doc_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -251,12 +251,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        SamplingQueries.streamContextPacking(spark, sfDir, chaos.hook, Some(scratch))
+        SamplingQueries.streamContextPacking(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = SamplingQueries
-        .streamContextPacking(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamContextPacking(spark, sfDir, Replay.Resume(scratch))
         .orderBy("window_id", "doc_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -278,12 +278,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        SamplingQueries.streamSample(spark, sfDir, chaos.hook, Some(scratch))
+        SamplingQueries.streamSample(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = SamplingQueries
-        .streamSample(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamSample(spark, sfDir, Replay.Resume(scratch))
         .orderBy("sample_kind", "doc_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -299,12 +299,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        SimilarityQueries.streamAnnServe(spark, sfDir, chaos.hook, Some(scratch))
+        SimilarityQueries.streamAnnServe(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = SimilarityQueries
-        .streamAnnServe(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamAnnServe(spark, sfDir, Replay.Resume(scratch))
         .orderBy("q_id", "rank").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -320,12 +320,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamSemanticDedup(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamSemanticDedup(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = DedupQueries
-        .streamSemanticDedup(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamSemanticDedup(spark, sfDir, Replay.Resume(scratch))
         .orderBy("vec_id", "keeper_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -345,7 +345,7 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamIndexBootstrap(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamIndexBootstrap(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
@@ -361,7 +361,7 @@ class StreamReplaySpec extends SparkSpec {
       // band insert must rewrite, not append, and the dropped match
       // partition must be rewritten whole
       val replayedOut = DedupQueries
-        .streamIndexBootstrap(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamIndexBootstrap(spark, sfDir, Replay.Resume(scratch))
         .orderBy("doc_id", "dup_of").collect().toSeq
       assert(replayedOut == cleanOut,
         s"replayed drain diverged: ${replayedOut.size} rows vs ${cleanOut.size}")
@@ -382,12 +382,12 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamDecontaminate(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamDecontaminate(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
       val replayed = DedupQueries
-        .streamDecontaminate(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamDecontaminate(spark, sfDir, Replay.Resume(scratch))
         .orderBy("doc_id", "bench_id").collect().toSeq
       assert(replayed == clean,
         s"replayed drain diverged from the clean run: ${replayed.size} rows vs ${clean.size}")
@@ -407,7 +407,7 @@ class StreamReplaySpec extends SparkSpec {
     try {
       val chaos = new CrashOnce
       intercept[StreamingQueryException] {
-        DedupQueries.streamSemIndexBootstrap(spark, sfDir, chaos.hook, Some(scratch))
+        DedupQueries.streamSemIndexBootstrap(spark, sfDir, Replay.Crash(scratch, chaos.hook))
       }
       assert(chaos.crashed, "chaos hook never fired — batch 1 was not delivered")
 
@@ -418,7 +418,7 @@ class StreamReplaySpec extends SparkSpec {
       spark.sql(s"ALTER TABLE $idx DROP IF EXISTS PARTITION (batch_id=1)")
 
       val replayedOut = DedupQueries
-        .streamSemIndexBootstrap(spark, sfDir, scratch = Some(scratch), resume = true)
+        .streamSemIndexBootstrap(spark, sfDir, Replay.Resume(scratch))
         .orderBy("vec_id", "dup_of").collect().toSeq
       assert(replayedOut == cleanOut,
         s"replayed drain diverged: ${replayedOut.size} rows vs ${cleanOut.size}")
